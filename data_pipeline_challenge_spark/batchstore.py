@@ -241,7 +241,11 @@ def prefix_bucket_local(spark, values: "list[str]", n_buckets: int) -> "list[int
     same TYPE the store's bucket column hashes (xxhash64 of a bigint is
     a different value than of its string); every current store buckets
     strings. Equality with the distributed expression is pinned by
-    ``test_prefix_bucket_local_matches_distributed``."""
+    ``test_prefix_bucket_local_matches_distributed``; a non-string value
+    raises ``TypeError`` instead of returning a wrong bucket."""
+    bad = [v for v in values if not isinstance(v, str)]
+    if bad:
+        raise TypeError(f"prefix_bucket_local hashes strings only, got {bad[:3]!r}")
     out: list[int] = []
     for start in range(0, len(values), 100):  # bound statement width
         chunk = values[start : start + 100]

@@ -46,6 +46,7 @@ from .schema import (
     STATUS_PROCESSED_WITH_ERRORS,
     STATUS_UPLOADED,
 )
+from .session import local_frame
 from .sources.json_ingest import (
     CHUNK_RECORDS,
     JSONL_PARTITION_BYTES,
@@ -183,7 +184,7 @@ class ProductWarehouse:
         ``_compose_with_deltas``)."""
         target = self._resolve_products_dir()
         if target is None:
-            return self.spark.createDataFrame([], PRODUCT_SCHEMA)
+            return local_frame(self.spark, [], PRODUCT_SCHEMA)
         base = self.spark.read.schema(PRODUCT_SCHEMA).parquet(str(target))
         deltas = self._delta_dirs(target)
         if not deltas:
@@ -236,14 +237,11 @@ class ProductWarehouse:
     def _table_bytes(self) -> int:
         """Parquet bytes of the published products table + live deltas
         (driver-side stat, no Spark job) — the size estimator for output
-        file sizing."""
-        roots: list[Path] = []
-        if self.products_path.is_symlink():
-            base = self._resolve_products_dir()
-            if base is not None:
-                roots = [base, *self._delta_dirs(base)]
-        elif self.products_path.exists():
-            roots = [self.products_path]
+        file sizing. Resolves the table exactly as the read path does, so
+        a complete but unpublished version (crash between write and
+        publish) is counted, not estimated as empty."""
+        base = self._resolve_products_dir()
+        roots = [base, *self._delta_dirs(base)] if base is not None else []
         return sum(
             f.stat().st_size
             for root in roots
@@ -590,8 +588,8 @@ class ProductWarehouse:
 
         landed_now = [Path(p).name for p in list_landed(landing)]
         if landed_now:
-            landed_df = self.spark.createDataFrame(
-                [(n,) for n in landed_now], "file_id string"
+            landed_df = local_frame(
+                self.spark, [(n,) for n in landed_now], "file_id string"
             )
             done = {
                 r["file_id"]
@@ -781,8 +779,8 @@ class ProductWarehouse:
             # broadcast-joined (file_id → ord) table keeps the expression
             # tree constant-depth no matter how many files the batch holds.
             file_order = [(Path(p).name, i) for i, p in enumerate(sorted(new_paths))]
-            order_df = self.spark.createDataFrame(
-                file_order, "file_id string, __ford long"
+            order_df = local_frame(
+                self.spark, file_order, "file_id string, __ford long"
             )
             valid = (
                 valid.join(F.broadcast(order_df), "file_id", "left")

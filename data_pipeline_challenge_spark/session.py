@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampType
 
 # Confs we also (re-)apply at runtime when handed an externally built session
 # (e.g. the verification driver's): these are all runtime-settable SQL confs.
@@ -74,3 +75,44 @@ def tune(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # non-settable on this build — defaults still correct
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: StructType | str
+) -> DataFrame:
+    """A DataFrame over a SHORT list of driver rows (ledger events, landed
+    file names, a batch's file order), planned as a ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>, schema)`` parallelizes the rows into an
+    RDD-backed ``LogicalRDD``, so every plan that reads it launches a
+    ``defaultParallelism``-task Spark job just to ship a handful of driver
+    values back to the executors (~0.45 s warm on 4 cores; an ingest
+    delivery paid it twice on its ledger appends alone). The same rows
+    handed over as an Arrow table become a ``LocalRelation``: collecting
+    it launches no job, and a write or join over it runs in the consumer's
+    own job.
+
+    Returns exactly the rows ``createDataFrame(rows, schema)`` returns.
+    ``TimestampType`` values go through ``TimestampType.toInternal`` and
+    travel as UTC instants, so a naive ``datetime`` means process-local
+    time, as it does for the list path; a naive Arrow timestamp would be
+    read in the SESSION time zone instead and shift whenever the two
+    differ. A ``None`` in a non-nullable field raises, as the list path's
+    schema check does.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for field, values in zip(schema.fields, columns):
+        if not field.nullable and any(v is None for v in values):
+            raise ValueError(f"field {field.name}: None in a non-nullable field")
+        if isinstance(field.dataType, TimestampType):
+            values = [field.dataType.toInternal(v) for v in values]
+        arrays.append(pa.array(values, type=to_arrow_type(field.dataType)))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, names=schema.names), schema
+    )

@@ -33,6 +33,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schema import BRONZE_SCHEMA
+from ..session import local_frame
 
 MALFORMED_SEQ = -1  # sentinel bronze row emitted for an unparseable file
 
@@ -130,7 +131,7 @@ def read_bronze(spark: SparkSession, paths: list[str]) -> DataFrame:
     (data_processor.py:101-113).
     """
     if not paths:
-        return spark.createDataFrame([], BRONZE_SCHEMA)
+        return local_frame(spark, [], BRONZE_SCHEMA)
     parser = _make_file_parser()
     rdd = spark.sparkContext.binaryFiles(",".join(paths), minPartitions=len(paths))
     rows = rdd.flatMap(parser)

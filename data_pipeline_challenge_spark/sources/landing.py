@@ -24,6 +24,8 @@ from pathlib import Path
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..session import local_frame
+
 
 @dataclass(frozen=True)
 class LandedFile:
@@ -141,9 +143,7 @@ def discover_new_files(landing_dir: str | Path, ledger_current: DataFrame | None
         return landed
     terminal = ("processed", "processed_with_errors", "failed")
     spark = ledger_current.sparkSession
-    landed_df = spark.createDataFrame(
-        [(Path(p).name,) for p in landed], "file_id string"
-    )
+    landed_df = local_frame(spark, [(Path(p).name,) for p in landed], "file_id string")
     seen = {
         r["file_id"]
         for r in ledger_current.filter(F.col("status").isin(*terminal))

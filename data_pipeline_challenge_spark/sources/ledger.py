@@ -45,6 +45,16 @@ retention) and the tail truncates (``_checkpoint_events``). The log's
 file count and every replay fallback are therefore bounded by
 O(file_ids + tail), not O(all transitions ever), no matter how old the
 warehouse is.
+
+Per-append job budget: an append is the ledger's keyed write (the
+reference's one ``insert``/``$inc``), so its fixed Spark cost is kept at
+two jobs — the tail write and the state write. The new events are a
+``LocalRelation`` (``session.local_frame``), which both writes scan
+without a job of their own, and while the state is one file the fold runs
+on one partition inside the state write's job, with no shuffle
+(``_fold``). A tail checkpoint adds one job, once per
+``TAIL_MAX_FILES`` appends; a guarded append (``skip_if_terminal`` /
+``expect``) adds the one job of its current-status read.
 """
 
 from __future__ import annotations
@@ -59,6 +69,7 @@ from pathlib import Path
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..session import local_frame
 from ..versioning import retire_versions, swap_symlink
 from ..schema import (
     LEDGER_SCHEMA,
@@ -144,7 +155,7 @@ class LedgerStore:
         if self._tail_files():
             parts.append(self.spark.read.schema(LEDGER_SCHEMA).parquet(self.path))
         if not parts:
-            return self.spark.createDataFrame([], LEDGER_SCHEMA)
+            return local_frame(self.spark, [], LEDGER_SCHEMA)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -215,7 +226,8 @@ class LedgerStore:
             # those events stay invisible and the next checkpoint
             # destroys them (see _unfolded_tail_names).
             seed_from_log = bool(self._unfolded_tail_names())
-            df = self.spark.createDataFrame(
+            df = local_frame(
+                self.spark,
                 [tuple(r.get(f.name) for f in LEDGER_SCHEMA.fields) for r in full],
                 LEDGER_SCHEMA,
             )
@@ -373,31 +385,64 @@ class LedgerStore:
         # retention (see versioning.retire_versions).
         retire_versions(self._versions(self.hist_path), keep=(new_dir, prev_hist))
 
-    def _compact(self, new_events: DataFrame, seed_from_log: bool = False) -> None:
-        """state' = latest-per-file_id over (previous state ∪ new events).
+    def _fold_input_bytes(self, from_state: bool) -> int:
+        """Parquet bytes the state fold reads (driver-side stat, no Spark
+        job): the published state plus the live tail, and the compacted
+        history too when the fold seeds from the event log instead of the
+        state (no published state, or an unfolded tail). Counting only the
+        state there would size a large replayed log as one file and fold
+        it on one core."""
+        roots = [self._state_target()]
+        if not from_state:
+            roots.append(self._hist_dir())
+        return sum(
+            f.stat().st_size
+            for root in roots
+            if root is not None
+            for f in root.rglob("*.parquet")
+            if f.is_file()
+        ) + sum(f.stat().st_size for f in self._tail_files())
+
+    def _fold(self, new_events: DataFrame, seed_from_log: bool = False) -> DataFrame:
+        """The next state table: latest-per-file_id over (previous state ∪
+        new events), partitioned for the state write.
 
         The previous state already holds exactly one winner row per file,
         so the fold touches O(files) rows, never the full event log — but
         when the state table is absent while events exist (legacy
-        warehouse, or a crash before the symlink publish), the fold seeds
-        from the full log instead, so no pre-existing file's status is
+        warehouse, or a crash before the symlink publish), or the tail
+        holds unfolded events (``seed_from_log``), the fold seeds from the
+        full hist ∪ tail view instead, so no pre-existing file's status is
         lost and the next append self-heals the cache. ``new_events`` was
         already appended to the log before this is called, so the
         log-seeded fold double-counts them harmlessly (the winner rule is
-        idempotent). Publication is an atomic symlink replace; see the
-        module docstring.
-        """
-        if self._state_exists() and not seed_from_log:
-            base = self.spark.read.schema(LEDGER_SCHEMA).parquet(self.state_path)
-        elif self.exists():
-            # Legacy warehouse, crash before a symlink publish, or a
-            # detected unfolded tail (seed_from_log): replay the full
-            # hist ∪ tail view so no event is left behind.
-            base = self._latest_per_file(self.read_events())
-        else:
-            base = self.spark.createDataFrame([], LEDGER_SCHEMA)
-        merged = self._latest_per_file(base.unionByName(new_events))
+        idempotent and associative, so the log needs no fold of its own).
 
+        One output file per 64 MB of fold input; one winner row per
+        file_id keeps the state a single file for most warehouse
+        lifetimes. Then the input is coalesced to one partition BEFORE the
+        fold: SinglePartition satisfies the window's
+        clustering, so fold + sort + write run in the state write's own
+        job with no shuffle. A larger state keeps the parallel fold and
+        range-partitions its output so every file owns a disjoint file_id
+        range; the estimate must therefore never undercount
+        (``_fold_input_bytes``)."""
+        from_state = self._state_exists() and not seed_from_log
+        if from_state:
+            base = self.spark.read.schema(LEDGER_SCHEMA).parquet(self.state_path)
+        else:
+            base = self.read_events()
+        events = base.unionByName(new_events)
+        nparts = max(1, -(-self._fold_input_bytes(from_state) // (64 << 20)))
+        if nparts == 1:
+            return self._latest_per_file(events.coalesce(1))
+        return self._latest_per_file(events).repartitionByRange(nparts, "file_id")
+
+    def _compact(self, new_events: DataFrame, seed_from_log: bool = False) -> None:
+        """Fold the new events into the state table (``_fold``) and publish
+        it as the next version by an atomic symlink replace; see the module
+        docstring. Costs one Spark job while the state is one file."""
+        shaped = self._fold(new_events, seed_from_log)
         versions = self._versions()
         next_n = (
             int(versions[-1].name.rsplit(".v", 1)[1]) + 1 if versions else 1
@@ -405,27 +450,6 @@ class LedgerStore:
         new_dir = Path(f"{self.state_path}.v{next_n}")
         if new_dir.exists():
             shutil.rmtree(new_dir)
-        # File count from the PREVIOUS state's bytes + the live tail
-        # (driver-side stat): one winner row per file_id keeps this table
-        # tiny for most warehouse lifetimes, and a single-file write skips
-        # repartitionByRange's separate range-sampling job — one Spark job
-        # per append instead of two (guide §6 output sizing; the old
-        # ``defaultParallelism // 8`` was a core-count constant that wrote
-        # kilobyte files). The range+sort layout (disjoint file_id ranges
-        # per file) is unchanged either way.
-        target = self._state_target()
-        prev_bytes = (
-            sum(f.stat().st_size for f in target.rglob("*.parquet") if f.is_file())
-            if target is not None
-            else 0
-        )
-        tail_bytes = sum(f.stat().st_size for f in self._tail_files())
-        nparts = max(1, -(-(prev_bytes + tail_bytes) // (64 << 20)))
-        shaped = (
-            merged.coalesce(1)
-            if nparts == 1
-            else merged.repartitionByRange(nparts, "file_id")
-        )
         (
             shaped.sortWithinPartitions("file_id")
             .write.mode("overwrite")

@@ -1202,3 +1202,191 @@ def test_products_retention_skips_torn_versions(spark, tmp_path, landing):
     assert {r["code"] for r in pinned.collect()} == {"0001"}
     assert {r["code"] for r in wh.products().collect()} == {"0001", "0002"}
     assert len(wh._product_versions()) <= 2
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted through a job group once the
+    listener bus has delivered every job-start event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_LOCAL_FRAME_ROWS = [
+    # nulls in every nullable column, naive timestamps on both sides of
+    # daylight saving time, microsecond precision
+    ("f1", "a.json", "/l/a", dt.datetime(2024, 3, 10, 6, 30, 1, 123456), None,
+     "uploaded", None, None, None, dt.datetime(2024, 7, 4, 23, 15, 0, 7)),
+    ("f2", "b.json", "/l/b", dt.datetime(1999, 12, 31, 23, 59, 59), "text/x",
+     "processed", 5, 4, 1, dt.datetime(2026, 1, 1)),
+]
+
+
+@pytest.mark.parametrize(
+    "process_tz,session_tz",
+    [("America/New_York", "UTC"), ("UTC", "Asia/Kolkata")],
+)
+def test_local_frame_matches_create_dataframe(spark, process_tz, session_tz):
+    """local_frame returns exactly the rows createDataFrame(list) returns
+    and stores the same instants, whatever the process and session time
+    zones: a naive datetime means process-local time on both paths (a
+    plain Arrow table of naive datetimes would shift by the zone offset)."""
+    import time
+
+    from data_pipeline_challenge_spark.schema import LEDGER_SCHEMA
+    from data_pipeline_challenge_spark.session import local_frame
+
+    old_tz = os.environ.get("TZ")
+    old_session_tz = spark.conf.get("spark.sql.session.timeZone")
+    os.environ["TZ"] = process_tz
+    time.tzset()
+    spark.conf.set("spark.sql.session.timeZone", session_tz)
+    try:
+        got = local_frame(spark, _LOCAL_FRAME_ROWS, LEDGER_SCHEMA)
+        want = spark.createDataFrame(_LOCAL_FRAME_ROWS, LEDGER_SCHEMA)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        assert got.collect()[0]["event_ts"] == dt.datetime(2024, 7, 4, 23, 15, 0, 7)
+
+        def micros(df):
+            return df.select(
+                F.unix_micros("uploaded_at"), F.unix_micros("event_ts")
+            ).collect()
+
+        assert micros(got) == micros(want)
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+        spark.conf.set("spark.sql.session.timeZone", old_session_tz)
+
+
+def test_local_frame_empty_and_null_checks(spark):
+    """An empty list gives an empty frame of the schema (the empty-table
+    fallbacks use it, map columns included), a DDL string schema works,
+    and a None in a non-nullable field raises like the list path does."""
+    from data_pipeline_challenge_spark.schema import LEDGER_SCHEMA, PRODUCT_SCHEMA
+    from data_pipeline_challenge_spark.session import local_frame
+
+    for schema in (LEDGER_SCHEMA, PRODUCT_SCHEMA):
+        empty = local_frame(spark, [], schema)
+        assert empty.schema == schema
+        assert empty.collect() == []
+    assert local_frame(spark, [("a", 1)], "file_id string, n long").collect() == [
+        ("a", 1)
+    ]
+    with pytest.raises(ValueError, match="file_id"):
+        local_frame(spark, [(None, *_LOCAL_FRAME_ROWS[0][1:])], LEDGER_SCHEMA)
+
+
+def test_local_frame_is_a_local_relation_with_no_job(spark):
+    """The optimized plan is a LocalRelation, so building and collecting
+    the frame launches no Spark job (createDataFrame(list) launches one
+    per action)."""
+    from data_pipeline_challenge_spark.schema import LEDGER_SCHEMA
+    from data_pipeline_challenge_spark.session import local_frame
+
+    df = local_frame(spark, _LOCAL_FRAME_ROWS, LEDGER_SCHEMA)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
+    assert _jobs_launched(
+        spark, lambda: local_frame(spark, _LOCAL_FRAME_ROWS, LEDGER_SCHEMA).collect()
+    ) == 0
+    assert _jobs_launched(
+        spark,
+        lambda: spark.createDataFrame(_LOCAL_FRAME_ROWS, LEDGER_SCHEMA).collect(),
+    ) == 1
+
+
+def test_ledger_append_single_file_state_costs_two_jobs(spark, tmp_path):
+    """While the state is one file, an append is the tail write plus the
+    state write, and the state fold runs on one partition: its plan holds
+    no Exchange (no shuffle, no separate map-stage job)."""
+    from data_pipeline_challenge_spark.schema import LEDGER_SCHEMA
+    from data_pipeline_challenge_spark.session import local_frame
+    from data_pipeline_challenge_spark.sources.ledger import LedgerStore
+
+    store = LedgerStore(spark, tmp_path)
+    store.append([_ledger_row("f1", "uploaded")])  # first append: no state yet
+    assert _jobs_launched(
+        spark, lambda: store.append([_ledger_row("f2", "uploaded")])
+    ) <= 2
+    assert _jobs_launched(
+        spark, lambda: store.append([_ledger_row("f1", "processed", 3)])
+    ) <= 2
+
+    new = local_frame(
+        spark,
+        [tuple({**_ledger_row("f3", "uploaded"), "event_ts": dt.datetime(2024, 1, 2)}
+               .get(f.name) for f in LEDGER_SCHEMA.fields)],
+        LEDGER_SCHEMA,
+    )
+    plan = store._fold(new)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert {r["file_id"]: r["status"] for r in store.current().collect()} == {
+        "f1": "processed",
+        "f2": "uploaded",
+    }
+
+
+def test_ledger_fold_estimate_counts_hist_when_seeding_from_log(spark, tmp_path):
+    """With no published state the fold replays hist ∪ tail, so the size
+    estimate that picks the one-partition fold must count the compacted
+    history's bytes, not only the (absent) state's."""
+    from data_pipeline_challenge_spark.schema import LEDGER_SCHEMA
+    from data_pipeline_challenge_spark.session import local_frame
+    from data_pipeline_challenge_spark.sources.ledger import LedgerStore
+
+    store = LedgerStore(spark, tmp_path)
+    row = {**_ledger_row("h1", "processed", 2), "event_ts": dt.datetime(2024, 1, 1)}
+    # A complete, unpublished history version: _hist_dir()'s fallback.
+    local_frame(
+        spark, [tuple(row.get(f.name) for f in LEDGER_SCHEMA.fields)], LEDGER_SCHEMA
+    ).write.parquet(str(tmp_path / "ledger_hist.v1"))
+    assert store._state_target() is None and store._hist_dir() is not None
+
+    def parquet_bytes(root):
+        return sum(f.stat().st_size for f in Path(root).rglob("*.parquet"))
+
+    hist_bytes = parquet_bytes(tmp_path / "ledger_hist.v1")
+    assert hist_bytes > 0
+    assert store._fold_input_bytes(from_state=False) == hist_bytes
+
+    store.append([_ledger_row("t1", "uploaded")])  # publishes a state
+    state_bytes = parquet_bytes(store._state_target())
+    tail_bytes = parquet_bytes(store.path)
+    assert store._fold_input_bytes(from_state=True) == state_bytes + tail_bytes
+    assert (
+        store._fold_input_bytes(from_state=False)
+        == state_bytes + hist_bytes + tail_bytes
+    )
+    assert {r["file_id"] for r in store.current().collect()} == {"h1", "t1"}
+
+
+def test_table_bytes_counts_complete_unpublished_version(spark, tmp_path, landing):
+    """A crash between a products write and its publish leaves a complete
+    version dir and no symlink. The read path serves that version, so the
+    write-sizing estimate must count it too instead of reading 0."""
+    from data_pipeline_challenge_spark.sources.landing import upload
+
+    wh = ProductWarehouse(spark, tmp_path / "wh")
+    upload(json.dumps([{"code": "0001", "product_name": "A"}]).encode(),
+           landing, orig_name="a.json")
+    wh.ingest(landing)
+    published = wh._table_bytes()
+    assert published > 0
+
+    wh.products_path.unlink()  # the symlink publish never happened
+    assert not wh.products_path.exists()
+    assert wh._resolve_products_dir() is not None
+    assert wh._table_bytes() == published

@@ -3048,3 +3048,15 @@ def test_prefix_bucket_local_matches_distributed(spark):
         ]
         local = prefix_bucket_local(spark, values, n)
         assert local == dist
+
+
+def test_prefix_bucket_local_rejects_non_strings(spark):
+    """Stores bucket string columns, and xxhash64 of a number differs from
+    the hash of its string form, so a non-string value must raise rather
+    than return a wrong bucket; an all-string list still evaluates."""
+    from data_pipeline_challenge_spark.batchstore import prefix_bucket_local
+
+    assert len(prefix_bucket_local(spark, ["a", "1"], 8)) == 2
+    for bad in (["a", 1], [None], ["a", b"b"]):
+        with pytest.raises(TypeError):
+            prefix_bucket_local(spark, bad, 8)
