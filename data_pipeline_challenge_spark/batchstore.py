@@ -47,6 +47,7 @@ from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 _MARKER = "_consolidated.json"
 _BATCH_RE = re.compile(r"^ingest_batch=(-?\d+)$")
@@ -1029,6 +1030,46 @@ def audit_warehouse_stores(root: str | Path) -> list[str]:
     return sweep_warehouse(root)[1]
 
 
+def consolidate_stores(
+    spark: SparkSession,
+    stores: dict[str | Path, list[str] | None],
+    up_to: int | None = None,
+    transforms: dict | None = None,
+    unbounded: set | frozenset | None = None,
+) -> dict[str, int]:
+    """Fold every existing store of a view with
+    :func:`consolidate_batch_store` — the one store loop behind both the
+    offline ``compact_*`` maintenance and the in-stream hook.
+
+    ``stores`` maps store path -> partition_by columns (or None), the
+    view module's ``_store_map``. ``up_to`` bounds every fold (offline:
+    the view's commit frontier; in-stream: the previous batch).
+    ``transforms`` maps store path -> fold-time rewrite (the view's
+    ``_transforms``; see :func:`consolidate_batch_store`'s
+    ``transform``). ``unbounded`` names stores whose batch ids live in an
+    INDEPENDENT id space (e.g. the retrieval index's ``revoked`` store,
+    written on its own generation counter while the stream is stopped,
+    or a frontier-defining membership store offline): those fold with
+    no ``up_to`` bound, since bounding them at another store's id would
+    be comparing unrelated counters (ADVICE r12). Returns
+    {store dir name: dirs folded or swept}; stores sharing a dir name
+    (a multi-stage map) add into one entry."""
+    skip_bound = {Path(p) for p in (unbounded or ())}
+    xform = {Path(p): t for p, t in (transforms or {}).items()}
+    out: dict[str, int] = {}
+    for store, partition_by in stores.items():
+        store = Path(store)
+        if store.exists():
+            out[store.name] = out.get(store.name, 0) + consolidate_batch_store(
+                spark,
+                store,
+                partition_by=partition_by,
+                up_to=None if store in skip_bound else up_to,
+                transform=xform.get(store),
+            )
+    return out
+
+
 def maybe_consolidate_in_stream(
     spark: SparkSession,
     stores: dict[str | Path, list[str] | None],
@@ -1039,40 +1080,52 @@ def maybe_consolidate_in_stream(
 ) -> int:
     """In-stream consolidation hook: called from the owning stream's own
     ``foreachBatch`` AFTER the batch's appends, folds each store's
-    batches up to ``batch_id - 1`` whenever ``batch_id`` is a positive
-    multiple of ``every``. Removes the stop-the-stream maintenance
-    window: the stream is the store's only writer, so running the fold
-    inside its serialized foreachBatch needs no new coordination, and
-    bounding the fold at ``batch_id - 1`` keeps the current
-    (uncommitted) batch's increment readable for a crash-replay.
+    batches up to ``batch_id - 1`` (:func:`consolidate_stores`) whenever
+    ``batch_id`` is a positive multiple of ``every``. Removes the
+    stop-the-stream maintenance window: the stream is the store's only
+    writer, so running the fold inside its serialized foreachBatch needs
+    no new coordination, and bounding the fold at ``batch_id - 1`` keeps
+    the current (uncommitted) batch's increment readable for a
+    crash-replay.
 
-    ``stores`` maps store path -> partition_by columns (or None).
     ``every=None`` disables (offline-only maintenance, the pre-r8
-    contract). ``transforms`` maps store path -> fold-time rewrite
-    (see :func:`consolidate_batch_store`'s ``transform``). ``unbounded``
-    names stores whose batch ids live in an
-    INDEPENDENT id space (e.g. the retrieval index's ``revoked`` store,
-    written on its own generation counter while the stream is stopped):
-    those fold with no ``up_to`` bound — the same discipline their
-    offline compactor applies (ADVICE r12) — since bounding them at the
-    stream's batch id would be comparing unrelated counters. Idempotent
-    under replay: a re-delivered trigger batch re-runs the fold, which
-    either finds nothing live below the horizon (already folded —
-    sweep-only) or completes a fold that crashed midway. Returns total
-    dirs folded/swept."""
+    contract). ``stores``, ``transforms`` and ``unbounded`` are
+    :func:`consolidate_stores`'s. Idempotent under replay: a
+    re-delivered trigger batch re-runs the fold, which either finds
+    nothing live below the horizon (already folded — sweep-only) or
+    completes a fold that crashed midway. Returns total dirs
+    folded/swept."""
     if not every or batch_id <= 0 or batch_id % every != 0:
         return 0
-    skip_bound = {Path(p) for p in (unbounded or ())}
-    xform = {Path(p): t for p, t in (transforms or {}).items()}
-    total = 0
-    for store, partition_by in stores.items():
-        store = Path(store)
-        if store.exists():
-            total += consolidate_batch_store(
-                spark,
-                store,
-                partition_by=partition_by,
-                up_to=None if store in skip_bound else batch_id - 1,
-                transform=xform.get(store),
-            )
-    return total
+    return sum(
+        consolidate_stores(spark, stores, batch_id - 1, transforms, unbounded).values()
+    )
+
+
+def run_view(
+    spark: SparkSession,
+    source_dir: str | Path,
+    schema: str,
+    checkpoint_dir: str | Path,
+    process_batch,
+    max_files_per_trigger: int | None = None,
+    available_now: bool = True,
+) -> StreamingQuery:
+    """The one stream runner behind every maintained parquet view: a
+    file source over ``source_dir`` (``schema`` DDL, at most
+    ``max_files_per_trigger`` files per micro-batch), each micro-batch
+    handed to ``process_batch(batch_df, batch_id)`` under the
+    ``checkpoint_dir`` checkpoint — the exactly-once contract every
+    view's fold is written against. ``available_now=True`` drains what
+    has landed and stops; ``False`` runs continuously."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    writer = (
+        reader.parquet(str(source_dir))
+        .writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", str(checkpoint_dir))
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()

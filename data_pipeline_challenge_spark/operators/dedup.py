@@ -80,7 +80,6 @@ def jaccard_pairs(
     n: int = 3,
     min_shared: int = 1,
     max_doc_freq: int | None = 512,
-    expand_posting_lists: bool = False,
 ) -> DataFrame:
     """N-gram Jaccard for every pair sharing >= min_shared shingles.
 
@@ -96,12 +95,7 @@ def jaccard_pairs(
     shingle space (the standard df-cap/prefix-filter semantics). Hot
     shingles are by construction few (≤ total_shingles/K), so the filter
     is a broadcast anti-join — no extra shuffle of the big table. Pass
-    ``None`` for the exact uncapped variant (small corpora only).
-
-    ``expand_posting_lists`` (capped path only) swaps the self-join for
-    a local posting-list pair expansion — two fewer exploded-corpus
-    shuffles, more per-row compute; see the inline note for when each
-    wins."""
+    ``None`` for the exact uncapped variant (small corpora only)."""
     sh = _shingle_table(df, id_col, text_col, n)
     if max_doc_freq is not None:
         hot = (
@@ -112,62 +106,28 @@ def jaccard_pairs(
         )
         sh = sh.join(F.broadcast(hot), "s", "left_anti")
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-    if expand_posting_lists and max_doc_freq is not None:
-        # OPT-IN (r19): candidate pairs straight from the inverted
-        # index — group the hot-capped shingle table by shingle,
-        # collect the sorted posting list, expand each list's i<j pairs
-        # LOCALLY with a higher-order transform. Saves the two extra
-        # exploded-corpus shuffles the self-join pays, which is the
-        # winning trade only when those shuffles dominate (very large
-        # corpora / slow interconnect). It is NOT the default: the r19
-        # interleaved A/B measured the interpreted HOF expansion 1.15×
-        # SLOWER than the self-join at sf0.1 (and a codegen'd
-        # nested-explode variant 1.19× slower) — the per-row
-        # struct-array build costs more than the shuffles it removes at
-        # bench scale (plans/r19/ab/jaccard_*.json; the r18 driver
-        # artifact's 0.74× on this query was this effect, not noise).
-        # Memory stays bounded BECAUSE the hot-shingle anti-join above
-        # runs first: no posting list exceeds ``max_doc_freq`` (512 by
-        # default) and no pair array exceeds cap²/2 structs, so the
-        # unbounded-collect shape this repo rejects elsewhere never
-        # occurs on this path.
-        g = (
-            sh.groupBy("s")
-            .agg(F.sort_array(F.collect_list("doc")).alias("ds"))
-            .filter(F.size("ds") >= 2)
+    # The streaming inverted-index self-join. A local posting-list pair
+    # expansion (collect each shingle's sorted doc list, expand its i<j
+    # pairs with a higher-order transform) saves two exploded-corpus
+    # shuffles, but the r19 interleaved A/B measured it 1.15x SLOWER at
+    # sf0.1 (tools/ab_arms_r19.py::jaccard_r18_hof,
+    # plans/r19/ab/jaccard_posting_expansion.json). For the uncapped
+    # variant the join is also the only safe shape: with no df cap, a
+    # single hot shingle's posting list (and its ~D²/2 pair array) would
+    # materialize in ONE aggregation row — an executor OOM / 2 GiB-array
+    # hard failure where the join merely produces the same pairs as
+    # streamed rows (code-review r18).
+    a = sh.alias("a")
+    b = sh.alias("b")
+    inter = (
+        a.join(
+            b,
+            (F.col("a.s") == F.col("b.s")) & (F.col("a.doc") < F.col("b.doc")),
         )
-        pairs_arr = F.expr(
-            "flatten(transform(ds, (x, i) -> "
-            "transform(slice(ds, i + 2, size(ds) - i - 1), "
-            "y -> struct(x AS doc1, y AS doc2))))"
-        )
-        inter = (
-            g.select(F.explode(pairs_arr).alias("p"))
-            .select("p.doc1", "p.doc2")
-            .groupBy("doc1", "doc2")
-            .agg(F.count(F.lit(1)).alias("inter"))
-            .filter(F.col("inter") >= min_shared)
-        )
-    else:
-        # DEFAULT: the streaming inverted-index self-join. For the
-        # uncapped variant it is also the only safe shape: with no df
-        # cap, a single hot shingle's posting list (and its ~D²/2 pair
-        # array) would otherwise materialize in ONE aggregation row —
-        # an executor OOM / 2 GiB-array hard failure where the join
-        # merely produces the same pairs as streamed rows (code-review
-        # r18).
-        a = sh.alias("a")
-        b = sh.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.s") == F.col("b.s"))
-                & (F.col("a.doc") < F.col("b.doc")),
-            )
-            .groupBy(F.col("a.doc").alias("doc1"), F.col("b.doc").alias("doc2"))
-            .agg(F.count(F.lit(1)).alias("inter"))
-            .filter(F.col("inter") >= min_shared)
-        )
+        .groupBy(F.col("a.doc").alias("doc1"), F.col("b.doc").alias("doc2"))
+        .agg(F.count(F.lit(1)).alias("inter"))
+        .filter(F.col("inter") >= min_shared)
+    )
     s1 = sizes.select(F.col("doc").alias("doc1"), F.col("n_sh").alias("n1"))
     s2 = sizes.select(F.col("doc").alias("doc2"), F.col("n_sh").alias("n2"))
     return (

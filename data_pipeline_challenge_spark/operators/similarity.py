@@ -813,6 +813,22 @@ _INDEX_FAMILY_PARTITIONS = {
 }
 
 
+def _index_store_map(index_dir) -> dict:
+    """{increment store: pruning partition columns} for every index
+    family present under ``index_dir`` (detected by its parameter
+    sidecar) — the one store map behind both the offline
+    :func:`compact_index_increments` and the index stream's in-stream
+    consolidation."""
+    from pathlib import Path
+
+    index_dir = Path(index_dir)
+    return {
+        index_dir / inc_name: _INDEX_FAMILY_PARTITIONS[inc_name]
+        for sidecar, inc_name in _INDEX_FAMILIES
+        if (index_dir / sidecar).exists()
+    }
+
+
 def compact_index_increments(spark, index_dir) -> dict[str, int]:
     """OFFLINE maintenance for the persisted indexes' increment stores:
     each accretes one ``ingest_batch=B`` dir per micro-batch forever,
@@ -822,22 +838,9 @@ def compact_index_increments(spark, index_dir) -> dict[str, int]:
     preserving the family's pruning partition column, so directory count
     resets while serving reads are unchanged. Run while the index stream
     is NOT running. Returns {family_store: dirs_folded}."""
-    from pathlib import Path
+    from ..batchstore import consolidate_stores
 
-    from ..batchstore import consolidate_batch_store
-
-    index_dir = Path(index_dir)
-    folded: dict[str, int] = {}
-    for sidecar, inc_name in _INDEX_FAMILIES:
-        if not (index_dir / sidecar).exists():
-            continue
-        store = index_dir / inc_name
-        if not store.exists():
-            continue
-        folded[inc_name] = consolidate_batch_store(
-            spark, store, partition_by=_INDEX_FAMILY_PARTITIONS[inc_name]
-        )
-    return folded
+    return consolidate_stores(spark, _index_store_map(index_dir))
 
 
 def append_index_increments(

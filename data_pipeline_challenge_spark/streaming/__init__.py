@@ -25,4 +25,15 @@ watermarked event-time resequencer — when arrivals can run out of
 order), ``retention_stream`` (day-granular activity set serving
 any cohort granularity), and ``paths_stream`` (per-user-day first-3
 path prefixes — bottom-k merge with payload).
+
+One runner, one store contract: every maintained view reads parquet
+files through ``batchstore.run_view`` (file source → ``foreachBatch`` →
+checkpoint → trigger) and supplies only its per-batch callback —
+``ingest_stream`` alone keeps its own binaryFile source. Each view
+module names its batch stores once, in ``_store_map(dir)`` (store path →
+partition columns) and ``_transforms(dir)`` (store path → fold-time
+rewrite); its in-stream hook (``batchstore.maybe_consolidate_in_stream``,
+bounded at the previous batch) and its offline ``compact_*`` (bounded
+at the view's commit frontier) both fold them through the one store
+loop, ``batchstore.consolidate_stores``.
 """

@@ -70,11 +70,12 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
     append_batch_increment,
-    consolidate_batch_store,
+    consolidate_stores,
     has_rebuilt_marker,
     last_batch_id,
     maybe_consolidate_in_stream,
     read_batch_store,
+    run_view,
     sequential_fold_guard,
 )
 from ..operators.attribution import (
@@ -246,27 +247,19 @@ def _attrib_collapse(df: DataFrame) -> DataFrame:
     )
 
 
-def compact_attribution_store(
-    spark: SparkSession, out_dir: str | Path
-) -> dict[str, int]:
-    """OFFLINE consolidation (run while the stream is not)."""
-    odir = Path(out_dir)
-    xf = {"attrib": _attrib_collapse, "frontier": _frontier_collapse}
-    out: dict[str, int] = {}
-    for name, part in _STORES:
-        store = odir / name
-        if store.exists():
-            out[name] = consolidate_batch_store(
-                spark, store, partition_by=part, transform=xf[name]
-            )
-    return out
-
-
 def _transforms(odir: Path) -> dict:
     return {
         odir / "attrib": _attrib_collapse,
         odir / "frontier": _frontier_collapse,
     }
+
+
+def compact_attribution_store(
+    spark: SparkSession, out_dir: str | Path
+) -> dict[str, int]:
+    """OFFLINE consolidation (run while the stream is not)."""
+    odir = Path(out_dir)
+    return consolidate_stores(spark, _store_map(odir), transforms=_transforms(odir))
 
 
 def rebuild_attribution_store(
@@ -365,11 +358,6 @@ def start_attribution_stream(
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(events_dir))
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_batch(
             spark,
@@ -383,12 +371,10 @@ def start_attribution_stream(
             transforms=_transforms(odir),
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, events_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_resequenced_attribution_stream(
@@ -411,16 +397,11 @@ def start_resequenced_attribution_stream(
     After an ``availableNow`` drain, call :func:`flush_resequenced` to
     release the unfinalized tail before reading the report."""
     from ..catalog import ts_epoch_us
-    from .resequence import buffer_prune_transform, reseq_fold, wm_collapse
+    from .resequence import consolidate_resequenced, reseq_fold
 
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
     rdir = odir / "reseq"
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(events_dir))
 
     def _fold(released: DataFrame, fold_id: int) -> None:
         fold_batch(
@@ -431,33 +412,15 @@ def start_resequenced_attribution_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         with_t = batch_df.withColumn("t_us", ts_epoch_us(batch_df, "ts"))
         reseq_fold(spark, rdir, with_t, batch_id, _fold, delay_us)
-        # resequencer stores run on arrival ids; the downstream stores
-        # on the DOUBLED fold ids — bound each horizon in its own id
-        # space (the resequenced-transition discipline)
-        maybe_consolidate_in_stream(
-            spark,
-            {rdir / "buffer": None, rdir / "wm": None},
-            batch_id,
-            consolidate_every,
-            transforms={
-                rdir / "buffer": buffer_prune_transform(spark, rdir),
-                rdir / "wm": wm_collapse,
-            },
-        )
-        maybe_consolidate_in_stream(
-            spark,
-            _store_map(odir),
-            2 * batch_id,
-            2 * consolidate_every if consolidate_every else None,
-            transforms=_transforms(odir),
+        consolidate_resequenced(
+            spark, rdir, batch_id, consolidate_every,
+            _store_map(odir), _transforms(odir),
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, events_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def flush_resequenced(

@@ -41,12 +41,13 @@ import pyspark.sql.functions as F
 
 from ..batchstore import (
     append_batch_increment,
-    consolidate_batch_store,
+    consolidate_stores,
     ensure_store_params,
     has_rebuilt_marker,
     last_batch_id,
     maybe_consolidate_in_stream,
     read_batch_store,
+    run_view,
     sequential_fold_guard,
 )
 from ..operators.sketches import CMS_DEPTH, CMS_WIDTH, cms_cells, cms_estimate
@@ -132,13 +133,7 @@ def compact_cms_store(spark: SparkSession, out_dir: str | Path) -> dict[str, int
     stream is not). Row count between compactions is
     O(depth x width x batches); the report's (d, bucket) sum collapses
     duplicates, so consolidation only bounds directory count."""
-    odir = Path(out_dir)
-    out: dict[str, int] = {}
-    for name, part in _STORES:
-        store = odir / name
-        if store.exists():
-            out[name] = consolidate_batch_store(spark, store, partition_by=part)
-    return out
+    return consolidate_stores(spark, _store_map(Path(out_dir)))
 
 
 def start_cms_stream(
@@ -160,11 +155,6 @@ def start_cms_stream(
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(corpus_dir))
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_batch(
             spark, odir, batch_df, batch_id, item_col, depth, width, group_cols
@@ -173,9 +163,7 @@ def start_cms_stream(
             spark, _store_map(odir), batch_id, consolidate_every
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, corpus_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

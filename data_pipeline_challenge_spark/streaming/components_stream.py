@@ -98,6 +98,7 @@ Reference parity: none — north-star extension of the dedup family
 
 from __future__ import annotations
 
+import json
 from pathlib import Path
 
 import pyspark.sql.functions as F
@@ -107,7 +108,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..batchstore import (
     REBUILT_MARKER as _REBUILT_MARKER,
     append_batch_increment,
-    consolidate_batch_store,
+    consolidate_stores,
     ensure_store_params,
     has_rebuilt_marker,
     last_batch_id,
@@ -115,6 +116,7 @@ from ..batchstore import (
     prefix_bucket,
     read_batch_store,
     rebuild_swap,
+    run_view,
     sequential_fold_guard,
     write_initial_consolidated,
 )
@@ -132,7 +134,6 @@ def _record_relabel_audit(
     replay — the merge set is a deterministic function of the store and
     the batch): the CapAudit discipline applied to the min-label scheme's
     worst case. Batches that merge nothing write nothing."""
-    import json
     import os
 
     d = odir / _AUDIT_DIR
@@ -159,8 +160,6 @@ def read_relabel_audit(out_dir: str | Path) -> list[dict]:
     monotonically while batch sizes stay flat is the adversarial
     ever-smaller-bridging-id schedule; the remedy is an id renumbering
     or a :func:`rebuild_components_store` pass."""
-    import json
-
     d = Path(out_dir) / _AUDIT_DIR
     if not d.exists():
         return []
@@ -180,44 +179,45 @@ def _resolve_labels(rows: DataFrame) -> DataFrame:
     return rows.groupBy("vertex").agg(F.min("component").alias("component"))
 
 
-def _labels_consolidate(n_prefix: int):
-    def xf(df: DataFrame) -> DataFrame:
-        return _resolve_labels(df.select("vertex", "component")).withColumn(
-            "v_prefix", prefix_bucket(F.col("vertex"), n_prefix)
-        )
-
-    return xf
+def _labels_collapse(df: DataFrame, n_prefix: int) -> DataFrame:
+    return _resolve_labels(df.select("vertex", "component")).withColumn(
+        "v_prefix", prefix_bucket(F.col("vertex"), n_prefix)
+    )
 
 
-def _members_consolidate(n_prefix: int):
+def _members_collapse(df: DataFrame, n_prefix: int) -> DataFrame:
     """Keep only CURRENT components' membership rows: a component c is
     current iff its own id-vertex's min label (over the members frame
     itself — every label a vertex ever had appears as one of its
     membership rows) is c. Absorbed components' rows are unreachable by
     any future probe (ids never recur as components) — dropping them
     resets row count, not just directory count."""
+    m = df.select("component", "vertex").distinct()
+    cur = m.groupBy("vertex").agg(F.min("component").alias("cur"))
+    roots = cur.filter(F.col("cur") == F.col("vertex")).select(
+        F.col("vertex").alias("component")
+    )
+    return m.join(roots, "component", "left_semi").withColumn(
+        "c_prefix", prefix_bucket(F.col("component"), n_prefix)
+    )
 
-    def xf(df: DataFrame) -> DataFrame:
-        m = df.select("component", "vertex").distinct()
-        cur = m.groupBy("vertex").agg(F.min("component").alias("cur"))
-        roots = cur.filter(F.col("cur") == F.col("vertex")).select(
-            F.col("vertex").alias("component")
-        )
-        return m.join(roots, "component", "left_semi").withColumn(
-            "c_prefix", prefix_bucket(F.col("component"), n_prefix)
-        )
 
-    return xf
+def _pinned_n_prefix(odir: Path) -> int:
+    return json.loads((odir / "_gate_params.json").read_text())["n_prefix"]
 
 
 def _store_map(odir: Path) -> dict[Path, list[str] | None]:
     return {odir / "labels": ["v_prefix"], odir / "members": ["c_prefix"]}
 
 
-def _transforms(odir: Path, n_prefix: int) -> dict:
+def _transforms(odir: Path) -> dict:
+    """Labels collapse to one resolved row per vertex; members drop
+    absorbed components' rows — both under the store's PINNED layout
+    modulus, read when a fold runs (``fold_batch`` pins it before any
+    store dir exists)."""
     return {
-        odir / "labels": _labels_consolidate(n_prefix),
-        odir / "members": _members_consolidate(n_prefix),
+        odir / "labels": lambda df: _labels_collapse(df, _pinned_n_prefix(odir)),
+        odir / "members": lambda df: _members_collapse(df, _pinned_n_prefix(odir)),
     }
 
 
@@ -438,9 +438,7 @@ def component_of(
     """Keyed component lookup for a bounded id list — the serving-path
     probe, prefix-pruned exactly like the fold's own lookup."""
     odir = Path(out_dir)
-    import json
-
-    n_prefix = json.loads((odir / "_gate_params.json").read_text())["n_prefix"]
+    n_prefix = _pinned_n_prefix(odir)
     store = odir / "labels"
     ids = spark.createDataFrame([(int(v),) for v in vertex_ids], "vertex long")
     touched = sorted(
@@ -467,18 +465,8 @@ def compact_components_store(
     vertex; members drop absorbed components' rows. Run while the
     stream is NOT running (in-stream consolidation is the
     ``consolidate_every`` hook)."""
-    import json
-
     odir = Path(out_dir)
-    n_prefix = json.loads((odir / "_gate_params.json").read_text())["n_prefix"]
-    out: dict[str, int] = {}
-    xf = _transforms(odir, n_prefix)
-    for store, part in _store_map(odir).items():
-        if store.exists():
-            out[store.name] = consolidate_batch_store(
-                spark, store, partition_by=part, transform=xf[store]
-            )
-    return out
+    return consolidate_stores(spark, _store_map(odir), transforms=_transforms(odir))
 
 
 def rebuild_components_store(
@@ -619,26 +607,16 @@ def start_components_stream(
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(edges_dir))
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_batch(
             spark, odir, batch_df, batch_id, src=src, dst=dst, n_prefix=n_prefix
         )
         maybe_consolidate_in_stream(
-            spark,
-            _store_map(odir),
-            batch_id,
-            consolidate_every,
-            transforms=_transforms(odir, n_prefix),
+            spark, _store_map(odir), batch_id, consolidate_every,
+            transforms=_transforms(odir),
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, edges_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -65,6 +65,7 @@ from ..batchstore import (
     canonical_column_str,
     ensure_store_params,
     maybe_consolidate_in_stream,
+    run_view,
 )
 
 
@@ -491,11 +492,6 @@ def start_corpus_pipeline_stream(
         )
         ev = decontam_stream.eval_shingles(eval_df, id_col, text_col, n)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(corpus_dir))
-
     def _run_gates(batch_df: DataFrame, batch_id: int) -> None:
         # A gate that drops the WHOLE batch must not short-circuit the
         # chain: every downstream store still ACCOUNTS the batch id (an
@@ -596,12 +592,7 @@ def start_corpus_pipeline_stream(
             from . import components_stream
 
             stores.update(components_stream._store_map(clusters_dir))
-            # same resolved layout modulus as the chained fold (read
-            # back from the seeded store's pin at start, or the default
-            # the fold itself pins on a fresh store)
-            transforms.update(
-                components_stream._transforms(clusters_dir, clusters_n_prefix)
-            )
+            transforms.update(components_stream._transforms(clusters_dir))
         unbounded: set = set()
         if retrieval_index_dir is not None:
             from . import retrieval_stream
@@ -618,12 +609,10 @@ def start_corpus_pipeline_stream(
             unbounded=unbounded, transforms=transforms,
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, corpus_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 _INPUT_AUDIT_KEEP = 512

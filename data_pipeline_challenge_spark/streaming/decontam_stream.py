@@ -42,7 +42,6 @@ from pyspark.sql.streaming import StreamingQuery
 from ..batchstore import (
     account_empty_fold,
     append_batch_increment,
-    consolidate_batch_store,
     ensure_store_params,
     has_rebuilt_marker,
     last_batch_id,
@@ -51,6 +50,8 @@ from ..batchstore import (
     read_batch_store,
     sequential_fold_guard,
     record_anti_join_key,
+    run_view,
+    consolidate_stores,
 )
 from ..operators.dedup import _shingle_table
 
@@ -301,13 +302,7 @@ def contamination_log(spark: SparkSession, out_dir: str | Path) -> DataFrame | N
 def compact_decontam_store(spark: SparkSession, out_dir: str | Path) -> dict[str, int]:
     """OFFLINE: fold per-batch dirs of both stores (crash-safe marker
     protocol). Run while the gate stream is NOT running."""
-    odir = Path(out_dir)
-    out: dict[str, int] = {}
-    for name, part in _STORES:
-        store = odir / name
-        if store.exists():
-            out[name] = consolidate_batch_store(spark, store, partition_by=part)
-    return out
+    return consolidate_stores(spark, _store_map(Path(out_dir)))
 
 
 def eval_shingles(eval_df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
@@ -418,11 +413,6 @@ def start_decontam_stream(
     # Eval shingles once, cached across micro-batches (benchmark-sized).
     ev = eval_shingles(eval_df, id_col, text_col, n)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(corpus_dir))
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_batch(
             spark, odir, batch_df, batch_id, ev,
@@ -432,9 +422,7 @@ def start_decontam_stream(
             spark, _store_map(odir), batch_id, consolidate_every
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, corpus_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

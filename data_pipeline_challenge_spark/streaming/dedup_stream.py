@@ -61,13 +61,14 @@ from pyspark.sql.streaming import StreamingQuery
 from ..batchstore import (
     account_empty_fold,
     append_batch_increment,
-    consolidate_batch_store,
     maybe_consolidate_in_stream,
     ensure_store_params,
     has_rebuilt_marker,
     last_batch_id,
     read_batch_store,
     sequential_fold_guard,
+    run_view,
+    consolidate_stores,
 )
 from ..functions.textfn import normalized_fingerprint
 
@@ -123,13 +124,7 @@ def compact_dedup_store(spark: SparkSession, out_dir: str | Path) -> dict[str, i
     while the dedup stream is NOT running — OR let the stream do it
     itself via ``consolidate_every`` (no stop window needed). Returns
     {store: dirs folded}."""
-    odir = Path(out_dir)
-    out: dict[str, int] = {}
-    for name, part in _STORES:
-        store = odir / name
-        if store.exists():
-            out[name] = consolidate_batch_store(spark, store, partition_by=part)
-    return out
+    return consolidate_stores(spark, _store_map(Path(out_dir)))
 
 
 
@@ -281,11 +276,6 @@ def start_dedup_stream(
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(corpus_dir))
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_batch(
             spark, odir, batch_df, batch_id,
@@ -295,9 +285,7 @@ def start_dedup_stream(
             spark, _store_map(odir), batch_id, consolidate_every
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, corpus_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -51,7 +51,7 @@ increment. A dedicated index dir is required —
 mixing this gate with ``index_stream``-maintained IVF/PQ families in one
 dir would desynchronize their per-family batch numbering.
 
-Offline maintenance: ``batchstore.consolidate_batch_store`` on
+Offline maintenance: :func:`compact_embedding_dedup_store` on
 ``bucketed_inc`` (preserving the bucket partition column), plus the
 usual rebuild-from-snapshot path for parameter changes.
 """
@@ -68,14 +68,19 @@ from pyspark.sql.streaming import StreamingQuery
 from ..batchstore import (
     account_empty_fold,
     append_batch_increment,
-    consolidate_batch_store,
+    consolidate_stores,
     maybe_consolidate_in_stream,
     sequential_fold_guard,
     has_rebuilt_marker,
     last_batch_id,
+    run_view,
 )
 from ..functions.vectorfn import as_double, cosine
 from ..operators.similarity import _LSH_SEED, _with_increments, with_lsh_bucket
+
+
+def _store_map(index_dir: Path) -> dict:
+    return {index_dir / "bucketed_inc": ["bucket"]}
 
 
 def _base_batch(index_dir: Path) -> int:
@@ -111,10 +116,7 @@ def compact_embedding_dedup_store(
 ) -> int:
     """OFFLINE: consolidate the increment store (bucket partitioning
     preserved). Run while the gate stream is NOT running."""
-    store = Path(index_dir) / "bucketed_inc"
-    if not store.exists():
-        return 0
-    return consolidate_batch_store(spark, store, partition_by=["bucket"])
+    return sum(consolidate_stores(spark, _store_map(Path(index_dir))).values())
 
 
 def fold_batch(
@@ -309,11 +311,6 @@ def start_embedding_dedup_stream(
     idx = Path(index_dir)
     idx.mkdir(parents=True, exist_ok=True)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(vectors_dir))
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_batch(
             spark, idx, batch_df, batch_id,
@@ -321,13 +318,10 @@ def start_embedding_dedup_stream(
             min_cos=min_cos, bucket_cap=bucket_cap,
         )
         maybe_consolidate_in_stream(
-            spark, {idx / "bucketed_inc": ["bucket"]}, batch_id,
-            consolidate_every,
+            spark, _store_map(idx), batch_id, consolidate_every
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, vectors_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

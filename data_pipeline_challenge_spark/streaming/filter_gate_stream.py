@@ -36,11 +36,12 @@ from pyspark.sql.streaming import StreamingQuery
 from ..batchstore import (
     account_empty_fold,
     append_batch_increment,
-    consolidate_batch_store,
+    consolidate_stores,
     has_rebuilt_marker,
     last_batch_id,
     maybe_consolidate_in_stream,
     read_batch_store,
+    run_view,
     sequential_fold_guard,
 )
 from ..functions.textfn import top_token_fraction
@@ -99,13 +100,7 @@ def compact_filter_gate_store(
 ) -> dict[str, int]:
     """OFFLINE: fold per-batch dirs of both stores. Run while the gate
     stream is NOT running."""
-    odir = Path(out_dir)
-    out: dict[str, int] = {}
-    for name, part in _STORES:
-        store = odir / name
-        if store.exists():
-            out[name] = consolidate_batch_store(spark, store, partition_by=part)
-    return out
+    return consolidate_stores(spark, _store_map(Path(out_dir)))
 
 
 def fold_batch(
@@ -172,20 +167,13 @@ def start_filter_gate_stream(
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(corpus_dir))
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_batch(spark, odir, batch_df, batch_id, keep_expr)
         maybe_consolidate_in_stream(
             spark, _store_map(odir), batch_id, consolidate_every
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, corpus_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

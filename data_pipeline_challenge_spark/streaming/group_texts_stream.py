@@ -48,10 +48,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
-    consolidate_batch_store,
+    consolidate_stores,
     ensure_store_params,
     maybe_consolidate_in_stream,
     read_batch_store,
+    run_view,
 )
 from ..operators.packing import group_texts_blocks
 from ..versioning import retire_versions
@@ -267,14 +268,16 @@ def revoke_block_docs(
     return len(present)
 
 
+def _store_map(odir: Path) -> dict:
+    return {odir / "rows": ["shard"]}
+
+
 def compact_rows_store(spark: SparkSession, out_dir: str | Path) -> int:
     """OFFLINE maintenance: fold the rows store's accumulated per-batch
     dirs into one consolidated partition (crash-safe marker protocol,
     ``batchstore``) so partition DISCOVERY stays O(n_shards), not
     O(#batches ever). Run while the stream is NOT running."""
-    return consolidate_batch_store(
-        spark, Path(out_dir) / "rows", partition_by=["shard"]
-    )
+    return sum(consolidate_stores(spark, _store_map(Path(out_dir))).values())
 
 
 def start_group_texts_stream(
@@ -306,11 +309,6 @@ def start_group_texts_stream(
     _write_schemas(odir, id_col, id_type, token_col)
     rows_dir = odir / "rows"
     idc, tc = id_col, token_col
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(corpus_dir))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         last = _last_folded(odir)
@@ -368,15 +366,13 @@ def start_group_texts_stream(
         _publish(odir, final)
         retire_versions((p for _, p in _versions(odir)), keep=(final, prev))
         maybe_consolidate_in_stream(
-            spark, {rows_dir: ["shard"]}, batch_id, consolidate_every
+            spark, _store_map(odir), batch_id, consolidate_every
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, corpus_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def current_block_texts(

@@ -40,7 +40,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
     append_batch_increment,
-    consolidate_batch_store,
+    consolidate_stores,
     ensure_store_params,
     has_rebuilt_marker,
     last_batch_id,
@@ -48,6 +48,7 @@ from ..batchstore import (
     prefix_bucket,
     prefix_bucket_local,
     read_batch_store,
+    run_view,
     sequential_fold_guard,
 )
 from ..operators.sketches import _mg_merge, mg_summary
@@ -226,14 +227,7 @@ def compact_heavy_store(spark: SparkSession, out_dir: str | Path) -> dict[str, i
     the restarted stream's replay commits it."""
     odir = Path(out_dir)
     _, sid = _latest_summary(odir)
-    out: dict[str, int] = {}
-    for name, part in _STORES:
-        store = odir / name
-        if store.exists():
-            out[name] = consolidate_batch_store(
-                spark, store, partition_by=part, up_to=sid
-            )
-    return out
+    return consolidate_stores(spark, _store_map(odir), up_to=sid)
 
 
 def start_heavy_hitters_stream(
@@ -253,20 +247,13 @@ def start_heavy_hitters_stream(
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(corpus_dir))
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_batch(spark, odir, batch_df, batch_id, item_col, k)
         maybe_consolidate_in_stream(
             spark, _store_map(odir), batch_id, consolidate_every
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, corpus_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -30,12 +30,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.similarity import (
-    _INDEX_FAMILIES,
-    _INDEX_FAMILY_PARTITIONS,
     append_index_increments,
     index_increment_bounds,
+    _index_store_map,
 )
-from ..batchstore import maybe_consolidate_in_stream
+from ..batchstore import maybe_consolidate_in_stream, run_view
 
 
 def start_index_stream(
@@ -60,11 +59,6 @@ def start_index_stream(
     built from a snapshot, the stream consumes arrivals after it).
     ``available_now=True`` drains what's landed and stops."""
     idx = Path(index_dir)
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(vectors_dir))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         lo, hi = index_increment_bounds(idx)
@@ -100,19 +94,10 @@ def start_index_stream(
             batch_df, idx, batch_id, id_col=id_col, vec_col=vec_col
         )
         maybe_consolidate_in_stream(
-            spark,
-            {
-                idx / inc_name: _INDEX_FAMILY_PARTITIONS[inc_name]
-                for sidecar, inc_name in _INDEX_FAMILIES
-                if (idx / sidecar).exists()
-            },
-            batch_id,
-            consolidate_every,
+            spark, _index_store_map(idx), batch_id, consolidate_every
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, vectors_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

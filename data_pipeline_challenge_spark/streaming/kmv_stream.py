@@ -29,18 +29,18 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
     append_batch_increment,
-    consolidate_batch_store,
+    consolidate_stores,
     ensure_store_params,
     has_rebuilt_marker,
     last_batch_id,
     maybe_consolidate_in_stream,
     read_batch_store,
+    run_view,
     sequential_fold_guard,
 )
 from ..operators.sketches import (
@@ -63,6 +63,23 @@ def _bottom_k(df: DataFrame, k: int, gcs: list) -> DataFrame:
 
 def _params(odir: Path) -> dict:
     return json.loads((odir / "_gate_params.json").read_text())
+
+
+def _store_map(odir: Path) -> dict:
+    return {odir / name: part for name, part in _STORES}
+
+
+def _transforms(odir: Path) -> dict:
+    """Fold-time collapse to the resolved bottom-k per group, under the
+    store's PINNED (k, group_cols) — read when a fold runs, after
+    ``fold_batch`` has pinned them — so the compacted store holds at
+    most k rows per group."""
+
+    def collapse(df: DataFrame) -> DataFrame:
+        params = _params(odir)
+        return _bottom_k(df, int(params["k"]), list(params.get("group_cols") or ()))
+
+    return {odir / "hashes": collapse}
 
 
 def fold_batch(
@@ -152,20 +169,7 @@ def compact_kmv_store(spark: SparkSession, out_dir: str | Path) -> dict[str, int
     bottom-k per group (fold-time transform), so the compacted store
     holds at most k rows per group."""
     odir = Path(out_dir)
-    params = _params(odir)
-    gcs = list(params.get("group_cols") or ())
-    k = int(params["k"])
-    out: dict[str, int] = {}
-    for name, part in _STORES:
-        store = odir / name
-        if store.exists():
-            out[name] = consolidate_batch_store(
-                spark,
-                store,
-                partition_by=part,
-                transform=lambda df: _bottom_k(df, k, gcs),
-            )
-    return out
+    return consolidate_stores(spark, _store_map(odir), transforms=_transforms(odir))
 
 
 def start_kmv_stream(
@@ -186,25 +190,14 @@ def start_kmv_stream(
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(corpus_dir))
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_batch(spark, odir, batch_df, batch_id, item_col, k, group_cols)
-        gcs = list(group_cols or ())
         maybe_consolidate_in_stream(
-            spark,
-            {odir / name: part for name, part in _STORES},
-            batch_id,
-            consolidate_every,
-            transforms={odir / "hashes": lambda df: _bottom_k(df, k, gcs)},
+            spark, _store_map(odir), batch_id, consolidate_every,
+            transforms=_transforms(odir),
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, corpus_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -82,17 +82,18 @@ from __future__ import annotations
 from pathlib import Path
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
     append_batch_increment,
-    consolidate_batch_store,
+    consolidate_stores,
     ensure_store_params,
     has_rebuilt_marker,
     last_batch_id,
     maybe_consolidate_in_stream,
     read_batch_store,
+    run_view,
     sequential_fold_guard,
 )
 from ..operators.dedup import banded_minhash_tables, verify_candidate_pairs
@@ -157,13 +158,7 @@ def compact_near_dedup_store(
     """OFFLINE: fold each store's per-batch dirs into one consolidated
     partition (crash-safe marker protocol). Run while the stream is NOT
     running."""
-    odir = Path(out_dir)
-    out: dict[str, int] = {}
-    for name, part in _STORES:
-        store = odir / name
-        if store.exists():
-            out[name] = consolidate_batch_store(spark, store, partition_by=part)
-    return out
+    return consolidate_stores(spark, _store_map(Path(out_dir)))
 
 
 # store name -> partition columns; shared by offline compaction and the
@@ -698,11 +693,6 @@ def start_near_dedup_stream(
             default_n_prefix=components_n_prefix,
         )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(corpus_dir))
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_batch(
             spark, odir, batch_df, batch_id,
@@ -711,25 +701,18 @@ def start_near_dedup_stream(
             bucket_cap=bucket_cap, components_out_dir=components_out_dir,
             components_n_prefix=components_n_prefix,
         )
-        maybe_consolidate_in_stream(
-            spark, _store_map(odir), batch_id, consolidate_every
-        )
+        stores, transforms = _store_map(odir), {}
         if components_out_dir is not None:
-            from .components_stream import _store_map as _comp_stores
-            from .components_stream import _transforms as _comp_transforms
+            from . import components_stream
 
             cdir = Path(components_out_dir)
-            maybe_consolidate_in_stream(
-                spark,
-                _comp_stores(cdir),
-                batch_id,
-                consolidate_every,
-                transforms=_comp_transforms(cdir, components_n_prefix),
-            )
+            stores.update(components_stream._store_map(cdir))
+            transforms = components_stream._transforms(cdir)
+        maybe_consolidate_in_stream(
+            spark, stores, batch_id, consolidate_every, transforms=transforms
+        )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, corpus_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -44,13 +44,14 @@ from pyspark.sql.streaming import StreamingQuery
 from ..batchstore import (
     account_empty_fold,
     append_batch_increment,
-    consolidate_batch_store,
+    consolidate_stores,
     ensure_store_params,
     has_rebuilt_marker,
     last_batch_id,
     maybe_consolidate_in_stream,
     prefix_bucket,
     read_batch_store,
+    run_view,
     sequential_fold_guard,
 )
 
@@ -263,16 +264,12 @@ def compact_novelty_store(
     so a crash-window orphan increment cannot be folded past the replay
     guard's reach (the compact_retrieval_index discipline)."""
     odir = Path(out_dir)
-    tid = last_batch_id(odir / "shingles")
-    out: dict[str, int] = {}
-    for name, part in _STORES:
-        store = odir / name
-        if store.exists():
-            bound = None if name == "shingles" else tid
-            out[name] = consolidate_batch_store(
-                spark, store, partition_by=part, up_to=bound
-            )
-    return out
+    return consolidate_stores(
+        spark,
+        _store_map(odir),
+        up_to=last_batch_id(odir / "shingles"),
+        unbounded={odir / "shingles"},
+    )
 
 
 def start_novelty_stream(
@@ -294,11 +291,6 @@ def start_novelty_stream(
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(corpus_dir))
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_batch(
             spark, odir, batch_df, batch_id, id_col, text_col,
@@ -308,9 +300,7 @@ def start_novelty_stream(
             spark, _store_map(odir), batch_id, consolidate_every
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, corpus_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -47,11 +47,12 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
     append_batch_increment,
-    consolidate_batch_store,
+    consolidate_stores,
     ensure_store_params,
     last_batch_id,
     maybe_consolidate_in_stream,
     read_batch_store,
+    run_view,
 )
 from ..operators.packing import pack_sequences_sharded
 from ..versioning import retire_versions
@@ -252,6 +253,10 @@ def revoke_packed_docs(
     return len(present)
 
 
+def _store_map(odir: Path) -> dict:
+    return {odir / "rows": ["shard"]}
+
+
 def compact_rows_store(spark: SparkSession, out_dir: str | Path) -> int:
     """OFFLINE maintenance for the packing stream's rows store: the store
     accretes one ``ingest_batch=B`` directory per micro-batch forever,
@@ -264,9 +269,7 @@ def compact_rows_store(spark: SparkSession, out_dir: str | Path) -> int:
     itself is compacted separately with
     ``maintenance.compact_published_table``. Returns dirs folded."""
     migrate_legacy_layout(spark, out_dir)  # pre-shard-layout warehouses
-    return consolidate_batch_store(
-        spark, Path(out_dir) / "rows", partition_by=["shard"]
-    )
+    return sum(consolidate_stores(spark, _store_map(Path(out_dir))).values())
 
 
 def migrate_legacy_layout(spark: SparkSession, out_dir: str | Path) -> dict[str, int]:
@@ -461,11 +464,6 @@ def start_packing_stream(
     rows_dir = odir / "rows"
     gc, oc, tc = group_col, order_col, token_col
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(corpus_dir))
-
     shard_of = F.pmod(F.xxhash64(F.col(oc)), F.lit(n_shards)).cast("int")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -535,12 +533,10 @@ def start_packing_stream(
         # safe.
         retire_versions((p for _, p in _versions(odir)), keep=(final, prev))
         maybe_consolidate_in_stream(
-            spark, {rows_dir: ["shard"]}, batch_id, consolidate_every
+            spark, _store_map(odir), batch_id, consolidate_every
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, corpus_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

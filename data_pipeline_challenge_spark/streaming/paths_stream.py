@@ -32,11 +32,12 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
     append_batch_increment,
-    consolidate_batch_store,
+    consolidate_stores,
     has_rebuilt_marker,
     last_batch_id,
     maybe_consolidate_in_stream,
     read_batch_store,
+    run_view,
     sequential_fold_guard,
 )
 
@@ -58,6 +59,14 @@ def _top3(df: DataFrame, keep_rank: bool = False) -> DataFrame:
         .filter(F.col("rn") <= _K)
     )
     return out if keep_rank else out.drop("rn")
+
+
+def _store_map(odir: Path) -> dict:
+    return {odir / "prefix": None}
+
+
+def _transforms(odir: Path) -> dict:
+    return {odir / "prefix": _top3}
 
 
 def _prefix_rows(batch_df: DataFrame) -> DataFrame:
@@ -127,11 +136,8 @@ def paths_report(
 def compact_paths_store(spark: SparkSession, out_dir: str | Path) -> dict[str, int]:
     """OFFLINE consolidation: collapses to the resolved top-3 per
     user-day (at most 3 rows per ever-touched user-day)."""
-    store = Path(out_dir) / "prefix"
-    out: dict[str, int] = {}
-    if store.exists():
-        out["prefix"] = consolidate_batch_store(spark, store, transform=_top3)
-    return out
+    odir = Path(out_dir)
+    return consolidate_stores(spark, _store_map(odir), transforms=_transforms(odir))
 
 
 def start_paths_stream(
@@ -149,24 +155,14 @@ def start_paths_stream(
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(events_dir))
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_batch(spark, odir, batch_df, batch_id)
         maybe_consolidate_in_stream(
-            spark,
-            {odir / "prefix": None},
-            batch_id,
-            consolidate_every,
-            transforms={odir / "prefix": _top3},
+            spark, _store_map(odir), batch_id, consolidate_every,
+            transforms=_transforms(odir),
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, events_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -49,6 +49,7 @@ from ..batchstore import (
     append_batch_increment,
     has_rebuilt_marker,
     last_batch_id,
+    maybe_consolidate_in_stream,
     read_batch_store,
     sequential_fold_guard,
 )
@@ -322,3 +323,40 @@ def buffer_prune_transform(
         return df.filter(F.col(t_col) > F.lit(floor))
 
     return _prune
+
+
+def consolidate_resequenced(
+    spark: SparkSession,
+    out_dir: str | Path,
+    batch_id: int,
+    every: int | None,
+    stores: dict,
+    transforms: dict,
+) -> None:
+    """In-stream consolidation hook of a resequenced view, run after
+    :func:`reseq_fold` in the same ``foreachBatch``. TWO id spaces: the
+    resequencer's own ``{buffer, wm}`` stores under ``out_dir`` carry
+    arrival batch ids, but the downstream view's ``stores`` carry the
+    DOUBLED fold ids (2B / 2B+1 — see :func:`reseq_fold`), so their fold
+    horizon must be ``2 * batch_id - 1`` (protecting the current batch's
+    2B increment for crash-replay) or consolidation would forever bound
+    at half of history and the live dir count would grow without
+    reset."""
+    rdir = Path(out_dir)
+    maybe_consolidate_in_stream(
+        spark,
+        {rdir / "buffer": None, rdir / "wm": None},
+        batch_id,
+        every,
+        transforms={
+            rdir / "buffer": buffer_prune_transform(spark, rdir),
+            rdir / "wm": wm_collapse,
+        },
+    )
+    maybe_consolidate_in_stream(
+        spark,
+        stores,
+        2 * batch_id,
+        2 * every if every else None,
+        transforms=transforms,
+    )

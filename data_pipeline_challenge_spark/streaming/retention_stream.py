@@ -34,11 +34,12 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
     append_batch_increment,
-    consolidate_batch_store,
+    consolidate_stores,
     has_rebuilt_marker,
     last_batch_id,
     maybe_consolidate_in_stream,
     read_batch_store,
+    run_view,
     sequential_fold_guard,
 )
 
@@ -59,6 +60,14 @@ def _act_set(batch_df: DataFrame) -> DataFrame:
 
 def _distinct_rows(df: DataFrame) -> DataFrame:
     return df.select("user_id", "day").distinct()
+
+
+def _store_map(odir: Path) -> dict:
+    return {odir / "act": None}
+
+
+def _transforms(odir: Path) -> dict:
+    return {odir / "act": _distinct_rows}
 
 
 def fold_batch(
@@ -118,13 +127,8 @@ def compact_retention_store(
     """OFFLINE consolidation: duplicate (user, day) rows across
     increments collapse at fold time, so the compacted store holds the
     distinct activity set exactly."""
-    store = Path(out_dir) / "act"
-    out: dict[str, int] = {}
-    if store.exists():
-        out["act"] = consolidate_batch_store(
-            spark, store, transform=_distinct_rows
-        )
-    return out
+    odir = Path(out_dir)
+    return consolidate_stores(spark, _store_map(odir), transforms=_transforms(odir))
 
 
 def start_retention_stream(
@@ -142,24 +146,14 @@ def start_retention_stream(
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(events_dir))
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_batch(spark, odir, batch_df, batch_id)
         maybe_consolidate_in_stream(
-            spark,
-            {odir / "act": None},
-            batch_id,
-            consolidate_every,
-            transforms={odir / "act": _distinct_rows},
+            spark, _store_map(odir), batch_id, consolidate_every,
+            transforms=_transforms(odir),
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, events_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

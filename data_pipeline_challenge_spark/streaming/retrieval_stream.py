@@ -54,7 +54,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
     append_batch_increment,
-    consolidate_batch_store,
+    consolidate_stores,
     ensure_store_params,
     has_rebuilt_marker,
     last_batch_id,
@@ -62,6 +62,7 @@ from ..batchstore import (
     prefix_bucket,
     prefix_bucket_local,
     read_batch_store,
+    run_view,
     sequential_fold_guard,
 )
 
@@ -510,17 +511,9 @@ def compact_retrieval_index(
     by the filter, until the restarted stream's replay commits it."""
     odir = Path(out_dir)
     _, tid = _latest_totals(odir)
-    out: dict[str, int] = {}
-    for name, part in _STORES:
-        store = odir / name
-        if store.exists():
-            # the revoked store is outside the totals discipline (its
-            # own gen counter, readers scan it unbounded) — no bound
-            bound = None if name == "revoked" else tid
-            out[name] = consolidate_batch_store(
-                spark, store, partition_by=part, up_to=bound
-            )
-    return out
+    return consolidate_stores(
+        spark, _store_map(odir), up_to=tid, unbounded=_unbounded_stores(odir)
+    )
 
 
 def start_retrieval_index_stream(
@@ -539,11 +532,6 @@ def start_retrieval_index_stream(
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(corpus_dir))
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_batch(spark, odir, batch_df, batch_id, id_col, text_col)
         maybe_consolidate_in_stream(
@@ -551,12 +539,10 @@ def start_retrieval_index_stream(
             unbounded=_unbounded_stores(odir),
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, corpus_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def hybrid_search_indexed(

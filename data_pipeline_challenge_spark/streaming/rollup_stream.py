@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..catalog import ntz_epoch_us
-from ..batchstore import has_rebuilt_marker, sequential_fold_guard
+from ..batchstore import has_rebuilt_marker, run_view, sequential_fold_guard
 from ..operators.rollup import hourly_rollup, merge_rollups
 from ..versioning import retire_versions, swap_symlink
 
@@ -138,11 +138,6 @@ def start_rollup_stream(
     rdir = Path(rollup_dir)
     rdir.mkdir(parents=True, exist_ok=True)
 
-    reader = spark.readStream.schema(EVENTS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(events_dir))
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         last = _last_folded(rdir)
         if last is not None and last >= batch_id:
@@ -185,9 +180,7 @@ def start_rollup_stream(
         # must not displace it (see _prev_read_target).
         retire_versions((p for _, p in _versions(rdir)), keep=(final, prev))
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, events_dir, EVENTS_SCHEMA, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -49,11 +49,12 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
     append_batch_increment,
-    consolidate_batch_store,
+    consolidate_stores,
     has_rebuilt_marker,
     last_batch_id,
     maybe_consolidate_in_stream,
     read_batch_store,
+    run_view,
     sequential_fold_guard,
 )
 from ..operators.sessions import (
@@ -61,6 +62,14 @@ from ..operators.sessions import (
     active_hours_from_spans,
     merge_session_intervals as _merge_intervals,
 )
+
+
+def _store_map(odir: Path) -> dict:
+    return {odir / "sessions": None}
+
+
+def _transforms(odir: Path) -> dict:
+    return {odir / "sessions": _merge_intervals}
 
 
 def _batch_intervals(batch_df: DataFrame) -> DataFrame:
@@ -163,13 +172,8 @@ def compact_sessions_store(
 ) -> dict[str, int]:
     """OFFLINE consolidation: collapses to the resolved merged
     intervals (one row per current session per user)."""
-    store = Path(out_dir) / "sessions"
-    out: dict[str, int] = {}
-    if store.exists():
-        out["sessions"] = consolidate_batch_store(
-            spark, store, transform=_merge_intervals
-        )
-    return out
+    odir = Path(out_dir)
+    return consolidate_stores(spark, _store_map(odir), transforms=_transforms(odir))
 
 
 def start_sessions_stream(
@@ -187,24 +191,14 @@ def start_sessions_stream(
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(events_dir))
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_batch(spark, odir, batch_df, batch_id)
         maybe_consolidate_in_stream(
-            spark,
-            {odir / "sessions": None},
-            batch_id,
-            consolidate_every,
-            transforms={odir / "sessions": _merge_intervals},
+            spark, _store_map(odir), batch_id, consolidate_every,
+            transforms=_transforms(odir),
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, events_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

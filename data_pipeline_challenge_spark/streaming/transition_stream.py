@@ -47,11 +47,12 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
     append_batch_increment,
-    consolidate_batch_store,
+    consolidate_stores,
     has_rebuilt_marker,
     last_batch_id,
     maybe_consolidate_in_stream,
     read_batch_store,
+    run_view,
     sequential_fold_guard,
 )
 
@@ -208,6 +209,10 @@ def _frontier_collapse(df: DataFrame) -> DataFrame:
     )
 
 
+def _transforms(odir: Path) -> dict:
+    return {odir / "frontier": _frontier_collapse}
+
+
 def compact_transition_store(
     spark: SparkSession, out_dir: str | Path
 ) -> dict[str, int]:
@@ -217,17 +222,7 @@ def compact_transition_store(
     FOLD TIME (``_frontier_collapse``), so the compacted frontier holds
     exactly one row per ever-touched user."""
     odir = Path(out_dir)
-    out: dict[str, int] = {}
-    for name, part in _STORES:
-        store = odir / name
-        if store.exists():
-            out[name] = consolidate_batch_store(
-                spark,
-                store,
-                partition_by=part,
-                transform=_frontier_collapse if name == "frontier" else None,
-            )
-    return out
+    return consolidate_stores(spark, _store_map(odir), transforms=_transforms(odir))
 
 
 def start_transition_stream(
@@ -245,27 +240,17 @@ def start_transition_stream(
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(events_dir))
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_batch(spark, odir, batch_df, batch_id)
         maybe_consolidate_in_stream(
-            spark,
-            _store_map(odir),
-            batch_id,
-            consolidate_every,
-            transforms={odir / "frontier": _frontier_collapse},
+            spark, _store_map(odir), batch_id, consolidate_every,
+            transforms=_transforms(odir),
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, events_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_resequenced_transition_stream(
@@ -287,16 +272,11 @@ def start_resequenced_transition_stream(
     events are dropped and counted (watermark late-drop semantics).
     After an ``availableNow`` drain, call :func:`flush_resequenced` to
     release the unfinalized tail before reading the report."""
-    from .resequence import buffer_prune_transform, reseq_fold, wm_collapse
+    from .resequence import consolidate_resequenced, reseq_fold
 
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
     rdir = odir / "reseq"
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(str(events_dir))
 
     from ..catalog import ntz_epoch_us
 
@@ -306,37 +286,15 @@ def start_resequenced_transition_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         with_t = batch_df.withColumn("t_us", ntz_epoch_us(F.col("ts")))
         reseq_fold(spark, rdir, with_t, batch_id, _fold, delay_us)
-        # TWO id spaces: the resequencer's own stores carry arrival
-        # batch ids, but the downstream pairs/frontier stores carry the
-        # DOUBLED fold ids (2B / 2B+1 — see resequence.reseq_fold), so
-        # their fold horizon must be 2*batch_id - 1 (protecting the
-        # current batch's 2B increment for crash-replay) or
-        # consolidation would forever bound at half of history and the
-        # live dir count would grow without reset.
-        maybe_consolidate_in_stream(
-            spark,
-            {rdir / "buffer": None, rdir / "wm": None},
-            batch_id,
-            consolidate_every,
-            transforms={
-                rdir / "buffer": buffer_prune_transform(spark, rdir),
-                rdir / "wm": wm_collapse,
-            },
-        )
-        maybe_consolidate_in_stream(
-            spark,
-            _store_map(odir),
-            2 * batch_id,
-            2 * consolidate_every if consolidate_every else None,
-            transforms={odir / "frontier": _frontier_collapse},
+        consolidate_resequenced(
+            spark, rdir, batch_id, consolidate_every,
+            _store_map(odir), _transforms(odir),
         )
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return run_view(
+        spark, events_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def flush_resequenced(spark: SparkSession, out_dir: str | Path) -> None:

@@ -1232,17 +1232,6 @@ def test_jaccard_df_cap_bounds_skewed_boilerplate(spark):
     # both-sides semantics, explicitly: hot shingle out of inter AND sizes
     assert got[(400, 401)] == (1, 2, 2, 1.0 / 3.0)
 
-    # the opt-in local posting-list expansion (r19: kept for
-    # shuffle-dominated corpora, no longer the default) must produce the
-    # identical pair multiset and scores
-    expanded = {
-        (r["doc1"], r["doc2"]): (r["inter"], r["n1"], r["n2"], r["jaccard"])
-        for r in jaccard_pairs(
-            df, "doc", "text", n=3, max_doc_freq=cap, expand_posting_lists=True
-        ).collect()
-    }
-    assert expanded == expected
-
     # the blowup the cap prevents: uncapped, the hot shingle alone creates
     # C(102,2) candidate pairs from boilerplate docs
     n_uncapped = jaccard_pairs(df, "doc", "text", n=3, max_doc_freq=None).count()

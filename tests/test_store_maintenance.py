@@ -1,0 +1,288 @@
+"""Store maintenance contracts shared by every maintained view.
+
+- Offline compaction: each view's ``compact_*`` leaves its reports
+  unchanged and collapses every store to at most one live directory
+  (driven through ``fold_batch`` directly — no stream is started).
+- One runner and one store loop: a Spark-free AST guard that keeps the
+  stream plumbing in ``batchstore.run_view`` and the per-store fold in
+  ``batchstore.consolidate_stores``.
+"""
+
+from __future__ import annotations
+
+import ast
+import json
+from pathlib import Path
+
+import pyspark.sql.functions as F
+import pytest
+
+_PKG = Path(__file__).resolve().parent.parent / "data_pipeline_challenge_spark"
+
+
+def _rows(df) -> list[str] | None:
+    return None if df is None else sorted(str(tuple(r)) for r in df.collect())
+
+
+def _live_dirs(store: Path) -> list[int]:
+    """Batch dirs the reader view includes (``batchstore.read_batch_store``)."""
+    ids = [int(p.name.split("=", 1)[1]) for p in store.glob("ingest_batch=*")]
+    marker = store / "_consolidated.json"
+    if not marker.exists():
+        return [n for n in ids if n >= 0]
+    m = json.loads(marker.read_text())
+    return [n for n in ids if n == m["consolidated"] or n > m["through"]]
+
+
+def _docs(spark, b):
+    return spark.createDataFrame(
+        [(100 * (b + 1) + i,
+          f"unique alpha beta gamma doc number {b} row {i} with "
+          "enough words to shingle cleanly")
+         for i in range(2)],
+        "doc_id long, text string",
+    )
+
+
+def _view(spark, tmp_path, view):
+    """(fold(b), compact(), report(), stores) for one view: ``fold`` folds
+    a tiny non-empty batch under id b, ``report`` is every read the view
+    serves, ``stores`` every batch store the compactor maintains."""
+    from data_pipeline_challenge_spark.streaming import (
+        cms_stream,
+        corpus_pipeline_stream,
+        decontam_stream,
+        dedup_stream,
+        embedding_dedup_stream,
+        filter_gate_stream,
+        image_dedup_stream,
+        near_dedup_stream,
+        novelty_stream,
+        overlap_stream,
+        quantile_stream,
+    )
+    from tests.test_streaming import _guard_fold_for
+
+    if view in ("cms", "filter_gate", "novelty_gate", "overlap"):
+        fold = _guard_fold_for(spark, tmp_path, view)
+        out = tmp_path / f"guard_{view}"
+        mod = {
+            "cms": cms_stream, "filter_gate": filter_gate_stream,
+            "novelty_gate": novelty_stream, "overlap": overlap_stream,
+        }[view]
+        compact = {
+            "cms": cms_stream.compact_cms_store,
+            "filter_gate": filter_gate_stream.compact_filter_gate_store,
+            "novelty_gate": novelty_stream.compact_novelty_store,
+            "overlap": overlap_stream.compact_overlap_store,
+        }[view]
+        probes = spark.createDataFrame(
+            [("item_0_0",), ("item_1_2",), ("absent",)], "item string"
+        )
+        report = {
+            "cms": lambda: [_rows(cms_stream.cms_report(spark, out, probes, "item"))],
+            "filter_gate": lambda: [
+                _rows(filter_gate_stream.current_admitted_docs(spark, out)),
+                _rows(filter_gate_stream.rejected_log(spark, out)),
+            ],
+            "novelty_gate": lambda: [
+                _rows(novelty_stream.current_admitted_docs(spark, out)),
+                _rows(novelty_stream.rejected_log(spark, out)),
+            ],
+            "overlap": lambda: [_rows(overlap_stream.overlap_report(spark, out))],
+        }[view]
+        return fold, lambda: compact(spark, out), report, mod._store_map(out)
+
+    if view == "quantile":
+        out = tmp_path / "quantile"
+        return (
+            lambda b: quantile_stream.fold_batch(
+                spark,
+                out,
+                spark.createDataFrame([(float(10 * b + i),) for i in range(3)], "v double"),
+                b,
+                "v",
+            ),
+            lambda: quantile_stream.compact_quantile_store(spark, out),
+            lambda: [
+                _rows(quantile_stream.quantile_report(spark, out, [(1, 4), (1, 2), (9, 10)]))
+            ],
+            quantile_stream._store_map(out),
+        )
+
+    if view == "decontam":
+        out = tmp_path / "decontam"
+        ev = decontam_stream.eval_shingles(
+            spark.createDataFrame(
+                [(-1, "doc number 1 row 0 with enough words")],
+                "doc_id long, text string",
+            ),
+            "doc_id", "text", 3,
+        )
+        return (
+            lambda b: decontam_stream.fold_batch(
+                spark, out, _docs(spark, b), b, ev, id_col="doc_id", text_col="text"
+            ),
+            lambda: decontam_stream.compact_decontam_store(spark, out),
+            lambda: [
+                _rows(decontam_stream.current_clean_docs(spark, out)),
+                _rows(decontam_stream.contamination_log(spark, out)),
+            ],
+            decontam_stream._store_map(out),
+        )
+
+    if view == "embedding_dedup":
+        import numpy as np
+
+        out = tmp_path / "emb"
+        rng = np.random.RandomState(3)
+
+        def vecs(b):
+            v = rng.standard_normal((3, 8)).astype(np.float32)
+            v /= np.linalg.norm(v, axis=1, keepdims=True)
+            return spark.createDataFrame(
+                [(10 * b + i, [float(x) for x in row]) for i, row in enumerate(v)],
+                "vec_id long, embedding array<float>",
+            )
+
+        return (
+            lambda b: embedding_dedup_stream.fold_batch(spark, out, vecs(b), b),
+            lambda: embedding_dedup_stream.compact_embedding_dedup_store(spark, out),
+            lambda: [_rows(embedding_dedup_stream.current_kept_vectors(spark, out))],
+            embedding_dedup_stream._store_map(out),
+        )
+
+    if view == "image_dedup":
+        from data_pipeline_challenge_spark.operators.multimodal import (
+            synth_bmp_media,
+            synth_media,
+        )
+
+        out = tmp_path / "img"
+
+        def media(b):
+            imgs = synth_bmp_media(spark, n=2, seed=b, start_id=100 * b)
+            other = synth_media(spark, n=3, seed=b).filter(F.col("kind") != "image")
+            return imgs.unionByName(
+                other.withColumn("media_id", F.col("media_id") + 100 * b + 50)
+            )
+
+        return (
+            lambda b: image_dedup_stream.fold_batch(spark, out, media(b), b),
+            lambda: image_dedup_stream.compact_image_dedup_store(spark, out),
+            lambda: [
+                _rows(image_dedup_stream.current_kept_media(spark, out).select("media_id")),
+                _rows(image_dedup_stream.diverted_log(spark, out)),
+            ],
+            image_dedup_stream._store_map(out),
+        )
+
+    if view == "pipeline":
+        out = tmp_path / "funnel"
+        ev = decontam_stream.eval_shingles(
+            spark.createDataFrame([(-1, "no overlap here at all")], "doc_id long, text string"),
+            "doc_id", "text", 3,
+        )
+
+        def fold(b):
+            cur = decontam_stream.fold_batch(
+                spark, out / "decontam", _docs(spark, b), b, ev,
+                id_col="doc_id", text_col="text",
+            )
+            cur = dedup_stream.fold_batch(
+                spark, out / "exact", cur, b, id_col="doc_id", text_col="text",
+                n_prefix=8,
+            )
+            near_dedup_stream.fold_batch(
+                spark, out / "near", cur, b, id_col="doc_id", text_col="text",
+                n_prefix=8,
+            )
+
+        stores = {
+            **decontam_stream._store_map(out / "decontam"),
+            **dedup_stream._store_map(out / "exact"),
+            **near_dedup_stream._store_map(out / "near"),
+        }
+        return (
+            fold,
+            lambda: corpus_pipeline_stream.compact_pipeline_stores(spark, out),
+            lambda: [_rows(corpus_pipeline_stream.current_corpus(spark, out))],
+            stores,
+        )
+
+    raise AssertionError(view)
+
+
+def _total(folded) -> int:
+    if isinstance(folded, dict):
+        return sum(_total(v) for v in folded.values())
+    return folded
+
+
+@pytest.mark.parametrize(
+    "view",
+    [
+        "cms", "decontam", "embedding_dedup", "filter_gate", "image_dedup",
+        "novelty_gate", "overlap", "quantile", "pipeline",
+    ],
+)
+def test_offline_compaction_keeps_reports(spark, tmp_path, view):
+    """Every offline compactor without another test caller: two folds,
+    then compaction leaves the view's reports unchanged and each store
+    with at most one live directory (the consolidated one)."""
+    fold, compact, report, stores = _view(spark, tmp_path, view)
+    # the embedding gate's first batch bootstraps its base table, not
+    # an increment, so it takes one more batch to give the compactor
+    # two increments to fold
+    for b in range(3 if view == "embedding_dedup" else 2):
+        fold(b)
+    before = report()
+    assert any(r for r in before)
+    assert _total(compact()) > 0
+    assert report() == before
+    for store in stores:
+        assert len(_live_dirs(store)) <= 1, (store, _live_dirs(store))
+
+
+def _enclosing_sites(pred) -> list[str]:
+    """``module:function`` of every AST node matching ``pred`` across the
+    package (``module:<module>`` at top level)."""
+    sites = []
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+
+        def walk(node, fn):
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    walk(child, fn or child.name)
+                    continue
+                if pred(child):
+                    sites.append(f"{rel}:{fn or '<module>'}")
+                walk(child, fn)
+
+        walk(ast.parse(path.read_text()), None)
+    return sites
+
+
+def test_one_stream_runner_and_one_store_loop():
+    """Stream plumbing lives in ``batchstore.run_view`` (plus the
+    binaryFile ingest source), and only ``batchstore.consolidate_stores``
+    calls ``consolidate_batch_store`` — no view grows its own copy."""
+    write_stream = _enclosing_sites(
+        lambda n: isinstance(n, ast.Attribute) and n.attr == "writeStream"
+    )
+    assert write_stream == [
+        "batchstore.py:run_view",
+        "streaming/ingest_stream.py:start_ingest_stream",
+    ]
+
+    def calls_consolidate(n):
+        if not isinstance(n, ast.Call):
+            return False
+        f = n.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        return name == "consolidate_batch_store"
+
+    assert _enclosing_sites(calls_consolidate) == [
+        "batchstore.py:consolidate_stores"
+    ]
