@@ -114,6 +114,33 @@ def sequential_fold_guard(
     return True
 
 
+def admit_batch(
+    out_dir: str | Path,
+    batch_id: int,
+    *commit_stores: str | Path,
+    params: dict | None = None,
+    strict: bool = True,
+    floor: int = -1,
+) -> bool:
+    """The one admission call every maintained view's fold opens with:
+    create ``out_dir``, pin its layout ``params``
+    (:func:`ensure_store_params`), take the commit id as the MIN
+    :func:`last_batch_id` over ``commit_stores`` (min, not max: a crash
+    between two store writes leaves the earlier store ahead, and the
+    batch must refold into the later one), raised to ``floor`` when the
+    view commits some history outside its stores, then run
+    :func:`sequential_fold_guard` armed by ``out_dir``'s rebuilt marker.
+    True when the fold should run; False for a replay."""
+    odir = Path(out_dir)
+    odir.mkdir(parents=True, exist_ok=True)
+    if params is not None:
+        ensure_store_params(odir, params)
+    committed = max(floor, min(last_batch_id(s) for s in commit_stores))
+    return sequential_fold_guard(
+        batch_id, committed, odir, rebuilt=has_rebuilt_marker(odir), strict=strict
+    )
+
+
 def backfill_empty_sentinels(store: str | Path, next_batch_id: int) -> list[int]:
     """Migration/repair helper for :func:`sequential_fold_guard`: record
     every missing batch id STRICTLY BELOW ``next_batch_id`` (and above
@@ -716,6 +743,80 @@ def read_batch_store(
     return df.filter(F.col("ingest_batch") >= 0)
 
 
+def read_store(
+    spark: SparkSession,
+    store: str | Path,
+    batch_id: int | None = None,
+    schema: str | None = None,
+) -> DataFrame | None:
+    """The one store reader: the store's live view
+    (:func:`read_batch_store`, ``ingest_batch`` column kept), or — with
+    ``batch_id`` — that batch's own increment dir as written (a fold's
+    replay read-back). None when there is no such data dir: a store
+    holding only sentinels or nothing at all has no schema to read."""
+    store = Path(store)
+    if batch_id is not None:
+        inc = store / f"ingest_batch={batch_id}"
+        return spark.read.parquet(str(inc)) if inc.exists() else None
+    return read_batch_store(spark, store, schema) if has_data(store) else None
+
+
+def has_data(store: str | Path) -> bool:
+    """True when :func:`read_store` would return a view. For the few
+    folds whose read hangs on a further driver-side condition: creating
+    the view is itself a Spark job (parquet schema inference), so those
+    test first and read only when the probe has something to look up."""
+    return any(Path(store).glob("ingest_batch=*"))
+
+
+def latest_commit_file(
+    root: str | Path, default: dict, before: int | None = None
+) -> tuple[dict, int]:
+    """``(record, N)`` of the newest readable ``root/b{N}.json`` with
+    ``N < before`` (or the newest overall), ``(default, -1)`` when none.
+    The per-batch JSON commit point of views whose state is a running
+    record derived from its predecessor (heavy's ``mg/``, retrieval's
+    ``totals/``): an unreadable file (torn by a crash) is skipped."""
+    d = Path(root)
+    best, best_id = default, -1
+    if not d.exists():
+        return best, best_id
+    for p in d.glob("b*.json"):
+        sid = p.name[1:-5]
+        if not sid.isdigit():
+            continue
+        bid = int(sid)
+        if before is not None and bid >= before:
+            continue
+        if bid > best_id:
+            try:
+                best, best_id = json.loads(p.read_text()), bid
+            except (OSError, ValueError):
+                continue
+    return best, best_id
+
+
+#: Trailing per-batch commit files :func:`write_commit_file` retains.
+COMMIT_FILES_KEPT = 64
+
+
+def write_commit_file(root: str | Path, batch_id: int, rec: dict) -> None:
+    """Commit ``rec`` as ``root/b{batch_id}.json`` (tmp + atomic
+    rename; a replay rewrites the identical file), then prune files
+    older than the trailing :data:`COMMIT_FILES_KEPT` batches — kept so
+    a replayed batch can re-derive from its predecessor."""
+    d = Path(root)
+    d.mkdir(parents=True, exist_ok=True)
+    final = d / f"b{batch_id}.json"
+    tmp = d / f".{final.name}.tmp"
+    tmp.write_text(json.dumps(rec, sort_keys=True))
+    os.replace(tmp, final)
+    for stale in d.glob("b*.json"):
+        sid = stale.name[1:-5]
+        if sid.isdigit() and int(sid) < batch_id - COMMIT_FILES_KEPT:
+            stale.unlink(missing_ok=True)
+
+
 def _sweep_stale(store: Path, marker: dict) -> int:
     """Delete every batch dir that has been excluded from the reader view
     for a FULL fold generation — the post-commit cleanup of a fold, also
@@ -773,9 +874,10 @@ def consolidate_batch_store(
     folds against appends with no extra coordination. In-stream callers
     MUST pass ``up_to = current_batch_id - 1``: the current batch's own
     increment dir must survive the fold because a crash-replay of that
-    (still-uncommitted) batch reads it back (`_stored()` in every gate,
-    and the composed pipeline feeds it to downstream stages); batches
-    before it are checkpoint-committed and can never be re-delivered.
+    (still-uncommitted) batch reads it back (every gate's
+    :func:`read_store` read-back, and the composed pipeline feeds it to
+    downstream stages); batches before it are checkpoint-committed and
+    can never be re-delivered.
 
     A re-run with no new batches still sweeps directories a crashed
     fold's marker already excludes — otherwise a fold that died between
@@ -1107,17 +1209,35 @@ def run_view(
     source_dir: str | Path,
     schema: str,
     checkpoint_dir: str | Path,
-    process_batch,
+    fold,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
+    stores: dict | None = None,
+    consolidate_every: int | None = None,
+    transforms: dict | None = None,
+    unbounded: set | frozenset | None = None,
 ) -> StreamingQuery:
     """The one stream runner behind every maintained parquet view: a
     file source over ``source_dir`` (``schema`` DDL, at most
     ``max_files_per_trigger`` files per micro-batch), each micro-batch
-    handed to ``process_batch(batch_df, batch_id)`` under the
-    ``checkpoint_dir`` checkpoint — the exactly-once contract every
-    view's fold is written against. ``available_now=True`` drains what
-    has landed and stops; ``False`` runs continuously."""
+    handed to ``fold(batch_df, batch_id)`` under the ``checkpoint_dir``
+    checkpoint — the exactly-once contract every view's fold is written
+    against. ``available_now=True`` drains what has landed and stops;
+    ``False`` runs continuously.
+
+    After each fold the runner owns the in-stream hook: with the view's
+    ``stores`` map it runs :func:`maybe_consolidate_in_stream` every
+    ``consolidate_every`` batches (``transforms`` and ``unbounded`` as
+    there). Views whose fold consolidates its own stores pass no
+    ``stores``."""
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        fold(batch_df, batch_id)
+        if stores is not None:
+            maybe_consolidate_in_stream(
+                spark, stores, batch_id, consolidate_every, unbounded, transforms
+            )
+
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))

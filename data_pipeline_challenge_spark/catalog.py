@@ -154,13 +154,3 @@ def ts_epoch_us(df: DataFrame, col: str = "ts") -> "F.Column":
     if dict(df.dtypes).get(col) == "timestamp_ntz":
         return ntz_epoch_us(F.col(col))
     return F.unix_micros(F.col(col)).cast("long")
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
-    """Register all tables as temp views (used by tests and the SQL surface)."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(prefix + t)

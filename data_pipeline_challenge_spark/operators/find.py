@@ -6,8 +6,6 @@ Each function reproduces one reference endpoint's exact semantics
 
 from __future__ import annotations
 
-import re
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -43,9 +41,3 @@ def find_name_exact(products: DataFrame, term: str) -> DataFrame:
     """Exact match, case-sensitive, **no limit** — replicates the code, not
     the docstring (api/main.py:170-184 claims 20 but never calls .limit)."""
     return products.filter(F.col("product_name") == F.lit(term))
-
-
-def escape_regex(term: str) -> str:
-    """Helper for callers that want the reference endpoint shape with the
-    injection quirk closed."""
-    return re.escape(term)

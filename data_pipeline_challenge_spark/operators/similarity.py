@@ -744,16 +744,14 @@ def _with_increments(spark, base, inc) -> DataFrame:
     """The full index table: base ∪ increments (if any). Both sides carry
     the pruning column as a partition column, so a driver-side
     ``isin`` filter prunes partitions on each. The increment side goes
-    through ``batchstore.read_batch_store`` so a consolidated store (see
+    through ``batchstore.read_store`` so a consolidated store (see
     :func:`compact_index_increments`) serves the same view."""
-    from pathlib import Path
-
-    from ..batchstore import read_batch_store
+    from ..batchstore import read_store
 
     df = spark.read.parquet(str(base))
-    inc = Path(inc)
-    if inc.exists() and any(inc.glob("ingest_batch=*")):
-        df = df.unionByName(read_batch_store(spark, inc).drop("ingest_batch"))
+    inc_view = read_store(spark, inc)
+    if inc_view is not None:
+        df = df.unionByName(inc_view.drop("ingest_batch"))
     return df
 
 

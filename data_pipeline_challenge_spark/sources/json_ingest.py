@@ -115,14 +115,6 @@ def parse_bytes(path: str, payload: bytes) -> list[tuple]:
     return list(_make_file_parser()((path, payload)))
 
 
-def normalize_record(rec: object, file_id: str, seq: int) -> tuple:
-    """Normalize a single already-parsed record (driver-side/unit-test use)."""
-    import json
-
-    (out,) = parse_bytes(file_id, json.dumps([rec], ensure_ascii=False).encode())
-    return (out[0], seq, *out[2:])
-
-
 def read_bronze(spark: SparkSession, paths: list[str]) -> DataFrame:
     """Parse + normalize landing files into the bronze DataFrame.
 

@@ -26,14 +26,22 @@ order), ``retention_stream`` (day-granular activity set serving
 any cohort granularity), and ``paths_stream`` (per-user-day first-3
 path prefixes — bottom-k merge with payload).
 
-One runner, one store contract: every maintained view reads parquet
+One runner, one fold protocol: every maintained view reads parquet
 files through ``batchstore.run_view`` (file source → ``foreachBatch`` →
-checkpoint → trigger) and supplies only its per-batch callback —
-``ingest_stream`` alone keeps its own binaryFile source. Each view
-module names its batch stores once, in ``_store_map(dir)`` (store path →
-partition columns) and ``_transforms(dir)`` (store path → fold-time
-rewrite); its in-stream hook (``batchstore.maybe_consolidate_in_stream``,
-bounded at the previous batch) and its offline ``compact_*`` (bounded
-at the view's commit frontier) both fold them through the one store
-loop, ``batchstore.consolidate_stores``.
+checkpoint → trigger) and supplies only its fold — ``ingest_stream``
+alone keeps its own binaryFile source. Each view module names its batch
+stores once, in ``_store_map(dir)`` (store path → partition columns)
+and ``_transforms(dir)`` (store path → fold-time rewrite). The runner
+takes them with the fold and runs the in-stream hook
+(``batchstore.maybe_consolidate_in_stream``, bounded at the previous
+batch) itself; views that consolidate inside their own fold (the
+composed funnel, packing, group-texts, the ANN index and the
+resequenced wrappers) call the hook directly. The offline ``compact_*``
+(bounded at the view's commit frontier) folds the same map through the
+one store loop, ``batchstore.consolidate_stores``. Each fold opens with
+one admission call, ``batchstore.admit_batch`` (layout pin, commit id
+over the view's commit stores, sequential-numbering guard), and reads
+stores through one reader, ``batchstore.read_store`` (the live view,
+one batch's increment for a replay's read-back, or None before any
+data).
 """

@@ -69,14 +69,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    admit_batch,
     append_batch_increment,
     consolidate_stores,
-    has_rebuilt_marker,
     last_batch_id,
-    maybe_consolidate_in_stream,
-    read_batch_store,
+    read_store,
     run_view,
-    sequential_fold_guard,
 )
 from ..operators.attribution import (
     LOOKBACK_US,
@@ -113,10 +111,8 @@ def _latest_per_user(df: DataFrame) -> DataFrame:
 def _current_frontier(spark: SparkSession, odir: Path) -> DataFrame | None:
     """Latest touch per user across increments (None before the first
     batch)."""
-    store = odir / "frontier"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
-        return None
-    return _latest_per_user(read_batch_store(spark, store)).drop("ingest_batch")
+    frontier = read_store(spark, odir / "frontier")
+    return None if frontier is None else _latest_per_user(frontier).drop("ingest_batch")
 
 
 def fold_batch(
@@ -144,24 +140,17 @@ def fold_batch(
     but legitimately non-contiguous; the resequencer's own arrival-id
     guard protects the store transitively there."""
     odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
+    attrib_store = odir / "attrib"
+    frontier_store = odir / "frontier"
     # The lookback is pinned as a STORE parameter, unlike the near-dup
     # gate's min_jaccard (tunable policy): attribution counts are
     # irreversible aggregates — folds under a different lookback would
     # silently mix attribution regimes in one report, permanently
     # breaking the stream==batch claim. A lookback change is a fresh
     # store.
-    from ..batchstore import ensure_store_params
-
-    ensure_store_params(odir, {"lookback_us": int(lookback_us)})
-    attrib_store = odir / "attrib"
-    frontier_store = odir / "frontier"
-    if not sequential_fold_guard(
-        batch_id,
-        min(last_batch_id(attrib_store), last_batch_id(frontier_store)),
-        odir,
-        rebuilt=has_rebuilt_marker(odir),
-        strict=sequential,
+    if not admit_batch(
+        odir, batch_id, attrib_store, frontier_store,
+        params={"lookback_us": int(lookback_us)}, strict=sequential,
     ):
         return
 
@@ -219,16 +208,12 @@ def attribution_report(
     folded — column-identical to the declared batch query (cent sums
     re-scaled once, the grid convention). None before the first
     batch."""
-    store = Path(out_dir) / "attrib"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
+    attrib = read_store(spark, Path(out_dir) / "attrib")
+    if attrib is None:
         return None
-    return (
-        read_batch_store(spark, store)
-        .groupBy("attributed")
-        .agg(
-            F.sum("n").alias("n_conversions"),
-            F.round(F.sum("value_cents") / 100.0, 2).alias("attributed_value"),
-        )
+    return attrib.groupBy("attributed").agg(
+        F.sum("n").alias("n_conversions"),
+        F.round(F.sum("value_cents") / 100.0, 2).alias("attributed_value"),
     )
 
 
@@ -358,7 +343,7 @@ def start_attribution_stream(
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
         fold_batch(
             spark,
             odir,
@@ -366,14 +351,11 @@ def start_attribution_stream(
             batch_id,
             lookback_us=lookback_us,
         )
-        maybe_consolidate_in_stream(
-            spark, _store_map(odir), batch_id, consolidate_every,
-            transforms=_transforms(odir),
-        )
 
     return run_view(
-        spark, events_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        spark, events_dir, schema, checkpoint_dir, _fold,
+        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
+        transforms=_transforms(odir),
     )
 
 

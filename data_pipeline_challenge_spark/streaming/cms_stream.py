@@ -40,15 +40,11 @@ from pyspark.sql.streaming import StreamingQuery
 import pyspark.sql.functions as F
 
 from ..batchstore import (
+    admit_batch,
     append_batch_increment,
     consolidate_stores,
-    ensure_store_params,
-    has_rebuilt_marker,
-    last_batch_id,
-    maybe_consolidate_in_stream,
-    read_batch_store,
+    read_store,
     run_view,
-    sequential_fold_guard,
 )
 from ..operators.sketches import CMS_DEPTH, CMS_WIDTH, cms_cells, cms_estimate
 
@@ -77,15 +73,11 @@ def fold_batch(
     group_cols) layout is pinned at store creation (cells from
     different geometries or groupings must never add)."""
     odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
     params: dict = {"item_col": item_col, "depth": depth, "width": width}
     if group_cols:  # absent key keeps pre-grouped stores adoptable
         params["group_cols"] = list(group_cols)
-    ensure_store_params(odir, params)
     store = odir / "cells"
-    if not sequential_fold_guard(
-        batch_id, last_batch_id(store), odir, rebuilt=has_rebuilt_marker(odir)
-    ):
+    if not admit_batch(odir, batch_id, store, params=params):
         return
     append_batch_increment(
         cms_cells(batch_df, item_col, depth, width, group_cols=group_cols),
@@ -113,14 +105,13 @@ def cms_report(
     import json
 
     odir = Path(out_dir)
-    store = odir / "cells"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
+    cells = read_store(spark, odir / "cells")
+    if cells is None:
         return None
     params = json.loads((odir / "_gate_params.json").read_text())
     gcs = list(params.get("group_cols") or ())
     cells = (
-        read_batch_store(spark, store)
-        .groupBy(*gcs, "d", "bucket")
+        cells.groupBy(*gcs, "d", "bucket")
         .agg(F.sum("n").alias("n"))
     )
     return cms_estimate(
@@ -154,16 +145,10 @@ def start_cms_stream(
     ``available_now=True`` drains what's landed and stops."""
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(
-            spark, odir, batch_df, batch_id, item_col, depth, width, group_cols
-        )
-        maybe_consolidate_in_stream(
-            spark, _store_map(odir), batch_id, consolidate_every
-        )
-
     return run_view(
-        spark, corpus_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        spark, corpus_dir, schema, checkpoint_dir,
+        lambda df, b: fold_batch(
+            spark, odir, df, b, item_col, depth, width, group_cols
+        ),
+        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
     )

@@ -107,17 +107,16 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
     REBUILT_MARKER as _REBUILT_MARKER,
+    admit_batch,
     append_batch_increment,
     consolidate_stores,
     ensure_store_params,
-    has_rebuilt_marker,
-    last_batch_id,
-    maybe_consolidate_in_stream,
+    has_data,
     prefix_bucket,
     read_batch_store,
+    read_store,
     rebuild_swap,
     run_view,
-    sequential_fold_guard,
     write_initial_consolidated,
 )
 from ..operators.graph import connected_components
@@ -246,15 +245,14 @@ def fold_batch(
     store — is allowed: an empty never-rebuilt store accepts any
     starting id as its base. Since r18 the guard itself is
     ``batchstore.sequential_fold_guard`` — the discipline this store
-    proved in r17, now shared by every maintained store's fold."""
+    proved in r17, now shared by every maintained store's fold through
+    ``batchstore.admit_batch``."""
     odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    ensure_store_params(odir, {"n_prefix": int(n_prefix)})
     labels_store = odir / "labels"
     members_store = odir / "members"
-    committed = min(last_batch_id(labels_store), last_batch_id(members_store))
-    if not sequential_fold_guard(
-        batch_id, committed, odir, rebuilt=has_rebuilt_marker(odir)
+    if not admit_batch(
+        odir, batch_id, labels_store, members_store,
+        params={"n_prefix": int(n_prefix)},
     ):
         return
 
@@ -280,7 +278,7 @@ def fold_batch(
         #    batch's OWN increment is excluded so a crash-replay (labels
         #    written, members not) recomputes the identical fold.
         lookup = None
-        if labels_store.exists() and any(labels_store.glob("ingest_batch=*")):
+        if has_data(labels_store):
             touched_v = sorted(
                 r["p"]
                 for r in verts.select(
@@ -424,12 +422,8 @@ def current_components(
     ``connected_components`` on the concatenated edge history (the
     Hypothesis property in test_streaming). None before the first
     batch."""
-    store = Path(out_dir) / "labels"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
-        return None
-    return _resolve_labels(
-        read_batch_store(spark, store, schema=_LABELS_SCHEMA)
-    )
+    labels = read_store(spark, Path(out_dir) / "labels", schema=_LABELS_SCHEMA)
+    return None if labels is None else _resolve_labels(labels)
 
 
 def component_of(
@@ -606,17 +600,11 @@ def start_components_stream(
     ``available_now=True`` drains what's landed and stops."""
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(
-            spark, odir, batch_df, batch_id, src=src, dst=dst, n_prefix=n_prefix
-        )
-        maybe_consolidate_in_stream(
-            spark, _store_map(odir), batch_id, consolidate_every,
-            transforms=_transforms(odir),
-        )
-
     return run_view(
-        spark, edges_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        spark, edges_dir, schema, checkpoint_dir,
+        lambda df, b: fold_batch(
+            spark, odir, df, b, src=src, dst=dst, n_prefix=n_prefix
+        ),
+        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
+        transforms=_transforms(odir),
     )

@@ -176,13 +176,13 @@ def _sync_index_revocations(
     an unmounted index would silently recreate the revoked-doc-served
     bug — delete the entry from ``_retrieval_index.json`` if the index
     was deliberately abandoned."""
-    from ..batchstore import read_batch_store
+    from ..batchstore import read_store
     from . import retrieval_stream
 
-    rev_store = funnel_dir / "near" / "revoked"
-    if not rev_store.exists() or not any(rev_store.glob("ingest_batch=*")):
+    revoked = read_store(spark, funnel_dir / "near" / "revoked")
+    if revoked is None:
         return
-    ids = read_batch_store(spark, rev_store).select(id_col).distinct()
+    ids = revoked.select(id_col).distinct()
     for idx_dir in _retrieval_pointer_dirs(funnel_dir):
         if not idx_dir.exists():
             raise RuntimeError(

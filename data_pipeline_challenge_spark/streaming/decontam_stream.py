@@ -41,17 +41,15 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
     account_empty_fold,
+    admit_batch,
     append_batch_increment,
+    consolidate_stores,
     ensure_store_params,
-    has_rebuilt_marker,
     last_batch_id,
-    maybe_consolidate_in_stream,
     read_anti_join_key,
-    read_batch_store,
-    sequential_fold_guard,
+    read_store,
     record_anti_join_key,
     run_view,
-    consolidate_stores,
 )
 from ..operators.dedup import _shingle_table
 
@@ -135,13 +133,14 @@ def current_clean_docs(spark: SparkSession, out_dir: str | Path) -> DataFrame | 
     None before the first batch. The revocation set is
     benchmark-contamination-sized, so the anti-join broadcasts it — the
     kept corpus never shuffles for this read."""
-    store = Path(out_dir) / "docs"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
+    docs = read_store(spark, Path(out_dir) / "docs")
+    if docs is None:
         return None
-    docs = read_batch_store(spark, store).drop("ingest_batch")
+    docs = docs.drop("ingest_batch")
     rev_store = Path(out_dir) / "revoked"
-    if rev_store.exists() and any(rev_store.glob("ingest_batch=*")):
-        rev = read_batch_store(spark, rev_store).drop("ingest_batch")
+    rev = read_store(spark, rev_store)
+    if rev is not None:
+        rev = rev.drop("ingest_batch")
         key = _revocation_key(rev, rev_store, docs.columns)
         docs = docs.join(
             F.broadcast(rev.select(*key).distinct()), on=key, how="left_anti"
@@ -153,12 +152,10 @@ def revocation_log(spark: SparkSession, out_dir: str | Path) -> DataFrame | None
     """Docs retroactively revoked by eval-generation upgrades, with
     their overlap evidence and the generation that caught them, or None
     if no generation was ever applied."""
-    store = Path(out_dir) / "revoked"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
+    revoked = read_store(spark, Path(out_dir) / "revoked")
+    if revoked is None:
         return None
-    return read_batch_store(spark, store).withColumnRenamed(
-        "ingest_batch", "eval_generation"
-    )
+    return revoked.withColumnRenamed("ingest_batch", "eval_generation")
 
 
 def _compose_fp(a: str, b: str) -> str:
@@ -293,10 +290,8 @@ def add_eval_generation(
 def contamination_log(spark: SparkSession, out_dir: str | Path) -> DataFrame | None:
     """Diverted documents with their overlap evidence (n_shared,
     n_eval_docs), or None if nothing was ever diverted."""
-    store = Path(out_dir) / "contaminated"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
-        return None
-    return read_batch_store(spark, store).drop("ingest_batch")
+    contaminated = read_store(spark, Path(out_dir) / "contaminated")
+    return None if contaminated is None else contaminated.drop("ingest_batch")
 
 
 def compact_decontam_store(spark: SparkSession, out_dir: str | Path) -> dict[str, int]:
@@ -334,21 +329,10 @@ def fold_batch(
     an already-folded batch returns its stored increment without
     re-folding."""
     odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
     docs_store = odir / "docs"
     cont_store = odir / "contaminated"
-
-    def _stored() -> DataFrame | None:
-        inc = docs_store / f"ingest_batch={batch_id}"
-        return spark.read.parquet(str(inc)) if inc.exists() else None
-
-    if not sequential_fold_guard(
-        batch_id,
-        min(last_batch_id(docs_store), last_batch_id(cont_store)),
-        odir,
-        rebuilt=has_rebuilt_marker(odir),
-    ):
-        return _stored()
+    if not admit_batch(odir, batch_id, docs_store, cont_store):
+        return read_store(spark, docs_store, batch_id)
     batch = batch_df.cache()
     try:
         if not batch.take(1):
@@ -382,7 +366,7 @@ def fold_batch(
             overlap.unpersist()
     finally:
         batch.unpersist()
-    return _stored()
+    return read_store(spark, docs_store, batch_id)
 
 
 def start_decontam_stream(
@@ -412,17 +396,11 @@ def start_decontam_stream(
 
     # Eval shingles once, cached across micro-batches (benchmark-sized).
     ev = eval_shingles(eval_df, id_col, text_col, n)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(
-            spark, odir, batch_df, batch_id, ev,
-            id_col=id_col, text_col=text_col, n=n, min_shared=min_shared,
-        )
-        maybe_consolidate_in_stream(
-            spark, _store_map(odir), batch_id, consolidate_every
-        )
-
     return run_view(
-        spark, corpus_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        spark, corpus_dir, schema, checkpoint_dir,
+        lambda df, b: fold_batch(
+            spark, odir, df, b, ev,
+            id_col=id_col, text_col=text_col, n=n, min_shared=min_shared,
+        ),
+        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
     )

@@ -60,15 +60,12 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
     account_empty_fold,
+    admit_batch,
     append_batch_increment,
-    maybe_consolidate_in_stream,
-    ensure_store_params,
-    has_rebuilt_marker,
-    last_batch_id,
-    read_batch_store,
-    sequential_fold_guard,
-    run_view,
     consolidate_stores,
+    read_batch_store,
+    read_store,
+    run_view,
 )
 from ..functions.textfn import normalized_fingerprint
 
@@ -88,21 +85,21 @@ def history_fps(
     filter (untouched prefixes never listed). Goes through
     ``batchstore.read_batch_store`` so a consolidated index serves the
     identical view."""
-    store = Path(out_dir) / "fp_index"
-    return (
-        read_batch_store(spark, store)
-        .filter(F.col("fp_prefix").isin([int(p) for p in touched_prefixes]))
-        .select("fp")
-    )
+    index = read_batch_store(spark, Path(out_dir) / "fp_index")
+    return _touched_fps(index, touched_prefixes)
+
+
+def _touched_fps(index: DataFrame, touched_prefixes: list[int]) -> DataFrame:
+    return index.filter(
+        F.col("fp_prefix").isin([int(p) for p in touched_prefixes])
+    ).select("fp")
 
 
 def current_novel_docs(spark: SparkSession, out_dir: str | Path) -> DataFrame | None:
     """The maintained novel-document table (one row per distinct
     fingerprint, first-arrival winner), or None before the first batch."""
-    store = Path(out_dir) / "docs"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
-        return None
-    return read_batch_store(spark, store).drop("ingest_batch")
+    docs = read_store(spark, Path(out_dir) / "docs")
+    return None if docs is None else docs.drop("ingest_batch")
 
 
 # store name -> partition columns; shared by offline compaction and the
@@ -148,33 +145,18 @@ def fold_batch(
     crash-mid-pipeline replay path: an earlier gate skips, later gates
     still get its output)."""
     odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    # n_prefix is baked into every fp_index partition ever written; a
-    # restart with a different value would probe the wrong partitions
-    # and re-admit every duplicate — refuse loudly instead.
-    ensure_store_params(odir, {"n_prefix": int(n_prefix)})
     docs_store = odir / "docs"
     fp_store = odir / "fp_index"
-
-    def _stored() -> DataFrame | None:
-        inc = docs_store / f"ingest_batch={batch_id}"
-        return (
-            spark.read.parquet(str(inc)).drop("ingest_batch")
-            if inc.exists()
-            else None
-        )
-
-    # Folded into BOTH stores ⇒ replay is a no-op. min, not max: a
-    # crash between the docs and fp_index writes leaves docs ahead,
-    # and a max-based skip would permanently drop the batch from the
-    # index (every one of its fps would re-emit as novel forever).
-    if not sequential_fold_guard(
-        batch_id,
-        min(last_batch_id(docs_store), last_batch_id(fp_store)),
-        odir,
-        rebuilt=has_rebuilt_marker(odir),
+    # Folded into BOTH stores ⇒ replay is a no-op (min across the two,
+    # so a crash between the docs and fp_index writes refolds the
+    # batch into the index). n_prefix is baked into every fp_index
+    # partition ever written; a restart with a different value would
+    # probe the wrong partitions and re-admit every duplicate — the
+    # params pin refuses it loudly instead.
+    if not admit_batch(
+        odir, batch_id, docs_store, fp_store, params={"n_prefix": int(n_prefix)}
     ):
-        return _stored()
+        return read_store(spark, docs_store, batch_id)
 
     with_fp = batch_df.withColumn("fp", normalized_fingerprint(F.col(text_col)))
     # Intra-batch winner per fingerprint: smallest id — deterministic,
@@ -189,7 +171,7 @@ def fold_batch(
     )
     try:
         return _fold_winners(
-            spark, odir, winners, batch_id, n_prefix, fp_store, docs_store, _stored
+            spark, winners, batch_id, n_prefix, fp_store, docs_store
         )
     finally:
         # covers every exit, including a transient failure in the probe
@@ -198,9 +180,7 @@ def fold_batch(
         winners.unpersist()
 
 
-def _fold_winners(
-    spark, odir, winners, batch_id, n_prefix, fp_store, docs_store, _stored
-):
+def _fold_winners(spark, winners, batch_id, n_prefix, fp_store, docs_store):
     # Driver-side touched-prefix literal (bounded by n_prefix): the
     # membership probe below prunes the index to these partitions at
     # planning time.
@@ -218,11 +198,12 @@ def _fold_winners(
         account_empty_fold(winners, (docs_store, fp_store), batch_id)
         return None
     batch_fps = winners.select("fp")
-    if fp_store.exists() and any(fp_store.glob("ingest_batch=*")):
+    index = read_store(spark, fp_store)
+    if index is not None:
         # Which batch fps exist in history: prefix-pruned index scan,
         # semi-joined against the BROADCAST batch set — the index is
         # streamed map-side, never shuffled, never rewritten.
-        hits = history_fps(spark, odir, touched).join(
+        hits = _touched_fps(index, touched).join(
             F.broadcast(batch_fps), "fp", "left_semi"
         )
         novel = winners.join(F.broadcast(hits), "fp", "left_anti")
@@ -251,7 +232,7 @@ def _fold_winners(
             return None
     finally:
         novel.unpersist()
-    return _stored()
+    return read_store(spark, docs_store, batch_id)
 
 
 def start_dedup_stream(
@@ -275,17 +256,10 @@ def start_dedup_stream(
     ``None`` reverts to offline-only maintenance."""
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(
-            spark, odir, batch_df, batch_id,
-            id_col=id_col, text_col=text_col, n_prefix=n_prefix,
-        )
-        maybe_consolidate_in_stream(
-            spark, _store_map(odir), batch_id, consolidate_every
-        )
-
     return run_view(
-        spark, corpus_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        spark, corpus_dir, schema, checkpoint_dir,
+        lambda df, b: fold_batch(
+            spark, odir, df, b, id_col=id_col, text_col=text_col, n_prefix=n_prefix
+        ),
+        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
     )

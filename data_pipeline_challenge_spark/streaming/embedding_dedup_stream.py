@@ -67,12 +67,10 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
     account_empty_fold,
+    admit_batch,
     append_batch_increment,
     consolidate_stores,
-    maybe_consolidate_in_stream,
-    sequential_fold_guard,
-    has_rebuilt_marker,
-    last_batch_id,
+    read_store,
     run_view,
 )
 from ..functions.vectorfn import as_double, cosine
@@ -135,25 +133,14 @@ def fold_batch(
     batch's KEPT rows (bucketed), or None when nothing was kept / the
     batch is empty. Idempotent under replay (see module docstring)."""
     idx = Path(index_dir)
-    idx.mkdir(parents=True, exist_ok=True)
     inc_store = idx / "bucketed_inc"
     meta_p = idx / "lsh_meta.json"
-
-    def _stored() -> DataFrame | None:
-        inc = inc_store / f"ingest_batch={batch_id}"
-        if inc.exists():
-            return spark.read.parquet(str(inc))
-        if _base_batch(idx) == batch_id and (idx / "bucketed").exists():
-            return spark.read.parquet(str(idx / "bucketed"))
-        return None
-
-    if not sequential_fold_guard(
-        batch_id,
-        max(_base_batch(idx), last_batch_id(inc_store)),
-        idx,
-        rebuilt=has_rebuilt_marker(idx),
-    ):
-        return _stored()
+    base_batch = _base_batch(idx)
+    if not admit_batch(idx, batch_id, inc_store, floor=base_batch):
+        kept = read_store(spark, inc_store, batch_id)
+        if kept is None and base_batch == batch_id and (idx / "bucketed").exists():
+            kept = spark.read.parquet(str(idx / "bucketed"))
+        return kept
 
     first = not meta_p.exists()
     if first:
@@ -269,7 +256,7 @@ def fold_batch(
                     }
                 )
             )
-            return _stored()
+            return spark.read.parquet(str(idx / "bucketed"))
 
         # An all-duplicate batch keeps nothing: append_batch_increment
         # writes no parquet (a file-less partitioned dir would poison
@@ -282,7 +269,7 @@ def fold_batch(
             kept, inc_store, batch_id, partition_by="bucket"
         ):
             return None
-        return _stored()
+        return read_store(spark, inc_store, batch_id)
     finally:
         bucketed.unpersist()
 
@@ -310,18 +297,12 @@ def start_embedding_dedup_stream(
     offline-only."""
     idx = Path(index_dir)
     idx.mkdir(parents=True, exist_ok=True)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(
-            spark, idx, batch_df, batch_id,
+    return run_view(
+        spark, vectors_dir, schema, checkpoint_dir,
+        lambda df, b: fold_batch(
+            spark, idx, df, b,
             id_col=id_col, vec_col=vec_col, dim=dim, n_planes=n_planes,
             min_cos=min_cos, bucket_cap=bucket_cap,
-        )
-        maybe_consolidate_in_stream(
-            spark, _store_map(idx), batch_id, consolidate_every
-        )
-
-    return run_view(
-        spark, vectors_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        ),
+        max_files_per_trigger, available_now, _store_map(idx), consolidate_every,
     )

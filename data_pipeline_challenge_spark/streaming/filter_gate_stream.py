@@ -35,14 +35,11 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
     account_empty_fold,
+    admit_batch,
     append_batch_increment,
     consolidate_stores,
-    has_rebuilt_marker,
-    last_batch_id,
-    maybe_consolidate_in_stream,
-    read_batch_store,
+    read_store,
     run_view,
-    sequential_fold_guard,
 )
 from ..functions.textfn import top_token_fraction
 
@@ -81,18 +78,14 @@ def current_admitted_docs(
     spark: SparkSession, out_dir: str | Path
 ) -> DataFrame | None:
     """Rows the gate admitted so far, or None before the first batch."""
-    store = Path(out_dir) / "docs"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
-        return None
-    return read_batch_store(spark, store).drop("ingest_batch")
+    docs = read_store(spark, Path(out_dir) / "docs")
+    return None if docs is None else docs.drop("ingest_batch")
 
 
 def rejected_log(spark: SparkSession, out_dir: str | Path) -> DataFrame | None:
     """Diverted rows, verbatim, or None if nothing was ever rejected."""
-    store = Path(out_dir) / "rejected"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
-        return None
-    return read_batch_store(spark, store).drop("ingest_batch")
+    rejected = read_store(spark, Path(out_dir) / "rejected")
+    return None if rejected is None else rejected.drop("ingest_batch")
 
 
 def compact_filter_gate_store(
@@ -115,21 +108,10 @@ def fold_batch(
     batch. Idempotent: an already-folded batch returns its stored
     increment."""
     odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
     docs_store = odir / "docs"
     rej_store = odir / "rejected"
-
-    def _stored() -> DataFrame | None:
-        inc = docs_store / f"ingest_batch={batch_id}"
-        return spark.read.parquet(str(inc)) if inc.exists() else None
-
-    if not sequential_fold_guard(
-        batch_id,
-        min(last_batch_id(docs_store), last_batch_id(rej_store)),
-        odir,
-        rebuilt=has_rebuilt_marker(odir),
-    ):
-        return _stored()
+    if not admit_batch(odir, batch_id, docs_store, rej_store):
+        return read_store(spark, docs_store, batch_id)
     batch = batch_df.cache()
     try:
         if not batch.take(1):
@@ -146,7 +128,7 @@ def fold_batch(
         )
     finally:
         batch.unpersist()
-    return _stored()
+    return read_store(spark, docs_store, batch_id)
 
 
 def start_filter_gate_stream(
@@ -166,14 +148,8 @@ def start_filter_gate_stream(
     N batches (no stop-the-stream window); ``None`` = offline-only."""
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(spark, odir, batch_df, batch_id, keep_expr)
-        maybe_consolidate_in_stream(
-            spark, _store_map(odir), batch_id, consolidate_every
-        )
-
     return run_view(
-        spark, corpus_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        spark, corpus_dir, schema, checkpoint_dir,
+        lambda df, b: fold_batch(spark, odir, df, b, keep_expr),
+        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
     )

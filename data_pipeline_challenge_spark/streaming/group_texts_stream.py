@@ -52,6 +52,7 @@ from ..batchstore import (
     ensure_store_params,
     maybe_consolidate_in_stream,
     read_batch_store,
+    read_store,
     run_view,
 )
 from ..operators.packing import group_texts_blocks
@@ -224,15 +225,15 @@ def revoke_block_docs(
     )
     versions = _versions(odir)
     present: list[str] = []
-    if cand and versions and any(rows_dir.glob("ingest_batch=*")):
+    rows = None
+    if cand and versions:
         sch = _schemas(odir)
+        rows = read_store(spark, rows_dir, schema=sch["rows"] if sch else None)
+    if rows is not None:
         present = sorted(
             str(r["shard"])
             for r in (
-                read_batch_store(
-                    spark, rows_dir, schema=sch["rows"] if sch else None
-                )
-                .filter(F.col("shard").isin(cand))
+                rows.filter(F.col("shard").isin(cand))
                 .join(F.broadcast(delta), [id_col], "left_semi")
                 .select("shard")
                 .distinct()

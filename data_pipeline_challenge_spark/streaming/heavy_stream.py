@@ -31,7 +31,6 @@ ones exist so a replayed batch can re-derive from its predecessor).
 from __future__ import annotations
 
 import json
-import os
 from pathlib import Path
 
 import pyspark.sql.functions as F
@@ -44,17 +43,17 @@ from ..batchstore import (
     ensure_store_params,
     has_rebuilt_marker,
     last_batch_id,
-    maybe_consolidate_in_stream,
+    latest_commit_file,
     prefix_bucket,
     prefix_bucket_local,
     read_batch_store,
     run_view,
     sequential_fold_guard,
+    write_commit_file,
 )
 from ..operators.sketches import _mg_merge, mg_summary
 
 _N_BUCKETS = 64
-_SUMMARY_KEEP = 64  # trailing summary files retained (replay headroom)
 
 _STORES: tuple[tuple[str, list | None], ...] = (("counts", ["item_bucket"]),)
 
@@ -69,24 +68,9 @@ def _summary_path(odir: Path, batch_id: int) -> Path:
 
 def _latest_summary(odir: Path, before: int | None = None) -> tuple[dict, int]:
     """(summary record, batch_id) of the newest summary strictly before
-    ``before`` (or the newest overall); ``({}, -1)`` when none exists."""
-    d = odir / "mg"
-    best, best_id = {"mg": {}, "n_total": 0}, -1
-    if not d.exists():
-        return best, best_id
-    for p in d.glob("b*.json"):
-        sid = p.name[1:-5]
-        if not sid.isdigit():
-            continue
-        bid = int(sid)
-        if before is not None and bid >= before:
-            continue
-        if bid > best_id:
-            try:
-                best, best_id = json.loads(p.read_text()), bid
-            except (OSError, ValueError):
-                continue
-    return best, best_id
+    ``before`` (or the newest overall); an empty summary and -1 when
+    none exists."""
+    return latest_commit_file(odir / "mg", {"mg": {}, "n_total": 0}, before)
 
 
 def fold_batch(
@@ -164,15 +148,7 @@ def fold_batch(
             "mg": merged,
             "n_total": int(prev.get("n_total", 0)) + int(batch_total),
         }
-        (odir / "mg").mkdir(parents=True, exist_ok=True)
-        final = _summary_path(odir, batch_id)
-        tmp = final.parent / f".{final.name}.tmp"
-        tmp.write_text(json.dumps(rec, sort_keys=True))
-        os.replace(tmp, final)
-        for stale in (odir / "mg").glob("b*.json"):
-            sid = stale.name[1:-5]
-            if sid.isdigit() and int(sid) < batch_id - _SUMMARY_KEEP:
-                stale.unlink(missing_ok=True)
+        write_commit_file(odir / "mg", batch_id, rec)
     finally:
         batch_counts.unpersist()
 
@@ -246,14 +222,8 @@ def start_heavy_hitters_stream(
     ``available_now=True`` drains what's landed and stops."""
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(spark, odir, batch_df, batch_id, item_col, k)
-        maybe_consolidate_in_stream(
-            spark, _store_map(odir), batch_id, consolidate_every
-        )
-
     return run_view(
-        spark, corpus_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        spark, corpus_dir, schema, checkpoint_dir,
+        lambda df, b: fold_batch(spark, odir, df, b, item_col, k),
+        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
     )

@@ -43,15 +43,12 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
     account_empty_fold,
+    admit_batch,
     append_batch_increment,
     consolidate_stores,
-    ensure_store_params,
-    has_rebuilt_marker,
     last_batch_id,
-    maybe_consolidate_in_stream,
-    read_batch_store,
+    read_store,
     run_view,
-    sequential_fold_guard,
 )
 
 _N_BUCKETS = 64  # per-band hash buckets (partition key: band, bucket)
@@ -121,27 +118,16 @@ def fold_batch(
             "of silently losing recall"
         )
     odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    ensure_store_params(
-        odir,
-        {
-            "kind": "image_dedup",
-            "max_hamming": int(max_hamming),
-            "n_bands": n_bands,
-            "n_buckets": _N_BUCKETS,
-        },
-    )
     kept_store = odir / "kept"
     hash_store = odir / "hashes"
-
-    def _stored() -> DataFrame | None:
-        inc = kept_store / f"ingest_batch={batch_id}"
-        return spark.read.parquet(str(inc)) if inc.exists() else None
-
-    if not sequential_fold_guard(
-        batch_id, last_batch_id(hash_store), odir, rebuilt=has_rebuilt_marker(odir)
-    ):
-        return _stored()
+    params = {
+        "kind": "image_dedup",
+        "max_hamming": int(max_hamming),
+        "n_bands": n_bands,
+        "n_buckets": _N_BUCKETS,
+    }
+    if not admit_batch(odir, batch_id, hash_store, params=params):
+        return read_store(spark, kept_store, batch_id)
 
     batch = batch_df.cache()
     try:
@@ -160,15 +146,14 @@ def fold_batch(
                     .distinct()
                     .collect()
                 )
-                hist = None
-                if probes and any(hash_store.glob("ingest_batch=*")):
+                hist = read_store(spark, hash_store) if probes else None
+                if hist is not None:
                     cond = None
                     for bd, bk in probes:
                         c = (F.col("band") == bd) & (F.col("bucket") == bk)
                         cond = c if cond is None else (cond | c)
                     hist = (
-                        read_batch_store(spark, hash_store)
-                        .filter(cond)  # partition-pruned literal union
+                        hist.filter(cond)  # partition-pruned literal union
                         .select(
                             "band", "bh",
                             F.col("media_id").alias("_hid"),
@@ -266,26 +251,22 @@ def fold_batch(
             sig.unpersist()
     finally:
         batch.unpersist()
-    return _stored()
+    return read_store(spark, kept_store, batch_id)
 
 
 def current_kept_media(
     spark: SparkSession, out_dir: str | Path
 ) -> DataFrame | None:
     """Media rows the gate kept so far, or None before the first batch."""
-    store = Path(out_dir) / "kept"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
-        return None
-    return read_batch_store(spark, store).drop("ingest_batch")
+    kept = read_store(spark, Path(out_dir) / "kept")
+    return None if kept is None else kept.drop("ingest_batch")
 
 
 def diverted_log(spark: SparkSession, out_dir: str | Path) -> DataFrame | None:
     """Diverted rows with their ``dup_of`` evidence (the kept image they
     perceptually duplicate), or None if nothing was ever diverted."""
-    store = Path(out_dir) / "diverted"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
-        return None
-    return read_batch_store(spark, store).drop("ingest_batch")
+    diverted = read_store(spark, Path(out_dir) / "diverted")
+    return None if diverted is None else diverted.drop("ingest_batch")
 
 
 def compact_image_dedup_store(
@@ -319,14 +300,8 @@ def start_image_dedup_stream(
     gate. ``available_now=True`` drains what's landed and stops."""
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(spark, odir, batch_df, batch_id, max_hamming, n_bands)
-        maybe_consolidate_in_stream(
-            spark, _store_map(odir), batch_id, consolidate_every
-        )
-
     return run_view(
-        spark, media_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        spark, media_dir, schema, checkpoint_dir,
+        lambda df, b: fold_batch(spark, odir, df, b, max_hamming, n_bands),
+        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
     )

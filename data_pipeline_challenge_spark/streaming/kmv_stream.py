@@ -33,15 +33,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    admit_batch,
     append_batch_increment,
     consolidate_stores,
-    ensure_store_params,
-    has_rebuilt_marker,
-    last_batch_id,
-    maybe_consolidate_in_stream,
-    read_batch_store,
+    read_store,
     run_view,
-    sequential_fold_guard,
 )
 from ..operators.sketches import (
     KMV_K,
@@ -97,15 +93,11 @@ def fold_batch(
     are pinned at store creation (bottom-k sets of different k or
     grouping must never union)."""
     odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
     params: dict = {"item_col": item_col, "k": k}
     if group_cols:
         params["group_cols"] = list(group_cols)
-    ensure_store_params(odir, params)
     store = odir / "hashes"
-    if not sequential_fold_guard(
-        batch_id, last_batch_id(store), odir, rebuilt=has_rebuilt_marker(odir)
-    ):
+    if not admit_batch(odir, batch_id, store, params=params):
         return
     append_batch_increment(
         kmv_bottom_hashes(batch_df, item_col, k, group_cols=group_cols),
@@ -122,13 +114,13 @@ def _collapsed(
     pinned params — the store-layout contract exists exactly once
     (self-review r16)."""
     odir = Path(out_dir)
-    store = odir / "hashes"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
+    hashes = read_store(spark, odir / "hashes")
+    if hashes is None:
         return None
     params = _params(odir)
     gcs = list(params.get("group_cols") or ())
     k = int(params["k"])
-    return _bottom_k(read_batch_store(spark, store), k, gcs), gcs, k
+    return _bottom_k(hashes, k, gcs), gcs, k
 
 
 def kmv_report(spark: SparkSession, out_dir: str | Path) -> DataFrame | None:
@@ -189,15 +181,9 @@ def start_kmv_stream(
     ``available_now=True`` drains what's landed and stops."""
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(spark, odir, batch_df, batch_id, item_col, k, group_cols)
-        maybe_consolidate_in_stream(
-            spark, _store_map(odir), batch_id, consolidate_every,
-            transforms=_transforms(odir),
-        )
-
     return run_view(
-        spark, corpus_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        spark, corpus_dir, schema, checkpoint_dir,
+        lambda df, b: fold_batch(spark, odir, df, b, item_col, k, group_cols),
+        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
+        transforms=_transforms(odir),
     )

@@ -86,15 +86,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    admit_batch,
     append_batch_increment,
     consolidate_stores,
-    ensure_store_params,
-    has_rebuilt_marker,
+    has_data,
     last_batch_id,
-    maybe_consolidate_in_stream,
     read_batch_store,
+    read_store,
     run_view,
-    sequential_fold_guard,
 )
 from ..operators.dedup import banded_minhash_tables, verify_candidate_pairs
 from ..operators.graph import connected_components
@@ -122,15 +121,16 @@ def current_kept_docs(spark: SparkSession, out_dir: str | Path) -> DataFrame | N
     are never rewritten: a revoked doc's signature intentionally stays
     in the band index, so near-duplicates of revoked content are still
     recognized instead of being re-admitted."""
-    store = Path(out_dir) / "docs"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
+    docs = read_store(spark, Path(out_dir) / "docs")
+    if docs is None:
         return None
-    docs = read_batch_store(spark, store).drop("ingest_batch")
+    docs = docs.drop("ingest_batch")
     rev_store = Path(out_dir) / "revoked"
-    if rev_store.exists() and any(rev_store.glob("ingest_batch=*")):
+    rev = read_store(spark, rev_store)
+    if rev is not None:
         from .decontam_stream import _revocation_key
 
-        rev = read_batch_store(spark, rev_store).drop("ingest_batch")
+        rev = rev.drop("ingest_batch")
         key = _revocation_key(rev, rev_store, docs.columns)
         docs = docs.join(
             F.broadcast(rev.select(*key).distinct()), on=key, how="left_anti"
@@ -211,29 +211,9 @@ def fold_batch(
     in-flight plan), so a replay after any crash point feeds the
     component fold the identical edges."""
     odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    # The shingle width, signature shape, and prefix modulus are baked
-    # into every band-index row and partition ever written; a restart
-    # with different values computes incomparable band hashes / probes
-    # the wrong partitions — refuse loudly. min_jaccard and bucket_cap
-    # are POLICY (tunable per restart): they change verdicts, not the
-    # stored layout.
-    ensure_store_params(
-        odir,
-        {
-            "n": int(n),
-            "num_hashes": int(num_hashes),
-            "bands": int(bands),
-            "n_prefix": int(n_prefix),
-        },
-    )
     docs_store = odir / "docs"
     band_store = odir / "band_index"
     pairs_store = odir / "pairs"
-
-    def _stored() -> DataFrame | None:
-        inc = docs_store / f"ingest_batch={batch_id}"
-        return spark.read.parquet(str(inc)) if inc.exists() else None
 
     def _chain_components() -> None:
         # Chained fold (corpus_pipeline_stream discipline): feed the
@@ -247,11 +227,11 @@ def fold_batch(
             return
         from .components_stream import fold_batch as _components_fold
 
-        inc = pairs_store / f"ingest_batch={batch_id}"
+        edges = read_store(spark, pairs_store, batch_id)
         edges = (
-            spark.read.parquet(str(inc)).select("doc1", "doc2")
-            if inc.exists()
-            else spark.createDataFrame([], "doc1 long, doc2 long")
+            spark.createDataFrame([], "doc1 long, doc2 long")
+            if edges is None
+            else edges.select("doc1", "doc2")
         )
         _components_fold(
             spark,
@@ -263,12 +243,21 @@ def fold_batch(
             n_prefix=components_n_prefix,
         )
 
-    committed = min(last_batch_id(docs_store), last_batch_id(band_store))
-    if not sequential_fold_guard(
-        batch_id, committed, odir, rebuilt=has_rebuilt_marker(odir)
-    ):
+    # The shingle width, signature shape, and prefix modulus are baked
+    # into every band-index row and partition ever written; a restart
+    # with different values computes incomparable band hashes / probes
+    # the wrong partitions — refuse loudly. min_jaccard and bucket_cap
+    # are POLICY (tunable per restart): they change verdicts, not the
+    # stored layout.
+    params = {
+        "n": int(n),
+        "num_hashes": int(num_hashes),
+        "bands": int(bands),
+        "n_prefix": int(n_prefix),
+    }
+    if not admit_batch(odir, batch_id, docs_store, band_store, params=params):
         _chain_components()
-        return _stored()
+        return read_store(spark, docs_store, batch_id)
     # Full rows ride through to the docs store (the kept corpus must not
     # lose metadata columns); the signature tables work on the (id, text)
     # projection only.
@@ -327,7 +316,7 @@ def fold_batch(
 
         # (b) against-history probe, only if an index exists.
         cross_verified = None
-        if band_store.exists() and any(band_store.glob("ingest_batch=*")):
+        if has_data(band_store):
             touched = sorted(
                 r["p"]
                 for r in kept_banded.select(
@@ -419,7 +408,7 @@ def fold_batch(
         # kept store — so drop any kept id already present in history,
         # via the same prefix-pruned + broadcast-keyed read the probes
         # use (bounded by the batch's touched doc prefixes).
-        if docs_store.exists() and any(docs_store.glob("ingest_batch=*")):
+        if has_data(docs_store):
             kept_prefixes = sorted(
                 r["p"]
                 for r in kept.select(F.col("doc_prefix").alias("p"))
@@ -477,6 +466,9 @@ def fold_batch(
         # while the band index cannot yet contain the batch. Skip when a
         # crashed replay already wrote them (the pairs are final).
         if batch_id > last_batch_id(pairs_store):
+            # the band index is written last, so it still holds the
+            # gate's committed frontier before this batch
+            committed = last_batch_id(band_store)
             if last_batch_id(pairs_store) < 0 and committed >= 0:
                 # FIRST pair record on a gate that already committed
                 # batches (a pre-pairs-store gate upgraded mid-life):
@@ -504,7 +496,7 @@ def fold_batch(
     finally:
         for c in cached:
             c.unpersist()
-    return _stored()
+    return read_store(spark, docs_store, batch_id)
 
 
 _PAIRS_PARTIAL = "_pairs_partial.json"
@@ -636,14 +628,12 @@ def backfill_dup_clusters(
             "miss those pairs — re-ingest the corpus through a fresh "
             "gate to get the composed view"
         )
-    if pairs_store.exists() and any(pairs_store.glob("ingest_batch=*")):
-        edges = (
-            read_batch_store(spark, pairs_store)
-            .filter(F.col("ingest_batch") <= committed)
-            .select("doc1", "doc2")
-        )
-    else:
-        edges = spark.createDataFrame([], "doc1 long, doc2 long")
+    edges = read_store(spark, pairs_store)
+    edges = (
+        spark.createDataFrame([], "doc1 long, doc2 long")
+        if edges is None
+        else edges.filter(F.col("ingest_batch") <= committed).select("doc1", "doc2")
+    )
     backfill_components_store(
         spark,
         components_out_dir,
@@ -693,26 +683,22 @@ def start_near_dedup_stream(
             default_n_prefix=components_n_prefix,
         )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(
-            spark, odir, batch_df, batch_id,
+    stores, transforms = _store_map(odir), {}
+    if components_out_dir is not None:
+        from . import components_stream
+
+        cdir = Path(components_out_dir)
+        stores.update(components_stream._store_map(cdir))
+        transforms = components_stream._transforms(cdir)
+    return run_view(
+        spark, corpus_dir, schema, checkpoint_dir,
+        lambda df, b: fold_batch(
+            spark, odir, df, b,
             id_col=id_col, text_col=text_col, n=n, num_hashes=num_hashes,
             bands=bands, min_jaccard=min_jaccard, n_prefix=n_prefix,
             bucket_cap=bucket_cap, components_out_dir=components_out_dir,
             components_n_prefix=components_n_prefix,
-        )
-        stores, transforms = _store_map(odir), {}
-        if components_out_dir is not None:
-            from . import components_stream
-
-            cdir = Path(components_out_dir)
-            stores.update(components_stream._store_map(cdir))
-            transforms = components_stream._transforms(cdir)
-        maybe_consolidate_in_stream(
-            spark, stores, batch_id, consolidate_every, transforms=transforms
-        )
-
-    return run_view(
-        spark, corpus_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        ),
+        max_files_per_trigger, available_now, stores, consolidate_every,
+        transforms=transforms,
     )

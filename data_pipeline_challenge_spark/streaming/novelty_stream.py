@@ -43,16 +43,13 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
     account_empty_fold,
+    admit_batch,
     append_batch_increment,
     consolidate_stores,
-    ensure_store_params,
-    has_rebuilt_marker,
     last_batch_id,
-    maybe_consolidate_in_stream,
     prefix_bucket,
-    read_batch_store,
+    read_store,
     run_view,
-    sequential_fold_guard,
 )
 
 _N_BUCKETS = 64
@@ -85,19 +82,6 @@ def fold_batch(
     stored increment."""
     from ..functions.textfn import doc_shingles
 
-    odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    ensure_store_params(
-        odir,
-        {
-            "kind": "novelty_gate",
-            "id_col": id_col,
-            "text_col": text_col,
-            "shingle_n": int(shingle_n),
-            "max_share": float(max_share),
-            "n_buckets": _N_BUCKETS,
-        },
-    )
     reserved = {"n_shingles", "n_seen", "novelty_share", "_nid"}
     clash = reserved & set(batch_df.columns)
     if clash:
@@ -105,17 +89,19 @@ def fold_batch(
             f"input column(s) {sorted(clash)} collide with the novelty "
             "gate's score columns — rename them before the gate"
         )
+    odir = Path(out_dir)
     docs_store = odir / "docs"
     sh_store = odir / "shingles"
-
-    def _stored() -> DataFrame | None:
-        inc = docs_store / f"ingest_batch={batch_id}"
-        return spark.read.parquet(str(inc)) if inc.exists() else None
-
-    if not sequential_fold_guard(
-        batch_id, last_batch_id(sh_store), odir, rebuilt=has_rebuilt_marker(odir)
-    ):
-        return _stored()
+    params = {
+        "kind": "novelty_gate",
+        "id_col": id_col,
+        "text_col": text_col,
+        "shingle_n": int(shingle_n),
+        "max_share": float(max_share),
+        "n_buckets": _N_BUCKETS,
+    }
+    if not admit_batch(odir, batch_id, sh_store, params=params):
+        return read_store(spark, docs_store, batch_id)
 
     batch = batch_df.cache()
     try:
@@ -148,13 +134,13 @@ def fold_batch(
             buckets = sorted(
                 r["bucket"] for r in sh.select("bucket").distinct().collect()
             )
-            if buckets and any(sh_store.glob("ingest_batch=*")):
+            hist = read_store(spark, sh_store) if buckets else None
+            if hist is not None:
                 # cached: the matched-bucket slice feeds both the score
                 # join and the new-shingle anti-join below — one history
                 # scan per batch, not two (the dedup_stream discipline)
                 hist = (
-                    read_batch_store(spark, sh_store)
-                    .filter(F.col("bucket").isin(buckets))  # pruned
+                    hist.filter(F.col("bucket").isin(buckets))  # pruned
                     .select("bucket", "s")
                     .cache()
                 )
@@ -233,7 +219,7 @@ def fold_batch(
                 hist.unpersist()
     finally:
         batch.unpersist()
-    return _stored()
+    return read_store(spark, docs_store, batch_id)
 
 
 def current_admitted_docs(
@@ -241,19 +227,15 @@ def current_admitted_docs(
 ) -> DataFrame | None:
     """Rows the gate admitted so far (with their scores), or None before
     the first non-empty batch."""
-    store = Path(out_dir) / "docs"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
-        return None
-    return read_batch_store(spark, store).drop("ingest_batch")
+    docs = read_store(spark, Path(out_dir) / "docs")
+    return None if docs is None else docs.drop("ingest_batch")
 
 
 def rejected_log(spark: SparkSession, out_dir: str | Path) -> DataFrame | None:
     """Diverted rows with the score evidence, or None if nothing was
     ever diverted."""
-    store = Path(out_dir) / "rejected"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
-        return None
-    return read_batch_store(spark, store).drop("ingest_batch")
+    rejected = read_store(spark, Path(out_dir) / "rejected")
+    return None if rejected is None else rejected.drop("ingest_batch")
 
 
 def compact_novelty_store(
@@ -290,17 +272,10 @@ def start_novelty_stream(
     ``available_now=True`` drains what's landed and stops."""
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(
-            spark, odir, batch_df, batch_id, id_col, text_col,
-            shingle_n, max_share,
-        )
-        maybe_consolidate_in_stream(
-            spark, _store_map(odir), batch_id, consolidate_every
-        )
-
     return run_view(
-        spark, corpus_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        spark, corpus_dir, schema, checkpoint_dir,
+        lambda df, b: fold_batch(
+            spark, odir, df, b, id_col, text_col, shingle_n, max_share
+        ),
+        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
     )

@@ -52,16 +52,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    admit_batch,
     append_batch_increment,
     consolidate_stores,
-    ensure_store_params,
-    has_rebuilt_marker,
     last_batch_id,
-    maybe_consolidate_in_stream,
     prefix_bucket,
     read_batch_store,
+    read_store,
     run_view,
-    sequential_fold_guard,
 )
 
 _N_BUCKETS = 64
@@ -93,21 +91,15 @@ def fold_batch(
     from ..functions.textfn import doc_shingles
 
     odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    ensure_store_params(
-        odir,
-        {
-            "kind": "source_overlap",
-            "source_col": source_col,
-            "text_col": text_col,
-            "shingle_n": int(shingle_n),
-            "n_buckets": _N_BUCKETS,
-        },
-    )
     sh_store = odir / "shingles"
-    if not sequential_fold_guard(
-        batch_id, last_batch_id(sh_store), odir, rebuilt=has_rebuilt_marker(odir)
-    ):
+    params = {
+        "kind": "source_overlap",
+        "source_col": source_col,
+        "text_col": text_col,
+        "shingle_n": int(shingle_n),
+        "n_buckets": _N_BUCKETS,
+    }
+    if not admit_batch(odir, batch_id, sh_store, params=params):
         return
 
     batch_sh = doc_shingles(
@@ -125,13 +117,9 @@ def fold_batch(
         )
         if not buckets:  # empty batch: nothing to fold, guard stays behind
             return
-        hist = None
-        if any(sh_store.glob("ingest_batch=*")):
-            hist = (
-                read_batch_store(spark, sh_store)
-                .filter(F.col("bucket").isin(buckets))  # partition-pruned
-                .drop("ingest_batch")
-            )
+        hist = read_store(spark, sh_store)
+        if hist is not None:  # partition-pruned to the batch's buckets
+            hist = hist.filter(F.col("bucket").isin(buckets)).drop("ingest_batch")
         new = (
             batch_sh
             if hist is None
@@ -193,20 +181,17 @@ def overlap_report(spark: SparkSession, out_dir: str | Path) -> DataFrame | None
     tid = last_batch_id(odir / "shingles")
     if tid < 0:
         return None
-    if not any((odir / "pair_inc").glob("ingest_batch=*")):
+    pairs = read_store(spark, odir / "pair_inc")
+    if pairs is None:
         # every committed batch's pair increment was empty (single-source
         # corpus, or no cross-source shared shingle yet): the matrix is
         # legitimately empty — the store holds only empty-batch sentinels
-        # and reading it would throw UNABLE_TO_INFER_SCHEMA
         return spark.createDataFrame(
             [], "s1 string, s2 string, n_shared bigint, jaccard double"
         )
     committed = (F.col("ingest_batch") <= tid) | (F.col("ingest_batch") < 0)
-    pairs = (
-        read_batch_store(spark, odir / "pair_inc")
-        .filter(committed)
-        .groupBy("s1", "s2")
-        .agg(F.sum("d").alias("n_shared"))
+    pairs = pairs.filter(committed).groupBy("s1", "s2").agg(
+        F.sum("d").alias("n_shared")
     )
     counts = (
         read_batch_store(spark, odir / "count_inc")
@@ -252,16 +237,10 @@ def start_overlap_stream(
     ``available_now=True`` drains what's landed and stops."""
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(
-            spark, odir, batch_df, batch_id, source_col, text_col, shingle_n
-        )
-        maybe_consolidate_in_stream(
-            spark, _store_map(odir), batch_id, consolidate_every
-        )
-
     return run_view(
-        spark, corpus_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        spark, corpus_dir, schema, checkpoint_dir,
+        lambda df, b: fold_batch(
+            spark, odir, df, b, source_col, text_col, shingle_n
+        ),
+        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
     )

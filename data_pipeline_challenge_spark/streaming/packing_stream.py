@@ -52,6 +52,7 @@ from ..batchstore import (
     last_batch_id,
     maybe_consolidate_in_stream,
     read_batch_store,
+    read_store,
     run_view,
 )
 from ..operators.packing import pack_sequences_sharded
@@ -209,12 +210,12 @@ def revoke_packed_docs(
     )
     versions = _versions(odir)
     present: list[int] = []
-    if cand and versions and any(rows_dir.glob("ingest_batch=*")):
+    rows = read_store(spark, rows_dir) if cand and versions else None
+    if rows is not None:
         present = sorted(
             int(r["shard"])
             for r in (
-                read_batch_store(spark, rows_dir)
-                .filter(F.col("shard").isin(cand))
+                rows.filter(F.col("shard").isin(cand))
                 .join(F.broadcast(delta), [order_col], "left_semi")
                 .select("shard")
                 .distinct()

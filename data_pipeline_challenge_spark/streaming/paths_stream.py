@@ -31,14 +31,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    admit_batch,
     append_batch_increment,
     consolidate_stores,
-    has_rebuilt_marker,
-    last_batch_id,
-    maybe_consolidate_in_stream,
-    read_batch_store,
+    read_store,
     run_view,
-    sequential_fold_guard,
 )
 
 _K = 3
@@ -95,11 +92,8 @@ def fold_batch(
     event_type) into the prefix store: the increment is the batch's own
     per-(user, day) top-3. Idempotent via the store's last-id guard."""
     odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
     store = odir / "prefix"
-    if not sequential_fold_guard(
-        batch_id, last_batch_id(store), odir, rebuilt=has_rebuilt_marker(odir)
-    ):
+    if not admit_batch(odir, batch_id, store):
         return
     append_batch_increment(_prefix_rows(batch_df), store, batch_id)
 
@@ -110,10 +104,10 @@ def paths_report(
     """(path, n_user_days) top-``limit`` over everything folded —
     identical assembly and ordering to the batch query on the resolved
     prefix set. None before the first batch."""
-    store = Path(out_dir) / "prefix"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
+    prefix = read_store(spark, Path(out_dir) / "prefix")
+    if prefix is None:
         return None
-    ranked = _top3(read_batch_store(spark, store), keep_rank=True)
+    ranked = _top3(prefix, keep_rank=True)
     paths = ranked.groupBy("user_id", "day").agg(
         F.array_join(
             F.transform(
@@ -154,15 +148,9 @@ def start_paths_stream(
     ``available_now=True`` drains what's landed and stops."""
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(spark, odir, batch_df, batch_id)
-        maybe_consolidate_in_stream(
-            spark, _store_map(odir), batch_id, consolidate_every,
-            transforms=_transforms(odir),
-        )
-
     return run_view(
-        spark, events_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        spark, events_dir, schema, checkpoint_dir,
+        lambda df, b: fold_batch(spark, odir, df, b),
+        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
+        transforms=_transforms(odir),
     )

@@ -30,15 +30,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    admit_batch,
     append_batch_increment,
     consolidate_stores,
-    ensure_store_params,
-    has_rebuilt_marker,
-    last_batch_id,
-    maybe_consolidate_in_stream,
-    read_batch_store,
+    read_store,
     run_view,
-    sequential_fold_guard,
 )
 
 _STORES: tuple[tuple[str, list | None], ...] = (("counts", None),)
@@ -62,15 +58,11 @@ def fold_batch(
     a replayed batch is skipped by the store's last-id guard (its
     increment dir is already the committed content)."""
     odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
     params: dict = {"value_col": value_col}
     if group_cols:  # absent key keeps pre-grouped warehouses adoptable
         params["group_cols"] = list(group_cols)
-    ensure_store_params(odir, params)
     store = odir / "counts"
-    if not sequential_fold_guard(
-        batch_id, last_batch_id(store), odir, rebuilt=has_rebuilt_marker(odir)
-    ):
+    if not admit_batch(odir, batch_id, store, params=params):
         return
     from ..operators.profiling import grouped_value_histogram, value_histogram
 
@@ -95,12 +87,12 @@ def quantile_report(
     stream folds with. None before the first batch."""
     from ..operators.profiling import histogram_quantiles
 
-    store = Path(out_dir) / "counts"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
+    counts = read_store(spark, Path(out_dir) / "counts")
+    if counts is None:
         return None
     gcs = list(group_cols or ())
     return histogram_quantiles(
-        read_batch_store(spark, store).select(*gcs, "v", "n"),
+        counts.select(*gcs, "v", "n"),
         fractions,
         group_cols=gcs or None,
     )
@@ -136,14 +128,8 @@ def start_quantile_stream(
     ``available_now=True`` drains what's landed and stops."""
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(spark, odir, batch_df, batch_id, value_col, group_cols)
-        maybe_consolidate_in_stream(
-            spark, _store_map(odir), batch_id, consolidate_every
-        )
-
     return run_view(
-        spark, corpus_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        spark, corpus_dir, schema, checkpoint_dir,
+        lambda df, b: fold_batch(spark, odir, df, b, value_col, group_cols),
+        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
     )

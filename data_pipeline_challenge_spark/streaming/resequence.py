@@ -51,6 +51,7 @@ from ..batchstore import (
     last_batch_id,
     maybe_consolidate_in_stream,
     read_batch_store,
+    read_store,
     sequential_fold_guard,
 )
 
@@ -87,16 +88,13 @@ def _wm_state(
     monotone, so max over wm increments ∪ the flush sidecar is the
     current state. (None, None) before the first commit."""
     side = _sidecar_floor(wm_store.parent)
-    if not wm_store.exists() or not any(wm_store.glob("ingest_batch=*")):
+    wm = read_store(spark, wm_store)
+    if wm is None:
         return side
-    row = (
-        read_batch_store(spark, wm_store)
-        .agg(
-            F.max("max_t_us").alias("m"),
-            F.max("released_floor_us").alias("f"),
-        )
-        .collect()[0]
-    )
+    row = wm.agg(
+        F.max("max_t_us").alias("m"),
+        F.max("released_floor_us").alias("f"),
+    ).collect()[0]
     m, f = row["m"], row["f"]
     sm, sf = side
     if sm is not None:

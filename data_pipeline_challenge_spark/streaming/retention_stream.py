@@ -33,14 +33,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    admit_batch,
     append_batch_increment,
     consolidate_stores,
-    has_rebuilt_marker,
-    last_batch_id,
-    maybe_consolidate_in_stream,
-    read_batch_store,
+    read_store,
     run_view,
-    sequential_fold_guard,
 )
 
 def _act_set(batch_df: DataFrame) -> DataFrame:
@@ -79,11 +76,8 @@ def fold_batch(
     """Fold ONE micro-batch of events (needs user_id, ts) into the
     activity-set store. Idempotent via the store's last-id guard."""
     odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
     store = odir / "act"
-    if not sequential_fold_guard(
-        batch_id, last_batch_id(store), odir, rebuilt=has_rebuilt_marker(odir)
-    ):
+    if not admit_batch(odir, batch_id, store):
         return
     append_batch_increment(_act_set(batch_df), store, batch_id)
 
@@ -100,10 +94,10 @@ def retention_report(
     composes: day-granular activity coarsens to the same week ids the
     batch query derives from raw timestamps, and DISTINCT survives the
     coarsening). None before the first batch."""
-    store = Path(out_dir) / "act"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
+    act = read_store(spark, Path(out_dir) / "act")
+    if act is None:
         return None
-    act = _distinct_rows(read_batch_store(spark, store))
+    act = _distinct_rows(act)
     if days_per_bucket != 1:
         d = int(days_per_bucket)
         act = act.select(
@@ -145,15 +139,9 @@ def start_retention_stream(
     ``available_now=True`` drains what's landed and stops."""
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(spark, odir, batch_df, batch_id)
-        maybe_consolidate_in_stream(
-            spark, _store_map(odir), batch_id, consolidate_every,
-            transforms=_transforms(odir),
-        )
-
     return run_view(
-        spark, events_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        spark, events_dir, schema, checkpoint_dir,
+        lambda df, b: fold_batch(spark, odir, df, b),
+        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
+        transforms=_transforms(odir),
     )

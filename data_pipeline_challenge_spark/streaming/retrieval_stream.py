@@ -44,8 +44,6 @@ without rewriting the totals files' pure-replay discipline.
 
 from __future__ import annotations
 
-import json
-import os
 from pathlib import Path
 
 import pyspark.sql.functions as F
@@ -58,16 +56,17 @@ from ..batchstore import (
     ensure_store_params,
     has_rebuilt_marker,
     last_batch_id,
-    maybe_consolidate_in_stream,
+    latest_commit_file,
     prefix_bucket,
     prefix_bucket_local,
     read_batch_store,
+    read_store,
     run_view,
     sequential_fold_guard,
+    write_commit_file,
 )
 
 _N_BUCKETS = 64
-_TOTALS_KEEP = 64
 _K1 = 1.2
 _B = 0.75
 
@@ -100,23 +99,7 @@ def _totals_path(odir: Path, batch_id: int) -> Path:
 
 
 def _latest_totals(odir: Path, before: int | None = None) -> tuple[dict, int]:
-    d = odir / "totals"
-    best, best_id = {"n_docs": 0, "sum_dl": 0}, -1
-    if not d.exists():
-        return best, best_id
-    for p in d.glob("b*.json"):
-        sid = p.name[1:-5]
-        if not sid.isdigit():
-            continue
-        bid = int(sid)
-        if before is not None and bid >= before:
-            continue
-        if bid > best_id:
-            try:
-                best, best_id = json.loads(p.read_text()), bid
-            except (OSError, ValueError):
-                continue
-    return best, best_id
+    return latest_commit_file(odir / "totals", {"n_docs": 0, "sum_dl": 0}, before)
 
 
 def fold_batch(
@@ -224,15 +207,7 @@ def fold_batch(
             "n_len_docs": int(prev.get("n_len_docs", 0)) + int(batch_stats["nd"]),
             "sum_dl": int(prev.get("sum_dl", 0)) + int(batch_stats["sdl"]),
         }
-        (odir / "totals").mkdir(parents=True, exist_ok=True)
-        final = _totals_path(odir, batch_id)
-        tmp = final.parent / f".{final.name}.tmp"
-        tmp.write_text(json.dumps(rec, sort_keys=True))
-        os.replace(tmp, final)
-        for stale in (odir / "totals").glob("b*.json"):
-            sid = stale.name[1:-5]
-            if sid.isdigit() and int(sid) < batch_id - _TOTALS_KEEP:
-                stale.unlink(missing_ok=True)
+        write_commit_file(odir / "totals", batch_id, rec)
     finally:
         doclen.unpersist()
 
@@ -276,9 +251,9 @@ def revoke_docs(spark: SparkSession, out_dir: str | Path, doc_ids: DataFrame) ->
         return 0
     ids = doc_ids.select(F.col(doc_ids.columns[0]).alias("doc_id")).distinct()
     rev_store = odir / "revoked"
-    if rev_store.exists() and any(rev_store.glob("ingest_batch=*")):
-        already = read_batch_store(spark, rev_store).select("doc_id")
-        ids = ids.join(F.broadcast(already), "doc_id", "left_anti")
+    already = read_store(spark, rev_store)
+    if already is not None:
+        ids = ids.join(F.broadcast(already.select("doc_id")), "doc_id", "left_anti")
     new = read_batch_store(spark, doclen_store).join(
         F.broadcast(ids), "doc_id", "left_semi"
     ).select("doc_id", "dl")
@@ -289,10 +264,8 @@ def revoke_docs(spark: SparkSession, out_dir: str | Path, doc_ids: DataFrame) ->
 
 
 def _revoked_view(spark: SparkSession, odir: Path) -> DataFrame | None:
-    rev_store = odir / "revoked"
-    if not rev_store.exists() or not any(rev_store.glob("ingest_batch=*")):
-        return None
-    return read_batch_store(spark, rev_store).select("doc_id", "dl")
+    revoked = read_store(spark, odir / "revoked")
+    return None if revoked is None else revoked.select("doc_id", "dl")
 
 
 def _effective_totals(spark: SparkSession, odir: Path):
@@ -531,17 +504,11 @@ def start_retrieval_index_stream(
     """Stream corpus parquet batches into the maintained index."""
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(spark, odir, batch_df, batch_id, id_col, text_col)
-        maybe_consolidate_in_stream(
-            spark, _store_map(odir), batch_id, consolidate_every,
-            unbounded=_unbounded_stores(odir),
-        )
-
     return run_view(
-        spark, corpus_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        spark, corpus_dir, schema, checkpoint_dir,
+        lambda df, b: fold_batch(spark, odir, df, b, id_col, text_col),
+        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
+        unbounded=_unbounded_stores(odir),
     )
 
 

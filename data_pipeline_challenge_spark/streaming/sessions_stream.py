@@ -48,14 +48,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    admit_batch,
     append_batch_increment,
     consolidate_stores,
-    has_rebuilt_marker,
-    last_batch_id,
-    maybe_consolidate_in_stream,
-    read_batch_store,
+    read_store,
     run_view,
-    sequential_fold_guard,
 )
 from ..operators.sessions import (
     GAP_US,
@@ -112,11 +109,8 @@ def fold_batch(
     testdata; the convention every maintained money-sum store shares)
     and can diverge for off-grid doubles."""
     odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
     store = odir / "sessions"
-    if not sequential_fold_guard(
-        batch_id, last_batch_id(store), odir, rebuilt=has_rebuilt_marker(odir)
-    ):
+    if not admit_batch(odir, batch_id, store):
         return
     append_batch_increment(_batch_intervals(batch_df), store, batch_id)
 
@@ -128,12 +122,10 @@ def sessions_report(spark: SparkSession, out_dir: str | Path) -> DataFrame | Non
     first event, end = last event + gap in floor seconds, sum =
     cents/100 == round(sum(value), 2) on the 2dp grid). None before
     the first batch."""
-    store = Path(out_dir) / "sessions"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
+    sessions = read_store(spark, Path(out_dir) / "sessions")
+    if sessions is None:
         return None
-    merged = _merge_intervals(
-        read_batch_store(spark, store).drop("ingest_batch")
-    )
+    merged = _merge_intervals(sessions.drop("ingest_batch"))
     return merged.select(
         "user_id",
         F.expr("(first_us - pmod(first_us, 1000000)) div 1000000").alias(
@@ -190,15 +182,9 @@ def start_sessions_stream(
     ``available_now=True`` drains what's landed and stops."""
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(spark, odir, batch_df, batch_id)
-        maybe_consolidate_in_stream(
-            spark, _store_map(odir), batch_id, consolidate_every,
-            transforms=_transforms(odir),
-        )
-
     return run_view(
-        spark, events_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        spark, events_dir, schema, checkpoint_dir,
+        lambda df, b: fold_batch(spark, odir, df, b),
+        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
+        transforms=_transforms(odir),
     )

@@ -46,14 +46,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    admit_batch,
     append_batch_increment,
     consolidate_stores,
-    has_rebuilt_marker,
     last_batch_id,
-    maybe_consolidate_in_stream,
-    read_batch_store,
+    read_store,
     run_view,
-    sequential_fold_guard,
 )
 
 _STORES: tuple[tuple[str, list | None], ...] = (("pairs", None), ("frontier", None))
@@ -68,15 +66,14 @@ def _current_frontier(spark: SparkSession, odir: Path) -> DataFrame | None:
     EVENT ordering key (t_us, event_id) — not the ingest_batch column,
     which in-stream consolidation collapses (rows folded into one
     consolidated partition would tie on it and resolve arbitrarily)."""
-    store = odir / "frontier"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
+    frontier = read_store(spark, odir / "frontier")
+    if frontier is None:
         return None
     w = Window.partitionBy("user_id").orderBy(
         F.col("t_us").desc(), F.col("event_id").desc()
     )
     return (
-        read_batch_store(spark, store)
-        .withColumn("_rn", F.row_number().over(w))
+        frontier.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn", "ingest_batch")
     )
@@ -98,16 +95,9 @@ def fold_batch(
     non-contiguous (the resequencer's own arrival-id guard protects
     the store transitively)."""
     odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
     pairs_store = odir / "pairs"
     frontier_store = odir / "frontier"
-    if not sequential_fold_guard(
-        batch_id,
-        min(last_batch_id(pairs_store), last_batch_id(frontier_store)),
-        odir,
-        rebuilt=has_rebuilt_marker(odir),
-        strict=sequential,
-    ):
+    if not admit_batch(odir, batch_id, pairs_store, frontier_store, strict=sequential):
         return
 
     from ..catalog import ntz_epoch_us
@@ -174,14 +164,10 @@ def transition_report(
     and arithmetic to the batch query (counts summed across increments,
     probability one rounded division against broadcast totals). None
     before the first batch."""
-    store = Path(out_dir) / "pairs"
-    if not store.exists() or not any(store.glob("ingest_batch=*")):
+    pairs = read_store(spark, Path(out_dir) / "pairs")
+    if pairs is None:
         return None
-    pairs = (
-        read_batch_store(spark, store)
-        .groupBy("cur", "nxt")
-        .agg(F.sum("n").alias("n"))
-    )
+    pairs = pairs.groupBy("cur", "nxt").agg(F.sum("n").alias("n"))
     totals = pairs.groupBy("cur").agg(F.sum("n").alias("n_cur"))
     return pairs.join(F.broadcast(totals), "cur").select(
         "cur",
@@ -239,17 +225,11 @@ def start_transition_stream(
     ``available_now=True`` drains what's landed and stops."""
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(spark, odir, batch_df, batch_id)
-        maybe_consolidate_in_stream(
-            spark, _store_map(odir), batch_id, consolidate_every,
-            transforms=_transforms(odir),
-        )
-
     return run_view(
-        spark, events_dir, schema, checkpoint_dir, process_batch,
-        max_files_per_trigger, available_now,
+        spark, events_dir, schema, checkpoint_dir,
+        lambda df, b: fold_batch(spark, odir, df, b),
+        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
+        transforms=_transforms(odir),
     )
 
 

@@ -142,6 +142,77 @@ def test_dedup_stream_consolidates_mid_stream(spark, tmp_path):
     assert kept("cons") == [1, 2, 4, 5, 7, 9, 11]
 
 
+def test_filter_gate_stream_consolidates_mid_stream(spark, tmp_path):
+    """``start_filter_gate_stream`` with ``consolidate_every=2``: three
+    one-file micro-batches (the hook first fires at batch 2, folding
+    batches 0-1) admit and reject exactly what ``fold_batch`` does over
+    the same batches, the runner's in-stream fold leaves each store at
+    most two live dirs (the consolidated one and batch 2's increment),
+    and offline compaction then brings each store to at most one."""
+    import json
+
+    import pyspark.sql.functions as F
+
+    from data_pipeline_challenge_spark.streaming.filter_gate_stream import (
+        compact_filter_gate_store,
+        current_admitted_docs,
+        fold_batch,
+        rejected_log,
+        start_filter_gate_stream,
+    )
+
+    corpus_dir = tmp_path / "corpus_in"
+    corpus_dir.mkdir()
+    land = _doc_lander(corpus_dir)
+    SCHEMA = "doc_id long, text string"
+    files = [
+        [(1, "spark shuffles hash partitioned data nicely"), (2, "too short")],
+        [(3, "tiny"), (4, "parquet row groups carry min max statistics")],
+        [(5, "broadcast joins avoid shuffling the fact side"), (6, "short one")],
+    ]
+    for i, rows in enumerate(files):
+        land(f"f{i}.parquet", rows)
+    keep = F.size(F.split(F.col("text"), " ")) >= 5
+
+    out = tmp_path / "gate"
+    q = start_filter_gate_stream(
+        spark, corpus_dir, out, tmp_path / "ck", SCHEMA, keep,
+        max_files_per_trigger=1, consolidate_every=2,
+    )
+    q.awaitTermination(180)
+
+    direct = tmp_path / "direct"
+    for b, rows in enumerate(files):
+        fold_batch(spark, direct, spark.createDataFrame(rows, SCHEMA), b, keep)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(current_admitted_docs(spark, out)) == rows(
+        current_admitted_docs(spark, direct)
+    )
+    assert rows(rejected_log(spark, out)) == rows(rejected_log(spark, direct))
+    assert [r[0] for r in rows(current_admitted_docs(spark, out))] == [1, 4, 5]
+
+    def live(store):
+        m = json.loads((store / "_consolidated.json").read_text())
+        return [
+            d for d in _batch_dirs(store)
+            if d == m["consolidated"] or d > m["through"]
+        ]
+
+    for name in ("docs", "rejected"):
+        assert live(out / name) == [-1, 2], name
+    admitted, rejected = rows(current_admitted_docs(spark, out)), rows(
+        rejected_log(spark, out)
+    )
+    compact_filter_gate_store(spark, out)
+    for name in ("docs", "rejected"):
+        assert len(live(out / name)) <= 1, name
+    assert rows(current_admitted_docs(spark, out)) == admitted
+    assert rows(rejected_log(spark, out)) == rejected
+
+
 def test_corpus_pipeline_consolidates_mid_stream(spark, tmp_path):
     """The composed four-gate funnel with ``consolidate_every=2`` drains
     to the same corpus as the non-consolidating twin; every stage's

@@ -6,6 +6,9 @@
 - One runner and one store loop: a Spark-free AST guard that keeps the
   stream plumbing in ``batchstore.run_view`` and the per-store fold in
   ``batchstore.consolidate_stores``.
+- One fold protocol: the same guard pins the admission check, the
+  in-stream consolidation hook and the store-data probe to their few
+  remaining call sites outside ``batchstore``.
 """
 
 from __future__ import annotations
@@ -244,6 +247,18 @@ def test_offline_compaction_keeps_reports(spark, tmp_path, view):
         assert len(_live_dirs(store)) <= 1, (store, _live_dirs(store))
 
 
+def _calls(name):
+    """AST predicate: a call of ``name`` (bare or as an attribute)."""
+
+    def pred(n):
+        if not isinstance(n, ast.Call):
+            return False
+        f = n.func
+        return (f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)) == name
+
+    return pred
+
+
 def _enclosing_sites(pred) -> list[str]:
     """``module:function`` of every AST node matching ``pred`` across the
     package (``module:<module>`` at top level)."""
@@ -266,8 +281,10 @@ def _enclosing_sites(pred) -> list[str]:
 
 def test_one_stream_runner_and_one_store_loop():
     """Stream plumbing lives in ``batchstore.run_view`` (plus the
-    binaryFile ingest source), and only ``batchstore.consolidate_stores``
-    calls ``consolidate_batch_store`` — no view grows its own copy."""
+    binaryFile ingest source), only ``batchstore.consolidate_stores``
+    calls ``consolidate_batch_store``, and the fold protocol's admission
+    check, in-stream hook and store-data probe keep to their few pinned
+    sites — no view grows its own copy."""
     write_stream = _enclosing_sites(
         lambda n: isinstance(n, ast.Attribute) and n.attr == "writeStream"
     )
@@ -276,13 +293,43 @@ def test_one_stream_runner_and_one_store_loop():
         "streaming/ingest_stream.py:start_ingest_stream",
     ]
 
-    def calls_consolidate(n):
-        if not isinstance(n, ast.Call):
-            return False
-        f = n.func
-        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-        return name == "consolidate_batch_store"
-
-    assert _enclosing_sites(calls_consolidate) == [
+    assert _enclosing_sites(_calls("consolidate_batch_store")) == [
         "batchstore.py:consolidate_stores"
+    ]
+
+    # The per-batch fold protocol: folds admit a batch through
+    # ``admit_batch`` (only views whose commit id is not a store's last
+    # batch id call the guard themselves), ``run_view`` runs the
+    # in-stream hook (only views that consolidate inside their own fold
+    # call it), and stores are read through ``read_store`` (only loops
+    # over the batch dirs themselves glob them).
+    assert _enclosing_sites(_calls("sequential_fold_guard")) == [
+        "batchstore.py:admit_batch",
+        "streaming/heavy_stream.py:fold_batch",
+        "streaming/resequence.py:reseq_fold",
+        "streaming/retrieval_stream.py:fold_batch",
+        "streaming/rollup_stream.py:start_rollup_stream",
+    ]
+    assert _enclosing_sites(_calls("maybe_consolidate_in_stream")) == [
+        "batchstore.py:run_view",
+        "streaming/corpus_pipeline_stream.py:start_corpus_pipeline_stream",
+        "streaming/group_texts_stream.py:start_group_texts_stream",
+        "streaming/index_stream.py:start_index_stream",
+        "streaming/packing_stream.py:start_packing_stream",
+        "streaming/resequence.py:consolidate_resequenced",
+        "streaming/resequence.py:consolidate_resequenced",
+    ]
+
+    def globs_batch_dirs(n):
+        return (
+            _calls("glob")(n)
+            and bool(n.args)
+            and isinstance(n.args[0], ast.Constant)
+            and n.args[0].value == "ingest_batch=*"
+        )
+
+    assert _enclosing_sites(globs_batch_dirs) == [
+        "batchstore.py:has_data",
+        "streaming/corpus_pipeline_stream.py:pipeline_report",
+        "streaming/packing_stream.py:migrate_legacy_layout",
     ]

@@ -12,8 +12,8 @@ alternate within ONE session and the whole per-run series is written to
 a committed JSON artifact the judge can audit):
 
     python tools/microbench.py --ab pagerank_iter_fuse \\
-        --arm-a tools.ab_arms_r19:pagerank_old \\
-        --arm-b tools.ab_arms_r19:pagerank_new \\
+        --arm-a tools.ab_arms_r19:pagerank_r18 \\
+        --arm-b tools.ab_arms_r19:pagerank_cur \\
         --runs 6 --out plans/r19/ab/pagerank_iter_fuse.json
 
 Each arm is a dotted ``module:callable`` taking (spark, sf_dir) and
