@@ -76,7 +76,7 @@ def training_export_manifest(
         current_packed,
         current_revoked_keys,
     )
-    from .streaming.rollup_stream import _last_folded, _prev_read_target
+    from .versioning import stream_table
 
     out: dict = {"kind": "training_export_manifest", "version": 1}
 
@@ -113,12 +113,13 @@ def training_export_manifest(
 
     if packed_dir is not None:
         pdir = Path(packed_dir)
-        target = _prev_read_target(pdir)
+        table = stream_table(pdir)
+        target = table.read_target()
         packed = current_packed(spark, pdir)
         rev = current_revoked_keys(spark, pdir)
         out["packed"] = {
             "published_version": target.name if target is not None else None,
-            "folded_batch": _last_folded(pdir),
+            "folded_batch": table.last_folded(),
             "revocations_applied": _revocations_ledger(pdir),
             "revoked_keys": 0 if rev is None else rev.distinct().count(),
             "table_fingerprint": _content_fingerprint(
@@ -130,12 +131,13 @@ def training_export_manifest(
         from .streaming.group_texts_stream import current_blocks
 
         bdir = Path(blocks_dir)
-        target = _prev_read_target(bdir)
+        table = stream_table(bdir)
+        target = table.read_target()
         blocks = current_blocks(spark, bdir)
         brev = current_revoked_keys(spark, bdir)
         out["blocks"] = {
             "published_version": target.name if target is not None else None,
-            "folded_batch": _last_folded(bdir),
+            "folded_batch": table.last_folded(),
             "revocations_applied": _revocations_ledger(bdir),
             "revoked_keys": 0 if brev is None else brev.distinct().count(),
             # fingerprints the ASSIGNMENT MAP (shard/block/doc/offsets):

@@ -28,7 +28,6 @@ Two forms:
 
 from __future__ import annotations
 
-import os
 import re
 import shutil
 from dataclasses import dataclass
@@ -36,7 +35,7 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-from ..versioning import retire_versions, swap_symlink
+from ..versioning import FOLDED_MARKER, VersionedTable
 
 
 @dataclass
@@ -167,23 +166,16 @@ def compact_published_table(
     stopped. Readers need none.
     """
     link = Path(symlink_path)
-    if not link.is_symlink():
+    cur = VersionedTable(link).read_target() if link.is_symlink() else None
+    if cur is None:
         raise ValueError(
             f"{link} is not a published-table symlink; for a plain parquet "
             "dir use compact_parquet_dir (offline)"
         )
-    cur = link.parent / os.readlink(link)
     m = re.match(r"^(?P<prefix>.+)\.v(?P<n>\d+)$", cur.name)
     if not m:
         raise ValueError(f"current version {cur.name!r} is not a .v{{N}} dir")
-    prefix, cur_n = m.group("prefix"), int(m.group("n"))
-    parent = cur.parent
-    vpat = re.compile(re.escape(prefix) + r"\.v(\d+)$")
-    versions = sorted(
-        (int(vm.group(1)), p)
-        for p in parent.iterdir()
-        if (vm := vpat.match(p.name))
-    )
+    table = VersionedTable(link, prefix=m.group("prefix"))
 
     if partition_by is None:
         # Preserve the current version's partition layout unless the
@@ -203,38 +195,19 @@ def compact_published_table(
     df = spark.read.parquet(str(cur))
     out = _compaction_layout(df, n_out, sort_col, zorder_by)
 
-    next_n = versions[-1][0] + 1
-    tmp = parent / f"{prefix}.v{next_n}.tmp"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(str(tmp))
-    rows = spark.read.parquet(str(tmp)).count()
-    marker = cur / "_folded_batch"
-    (tmp / "_folded_batch").write_text(
-        marker.read_text() if marker.exists() else str(cur_n)
-    )
-    final = parent / f"{prefix}.v{next_n}"
-    if final.exists():
-        shutil.rmtree(final)
-    tmp.rename(final)
+    def write(tmp: Path) -> None:
+        writer = out.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(str(tmp))
+        marker = cur / FOLDED_MARKER
+        (tmp / FOLDED_MARKER).write_text(
+            marker.read_text() if marker.exists() else m.group("n")
+        )
 
-    swap_symlink(link, final.name)  # readers see old xor new version
-
-    # Retention keeps exactly {new version, the version readers were
-    # pinned to before this publish} — see versioning.retire_versions for
-    # why ranking "newest complete" instead would delete the just-retired
-    # live dir when a complete-but-unpublished crash remnant exists.
-    retire_versions(
-        (
-            p
-            for p in parent.iterdir()
-            if vpat.match(p.name)
-        ),
-        keep=(final, cur),
-    )
-
+    # The new version's retention keeps {it, cur}: cur is what readers
+    # were pinned to before this publish.
+    final = table.publish(write)
+    rows = spark.read.parquet(str(final)).count()
     after = len([p for p in final.rglob("*.parquet") if p.is_file()])
     return CompactionReport(len(parts), after, total, rows)

@@ -56,7 +56,7 @@ from .sources.json_ingest import (
 )
 from .sources.landing import discover_new_files, gc_file
 from .sources.ledger import LedgerStore
-from .versioning import retire_versions, swap_symlink
+from .versioning import COMPLETE, VersionedTable
 
 
 @dataclass
@@ -81,6 +81,7 @@ class ProductWarehouse:
         self.spark = spark
         self.dir = Path(warehouse_dir)
         self.products_path = self.dir / "products"
+        self._table = VersionedTable(self.products_path, COMPLETE)
         self.ledger = LedgerStore(spark, self.dir)
         # Splittable-parse knobs (tests shrink them to exercise chunking).
         self.split_threshold_bytes = SPLIT_THRESHOLD_BYTES
@@ -114,37 +115,18 @@ class ProductWarehouse:
     # -- products table ------------------------------------------------------
 
     def _product_versions(self) -> list[Path]:
-        """Versioned table dirs ``products.v{N}``, sorted by N."""
-        import re
-
-        pat = re.compile(r"^products\.v(\d+)$")
-        if not self.dir.exists():
-            return []
-        found = [
-            (int(m.group(1)), p)
-            for p in self.dir.iterdir()
-            if (m := pat.match(p.name))
-        ]
-        return [p for _, p in sorted(found)]
+        return self._table.versions()
 
     def _resolve_products_dir(self) -> Path | None:
         """The directory ``products()`` reads — resolved ONCE so the scan
         is pinned: the symlink target, a legacy real directory
         (pre-versioning warehouse), or the newest COMPLETE version dir
         (crash between write and publish). Completeness = ``_SUCCESS``: a
-        half-written crash remnant is indistinguishable from a
-        written-but-unpublished version by name alone, and trusting it
-        would propagate a torn table into the next merge — better absent
-        (the ledger/event log makes re-ingest self-healing)."""
-        p = self.products_path
-        if p.is_symlink():
-            target = p.parent / os.readlink(p)
-            if target.exists():
-                return target
-        elif p.exists() and any(p.iterdir()):
-            return p
-        versions = self._complete_product_versions()
-        return versions[-1] if versions else None
+        version dir that older code wrote in place may be a torn crash
+        remnant, and trusting it would propagate a torn table into the
+        next merge — better absent (the ledger/event log makes re-ingest
+        self-healing)."""
+        return self._table.read_target()
 
     def _delta_dirs(self, base: Path) -> list[Path]:
         """COMMITTED merge-on-read delta dirs of a versioned base, in
@@ -221,18 +203,9 @@ class ProductWarehouse:
         folded = merge_products(hit, stacked, seq_col="__dgen")
         return miss.unionByName(folded)
 
-    def _complete_product_versions(self) -> list[Path]:
-        """Version dirs safe to fall back on: only those whose write
-        finished (``_SUCCESS`` present)."""
-        return [v for v in self._product_versions() if (v / "_SUCCESS").exists()]
-
     def _has_products(self) -> bool:
         p = self.products_path
-        if p.is_symlink():
-            return True
-        if p.exists() and any(p.iterdir()):
-            return True
-        return bool(self._complete_product_versions())
+        return p.is_symlink() or self._resolve_products_dir() is not None
 
     def _table_bytes(self) -> int:
         """Parquet bytes of the published products table + live deltas
@@ -255,10 +228,11 @@ class ProductWarehouse:
         n_files: int | None = None,
         extra_bytes: int = 0,
     ) -> None:
-        """Write a new version dir + atomic symlink publish (readers never
-        see a half-written table, and a reader mid-scan on the previous
-        version survives: only versions two publishes old are deleted —
-        the discipline sources/ledger.py and the streaming sinks use).
+        """Publish ``df`` as the next products version
+        (``VersionedTable.publish``: tmp write, rename, atomic symlink
+        swap, {new, previously-read} retention — readers never see a
+        half-written table, and a reader mid-scan on the previous version
+        survives).
 
         Layout: range-partitioned + sorted by code, so every parquet file
         owns a disjoint code range — point lookups (op 15) prune to one
@@ -276,73 +250,36 @@ class ProductWarehouse:
         skips the range sampler (and the cache that existed only to keep
         the sampler from computing the merge twice): one action, one
         sorted file — the same disjoint-range layout."""
-        versions = self._product_versions()
-        next_n = (
-            int(versions[-1].name.rsplit(".v", 1)[1]) + 1 if versions else 1
-        )
-        new_dir = self.dir / f"products.v{next_n}"
-        if new_dir.exists():
-            shutil.rmtree(new_dir)
         nparts = n_files or max(
             1, -(-(self._table_bytes() + extra_bytes) // (128 << 20))
         )
-        if nparts == 1:
-            (
-                df.coalesce(1)
-                .sortWithinPartitions("code")
-                .write.mode("overwrite")
-                .parquet(str(new_dir))
-            )
-        else:
+
+        def write(tmp: Path) -> None:
+            if nparts == 1:
+                (
+                    df.coalesce(1)
+                    .sortWithinPartitions("code")
+                    .write.mode("overwrite")
+                    .parquet(str(tmp))
+                )
+                return
             # repartitionByRange runs a separate range-sampling job first;
             # cache the merge result so sampling + write don't compute it
             # twice.
-            df = df.cache()
+            cached = df.cache()
             try:
                 (
-                    df.repartitionByRange(nparts, "code")
+                    cached.repartitionByRange(nparts, "code")
                     .sortWithinPartitions("code")
                     .write.mode("overwrite")
-                    .parquet(str(new_dir))
+                    .parquet(str(tmp))
                 )
             finally:
-                df.unpersist()
+                cached.unpersist()
 
-        state = self.products_path
-        # What readers could be pinned to before this publish: the
-        # symlink target, or — symlink-less crash window — the newest
-        # complete version the products() fallback ranks first.
-        prev_read = None
-        if state.is_symlink():
-            target = state.parent / os.readlink(state)
-            if target.exists():
-                prev_read = target
-        else:
-            complete_before = [
-                v for v in self._complete_product_versions() if v != new_dir
-            ]
-            if complete_before:
-                prev_read = complete_before[-1]
-        if state.exists() and not state.is_symlink():
-            # Pre-versioning warehouse: retire the real directory. The
-            # brief gap before the publish below is covered by the
-            # newest-version fallback in products().
-            legacy = self.dir / "products.legacy"
-            if legacy.exists():
-                shutil.rmtree(legacy)
-            state.rename(legacy)
-        swap_symlink(state, new_dir.name)  # readers see old xor new
-
-        # Retain exactly {new, previously-read}: a crash remnant —
-        # torn OR complete-but-unpublished — must not displace the
-        # just-retired live version from retention while a pinned reader
-        # is still scanning it (see versioning.retire_versions). Writers
-        # hold the products flock, so nothing else is in-flight.
-        retire_versions(self._product_versions(), keep=(new_dir, prev_read))
+        # Writers hold the products flock, so nothing else is in-flight.
+        self._table.publish(write)
         self._sweep_orphan_deltas()
-        legacy = self.dir / "products.legacy"
-        if legacy.exists():
-            shutil.rmtree(legacy, ignore_errors=True)
 
     def _sweep_orphan_deltas(self) -> None:
         """Merge-on-read delta dirs (and their crashed tmps) live and die

@@ -60,9 +60,7 @@ on one partition inside the state write's job, with no shuffle
 from __future__ import annotations
 
 import datetime as dt
-import os
-import re
-import shutil
+import json
 import threading
 from pathlib import Path
 
@@ -70,7 +68,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..session import local_frame
-from ..versioning import retire_versions, swap_symlink
+from ..versioning import COMPLETE, VersionedTable
 from ..schema import (
     LEDGER_SCHEMA,
     STATUS_FAILED,
@@ -95,6 +93,10 @@ class LedgerStore:
         self.path = str(Path(warehouse_dir) / "ledger")
         self.state_path = str(Path(warehouse_dir) / "ledger_state")
         self.hist_path = str(Path(warehouse_dir) / "ledger_hist")
+        # No version fallback for the state: a symlink-less warehouse
+        # replays the event log instead.
+        self._state = VersionedTable(self.state_path)
+        self._hist = VersionedTable(self.hist_path, COMPLETE)
         # In-process append serialization: the API's upload thread and the
         # background processor share one store, and the compaction's
         # read-merge-publish is not safe to interleave. Cross-process
@@ -117,17 +119,7 @@ class LedgerStore:
         nothing. A complete-but-unpublished hist double-counts its events
         with the still-intact tail — harmless, the winner rule is
         idempotent."""
-        p = Path(self.hist_path)
-        if p.is_symlink():
-            target = p.parent / os.readlink(p)
-            if target.exists():
-                return target
-        versions = [
-            v
-            for v in self._versions(self.hist_path)
-            if (v / "_SUCCESS").exists()
-        ]
-        return versions[-1] if versions else None
+        return self._hist.read_target()
 
     def exists(self) -> bool:
         return bool(self._tail_files()) or self._hist_dir() is not None
@@ -270,33 +262,17 @@ class LedgerStore:
         )
 
     def _versions(self, base: str | None = None) -> list[Path]:
-        base = base or self.state_path
-        pat = re.compile(re.escape(Path(base).name) + r"\.v(\d+)$")
-        parent = Path(base).parent
-        if not parent.exists():
-            return []
-        found = [
-            (int(m.group(1)), p)
-            for p in parent.iterdir()
-            if (m := pat.match(p.name))
-        ]
-        return [p for _, p in sorted(found)]
+        return VersionedTable(base or self.state_path).versions()
 
     _TAIL_MARKER = "_tail_files.json"
 
     def _state_target(self) -> Path | None:
-        state = Path(self.state_path)
-        if state.is_symlink():
-            target = state.parent / os.readlink(state)
-            return target if target.exists() else None
-        return state if state.exists() else None
+        return self._state.read_target()
 
     def _recorded_tail_names(self) -> set[str] | None:
         """Tail parquet file names the published state reflects (from the
         ``_tail_files.json`` marker written into the state version at
         publish), or None when unknown (legacy/pre-marker state)."""
-        import json
-
         target = self._state_target()
         if target is None:
             return None
@@ -355,35 +331,17 @@ class LedgerStore:
         else:
             winners = self._latest_per_file(self.read_events())
 
-        # What readers could be pinned to, captured BEFORE the new dir
-        # exists: in the no-symlink crash window _hist_dir() falls back
-        # to the newest complete version, and capturing it after the
-        # write would resolve to the new dir itself — retention would
-        # then delete the version fallback readers are actually on.
-        prev_hist = self._hist_dir()
-        versions = self._versions(self.hist_path)
-        next_n = (
-            int(versions[-1].name.rsplit(".v", 1)[1]) + 1 if versions else 1
-        )
-        new_dir = Path(f"{self.hist_path}.v{next_n}")
-        if new_dir.exists():
-            shutil.rmtree(new_dir)
-        (
-            winners.coalesce(1)
-            .sortWithinPartitions("file_id")
-            .write.mode("overwrite")
-            .parquet(str(new_dir))
-        )
+        def write(tmp: Path) -> None:
+            (
+                winners.coalesce(1)
+                .sortWithinPartitions("file_id")
+                .write.mode("overwrite")
+                .parquet(str(tmp))
+            )
 
-        hist = Path(self.hist_path)
-        swap_symlink(hist, new_dir.name)  # readers see old xor new history
-
+        self._hist.publish(write)
         for f in tail:
             f.unlink(missing_ok=True)
-        # Keep {new, previously-read}; a complete-but-unpublished crash
-        # remnant must not displace the just-retired live version from
-        # retention (see versioning.retire_versions).
-        retire_versions(self._versions(self.hist_path), keep=(new_dir, prev_hist))
 
     def _fold_input_bytes(self, from_state: bool) -> int:
         """Parquet bytes the state fold reads (driver-side stat, no Spark
@@ -443,56 +401,21 @@ class LedgerStore:
         it as the next version by an atomic symlink replace; see the module
         docstring. Costs one Spark job while the state is one file."""
         shaped = self._fold(new_events, seed_from_log)
-        versions = self._versions()
-        next_n = (
-            int(versions[-1].name.rsplit(".v", 1)[1]) + 1 if versions else 1
-        )
-        new_dir = Path(f"{self.state_path}.v{next_n}")
-        if new_dir.exists():
-            shutil.rmtree(new_dir)
-        (
-            shaped.sortWithinPartitions("file_id")
-            .write.mode("overwrite")
-            .parquet(str(new_dir))
-        )
-        # Record which tail files this state reflects (everything live:
-        # either the previous state covered them all — seed_from_log was
-        # False — or we just replayed the full log). Written into the
-        # version dir BEFORE the symlink publish, so the marker is
-        # atomic with the state it describes.
-        import json as _json
 
-        (new_dir / self._TAIL_MARKER).write_text(
-            _json.dumps(sorted(f.name for f in self._tail_files()))
-        )
+        def write(tmp: Path) -> None:
+            shaped.sortWithinPartitions("file_id").write.mode("overwrite").parquet(
+                str(tmp)
+            )
+            # Record which tail files this state reflects (everything
+            # live: either the previous state covered them all —
+            # seed_from_log was False — or we just replayed the full log).
+            # Written before the rename, so the marker is atomic with the
+            # state it describes.
+            (tmp / self._TAIL_MARKER).write_text(
+                json.dumps(sorted(f.name for f in self._tail_files()))
+            )
 
-        state = Path(self.state_path)
-        prev_state = None  # what readers could be pinned to pre-publish
-        if state.is_symlink():
-            target = state.parent / os.readlink(state)
-            if target.exists():
-                prev_state = target
-        elif state.exists():
-            # Pre-symlink warehouse: retire the real directory. The brief
-            # gap before the publish below is covered by the event-log
-            # fallback in current()/_compact().
-            legacy = Path(self.state_path + ".legacy")
-            if legacy.exists():
-                shutil.rmtree(legacy)
-            state.rename(legacy)
-        swap_symlink(state, new_dir.name)  # readers see old xor new version
-
-        # Retain exactly {new, previously-published}: a reader that
-        # resolved the symlink just before the repoint may still be
-        # scanning the old directory, and a complete-but-unpublished
-        # crash remnant must not displace it from retention (see
-        # versioning.retire_versions; ledger state has no version-dir
-        # fallback reader — a symlink-less warehouse replays the event
-        # log — so the symlink target is the only pinnable dir).
-        retire_versions(self._versions(), keep=(new_dir, prev_state))
-        legacy = Path(self.state_path + ".legacy")
-        if legacy.exists():
-            shutil.rmtree(legacy, ignore_errors=True)
+        self._state.publish(write)
 
     def current(self) -> DataFrame:
         """Latest event per file_id — the queryable ledger state

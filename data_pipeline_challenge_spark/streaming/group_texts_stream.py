@@ -40,7 +40,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 from pathlib import Path
 
 import pyspark.sql.functions as F
@@ -56,21 +55,12 @@ from ..batchstore import (
     run_view,
 )
 from ..operators.packing import group_texts_blocks
-from ..versioning import retire_versions
+from ..versioning import stream_table
 from .packing_stream import (
-    _anchor_empty_version,
     _commit_revocation,
-    _link_shard_dirs,
+    _publish_shards,
     _revocations_ledger,
     current_revoked_keys,
-)
-from .rollup_stream import (
-    _last_folded,
-    _mark_folded,
-    _next_version,
-    _prev_read_target,
-    _publish,
-    _versions,
 )
 
 
@@ -109,7 +99,7 @@ def _schemas(out_dir: Path) -> dict | None:
 def current_blocks(spark: SparkSession, out_dir: str | Path) -> DataFrame | None:
     """The latest published block-assignment map, or None before the first
     batch (pinned version dir — see rollup_stream.current_rollup)."""
-    target = _prev_read_target(Path(out_dir))
+    target = stream_table(out_dir).read_target()
     if target is None:
         return None
     sch = _schemas(Path(out_dir))
@@ -223,10 +213,10 @@ def revoke_block_docs(
             _shard_of(id_col, shard_hex).alias("s")
         ).distinct().collect()
     )
-    versions = _versions(odir)
+    table = stream_table(odir)
     present: list[str] = []
     rows = None
-    if cand and versions:
+    if cand and table.versions():
         sch = _schemas(odir)
         rows = read_store(spark, rows_dir, schema=sch["rows"] if sch else None)
     if rows is not None:
@@ -244,27 +234,11 @@ def revoke_block_docs(
         _commit_revocation(odir, fp)
         return 0
 
-    prev = _prev_read_target(odir)
     seen = touched_doc_history(spark, rows_dir, present)
     blocks = group_texts_blocks(
         seen, id_col, token_col, block_len, shard_hex=shard_hex
     )
-    next_n = _next_version(odir, 0)
-    tmp = odir / f"data.v{next_n}.tmp"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    blocks.write.partitionBy("shard").mode("overwrite").parquet(str(tmp))
-    _link_shard_dirs(versions[-1][1], tmp, skip_shards=set(present))
-    _anchor_empty_version(tmp, blocks)
-    folded = _last_folded(odir)
-    if folded is not None:
-        _mark_folded(tmp, folded)
-    final = odir / f"data.v{next_n}"
-    if final.exists():
-        shutil.rmtree(final)
-    tmp.rename(final)
-    _publish(odir, final)
-    retire_versions((p for _, p in _versions(odir)), keep=(final, prev))
+    _publish_shards(table, blocks, present, table.last_folded())
     _commit_revocation(odir, fp)
     return len(present)
 
@@ -310,13 +284,14 @@ def start_group_texts_stream(
     _write_schemas(odir, id_col, id_type, token_col)
     rows_dir = odir / "rows"
     idc, tc = id_col, token_col
+    table = stream_table(odir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        last = _last_folded(odir)
+        last = table.last_folded()
         if last is not None and last >= batch_id:
             # crash-replay of an already-folded batch: skip the fold,
             # repair the symlink if the crash preceded the publish
-            _publish(odir, _versions(odir)[-1][1])
+            table.relink_newest()
             return
         # Zero-token docs contribute to no block (group_texts_blocks
         # excludes them); dropping them HERE keeps shards they alone
@@ -331,8 +306,6 @@ def start_group_texts_stream(
             # poison later history scans (UNABLE_TO_INFER_SCHEMA); skip —
             # a replayed empty batch re-skips here (see packing_stream).
             return
-        prev = _prev_read_target(odir)  # before any new dir exists
-        versions = _versions(odir)
         slim.write.partitionBy("shard").mode("overwrite").parquet(
             str(rows_dir / f"ingest_batch={batch_id}")
         )
@@ -349,23 +322,9 @@ def start_group_texts_stream(
             seen, idc, tc, block_len, shard_hex=shard_hex
         )
 
-        next_n = _next_version(odir, batch_id)
-        tmp = odir / f"data.v{next_n}.tmp"
-        if tmp.exists():
-            shutil.rmtree(tmp)
         # Touched shards written fresh (the offset recurrence is
         # prefix-dependent within a shard); everything else hard-linked.
-        blocks.write.partitionBy("shard").mode("overwrite").parquet(str(tmp))
-        if versions:
-            _link_shard_dirs(versions[-1][1], tmp, skip_shards=set(touched))
-        _anchor_empty_version(tmp, blocks)
-        _mark_folded(tmp, batch_id)  # before rename: marker never absent
-        final = odir / f"data.v{next_n}"
-        if final.exists():
-            shutil.rmtree(final)
-        tmp.rename(final)
-        _publish(odir, final)
-        retire_versions((p for _, p in _versions(odir)), keep=(final, prev))
+        _publish_shards(table, blocks, touched, batch_id, floor=batch_id)
         maybe_consolidate_in_stream(
             spark, _store_map(odir), batch_id, consolidate_every
         )

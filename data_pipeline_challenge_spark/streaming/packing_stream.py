@@ -56,24 +56,14 @@ from ..batchstore import (
     run_view,
 )
 from ..operators.packing import pack_sequences_sharded
-from ..versioning import retire_versions
-from .rollup_stream import (
-    _last_folded,
-    _mark_folded,
-    _next_version,
-    _prev_read_target,
-    _publish,
-    _versions,
-)
+from ..versioning import VersionedTable, mark_folded, stream_table
 
 
 def current_packed(spark: SparkSession, out_dir: str | Path) -> DataFrame | None:
     """The latest published packed table, or None before the first batch.
     Resolves the ``current`` symlink once at planning time (pinned
-    version dir — see rollup_stream.current_rollup; resolution delegates
-    to ``_prev_read_target`` so what readers pin and what retention
-    keeps can never drift)."""
-    target = _prev_read_target(Path(out_dir))
+    version dir — see rollup_stream.current_rollup)."""
+    target = stream_table(out_dir).read_target()
     if target is None:
         return None
     return spark.read.parquet(str(target))
@@ -208,9 +198,9 @@ def revoke_packed_docs(
         int(r["s"])
         for r in delta.select(shard_of.alias("s")).distinct().collect()
     )
-    versions = _versions(odir)
+    table = stream_table(odir)
     present: list[int] = []
-    rows = read_store(spark, rows_dir) if cand and versions else None
+    rows = read_store(spark, rows_dir) if cand and table.versions() else None
     if rows is not None:
         present = sorted(
             int(r["shard"])
@@ -229,27 +219,12 @@ def revoke_packed_docs(
         _commit_revocation(odir, fp)
         return 0
 
-    prev = _prev_read_target(odir)  # before the new dir exists
     seen = touched_history(spark, rows_dir, present)  # post-revocation rows
     repacked = pack_sequences_sharded(
         seen, group_col, order_col, token_col, capacity, n_shards=n_shards
     )
-    next_n = _next_version(odir, 0)
-    tmp = odir / f"data.v{next_n}.tmp"
-    if tmp.exists():
-        shutil.rmtree(tmp)
-    repacked.write.partitionBy("shard").mode("overwrite").parquet(str(tmp))
-    _link_shard_dirs(versions[-1][1], tmp, skip_shards=set(present))
-    _anchor_empty_version(tmp, repacked)
-    folded = _last_folded(odir)
-    if folded is not None:
-        _mark_folded(tmp, folded)  # no new batch folded: carry forward
-    final = odir / f"data.v{next_n}"
-    if final.exists():
-        shutil.rmtree(final)
-    tmp.rename(final)
-    _publish(odir, final)
-    retire_versions((p for _, p in _versions(odir)), keep=(final, prev))
+    # no new batch folded: carry the marker forward
+    _publish_shards(table, repacked, present, table.last_folded())
     _commit_revocation(odir, fp)
     return len(present)
 
@@ -340,35 +315,24 @@ def migrate_legacy_layout(spark: SparkSession, out_dir: str | Path) -> dict[str,
             migrated_root.rename(rows_dir)
             shutil.rmtree(old_root, ignore_errors=True)
 
-    versions = _versions(odir)
+    table = stream_table(odir)
+    versions = table.versions()
     if versions:
-        top_n, top = versions[-1]
+        top = versions[-1]
         flat = not any(top.glob("shard=*")) and any(
             f.suffix == ".parquet" for f in top.iterdir() if f.is_file()
         )
         if flat:
-            prev = _prev_read_target(odir)  # before the new dir exists
-            folded = _last_folded(odir)
-            next_n = top_n + 1
-            tmp = odir / f"data.v{next_n}.tmp"
-            if tmp.exists():
-                shutil.rmtree(tmp)
-            df = spark.read.parquet(str(top)).withColumn(
-                "shard", F.col("shard").cast("int")
-            )
-            df.write.partitionBy("shard").mode("overwrite").parquet(str(tmp))
-            if folded is not None:
-                _mark_folded(tmp, folded)
-            final = odir / f"data.v{next_n}"
-            if final.exists():
-                shutil.rmtree(final)
-            tmp.rename(final)
-            _publish(odir, final)
-            # {new, previously-read} by identity: a legacy crash remnant
-            # outranking the symlink target must not displace it.
-            retire_versions(
-                (p for _, p in _versions(odir)), keep=(final, prev)
-            )
+            folded = table.last_folded()
+
+            def write(tmp: Path) -> None:
+                df = spark.read.parquet(str(top)).withColumn(
+                    "shard", F.col("shard").cast("int")
+                )
+                df.write.partitionBy("shard").mode("overwrite").parquet(str(tmp))
+                mark_folded(tmp, folded)
+
+            table.publish(write)
             report["packed_versions"] = 1
     return report
 
@@ -437,6 +401,30 @@ def _link_shard_dirs(prev_dir: Path, new_dir: Path, skip_shards: set) -> None:
         shutil.copytree(shard_dir, new_dir / shard_dir.name, copy_function=os.link)
 
 
+def _publish_shards(
+    table: VersionedTable,
+    df: DataFrame,
+    touched: list,
+    folded: int,
+    floor: int = 1,
+) -> None:
+    """Publish the next version of a sharded sink: ``df`` holds the
+    recomputed ``touched`` shards, written fresh; every other shard is
+    hard-linked from the newest version (write cost O(touched shards)).
+    Hard links keep their inodes alive when retention retires the link
+    SOURCE, so linking from the newest version stays safe."""
+
+    def write(tmp: Path) -> None:
+        versions = table.versions()
+        df.write.partitionBy("shard").mode("overwrite").parquet(str(tmp))
+        if versions:
+            _link_shard_dirs(versions[-1], tmp, skip_shards=set(touched))
+        _anchor_empty_version(tmp, df)
+        mark_folded(tmp, folded)
+
+    table.publish(write, floor=floor)
+
+
 def start_packing_stream(
     spark: SparkSession,
     corpus_dir: str | Path,
@@ -466,13 +454,14 @@ def start_packing_stream(
     gc, oc, tc = group_col, order_col, token_col
 
     shard_of = F.pmod(F.xxhash64(F.col(oc)), F.lit(n_shards)).cast("int")
+    table = stream_table(odir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        last = _last_folded(odir)
+        last = table.last_folded()
         if last is not None and last >= batch_id:
             # crash-replay of an already-folded batch: skip the fold,
             # repair the symlink if the crash preceded the publish
-            _publish(odir, _versions(odir)[-1][1])
+            table.relink_newest()
             return
         if not batch_df.take(1):
             # Empty micro-batch: a file-less rows/ingest_batch dir from a
@@ -483,8 +472,6 @@ def start_packing_stream(
             # trigger. Skip; the _folded_batch guard staying behind is
             # safe — a replayed empty batch re-skips here.
             return
-        prev = _prev_read_target(odir)  # before any new dir exists
-        versions = _versions(odir)
         slim = batch_df.select(gc, oc, tc).withColumn("shard", shard_of)
         # Accumulate this batch's rows under a per-batch partition dir,
         # sub-partitioned by shard (the pruning key for every later
@@ -509,30 +496,10 @@ def start_packing_stream(
             seen, gc, oc, tc, capacity, n_shards=n_shards
         )
 
-        next_n = _next_version(odir, batch_id)
-        tmp = odir / f"data.v{next_n}.tmp"
-        if tmp.exists():
-            shutil.rmtree(tmp)
         # Touched shards are written fresh (full-shard recompute — greedy
         # bins are prefix-dependent); everything else is hard-linked from
-        # the previous version, so write cost is O(touched shards).
-        repacked.write.partitionBy("shard").mode("overwrite").parquet(str(tmp))
-        if versions:
-            _link_shard_dirs(versions[-1][1], tmp, skip_shards=set(touched))
-        _anchor_empty_version(tmp, repacked)
-        _mark_folded(tmp, batch_id)  # before rename: marker is never absent
-        final = odir / f"data.v{next_n}"
-        if final.exists():
-            shutil.rmtree(final)
-        tmp.rename(final)
-        _publish(odir, final)
-        # {new, previously-read} by identity — a complete-but-unpublished
-        # compaction remnant must not displace the pinned version (see
-        # rollup_stream._prev_read_target). Untouched-shard hard links
-        # keep their inodes alive even when the link SOURCE version is
-        # retired here, so linking from the newest version above stays
-        # safe.
-        retire_versions((p for _, p in _versions(odir)), keep=(final, prev))
+        # the previous version.
+        _publish_shards(table, repacked, touched, batch_id, floor=batch_id)
         maybe_consolidate_in_stream(
             spark, _store_map(odir), batch_id, consolidate_every
         )

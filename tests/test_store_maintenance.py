@@ -333,3 +333,32 @@ def test_one_stream_runner_and_one_store_loop():
         "streaming/corpus_pipeline_stream.py:pipeline_report",
         "streaming/packing_stream.py:migrate_legacy_layout",
     ]
+
+    # The versioned-table protocol lives in ``versioning.VersionedTable``:
+    # one resolver reads the link, one publish swaps it and retires
+    # versions (plus the replay-path relink), and every versioned table
+    # publishes through it — no sink reaches into another's privates.
+    assert _enclosing_sites(_calls("readlink")) == ["versioning.py:read_target"]
+    assert _enclosing_sites(_calls("swap_symlink")) == [
+        "versioning.py:publish",
+        "versioning.py:relink_newest",
+    ]
+    assert _enclosing_sites(_calls("retire_versions")) == ["versioning.py:publish"]
+    assert _enclosing_sites(_calls("publish")) == [
+        "operators/maintenance.py:compact_published_table",
+        "pipeline.py:_overwrite_products",
+        "sources/ledger.py:_checkpoint_events",
+        "sources/ledger.py:_compact",
+        "streaming/packing_stream.py:migrate_legacy_layout",
+        "streaming/packing_stream.py:_publish_shards",
+        "streaming/rollup_stream.py:start_rollup_stream",
+    ]
+
+    def imports_rollup_privates(n):
+        return (
+            isinstance(n, ast.ImportFrom)
+            and (n.module or "").endswith("rollup_stream")
+            and any(a.name.startswith("_") for a in n.names)
+        )
+
+    assert _enclosing_sites(imports_rollup_privates) == []
