@@ -734,13 +734,22 @@ def read_batch_store(
     store = Path(store)
     reader = spark.read.schema(schema) if schema else spark.read
     df = reader.parquet(str(store))
-    marker = _read_marker(store)
+    return df.filter(_live_filter(_read_marker(store)))
+
+
+def _live_filter(marker: dict | None):
     if marker:
-        return df.filter(
-            (F.col("ingest_batch") == int(marker["consolidated"]))
-            | (F.col("ingest_batch") > int(marker["through"]))
+        return (F.col("ingest_batch") == int(marker["consolidated"])) | (
+            F.col("ingest_batch") > int(marker["through"])
         )
-    return df.filter(F.col("ingest_batch") >= 0)
+    return F.col("ingest_batch") >= 0
+
+
+def _is_live(n: int, marker: dict | None) -> bool:
+    """:func:`_live_filter` for one batch id, on the driver."""
+    if marker:
+        return n == int(marker["consolidated"]) or n > int(marker["through"])
+    return n >= 0
 
 
 def read_store(
@@ -748,17 +757,53 @@ def read_store(
     store: str | Path,
     batch_id: int | None = None,
     schema: str | None = None,
+    *,
+    up_to: int | None = None,
+    partition: tuple[str, list] | None = None,
 ) -> DataFrame | None:
     """The one store reader: the store's live view
     (:func:`read_batch_store`, ``ingest_batch`` column kept), or — with
     ``batch_id`` — that batch's own increment dir as written (a fold's
     replay read-back). None when there is no such data dir: a store
-    holding only sentinels or nothing at all has no schema to read."""
+    holding only sentinels or nothing at all has no schema to read.
+
+    ``up_to`` narrows the live view to a commit frontier: positive batch
+    ids past it are left out (consolidated ids are always covered).
+    ``partition=(column, values)`` narrows it to those values of the
+    store's first partition column below ``ingest_batch``. Either one
+    prunes at LISTING time: the live ``ingest_batch=B`` dirs are picked
+    on the driver from the marker, and only their ``column=value``
+    leaves that exist go to the reader (``basePath`` = the store, so the
+    columns are unchanged). A whole-store read lists every leaf first,
+    which above Spark's parallel-discovery threshold (32 paths) is a
+    Spark job of its own. The same bounds stay on the frame as
+    planning-time partition filters. None when no such leaf exists."""
     store = Path(store)
     if batch_id is not None:
         inc = store / f"ingest_batch={batch_id}"
         return spark.read.parquet(str(inc)) if inc.exists() else None
-    return read_batch_store(spark, store, schema) if has_data(store) else None
+    if up_to is None and partition is None:
+        return read_batch_store(spark, store, schema) if has_data(store) else None
+    marker = _read_marker(store)
+    paths = [
+        p
+        for n, p in _batch_dirs(store)
+        if _is_live(n, marker) and (up_to is None or n < 0 or n <= up_to)
+    ]
+    if partition is not None:
+        col, values = partition
+        paths = [p / f"{col}={v}" for p in paths for v in sorted(set(values))]
+        paths = [p for p in paths if p.is_dir()]
+    if not paths:
+        return None
+    reader = spark.read.schema(schema) if schema else spark.read
+    df = reader.option("basePath", str(store)).parquet(*map(str, paths))
+    df = df.filter(_live_filter(marker))
+    if up_to is not None:
+        df = df.filter((F.col("ingest_batch") <= up_to) | (F.col("ingest_batch") < 0))
+    if partition is not None:
+        df = df.filter(F.col(col).isin(list(values)))
+    return df
 
 
 def has_data(store: str | Path) -> bool:
@@ -898,9 +943,7 @@ def consolidate_batch_store(
     store = Path(store)
     dirs = _batch_dirs(store)
     marker = _read_marker(store)
-    live_positive = [n for n, _ in dirs if n >= 0]
-    if marker:
-        live_positive = [n for n in live_positive if n > int(marker["through"])]
+    live_positive = [n for n, _ in dirs if n >= 0 and _is_live(n, marker)]
     if up_to is not None:
         live_positive = [n for n in live_positive if n <= up_to]
     if len(live_positive) <= 1 and marker is None:

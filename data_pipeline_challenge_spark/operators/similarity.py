@@ -45,6 +45,38 @@ def lsh_planes_for_corpus(
     return max(1, min(max_planes, int(math.log2(target_buckets))))
 
 
+def _query_vector(query: DataFrame, vec_col: str = "embedding") -> list:
+    """The vector of a ONE-row ``query`` frame, evaluated with one
+    action: a ``collect`` is one job over the frame, where ``first()``
+    is a one-partition job plus a scale-up job whenever that partition
+    is empty. The indexed and in-flight probes pick their bucket,
+    centroids or LUT from this vector and score against it as a literal
+    (:func:`_cosine_topk`), so the caller's plan runs once per probe.
+    Raises ``ValueError`` stating the row count unless the frame holds
+    exactly one row: every row would be scored while only one picked the
+    candidates, so no single answer exists."""
+    rows = query.select(vec_col).collect()
+    if len(rows) != 1:
+        raise ValueError(
+            f"the query frame must hold exactly 1 row, it holds {len(rows)}"
+        )
+    return rows[0][0]
+
+
+def _cosine_topk(
+    cand: DataFrame, qvals: list, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Exact-cosine top-k of ``cand`` against the query's collected
+    values as an ``array<double>`` literal. A collected float is the
+    exact double ``as_double`` casts the same element to, so every
+    ``sim`` is bit-identical to scoring against the query column."""
+    q = F.array(*[F.lit(v) for v in qvals]).cast("array<double>")
+    sims = cand.select(
+        F.col(id_col), cosine(as_double(F.col(vec_col)), q).alias("sim")
+    )
+    return sims.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
+
+
 def knn_bruteforce(
     embeddings: DataFrame,
     query: DataFrame,
@@ -193,7 +225,10 @@ def lsh_topk_indexed(
     buckets (Hamming-1 bit flips), then scan ONLY those bucket partitions
     — ``bucket IN (...)`` resolves as a partition filter at planning time.
     Returns the same rows as the in-flight :func:`ann_topk` for the same
-    parameters (pinned by ``test_lsh_indexed_matches_inflight``)."""
+    parameters (pinned by ``test_lsh_indexed_matches_inflight``).
+
+    ``query`` must hold exactly one row (``ValueError`` otherwise); it is
+    evaluated once (:func:`_query_vector`) and scored as a literal."""
     import json
     from pathlib import Path
 
@@ -203,7 +238,8 @@ def lsh_topk_indexed(
     meta = json.loads((index_dir / "lsh_meta.json").read_text())
     dim, n_planes, seed = meta["dim"], meta["n_planes"], meta["seed"]
     planes = np.random.RandomState(seed).standard_normal((dim, n_planes))
-    qvec = np.array(query.select(vec_col).first()[0], dtype=np.float64)
+    qvals = _query_vector(query, vec_col)
+    qvec = np.array(qvals, dtype=np.float64)
     bits = (qvec @ planes) > 0
     bucket = int(bits @ (1 << np.arange(n_planes)).astype(np.int64))
     probes = [bucket]
@@ -214,11 +250,7 @@ def lsh_topk_indexed(
         spark, index_dir / "bucketed", index_dir / "bucketed_inc"
     )
     cand = bucketed.filter(F.col("bucket").isin(probes))
-    q = F.broadcast(query.select(as_double(F.col(vec_col)).alias("q_vec")))
-    sims = cand.crossJoin(q).select(
-        F.col(id_col), cosine(as_double(F.col(vec_col)), F.col("q_vec")).alias("sim")
-    )
-    return sims.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
+    return _cosine_topk(cand, qvals, k, id_col, vec_col)
 
 
 def ivf_fit_centroids(
@@ -301,23 +333,23 @@ def ivf_topk(
     clusters nearest to the query — the scan shrinks by ~n_probe/n_clusters.
 
     At scale the assigned table is written partitioned by cluster so a
-    probe reads only those partitions (partition pruning does the work)."""
+    probe reads only those partitions (partition pruning does the work).
+
+    ``query`` must hold exactly one row (``ValueError`` otherwise); it is
+    evaluated once (:func:`_query_vector`) and scored as a literal."""
     import numpy as np
 
+    qvals = _query_vector(query, vec_col)
     centroids = ivf_fit_centroids(
         embeddings, n_clusters=n_clusters, id_col=id_col, vec_col=vec_col
     )
-    qvec = np.array(query.select(vec_col).first()[0], dtype=np.float64)
+    qvec = np.array(qvals, dtype=np.float64)
     qvec /= max(np.linalg.norm(qvec), 1e-12)
     probe = np.argsort(-(centroids @ qvec))[:n_probe].tolist()
 
     assigned = ivf_assign(embeddings, centroids, vec_col)
-    q = F.broadcast(query.select(as_double(F.col(vec_col)).alias("q_vec")))
     cand = assigned.filter(F.col("cluster").isin([int(p) for p in probe]))
-    sims = cand.crossJoin(q).select(
-        F.col(id_col), cosine(as_double(F.col(vec_col)), F.col("q_vec")).alias("sim")
-    )
-    return sims.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
+    return _cosine_topk(cand, qvals, k, id_col, vec_col)
 
 
 def cosine_near_pairs_blocked(
@@ -481,7 +513,10 @@ def ivf_topk_indexed(
     """Probe a persisted IVF index: rank centroids driver-side, then scan
     ONLY the probed cluster partitions (the ``cluster IN (...)`` filter is
     a partition filter, not a data filter — pruning happens at planning,
-    before any file is opened)."""
+    before any file is opened).
+
+    ``query`` must hold exactly one row (``ValueError`` otherwise); it is
+    evaluated once (:func:`_query_vector`) and scored as a literal."""
     import json
     from pathlib import Path
 
@@ -489,7 +524,8 @@ def ivf_topk_indexed(
 
     index_dir = Path(index_dir)
     centroids = np.array(json.loads((index_dir / "centroids.json").read_text()))
-    qvec = np.array(query.select(vec_col).first()[0], dtype=np.float64)
+    qvals = _query_vector(query, vec_col)
+    qvec = np.array(qvals, dtype=np.float64)
     qvec /= max(np.linalg.norm(qvec), 1e-12)
     probe = [int(p) for p in np.argsort(-(centroids @ qvec))[:n_probe]]
 
@@ -497,11 +533,7 @@ def ivf_topk_indexed(
         spark, index_dir / "assigned", index_dir / "assigned_inc"
     )
     cand = assigned.filter(F.col("cluster").isin(probe))
-    q = F.broadcast(query.select(as_double(F.col(vec_col)).alias("q_vec")))
-    sims = cand.crossJoin(q).select(
-        F.col(id_col), cosine(as_double(F.col(vec_col)), F.col("q_vec")).alias("sim")
-    )
-    return sims.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
+    return _cosine_topk(cand, qvals, k, id_col, vec_col)
 
 
 def pq_fit_codebooks(
@@ -636,13 +668,17 @@ def pq_topk(
     reranked with exact cosine — the standard PQ serving shape: at 100 TB
     the exact pass reads only the shortlist's vectors (a keyed semi-join
     against the embedding table), so quantization error affects which
-    candidates are considered, never their final ordering."""
+    candidates are considered, never their final ordering.
+
+    ``query`` must hold exactly one row (``ValueError`` otherwise); it is
+    evaluated once (:func:`_query_vector`) and scored as a literal."""
     import numpy as np
 
+    qvals = _query_vector(query, vec_col)
     books = pq_fit_codebooks(
         embeddings, m=m, n_codes=n_codes, id_col=id_col, vec_col=vec_col
     )
-    qvec = np.array(query.select(vec_col).first()[0], dtype=np.float64)
+    qvec = np.array(qvals, dtype=np.float64)
     qvec /= max(np.linalg.norm(qvec), 1e-12)
     lut = _pq_adc_lut(qvec, books)
 
@@ -653,16 +689,7 @@ def pq_topk(
         .orderBy(F.col("adc_score").desc(), F.col(id_col))
         .limit(shortlist_factor * k)
     )
-    q = F.broadcast(query.select(as_double(F.col(vec_col)).alias("q_vec")))
-    return (
-        shortlist.crossJoin(q)
-        .select(
-            F.col(id_col),
-            cosine(as_double(F.col(vec_col)), F.col("q_vec")).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _cosine_topk(shortlist, qvals, k, id_col, vec_col)
 
 
 def pq_build_index(
@@ -905,7 +932,10 @@ def pq_topk_indexed(
     fetching ONLY the shortlist's vectors from ``embeddings`` via a
     broadcast keyed join (the shortlist is k×shortlist_factor rows — tiny).
     Same codebook/LUT/score arithmetic as :func:`pq_topk`, so both paths
-    return identical rows."""
+    return identical rows.
+
+    ``query`` must hold exactly one row (``ValueError`` otherwise); it is
+    evaluated once (:func:`_query_vector`) and scored as a literal."""
     import json
     from pathlib import Path
 
@@ -913,7 +943,8 @@ def pq_topk_indexed(
 
     index_dir = Path(index_dir)
     books = [np.array(b) for b in json.loads((index_dir / "codebooks.json").read_text())]
-    qvec = np.array(query.select(vec_col).first()[0], dtype=np.float64)
+    qvals = _query_vector(query, vec_col)
+    qvec = np.array(qvals, dtype=np.float64)
     qvec /= max(np.linalg.norm(qvec), 1e-12)
     lut = _pq_adc_lut(qvec, books)
 
@@ -924,16 +955,7 @@ def pq_topk_indexed(
         .limit(shortlist_factor * k)
     )
     cand = embeddings.join(F.broadcast(shortlist.select(id_col)), id_col)
-    q = F.broadcast(query.select(as_double(F.col(vec_col)).alias("q_vec")))
-    return (
-        cand.crossJoin(q)
-        .select(
-            F.col(id_col),
-            cosine(as_double(F.col(vec_col)), F.col("q_vec")).alias("sim"),
-        )
-        .orderBy(F.col("sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _cosine_topk(cand, qvals, k, id_col, vec_col)
 
 
 def rrf_fuse(

@@ -6,9 +6,10 @@ index without ever rescanning document text.
 Per micro-batch, three folds:
 
 - ``postings/`` — (term, doc_id, tf, dl), partitioned by a term hash
-  bucket so a query prunes its scan to the query terms' buckets (the
-  same planning-time partition-pruning discipline as the persisted ANN
-  indexes). ``dl`` is DENORMALIZED into every posting at fold time
+  bucket so a query lists and scans only the query terms' bucket
+  leaves (``batchstore.read_store(..., partition=...)``; the ANN
+  indexes prune the same column-per-dir way at planning time). ``dl``
+  is DENORMALIZED into every posting at fold time
   (one extra long per row) so the serving plan needs NO corpus-keyed
   join at all — at 100 TB a probe touches only the query's buckets;
 - ``doclen/`` — (doc_id, dl), the per-doc token count (kept normalized
@@ -65,6 +66,7 @@ from ..batchstore import (
     sequential_fold_guard,
     write_commit_file,
 )
+from ..session import local_frame
 
 _N_BUCKETS = 64
 _K1 = 1.2
@@ -269,7 +271,7 @@ def _revoked_view(spark: SparkSession, odir: Path) -> DataFrame | None:
 
 
 def _effective_totals(spark: SparkSession, odir: Path):
-    """The serving-time index state both search entry points share:
+    """The serving-time index state every search entry point shares:
     ``(n_docs, avgdl, tid, revoked)`` AFTER revocation corrections —
     revoked docs' counts subtracted from N, and from avgdl's numerator/
     denominator only when length-bearing (a dl=0 revoked row is a
@@ -301,16 +303,18 @@ def _effective_totals(spark: SparkSession, odir: Path):
 
 
 def _pruned_postings(
-    spark: SparkSession,
-    odir: Path,
-    terms: list[str],
-    tid: int,
-    revoked: DataFrame | None,
-) -> DataFrame:
-    """The shared candidate scan: postings pruned at PLANNING time to
-    the query terms' partition buckets, filtered to the terms, bounded
-    at the totals commit point, revoked docs anti-joined out BEFORE any
-    df is counted.
+    spark: SparkSession, odir: Path, terms: list[str], state: tuple
+) -> DataFrame | None:
+    """The shared candidate scan: postings pruned at LISTING time to
+    the query terms' partition buckets (``batchstore.read_store``
+    hands Spark only the live batches' ``term_bucket=b`` leaves for
+    those buckets, so no other postings dir is listed and the probe runs
+    no listing job however many batches and buckets the store holds;
+    the bucket and batch bounds stay as planning-time partition
+    filters), filtered to the terms, bounded at the totals commit point,
+    revoked docs anti-joined out BEFORE any df is counted. None when no
+    candidate exists: the ``_effective_totals`` ``state`` has an empty
+    corpus, or no live leaf holds one of the query's buckets.
 
     Snapshot consistency (ADVICE r11): the data stores are appended
     BEFORE the totals file (the commit point), so after a crash in that
@@ -319,18 +323,20 @@ def _pruned_postings(
     dirs (negative ids) fold batches at-or-below a committed totals
     file (compact_retrieval_index bounds at the frontier), so they are
     always covered."""
+    n_docs, _, tid, revoked = state
+    if n_docs <= 0:
+        return None
     # driver-local: same expression as the store's partition layout,
     # constant-folded — no cluster job per probe (batchstore.
     # prefix_bucket_local; r19, guide §5 the driver should not wait on
     # a job to hash a handful of literals)
-    buckets = sorted(set(prefix_bucket_local(spark, list(terms), _N_BUCKETS)))
-    committed = (F.col("ingest_batch") <= tid) | (F.col("ingest_batch") < 0)
-    postings = (
-        read_batch_store(spark, odir / "postings")
-        .filter(committed)
-        .filter(F.col("term_bucket").isin(buckets))  # partition-pruned
-        .filter(F.col("term").isin(list(terms)))
+    buckets = prefix_bucket_local(spark, list(terms), _N_BUCKETS)
+    postings = read_store(
+        spark, odir / "postings", up_to=tid, partition=("term_bucket", buckets)
     )
+    if postings is None:
+        return None
+    postings = postings.filter(F.col("term").isin(list(terms)))
     if revoked is not None:
         # before df: a revoked doc must not count into document frequency
         postings = postings.join(
@@ -361,24 +367,33 @@ def bm25_search(
     k: int = 20,
 ) -> DataFrame | None:
     """Okapi BM25 top-k over the maintained index. None before the
-    first batch. The postings scan prunes to the query terms' buckets
-    at planning time; df is a ≤|query|-row broadcast; N/avgdl come from
-    the totals file (zero Spark jobs when nothing is revoked); dl rides
-    on each posting, so NO corpus-keyed join exists in the serving plan
-    — the one shuffle is the candidate-sized per-doc sum. Revoked docs
-    (``revoke_docs``) are anti-joined out BEFORE df is counted and
-    subtracted from N/avgdl, so results equal batch BM25 over the
-    post-revocation corpus. (State, scan, and arithmetic are the shared
-    ``_effective_totals`` / ``_pruned_postings`` / ``_bm25_contrib`` —
-    one implementation for this and :func:`bm25_search_batch`.)"""
+    first batch. The postings read is pruned when it is LISTED: Spark
+    is handed only the query terms' bucket leaves of the live batches,
+    so a probe lists and scans the query's buckets, never the whole
+    store (the bounds also stay as planning-time partition filters). df
+    is a ≤|query|-row broadcast; N/avgdl come from the totals file (zero
+    Spark jobs when nothing is revoked); dl rides on each posting, so NO
+    corpus-keyed join exists in the serving plan — the one shuffle is
+    the candidate-sized per-doc sum. Revoked docs (``revoke_docs``) are
+    anti-joined out BEFORE df is counted and subtracted from N/avgdl, so
+    results equal batch BM25 over the post-revocation corpus. (State,
+    scan, and arithmetic are the shared ``_effective_totals`` /
+    ``_pruned_postings`` / ``_bm25_contrib`` — one implementation for
+    this, :func:`bm25_search_batch` and :func:`hybrid_search_indexed`.)"""
     odir = Path(out_dir)
     state = _effective_totals(spark, odir)
-    if state is None:
-        return None
-    n_docs, avgdl, tid, revoked = state
-    if n_docs <= 0:
-        return spark.createDataFrame([], "doc_id long, bm25 double")
-    postings = _pruned_postings(spark, odir, list(terms), tid, revoked)
+    return None if state is None else _bm25_topk(spark, odir, terms, k, state)
+
+
+def _bm25_topk(
+    spark: SparkSession, odir: Path, terms: list[str], k: int, state: tuple
+) -> DataFrame:
+    """:func:`bm25_search` over an already-read ``_effective_totals``
+    state (the hybrid probe reuses the state's revoked view)."""
+    n_docs, avgdl = state[:2]
+    postings = _pruned_postings(spark, odir, list(terms), state)
+    if postings is None:
+        return local_frame(spark, [], "doc_id long, bm25 double")
     dfc = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     return (
         postings.join(F.broadcast(dfc), "term")
@@ -414,15 +429,16 @@ def bm25_search_batch(
     state = _effective_totals(spark, odir)
     if state is None:
         return None
-    n_docs, avgdl, tid, revoked = state
-    if n_docs <= 0:
-        return spark.createDataFrame([], "qid string, doc_id long, bm25 double")
-    qt = spark.createDataFrame(
+    n_docs, avgdl = state[:2]
+    all_terms = sorted({t for terms in queries.values() for t in terms})
+    postings = _pruned_postings(spark, odir, all_terms, state)
+    if postings is None:
+        return local_frame(spark, [], "qid string, doc_id long, bm25 double")
+    qt = local_frame(
+        spark,
         [(str(q), t) for q, terms in queries.items() for t in set(terms)],
         "qid string, term string",
     )
-    all_terms = sorted({t for terms in queries.values() for t in terms})
-    postings = _pruned_postings(spark, odir, all_terms, tid, revoked)
     # df is per TERM (query-independent), computed once over the union.
     dfc = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("qid").orderBy(F.col("bm25").desc(), "doc_id")
@@ -562,9 +578,11 @@ def hybrid_search_indexed(
         rrf_fuse,
     )
 
-    bm = bm25_search(spark, out_dir, terms, k=depth)
-    if bm is None:
+    odir = Path(out_dir)
+    state = _effective_totals(spark, odir)
+    if state is None:
         return None
+    bm = _bm25_topk(spark, odir, terms, depth, state)
     bmr = bm.select(
         F.col("doc_id").alias("id"),
         F.row_number()
@@ -585,7 +603,7 @@ def hybrid_search_indexed(
             "in probe_kwargs (PQ reranks its ADC shortlist exactly)"
         )
     ann = probes[ann_probe](spark, ann_index_dir, query, k=depth, **probe_kwargs)
-    revoked = _revoked_view(spark, Path(out_dir))
+    revoked = state[3]  # read once, shared with the BM25 side
     if revoked is not None:
         ann = ann.join(
             F.broadcast(revoked.select(F.col("doc_id").alias("vec_id"))),

@@ -461,6 +461,41 @@ def test_lsh_indexed_probe_prunes_partitions(spark, tmp_path):
     assert "BatchEvalPython" not in plan
 
 
+def test_ann_probes_require_a_one_row_query(spark, tmp_path):
+    """An ANN probe picks its buckets, centroids or LUT from ONE query
+    vector and scores every candidate against it, so a query frame of 0
+    or 2 rows has no single answer: the indexed and the in-flight probes
+    raise ValueError stating the row count (0 rows used to fail with a
+    TypeError, 2 rows to mix the rows' answers silently)."""
+    import random
+
+    import pytest
+    import pyspark.sql.functions as F
+
+    from data_pipeline_challenge_spark.operators.similarity import (
+        ivf_build_index,
+        ivf_topk_indexed,
+        pq_topk,
+    )
+
+    rng = random.Random(5)
+    emb = spark.createDataFrame(
+        [(i, [rng.gauss(0.0, 1.0) for _ in range(8)]) for i in range(64)],
+        "vec_id long, embedding array<float>",
+    )
+    idx = tmp_path / "ivf"
+    ivf_build_index(emb, idx, n_clusters=4)
+    for n in (0, 2):
+        query = emb.filter(F.col("vec_id") < n).select("embedding")
+        with pytest.raises(ValueError, match=f"holds {n}$"):
+            ivf_topk_indexed(spark, idx, query, k=3, n_probe=2)
+        with pytest.raises(ValueError, match=f"holds {n}$"):
+            pq_topk(emb, query, k=3, m=2, n_codes=4)
+    # one row is served: a vector's own nearest neighbour is itself
+    one = emb.filter(F.col("vec_id") == 7).select("embedding")
+    assert ivf_topk_indexed(spark, idx, one, k=3, n_probe=2).first()["vec_id"] == 7
+
+
 def test_lsh_headline_fills_k(spark):
     """The registered headline LSH queries must actually FILL a top-10:
     the plane count derives from the corpus (expected bucket size >= 4k)

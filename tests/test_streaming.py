@@ -4606,6 +4606,101 @@ def test_bm25_search_batch_equals_per_query_search(spark, tmp_path):
     assert got2 != got  # N/avgdl corrections actually moved scores
 
 
+def _py_bm25(texts: dict, terms: list, k: int) -> list:
+    """Okapi BM25 (k1=1.2, b=0.75, Robertson +1 idf) in plain Python over
+    space-split tokens: top ``k`` (doc_id, score) by (score desc, id),
+    scores rounded to 6 places, matching docs only."""
+    import math
+
+    toks = {d: [w for w in t.split(" ") if w] for d, t in texts.items()}
+    lens = [len(v) for v in toks.values() if v]
+    n, avgdl = len(toks), sum(lens) / len(lens)
+    df = {t: sum(t in v for v in toks.values()) for t in set(terms)}
+    scores = {}
+    for d, v in toks.items():
+        s = [
+            math.log((n - df[t] + 0.5) / (df[t] + 0.5) + 1.0)
+            * (v.count(t) * 2.2)
+            / (v.count(t) + 1.2 * (0.25 + 0.75 * len(v) / avgdl))
+            for t in sorted(set(terms))
+            if t in v
+        ]
+        if s:
+            scores[d] = round(sum(s), 6)
+    return sorted(scores.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+
+
+def test_bm25_pruned_read_over_every_store_state(spark, tmp_path):
+    """The BM25 probe lists only the live batches' query-bucket leaves,
+    so the driver-side choice of dirs must follow the store's marker and
+    commit rules exactly. One index holds all four dir states at once:
+    the consolidated ``ingest_batch=-1`` dir with its marker, the stale
+    pre-consolidation dirs the fold keeps for a generation, a later live
+    batch, and a batch past the newest totals id (data written, totals
+    not: a crash remnant). The answer equals plain-Python BM25 over the
+    committed docs. Terms whose buckets have no leaf dir get the empty
+    answer."""
+    import random
+
+    from data_pipeline_challenge_spark.batchstore import prefix_bucket_local
+    from data_pipeline_challenge_spark.streaming.retrieval_stream import (
+        _N_BUCKETS,
+        _latest_totals,
+        _totals_path,
+        bm25_search,
+        bm25_search_batch,
+        compact_retrieval_index,
+        fold_batch,
+    )
+
+    rng = random.Random(11)
+    vocab = ["spark", "merge", "dup", "scan", "row", "filter", "batch"]
+    batches = [
+        [(b * 30 + i, " ".join(rng.choice(vocab) for _ in range(rng.randint(2, 12))))
+         for i in range(30)]
+        for b in range(4)
+    ]
+    idx = tmp_path / "idx"
+
+    def fold(b):
+        df = spark.createDataFrame(batches[b], "doc_id long, text string")
+        fold_batch(spark, idx, df, b, "doc_id", "text")
+
+    fold(0)
+    fold(1)
+    compact_retrieval_index(spark, idx)  # consolidated -1, through 1
+    fold(2)  # live past the marker
+    fold(3)
+    _totals_path(idx, 3).unlink()  # crash between data and totals writes
+    postings = idx / "postings"
+    assert json.loads((postings / "_consolidated.json").read_text())["through"] == 1
+    assert {p.name for p in postings.glob("ingest_batch=*")} == {
+        f"ingest_batch={b}" for b in (-1, 0, 1, 2, 3)
+    }
+    assert _latest_totals(idx)[1] == 2
+
+    committed = {d: t for b in batches[:3] for d, t in b}
+    for terms in (["spark", "dup"], ["merge"], vocab):
+        got = [(r["doc_id"], r["bm25"]) for r in bm25_search(spark, idx, terms, k=200).collect()]
+        want = _py_bm25(committed, terms, 200)
+        assert [d for d, _ in got] == [d for d, _ in want]
+        assert all(abs(g - w) <= 2e-6 for (_, g), (_, w) in zip(got, want))
+
+    present = {
+        int(p.name.split("=")[1]) for p in postings.glob("ingest_batch=*/term_bucket=*")
+    }
+    cands = [f"absent{i}" for i in range(200)]
+    absent = [
+        t for t, b in zip(cands, prefix_bucket_local(spark, cands, _N_BUCKETS))
+        if b not in present
+    ][:2]
+    assert len(absent) == 2
+    empty = bm25_search(spark, idx, absent)
+    assert empty.columns == ["doc_id", "bm25"] and empty.collect() == []
+    empty = bm25_search_batch(spark, idx, {"q": absent})
+    assert empty.columns == ["qid", "doc_id", "bm25"] and empty.collect() == []
+
+
 def test_quantile_stream_equals_batch(spark, tmp_path):
     """Maintained exact quantiles: histograms add, so the report over
     the incrementally-folded store equals the batch operator over the
