@@ -28,6 +28,11 @@ Crash-safe without a transactional format, via a marker file:
   re-writing an already-folded batch id lands ``<= through`` and stays
   invisible — no duplicates either way.
 
+Every writer records the store's read schema next to its data
+(:data:`SCHEMA_FILE`, see :func:`record_store_schema`), and the one
+reader (:func:`read_store`) uses it, so building a store's view runs no
+parquet schema-inference job.
+
 Writer coordination: run consolidation OFFLINE (owning stream stopped),
 or IN-STREAM from the owning stream's own ``foreachBatch``
 (:func:`maybe_consolidate_in_stream`) — the stream is the store's only
@@ -48,8 +53,23 @@ from pathlib import Path
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import (
+    ArrayType,
+    ByteType,
+    DataType,
+    IntegerType,
+    LongType,
+    MapType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 _MARKER = "_consolidated.json"
+#: The read schema a store's or index table's writer records next to its
+#: data (underscore-prefixed, so Spark's file listing skips it).
+SCHEMA_FILE = "_schema.json"
 _BATCH_RE = re.compile(r"^ingest_batch=(-?\d+)$")
 REBUILT_MARKER = "_rebuilt.json"
 
@@ -260,30 +280,23 @@ def prefix_bucket(col, n_buckets: int, *more_cols):
 def prefix_bucket_local(spark, values: "list[str]", n_buckets: int) -> "list[int]":
     """Driver-local evaluation of :func:`prefix_bucket` for a SMALL list
     of literal STRINGS (probe/search inputs, never data): the same
-    ``pmod(xxhash64(...), n)`` expression evaluated through a one-row
-    parameterized SELECT — the literals constant-fold, the plan collapses
-    to a LocalRelation, and ``first()`` returns without launching a
-    single task. The old shape (createDataFrame + collect) cost a full
-    cluster job per probe just to hash a handful of query terms (r19
-    probe profile: ~0.34s of a 1.25s warm probe). Values must be the
-    same TYPE the store's bucket column hashes (xxhash64 of a bigint is
-    a different value than of its string); every current store buckets
-    strings. Equality with the distributed expression is pinned by
-    ``test_prefix_bucket_local_matches_distributed``; a non-string value
-    raises ``TypeError`` instead of returning a wrong bucket."""
+    expression over a ``session.local_frame`` of the values. That plan
+    folds to a ``LocalRelation``, so collecting it launches no Spark job
+    (a one-row ``SELECT``'s ``first()`` launched one per probe), and the
+    distributed expression stays the one definition of the hash. Values
+    must be the same TYPE the store's bucket column hashes (xxhash64 of
+    a bigint is a different value than of its string); every current
+    store buckets strings. Equality with the distributed expression is
+    pinned by ``test_prefix_bucket_local_matches_distributed``; a
+    non-string value raises ``TypeError`` instead of returning a wrong
+    bucket."""
+    from .session import local_frame
+
     bad = [v for v in values if not isinstance(v, str)]
     if bad:
         raise TypeError(f"prefix_bucket_local hashes strings only, got {bad[:3]!r}")
-    out: list[int] = []
-    for start in range(0, len(values), 100):  # bound statement width
-        chunk = values[start : start + 100]
-        exprs = ", ".join(
-            f"pmod(xxhash64(:v{i}), :n) AS b{i}" for i in range(len(chunk))
-        )
-        args = {f"v{i}": v for i, v in enumerate(chunk)}
-        args["n"] = int(n_buckets)
-        out.extend(int(v) for v in spark.sql(f"SELECT {exprs}", args=args).first())
-    return out
+    frame = local_frame(spark, [(v,) for v in values], "v string")
+    return [int(r[0]) for r in frame.select(prefix_bucket(F.col("v"), n_buckets)).collect()]
 
 
 def cap_per_bucket(
@@ -540,6 +553,139 @@ def _empty_sentinel_ids(store: Path) -> list[int]:
     return out
 
 
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable: the form a
+    parquet read reports, whatever nullability the writer had."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _partition_type(written: DataType, values: list[str]) -> DataType | None:
+    """The type partition discovery gives a column written from
+    ``written`` whose directories hold ``values``: int, or bigint once a
+    value leaves the int range. A string column keeps its type (what the
+    group-texts reader passes explicitly: discovery would turn
+    numeric-looking hex shards into ints). None for any other type."""
+    if isinstance(written, StringType):
+        return StringType()
+    if isinstance(written, (ByteType, ShortType, IntegerType)):
+        return IntegerType()
+    if isinstance(written, LongType):
+        ints = [int(v) for v in values if v != "__HIVE_DEFAULT_PARTITION__"]
+        return IntegerType() if all(-(2**31) <= v < 2**31 for v in ints) else LongType()
+    return None
+
+
+def _written_schema(
+    df_schema: StructType, written: Path, partition_by, batch: bool
+) -> StructType | None:
+    """The schema Spark infers reading a table written from ``df_schema``
+    at ``written``: data columns nullable in frame order, then
+    ``ingest_batch int`` for a batch store, then the partition columns.
+    None when a partition column's type cannot be told without
+    inference."""
+    parts = [partition_by] if isinstance(partition_by, str) else list(partition_by or ())
+    written_types = {f.name: f.dataType for f in df_schema}
+    fields = [f for f in _as_nullable(df_schema) if f.name not in parts]
+    if batch:
+        fields.append(StructField("ingest_batch", IntegerType(), True))
+    for level, col in enumerate(parts):
+        pattern = "/".join(["*"] * level + [f"{col}=*"])
+        values = [p.name.split("=", 1)[1] for p in written.glob(pattern)]
+        dt = _partition_type(written_types[col], values)
+        if dt is None:
+            return None
+        fields.append(StructField(col, dt, True))
+    return StructType(fields)
+
+
+def _in_recorded_order(df: DataFrame, recorded: StructType | None) -> DataFrame:
+    """``df`` with its columns in the ``recorded`` order when it holds the
+    same columns, so every data file of a store lists them alike (a join
+    moves its key first) and any footer shows the recorded schema."""
+    if recorded is None:
+        return df
+    order = [f.name for f in recorded if f.name in df.columns]
+    return df.select(*order) if sorted(order) == sorted(df.columns) else df
+
+
+def _fits(schema: StructType, recorded: StructType) -> bool:
+    """True when data written as ``schema`` reads correctly with
+    ``recorded``: each of its columns is recorded alike, and the
+    partition columns (those after ``ingest_batch``, if any) agree."""
+    fields = {f.name: f for f in recorded}
+
+    def parts(t: StructType) -> list[str]:
+        names = t.fieldNames()
+        return names[names.index("ingest_batch") + 1 :] if "ingest_batch" in names else []
+
+    return parts(schema) == parts(recorded) and all(fields.get(f.name) == f for f in schema)
+
+
+def recorded_schema(root: str | Path) -> StructType | None:
+    """The read schema recorded next to the store or table at ``root``
+    (:data:`SCHEMA_FILE`), or None for one written without it: such a
+    table is read by inference, which costs a Spark job per read."""
+    p = Path(root) / SCHEMA_FILE
+    try:
+        return StructType.fromJson(json.loads(p.read_text()))
+    except FileNotFoundError:
+        return None
+
+
+def _write_schema_file(root: Path, schema: StructType) -> None:
+    tmp = root / (SCHEMA_FILE + ".tmp")
+    tmp.write_text(schema.json())
+    os.replace(tmp, root / SCHEMA_FILE)
+
+
+def record_table_schema(df: DataFrame, root: str | Path, partition_by=None) -> None:
+    """Record the read schema of a whole table just written from ``df``
+    at ``root`` (an ANN index base), so its readers skip the parquet
+    schema-inference job. Call after the write: an overwrite removes the
+    directory, file included."""
+    root = Path(root)
+    schema = _written_schema(df.schema, root, partition_by, batch=False)
+    if schema is not None:
+        _write_schema_file(root, schema)
+
+
+def record_store_schema(
+    store: str | Path, df_schema: StructType, batch_id: int, written: Path, partition_by=None
+) -> None:
+    """Record the read schema of a batch store from the frame batch
+    ``batch_id`` was written from (``written`` = its partition dirs), or
+    check it against the recorded one. A batch may leave out data
+    columns (the recorded read gives them as null); one that adds a
+    column, types one differently or partitions differently would be
+    read wrongly, so that raises ``ValueError`` naming both schemas.
+    The file is first written while the store holds no other batch's
+    data, so it describes every data dir; a store that predates it
+    keeps being read by inference."""
+    store = Path(store)
+    schema = _written_schema(df_schema, Path(written), partition_by, batch=True)
+    if schema is None:
+        return
+    have = recorded_schema(store)
+    if have is not None:
+        if not _fits(schema, have):
+            raise ValueError(
+                f"batch {batch_id} of the store at {store} has schema "
+                f"{schema.simpleString()}, the store records "
+                f"{have.simpleString()}"
+            )
+    elif all(n == batch_id for n, _ in _batch_dirs(store)):
+        store.mkdir(parents=True, exist_ok=True)
+        _write_schema_file(store, schema)
+
+
 def append_batch_increment(
     df: DataFrame,
     store: str | Path,
@@ -568,7 +714,12 @@ def append_batch_increment(
     With ``partition_by``, rows are hash-clustered onto tasks by the
     partition column first — otherwise every task writes a sliver into
     every partition value's directory (n_values × tasks small files per
-    batch)."""
+    batch).
+
+    The increment is written in the store's recorded column order and
+    checked against, or recorded as, the store's schema
+    (:func:`record_store_schema`) before its rename: a refused batch
+    leaves nothing behind."""
     store = Path(store)
     # Cache across the emptiness probe and the write: both evaluate the
     # (often join/aggregation-heavy) gate output, and without the cache
@@ -601,16 +752,22 @@ def append_batch_increment(
         tmp = store.parent / f".{store.name}.b{batch_id}.tmp"
         if tmp.exists():
             shutil.rmtree(tmp)
+        out = _in_recorded_order(df, recorded_schema(store))
         if partition_by:
             cols = (
                 [partition_by] if isinstance(partition_by, str) else list(partition_by)
             )
-            clustered = df.repartition(*[F.col(c) for c in cols])
+            clustered = out.repartition(*[F.col(c) for c in cols])
             clustered.write.mode("overwrite").partitionBy(*cols).parquet(
                 str(tmp)
             )
         else:
-            df.write.mode("overwrite").parquet(str(tmp))
+            out.write.mode("overwrite").parquet(str(tmp))
+        try:
+            record_store_schema(store, out.schema, batch_id, tmp, partition_by)
+        except ValueError:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
         final = store / f"ingest_batch={batch_id}"
         if final.exists():
             shutil.rmtree(final)
@@ -669,6 +826,7 @@ def write_initial_consolidated(
             ).parquet(str(tmp))
         else:
             df.write.mode("overwrite").parquet(str(tmp))
+        record_store_schema(store, df.schema, -1, tmp, partition_by)
         final = store / "ingest_batch=-1"
         if final.exists():
             shutil.rmtree(final)
@@ -730,11 +888,44 @@ def read_batch_store(
     INFERENCE — mandatory for stores partitioned by a string key whose
     values can look numeric (the group-texts stream's md5-hex shards:
     an all-numeric population of dirs like ``shard=07`` would otherwise
-    infer int and silently corrupt the value to 7)."""
+    infer int and silently corrupt the value to 7). Without it the
+    store's recorded schema (:func:`recorded_schema`) is used, so the
+    view is built without a Spark job."""
     store = Path(store)
-    reader = spark.read.schema(schema) if schema else spark.read
-    df = reader.parquet(str(store))
+    df = _reader(spark, schema or recorded_schema(store)).parquet(str(store))
     return df.filter(_live_filter(_read_marker(store)))
+
+
+def _reader(spark: SparkSession, schema):
+    return spark.read.schema(schema) if schema else spark.read
+
+
+def _leaves(dirs: list[Path], partition: tuple[str, list] | None) -> list[Path]:
+    """``dirs``, or with ``partition=(column, values)`` their existing
+    ``column=value`` leaves."""
+    if partition is None:
+        return dirs
+    col, values = partition
+    leaves = [d / f"{col}={v}" for d in dirs for v in sorted(set(values))]
+    return [p for p in leaves if p.is_dir()]
+
+
+def read_table(
+    spark: SparkSession, root: str | Path, partition: tuple[str, list] | None = None
+) -> DataFrame | None:
+    """A whole parquet table (an ANN index base) with its recorded
+    schema. ``partition=(column, values)`` hands Spark only those
+    ``column=value`` leaves (``basePath`` = the table, so the columns are
+    unchanged; None when none exists), as :func:`read_store` does."""
+    root = Path(root)
+    reader = _reader(spark, recorded_schema(root))
+    if partition is None:
+        return reader.parquet(str(root))
+    paths = _leaves([root], partition)
+    if not paths:
+        return None
+    df = reader.option("basePath", str(root)).parquet(*map(str, paths))
+    return df.filter(F.col(partition[0]).isin(list(partition[1])))
 
 
 def _live_filter(marker: dict | None):
@@ -777,40 +968,48 @@ def read_store(
     columns are unchanged). A whole-store read lists every leaf first,
     which above Spark's parallel-discovery threshold (32 paths) is a
     Spark job of its own. The same bounds stay on the frame as
-    planning-time partition filters. None when no such leaf exists."""
+    planning-time partition filters. None when no such leaf exists.
+
+    Without ``schema`` every form reads with the store's recorded schema
+    (the increment form without its ``ingest_batch`` column), so no
+    parquet schema-inference job runs; a store that predates the file is
+    read by inference."""
     store = Path(store)
     if batch_id is not None:
         inc = store / f"ingest_batch={batch_id}"
-        return spark.read.parquet(str(inc)) if inc.exists() else None
+        if not inc.exists():
+            return None
+        recorded = recorded_schema(store)
+        if recorded is not None:
+            recorded = StructType([f for f in recorded if f.name != "ingest_batch"])
+        return _reader(spark, recorded).parquet(str(inc))
+    schema = schema or recorded_schema(store)
     if up_to is None and partition is None:
         return read_batch_store(spark, store, schema) if has_data(store) else None
     marker = _read_marker(store)
-    paths = [
+    live = [
         p
         for n, p in _batch_dirs(store)
         if _is_live(n, marker) and (up_to is None or n < 0 or n <= up_to)
     ]
-    if partition is not None:
-        col, values = partition
-        paths = [p / f"{col}={v}" for p in paths for v in sorted(set(values))]
-        paths = [p for p in paths if p.is_dir()]
+    paths = _leaves(live, partition)
     if not paths:
         return None
-    reader = spark.read.schema(schema) if schema else spark.read
-    df = reader.option("basePath", str(store)).parquet(*map(str, paths))
+    df = _reader(spark, schema).option("basePath", str(store)).parquet(*map(str, paths))
     df = df.filter(_live_filter(marker))
     if up_to is not None:
         df = df.filter((F.col("ingest_batch") <= up_to) | (F.col("ingest_batch") < 0))
     if partition is not None:
-        df = df.filter(F.col(col).isin(list(values)))
+        df = df.filter(F.col(partition[0]).isin(list(partition[1])))
     return df
 
 
 def has_data(store: str | Path) -> bool:
     """True when :func:`read_store` would return a view. For the few
-    folds whose read hangs on a further driver-side condition: creating
-    the view is itself a Spark job (parquet schema inference), so those
-    test first and read only when the probe has something to look up."""
+    folds whose read hangs on a further driver-side condition: a store
+    without a recorded schema builds its view with a Spark job (parquet
+    schema inference), so those test first and read only when the probe
+    has something to look up."""
     return any(Path(store).glob("ingest_batch=*"))
 
 
@@ -966,7 +1165,7 @@ def consolidate_batch_store(
         live = live.filter(F.col("ingest_batch") <= up_to)
     live = live.drop("ingest_batch")
     if transform is not None:
-        live = transform(live)
+        live = _in_recorded_order(transform(live), recorded_schema(store))
     tmp = store / f".consolidate.{-new_id}.tmp"
     if tmp.exists():
         shutil.rmtree(tmp)
@@ -1124,6 +1323,7 @@ def audit_batch_store(store: str | Path) -> list[str]:
                 "batchstore.backfill_empty_sentinels)"
             )
 
+    problems.extend(_audit_schema(store))
     now = _time.time()
     for p in store.parent.glob(f".{store.name}.b*.tmp"):
         if _stale_tmp(p, now):
@@ -1131,6 +1331,49 @@ def audit_batch_store(store: str | Path) -> list[str]:
     for p in store.glob(".consolidate.*.tmp"):
         if _stale_tmp(p, now):
             problems.append(f"{p}: stale consolidation tmp (crashed fold)")
+    return problems
+
+
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _audit_schema(store: Path) -> list[str]:
+    """The recorded-schema half of :func:`audit_batch_store`: a store
+    holding data without :data:`SCHEMA_FILE` (every read of it runs an
+    inference job), an unreadable file, or a file that disagrees with
+    the Spark schema in a batch dir's first parquet footer (read with
+    pyarrow on the driver: no Spark job) — a footer column it lacks or
+    types differently, the appends :func:`record_store_schema`
+    refuses."""
+    import pyarrow.parquet as pq
+
+    dirs = _batch_dirs(store)
+    if not dirs:
+        return []
+    try:
+        recorded = recorded_schema(store)
+    except (OSError, ValueError, KeyError, TypeError):
+        return [f"{store}: unreadable {SCHEMA_FILE}"]
+    if recorded is None:
+        return [
+            f"{store}: holds data but records no {SCHEMA_FILE} (written "
+            "before schemas were recorded): every read infers the schema "
+            "with a Spark job until the store is rebuilt"
+        ]
+    problems = []
+    for _, d in dirs:
+        footer = min(d.rglob("*.parquet"), default=None)
+        meta = pq.read_schema(footer).metadata or {} if footer else {}
+        if _SPARK_ROW_METADATA not in meta:
+            continue
+        written = _as_nullable(StructType.fromJson(json.loads(meta[_SPARK_ROW_METADATA])))
+        parts = {seg.split("=", 1)[0] for seg in footer.relative_to(store).parts[:-1]}
+        data = StructType([f for f in recorded if f.name not in parts])
+        if not _fits(written, data):
+            problems.append(
+                f"{footer}: footer schema {written.simpleString()} disagrees "
+                f"with the recorded {data.simpleString()}"
+            )
     return problems
 
 

@@ -22,6 +22,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.functions import pandas_udf
 
+from ..batchstore import record_table_schema
 from ..functions.vectorfn import as_double, cosine
 
 _LSH_SEED = 42
@@ -67,12 +68,33 @@ def _cosine_topk(
     cand: DataFrame, qvals: list, k: int, id_col: str, vec_col: str
 ) -> DataFrame:
     """Exact-cosine top-k of ``cand`` against the query's collected
-    values as an ``array<double>`` literal. A collected float is the
-    exact double ``as_double`` casts the same element to, so every
-    ``sim`` is bit-identical to scoring against the query column."""
-    q = F.array(*[F.lit(v) for v in qvals]).cast("array<double>")
+    values: the vector as ONE ``array<double>`` literal and its norm
+    folded on the driver, in the same left-to-right double order as
+    ``l2_norm``, as one double literal. Element-wise literals put the
+    vector into the tree three times (``dot`` and twice in the query's
+    ``l2_norm``), and building that select cost ~0.1 s of driver time
+    per probe. A collected float is the exact double ``as_double`` casts
+    the same element to, and Python and the JVM share IEEE ``+``, ``*``
+    and correctly rounded ``sqrt``, so every ``sim`` is bit-identical to
+    scoring against the query column. A null element nulls every
+    ``sim``, as it does there."""
+    import math
+
+    import numpy as np
+
+    from ..functions.vectorfn import dot, l2_norm
+
+    q_norm = None
+    if None not in qvals:
+        acc = 0.0
+        for v in qvals:  # not sum(): Python 3.12+ compensates its float sums
+            acc += v * v
+        q_norm = math.sqrt(acc)
+    q = F.lit(np.array([np.nan if v is None else v for v in qvals], dtype=np.float64))
+    e_vec = as_double(F.col(vec_col))
     sims = cand.select(
-        F.col(id_col), cosine(as_double(F.col(vec_col)), q).alias("sim")
+        F.col(id_col),
+        (dot(e_vec, q) / (l2_norm(e_vec) * F.lit(q_norm).cast("double"))).alias("sim"),
     )
     return sims.orderBy(F.col("sim").desc(), F.col(id_col)).limit(k)
 
@@ -206,6 +228,7 @@ def lsh_build_index(
     bucketed.write.mode("overwrite").partitionBy("bucket").parquet(
         str(index_dir / "bucketed")
     )
+    record_table_schema(bucketed, index_dir / "bucketed", "bucket")
     (index_dir / "lsh_meta.json").write_text(
         json.dumps({"dim": dim, "n_planes": n_planes, "seed": _LSH_SEED})
     )
@@ -246,10 +269,9 @@ def lsh_topk_indexed(
     if probe_hamming >= 1:
         probes += [bucket ^ (1 << i) for i in range(n_planes)]
 
-    bucketed = _with_increments(
-        spark, index_dir / "bucketed", index_dir / "bucketed_inc"
+    cand = _with_increments(
+        spark, index_dir / "bucketed", index_dir / "bucketed_inc", ("bucket", probes)
     )
-    cand = bucketed.filter(F.col("bucket").isin(probes))
     return _cosine_topk(cand, qvals, k, id_col, vec_col)
 
 
@@ -496,6 +518,7 @@ def ivf_build_index(
     centroids = ivf_fit_centroids(embeddings, n_clusters=n_clusters, id_col=id_col, vec_col=vec_col)
     assigned = ivf_assign(embeddings, centroids, vec_col)
     assigned.write.mode("overwrite").partitionBy("cluster").parquet(str(index_dir / "assigned"))
+    record_table_schema(assigned, index_dir / "assigned", "cluster")
     (index_dir / "centroids.json").write_text(
         json.dumps([[float(x) for x in c] for c in centroids])
     )
@@ -529,10 +552,9 @@ def ivf_topk_indexed(
     qvec /= max(np.linalg.norm(qvec), 1e-12)
     probe = [int(p) for p in np.argsort(-(centroids @ qvec))[:n_probe]]
 
-    assigned = _with_increments(
-        spark, index_dir / "assigned", index_dir / "assigned_inc"
+    cand = _with_increments(
+        spark, index_dir / "assigned", index_dir / "assigned_inc", ("cluster", probe)
     )
-    cand = assigned.filter(F.col("cluster").isin(probe))
     return _cosine_topk(cand, qvals, k, id_col, vec_col)
 
 
@@ -730,12 +752,9 @@ def pq_build_index(
         id_col=id_col,
         vec_col=vec_col,
     )
-    (
-        pq_encode(embeddings, books, vec_col)
-        .select(id_col, "pq_code")
-        .write.mode("overwrite")
-        .parquet(str(index_dir / "codes"))
-    )
+    codes = pq_encode(embeddings, books, vec_col).select(id_col, "pq_code")
+    codes.write.mode("overwrite").parquet(str(index_dir / "codes"))
+    record_table_schema(codes, index_dir / "codes")
     (index_dir / "codebooks.json").write_text(
         json.dumps([[[float(x) for x in c] for c in b] for b in books])
     )
@@ -767,18 +786,26 @@ def _write_increment(df: DataFrame, inc_root, batch_id: int, partition_by=None) 
     append_batch_increment(df, inc_root, batch_id, partition_by=partition_by)
 
 
-def _with_increments(spark, base, inc) -> DataFrame:
-    """The full index table: base ∪ increments (if any). Both sides carry
-    the pruning column as a partition column, so a driver-side
-    ``isin`` filter prunes partitions on each. The increment side goes
-    through ``batchstore.read_store`` so a consolidated store (see
-    :func:`compact_index_increments`) serves the same view."""
-    from ..batchstore import read_store
+def _with_increments(spark, base, inc, partition=None) -> DataFrame:
+    """The index table: base ∪ increments (if any), read with their
+    recorded schemas, so building the view runs no schema-inference
+    job. ``partition=(column, values)`` narrows both sides to the probed
+    ``bucket=`` / ``cluster=`` leaves when they are LISTED
+    (``batchstore.read_table`` / ``read_store``), so a probe lists no
+    other leaf and, however many buckets or clusters the index holds,
+    runs no listing job; the ``isin`` stays as a planning-time partition
+    filter. The increment side goes through ``read_store`` so a
+    consolidated store (see :func:`compact_index_increments`) serves the
+    same view."""
+    from ..batchstore import read_store, read_table
 
-    df = spark.read.parquet(str(base))
-    inc_view = read_store(spark, inc)
+    df = read_table(spark, base, partition)
+    inc_view = read_store(spark, inc, partition=partition)
     if inc_view is not None:
-        df = df.unionByName(inc_view.drop("ingest_batch"))
+        inc_view = inc_view.drop("ingest_batch")
+        df = inc_view if df is None else df.unionByName(inc_view)
+    if df is None:  # no probed leaf at all: the empty, filtered whole base
+        df = read_table(spark, base).filter(F.col(partition[0]).isin(list(partition[1])))
     return df
 
 

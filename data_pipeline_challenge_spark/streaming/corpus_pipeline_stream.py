@@ -65,6 +65,7 @@ from ..batchstore import (
     canonical_column_str,
     ensure_store_params,
     maybe_consolidate_in_stream,
+    read_store,
     run_view,
 )
 
@@ -176,7 +177,6 @@ def _sync_index_revocations(
     an unmounted index would silently recreate the revoked-doc-served
     bug — delete the entry from ``_retrieval_index.json`` if the index
     was deliberately abandoned."""
-    from ..batchstore import read_store
     from . import retrieval_stream
 
     revoked = read_store(spark, funnel_dir / "near" / "revoked")
@@ -272,9 +272,7 @@ def revoke_corpus_eval_generation(
 
         record_anti_join_key(odir / "near" / "revoked", id_col)
         if append_batch_increment(rev, odir / "near" / "revoked", gen):
-            out = spark.read.parquet(
-                str(odir / "near" / "revoked" / f"ingest_batch={gen}")
-            )
+            out = read_store(spark, odir / "near" / "revoked", gen)
     # Index propagation BEFORE the stage-ledger commit, so a crash in
     # between re-runs the full path (the fingerprint is not yet in the
     # ledger) and the idempotent whole-store sync converges.

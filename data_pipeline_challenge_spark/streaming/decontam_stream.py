@@ -284,7 +284,7 @@ def add_eval_generation(
     _rewrite_pin()
     if not wrote:
         return revocations  # nothing revoked (empty frame, evidence schema)
-    return spark.read.parquet(str(odir / "revoked" / f"ingest_batch={gen}"))
+    return read_store(spark, odir / "revoked", gen)
 
 
 def contamination_log(spark: SparkSession, out_dir: str | Path) -> DataFrame | None:

@@ -71,6 +71,8 @@ from ..batchstore import (
     append_batch_increment,
     consolidate_stores,
     read_store,
+    read_table,
+    record_table_schema,
     run_view,
 )
 from ..functions.vectorfn import as_double, cosine
@@ -139,7 +141,7 @@ def fold_batch(
     if not admit_batch(idx, batch_id, inc_store, floor=base_batch):
         kept = read_store(spark, inc_store, batch_id)
         if kept is None and base_batch == batch_id and (idx / "bucketed").exists():
-            kept = spark.read.parquet(str(idx / "bucketed"))
+            kept = read_table(spark, idx / "bucketed")
         return kept
 
     first = not meta_p.exists()
@@ -200,8 +202,9 @@ def fold_batch(
                 }
             )
             hist = (
-                _with_increments(spark, idx / "bucketed", inc_store)
-                .filter(F.col("bucket").isin(probe_buckets))
+                _with_increments(
+                    spark, idx / "bucketed", inc_store, ("bucket", probe_buckets)
+                )
                 .select(
                     F.col(id_col).alias("ref_id"),
                     as_double(F.col(vec_col)).alias("ref_vec"),
@@ -246,6 +249,7 @@ def fold_batch(
             kept.repartition(F.col("bucket")).write.mode(
                 "overwrite"
             ).partitionBy("bucket").parquet(str(idx / "bucketed"))
+            record_table_schema(kept, idx / "bucketed", "bucket")
             meta_p.write_text(
                 json.dumps(
                     {
@@ -256,7 +260,7 @@ def fold_batch(
                     }
                 )
             )
-            return spark.read.parquet(str(idx / "bucketed"))
+            return read_table(spark, idx / "bucketed")
 
         # An all-duplicate batch keeps nothing: append_batch_increment
         # writes no parquet (a file-less partitioned dir would poison

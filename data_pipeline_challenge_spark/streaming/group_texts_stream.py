@@ -52,6 +52,7 @@ from ..batchstore import (
     maybe_consolidate_in_stream,
     read_batch_store,
     read_store,
+    record_store_schema,
     run_view,
 )
 from ..operators.packing import group_texts_blocks
@@ -308,6 +309,9 @@ def start_group_texts_stream(
             return
         slim.write.partitionBy("shard").mode("overwrite").parquet(
             str(rows_dir / f"ingest_batch={batch_id}")
+        )
+        record_store_schema(
+            rows_dir, slim.schema, batch_id, rows_dir / f"ingest_batch={batch_id}", "shard"
         )
 
         # Driver-side touched-shard literal read off the batch dir just

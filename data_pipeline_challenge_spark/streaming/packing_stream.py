@@ -53,6 +53,7 @@ from ..batchstore import (
     maybe_consolidate_in_stream,
     read_batch_store,
     read_store,
+    record_store_schema,
     run_view,
 )
 from ..operators.packing import pack_sequences_sharded
@@ -478,6 +479,9 @@ def start_packing_stream(
         # history scan) — overwrite makes a replayed append idempotent.
         slim.write.partitionBy("shard").mode("overwrite").parquet(
             str(rows_dir / f"ingest_batch={batch_id}")
+        )
+        record_store_schema(
+            rows_dir, slim.schema, batch_id, rows_dir / f"ingest_batch={batch_id}", "shard"
         )
 
         # Driver-side touched-shard list: bounded by n_shards, and a

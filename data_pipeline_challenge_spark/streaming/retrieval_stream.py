@@ -36,9 +36,10 @@ guarantee it in the composed funnel; a re-delivered id would double its
 tf — run behind exact dedup, as the funnel does).
 
 Revocation: the funnel's eval-generation upgrades retro-revoke kept
-docs; ``revoke_docs`` records (doc_id, dl) in a ``revoked`` store and
+docs; ``revoke_docs`` records (doc_id, dl) in a ``revoked`` store, then
+the store's cumulative counts in ``revoked_counts/b{G}.json``, and
 ``bm25_search`` both anti-joins candidates against it (before df) and
-subtracts its counts from N/avgdl — so search over a decontaminated
+subtracts those counts from N/avgdl — so search over a decontaminated
 warehouse equals batch BM25 over ``current_corpus`` post-revocation,
 without rewriting the totals files' pure-replay discipline.
 """
@@ -254,15 +255,50 @@ def revoke_docs(spark: SparkSession, out_dir: str | Path, doc_ids: DataFrame) ->
     ids = doc_ids.select(F.col(doc_ids.columns[0]).alias("doc_id")).distinct()
     rev_store = odir / "revoked"
     already = read_store(spark, rev_store)
+    gen = last_batch_id(rev_store)
+    prev = _revoked_counts(odir, already)
     if already is not None:
         ids = ids.join(F.broadcast(already.select("doc_id")), "doc_id", "left_anti")
+        # heal a crash between a generation's append and its counts
+        write_commit_file(odir / "revoked_counts", gen, prev)
     new = read_batch_store(spark, doclen_store).join(
         F.broadcast(ids), "doc_id", "left_semi"
     ).select("doc_id", "dl")
-    n = new.count()
-    if n:
-        append_batch_increment(new, rev_store, last_batch_id(rev_store) + 1)
-    return n
+    counts = _count_revoked(new)
+    if counts["nr"]:
+        # data first, then its commit file (the totals-file discipline)
+        append_batch_increment(new, rev_store, gen + 1)
+        write_commit_file(
+            odir / "revoked_counts", gen + 1, {k: prev[k] + counts[k] for k in counts}
+        )
+    return counts["nr"]
+
+
+def _count_revoked(revoked: DataFrame) -> dict:
+    """``{nr, nl, sdl}`` of (doc_id, dl) rows: rows, length-bearing rows
+    and the sum of their lengths, in one job."""
+    row = revoked.agg(
+        F.count(F.lit(1)).alias("nr"),
+        F.coalesce(F.sum((F.col("dl") > 0).cast("long")), F.lit(0)).alias("nl"),
+        F.coalesce(F.sum("dl"), F.lit(0)).alias("sdl"),
+    ).first()
+    return {k: int(row[k]) for k in ("nr", "nl", "sdl")}
+
+
+def _revoked_counts(odir: Path, revoked: DataFrame | None) -> dict:
+    """The ``revoked`` store's cumulative ``{nr, nl, sdl}``: the
+    ``revoked_counts/b{G}.json`` that ``revoke_docs`` commits after
+    appending generation ``G``, when ``G`` is the store's newest
+    generation, so a probe runs no job for them. After a crash between
+    the two writes, or on a store that predates the files, they are
+    aggregated from ``revoked`` (one job) instead."""
+    zero = {"nr": 0, "nl": 0, "sdl": 0}
+    if revoked is None:
+        return zero
+    rec, gen = latest_commit_file(odir / "revoked_counts", zero)
+    if gen != last_batch_id(odir / "revoked"):
+        return _count_revoked(revoked)
+    return rec
 
 
 def _revoked_view(spark: SparkSession, odir: Path) -> DataFrame | None:
@@ -276,27 +312,19 @@ def _effective_totals(spark: SparkSession, odir: Path):
     revoked docs' counts subtracted from N, and from avgdl's numerator/
     denominator only when length-bearing (a dl=0 revoked row is a
     zero-token doc: it was never part of the length statistics, so it
-    corrects n_docs alone). None before the first batch; ``n_docs <= 0``
-    signals an empty effective corpus (callers return their empty
-    frame)."""
+    corrects n_docs alone). The revoked counts are the ones
+    ``revoke_docs`` committed (:func:`_revoked_counts`) and the revoked
+    view is read with its recorded schema, so this runs no Spark job.
+    None before the first batch; ``n_docs <= 0`` signals an empty
+    effective corpus (callers return their empty frame)."""
     totals, tid = _latest_totals(odir)
     if tid < 0 or not (odir / "postings").exists():
         return None
-    n_docs = int(totals["n_docs"])
-    n_len_docs = int(totals.get("n_len_docs", n_docs))
-    sum_dl = int(totals["sum_dl"])
     revoked = _revoked_view(spark, odir)
-    if revoked is not None:
-        agg = revoked.agg(
-            F.count(F.lit(1)).alias("nr"),
-            F.coalesce(
-                F.sum((F.col("dl") > 0).cast("long")), F.lit(0)
-            ).alias("nl"),
-            F.coalesce(F.sum("dl"), F.lit(0)).alias("sdl"),
-        ).first()
-        n_docs -= int(agg["nr"])
-        n_len_docs -= int(agg["nl"])
-        sum_dl -= int(agg["sdl"])
+    rc = _revoked_counts(odir, revoked)
+    n_docs = int(totals["n_docs"]) - rc["nr"]
+    n_len_docs = int(totals.get("n_len_docs", totals["n_docs"])) - rc["nl"]
+    sum_dl = int(totals["sum_dl"]) - rc["sdl"]
     if n_docs <= 0 or n_len_docs <= 0:
         return 0, 1.0, tid, revoked
     return n_docs, sum_dl / n_len_docs, tid, revoked
@@ -327,9 +355,7 @@ def _pruned_postings(
     if n_docs <= 0:
         return None
     # driver-local: same expression as the store's partition layout,
-    # constant-folded — no cluster job per probe (batchstore.
-    # prefix_bucket_local; r19, guide §5 the driver should not wait on
-    # a job to hash a handful of literals)
+    # over a LocalRelation — no Spark job per probe
     buckets = prefix_bucket_local(spark, list(terms), _N_BUCKETS)
     postings = read_store(
         spark, odir / "postings", up_to=tid, partition=("term_bucket", buckets)
@@ -371,10 +397,11 @@ def bm25_search(
     is handed only the query terms' bucket leaves of the live batches,
     so a probe lists and scans the query's buckets, never the whole
     store (the bounds also stay as planning-time partition filters). df
-    is a ≤|query|-row broadcast; N/avgdl come from the totals file (zero
-    Spark jobs when nothing is revoked); dl rides on each posting, so NO
-    corpus-keyed join exists in the serving plan — the one shuffle is
-    the candidate-sized per-doc sum. Revoked docs (``revoke_docs``) are
+    is a ≤|query|-row broadcast; N/avgdl come from the totals file and
+    the revoked docs' committed counts (zero Spark jobs); dl rides on
+    each posting, so NO corpus-keyed join exists in the serving plan —
+    the one shuffle is the candidate-sized per-doc sum. Revoked docs
+    (``revoke_docs``) are
     anti-joined out BEFORE df is counted and subtracted from N/avgdl, so
     results equal batch BM25 over the post-revocation corpus. (State,
     scan, and arithmetic are the shared ``_effective_totals`` /

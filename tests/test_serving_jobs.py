@@ -3,10 +3,11 @@
 Each probe kind runs under its own job group and its jobs are counted
 with ``statusTracker``. Jobs are fixed latency (~0.1–0.3 s each on a
 small box), so a probe should launch only the jobs its query needs: the
-BM25 probe lists only the query's postings leaves (no listing job, even
-over an index with far more than Spark's 32-path parallel-discovery
-threshold of bucket dirs), and an ANN probe evaluates the caller's query
-frame once.
+BM25 probe hashes its terms without a job and lists only the query's
+postings leaves (no listing job, even over an index with far more than
+Spark's 32-path parallel-discovery threshold of bucket dirs), every
+store and index is read with its recorded schema (no footer-read job),
+and an ANN probe evaluates the caller's query frame once.
 """
 
 from __future__ import annotations
@@ -14,10 +15,10 @@ from __future__ import annotations
 import random
 import uuid
 
-#: jobs per probe, pinned. bm25: bucket hashing, postings footer read,
-#: four query jobs. lsh / ivf: query vector, index footer read, query.
-#: pq: one more job for the rerank's keyed join. hybrid: bm25 + lsh.
-BUDGET = {"bm25": 6, "lsh": 3, "ivf": 3, "pq": 4, "hybrid": 8}
+#: jobs per probe, pinned. bm25: four query jobs. lsh / ivf: query
+#: vector, query. pq: one more job for the rerank's keyed join. hybrid:
+#: bm25 + lsh, less the one job their fused plan shares.
+BUDGET = {"bm25": 4, "lsh": 2, "ivf": 2, "pq": 3, "hybrid": 5}
 
 
 def _jobs(spark, fn):
@@ -92,20 +93,61 @@ def test_probe_job_budget(spark, tmp_path):
     for kind, fn in probes.items():
         ids, names = _jobs(spark, fn)
         counts[kind] = len(ids)
-        if kind in ("bm25", "hybrid"):
-            # one footer read for the postings schema, no listing job
-            # (hybrid adds the LSH index's footer read)
-            reads = sum(n.startswith("parquet at") for n in names)
-            assert reads == (1 if kind == "bm25" else 2), (kind, names)
+        # every store and index is read with its recorded schema
+        assert not any(n.startswith("parquet at") for n in names), (kind, names)
         if kind != "bm25":
             # the query frame is evaluated by one action of the probe
             # and then scored as a literal, not broadcast again
             assert sum("similarity.py" in n for n in names) == 1, (kind, names)
-    assert counts == BUDGET
+    assert counts == BUDGET, counts
 
-    # With revocations, the hybrid probe reads the revoked store once and
-    # shares it between the BM25 totals and the ANN side's anti-join.
+    # With revocations, the hybrid probe reads the revoked store with its
+    # recorded schema and takes its counts from the committed record.
     rs.revoke_docs(spark, idx, spark.createDataFrame([(0,)], "doc_id long"))
     probes["hybrid"]()
     _, names = _jobs(spark, probes["hybrid"])
-    assert sum(n.startswith("parquet at") for n in names) == 3, names
+    assert not any(
+        n.startswith("parquet at") or n.startswith("first at retrieval_stream.py")
+        for n in names
+    ), names
+
+    # Building a store's view runs no job once its schema is recorded
+    # (a whole-store read of fewer than 32 leaves: more are listed by a
+    # job of their own, which is what ``partition=`` avoids).
+    from data_pipeline_challenge_spark.batchstore import read_store
+
+    for store in ("doclen", "revoked"):
+        ids, names = _jobs(spark, lambda: read_store(spark, idx / store))
+        assert ids == [], (store, names)
+
+
+def test_lsh_probe_lists_only_probed_buckets(spark, tmp_path):
+    """On an LSH index with 64 buckets (more leaves than Spark's 32-path
+    parallel-discovery threshold), in the base and in a live increment,
+    a probe hands Spark only its probed ``bucket=`` leaves: no listing
+    job, and the answer equals the in-flight ``ann_topk``."""
+    from data_pipeline_challenge_spark.operators import similarity as sim
+    from data_pipeline_challenge_spark.session import local_frame
+
+    rng = random.Random(11)
+    dim = 8
+    vecs = [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(600)]
+    emb = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<float>"
+    )
+    index = tmp_path / "lsh"
+    sim.lsh_build_index(emb.filter("vec_id < 400"), index, dim=dim, n_planes=6)
+    sim.append_index_increments(emb.filter("vec_id >= 400"), index, 0)
+    assert len(list((index / "bucketed").glob("bucket=*"))) > 32
+    assert len(list((index / "bucketed_inc").glob("ingest_batch=0/bucket=*"))) > 32
+
+    # a LocalRelation query: collecting its vector launches no job
+    query = local_frame(spark, [(vecs[7],)], "embedding array<float>")
+    probe = lambda: sim.lsh_topk_indexed(  # noqa: E731
+        spark, index, query, k=5, probe_hamming=1
+    ).collect()
+    probe()
+    ids, names = _jobs(spark, probe)
+    assert len(ids) == 1, names  # the query's own job, no listing job
+    expect = sim.ann_topk(emb, query, dim=dim, k=5, n_planes=6, probe_hamming=1)
+    assert probe() == expect.collect()

@@ -5161,6 +5161,63 @@ def test_revoke_zero_token_doc_corrects_n_docs(spark, tmp_path):
     assert revoke_docs(spark, out, spark.createDataFrame([(99,)], "doc_id long")) == 0
 
 
+def test_revoked_counts_survive_a_crash_between_writes(spark, tmp_path, monkeypatch):
+    """``revoke_docs`` appends a generation to the ``revoked`` store, then
+    commits the store's cumulative counts, which BM25 probes read instead
+    of aggregating the store. A crash between the two writes leaves the
+    probes correct (they aggregate while the newest generation has no
+    counts), and the next ``revoke_docs`` commits the missing counts
+    before its own."""
+    from pathlib import Path
+
+    from data_pipeline_challenge_spark.batchstore import last_batch_id, latest_commit_file
+    from data_pipeline_challenge_spark.streaming import retrieval_stream as rs
+
+    rows = [
+        (1, "spark shuffles partitioned data"),
+        (2, "dup rows need spark dedup"),
+        (3, "merge folds spark batches"),
+        (4, "spark merge stores data"),
+        (5, ""),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    out = tmp_path / "idx"
+    rs.fold_batch(spark, out, docs, 0, "doc_id", "text")
+    terms = ["spark", "merge", "data"]
+
+    def search():
+        return [(r["doc_id"], r["bm25"]) for r in rs.bm25_search(spark, out, terms).collect()]
+
+    def revoke(*ids):
+        return rs.revoke_docs(
+            spark, out, spark.createDataFrame([(i,) for i in ids], "doc_id long")
+        )
+
+    commit = rs.write_commit_file
+
+    def crash_at_counts(root, batch_id, rec):
+        if Path(root).name == "revoked_counts":
+            raise RuntimeError("crash between the append and its counts")
+        commit(root, batch_id, rec)
+
+    monkeypatch.setattr(rs, "write_commit_file", crash_at_counts)
+    with pytest.raises(RuntimeError):
+        revoke(1)
+    monkeypatch.setattr(rs, "write_commit_file", commit)
+    assert last_batch_id(out / "revoked") == 0
+    assert latest_commit_file(out / "revoked_counts", {})[1] == -1
+    assert search() == _batch_bm25_want(docs.filter("doc_id != 1"), terms)
+
+    assert revoke(3, 5) == 2
+    assert json.loads((out / "revoked_counts" / "b0.json").read_text()) == {
+        "nr": 1, "nl": 1, "sdl": 4,
+    }
+    assert latest_commit_file(out / "revoked_counts", {}) == (
+        {"nr": 3, "nl": 2, "sdl": 8}, 1,
+    )
+    assert search() == _batch_bm25_want(docs.filter("doc_id not in (1, 3, 5)"), terms)
+
+
 def test_overlap_stream_equals_batch(spark, tmp_path):
     """The incrementally-maintained source-overlap matrix (streaming IVM
     of source_shingle_overlap) must row-equal the batch view over
