@@ -48,6 +48,8 @@ import json
 import os
 import re
 import shutil
+from collections.abc import Callable, Mapping
+from dataclasses import dataclass, field
 from pathlib import Path
 
 import pyspark.sql.functions as F
@@ -1427,13 +1429,13 @@ def consolidate_stores(
 ) -> dict[str, int]:
     """Fold every existing store of a view with
     :func:`consolidate_batch_store` — the one store loop behind both the
-    offline ``compact_*`` maintenance and the in-stream hook.
+    offline :func:`compact_view` and the in-stream hook.
 
-    ``stores`` maps store path -> partition_by columns (or None), the
-    view module's ``_store_map``. ``up_to`` bounds every fold (offline:
-    the view's commit frontier; in-stream: the previous batch).
-    ``transforms`` maps store path -> fold-time rewrite (the view's
-    ``_transforms``; see :func:`consolidate_batch_store`'s
+    ``stores`` maps store path -> partition_by columns (or None), a
+    :class:`View`'s ``stores`` placed at its dir (:func:`view_stores`).
+    ``up_to`` bounds every fold (offline: the view's commit frontier;
+    in-stream: the previous batch). ``transforms`` maps store path ->
+    fold-time rewrite (see :func:`consolidate_batch_store`'s
     ``transform``). ``unbounded`` names stores whose batch ids live in an
     INDEPENDENT id space (e.g. the retrieval index's ``revoked`` store,
     written on its own generation counter while the stream is stopped,
@@ -1495,35 +1497,19 @@ def run_view(
     source_dir: str | Path,
     schema: str,
     checkpoint_dir: str | Path,
-    fold,
+    process_batch,
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
-    stores: dict | None = None,
-    consolidate_every: int | None = None,
-    transforms: dict | None = None,
-    unbounded: set | frozenset | None = None,
 ) -> StreamingQuery:
     """The one stream runner behind every maintained parquet view: a
     file source over ``source_dir`` (``schema`` DDL, at most
     ``max_files_per_trigger`` files per micro-batch), each micro-batch
-    handed to ``fold(batch_df, batch_id)`` under the ``checkpoint_dir``
-    checkpoint — the exactly-once contract every view's fold is written
-    against. ``available_now=True`` drains what has landed and stops;
-    ``False`` runs continuously.
-
-    After each fold the runner owns the in-stream hook: with the view's
-    ``stores`` map it runs :func:`maybe_consolidate_in_stream` every
-    ``consolidate_every`` batches (``transforms`` and ``unbounded`` as
-    there). Views whose fold consolidates its own stores pass no
-    ``stores``."""
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold(batch_df, batch_id)
-        if stores is not None:
-            maybe_consolidate_in_stream(
-                spark, stores, batch_id, consolidate_every, unbounded, transforms
-            )
-
+    handed to ``process_batch(batch_df, batch_id)`` under the
+    ``checkpoint_dir`` checkpoint — the exactly-once contract every
+    view's fold is written against. ``available_now=True`` drains what
+    has landed and stops; ``False`` runs continuously. Declared views
+    run through :func:`start_view`; the views that consolidate inside
+    their own fold call it directly."""
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -1535,3 +1521,105 @@ def run_view(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+@dataclass(frozen=True)
+class View:
+    """One maintained parquet view, declared once: what
+    :func:`start_view` streams and what :func:`compact_view` folds.
+
+    - ``fold(spark, out_dir, batch_df, batch_id, **params)`` — the view
+      module's ``fold_batch``;
+    - ``stores`` — store name -> partition_by columns (or None);
+    - ``transforms`` — store name -> ``rewrite_for(out_dir)``, which
+      returns the store's fold-time rewrite (see
+      :func:`consolidate_batch_store`'s ``transform``; rewrites that
+      read the view's pinned params get its dir);
+    - ``unbounded`` — stores on an independent id space (the retrieval
+      index's ``revoked`` generations): both folds leave them unbounded;
+    - ``frontier`` — the offline bound, the view's commit frontier:
+      ``None`` (no bound), ``frontier(out_dir) -> int``, or the name of
+      the store whose last batch id IS the frontier (that store then
+      folds unbounded offline — bounding it by itself says nothing);
+    - ``chained`` — (dir, view) pairs of other views this view's fold
+      writes into (the near-dedup gate's component view); the in-stream
+      hook maintains their stores too.
+
+    In-stream the bound is always the previous batch, ``unbounded``
+    exempt (:func:`maybe_consolidate_in_stream`)."""
+
+    fold: Callable
+    stores: Mapping[str, list | None]
+    transforms: Mapping[str, Callable] = field(default_factory=dict)
+    unbounded: frozenset = frozenset()
+    frontier: str | Callable[[Path], int] | None = None
+    chained: tuple = ()
+
+
+def view_stores(placed) -> tuple[dict, dict, set]:
+    """:func:`consolidate_stores`' ``(stores, transforms, unbounded)``
+    for views placed at dirs — ``placed`` is (dir, View) pairs, so one
+    call builds a composition's store union (the corpus funnel)."""
+    stores: dict = {}
+    transforms: dict = {}
+    unbounded: set = set()
+    for d, view in placed:
+        d = Path(d)
+        stores.update({d / name: part for name, part in view.stores.items()})
+        transforms.update({d / name: t(d) for name, t in view.transforms.items()})
+        unbounded.update(d / name for name in view.unbounded)
+    return stores, transforms, unbounded
+
+
+def start_view(
+    spark: SparkSession,
+    view: View,
+    source_dir: str | Path,
+    out_dir: str | Path,
+    checkpoint_dir: str | Path,
+    schema: str,
+    *,
+    max_files_per_trigger: int | None = None,
+    available_now: bool = True,
+    consolidate_every: int | None = 64,
+    **fold_params,
+) -> StreamingQuery:
+    """Stream the parquet files under ``source_dir`` (``schema`` DDL)
+    into ``view`` at ``out_dir``: each micro-batch runs
+    ``view.fold(spark, out_dir, batch_df, batch_id, **fold_params)``,
+    then the in-stream hook folds the view's (and its chained views')
+    stores up to the previous batch every ``consolidate_every`` batches
+    (``None`` = offline-only, :func:`compact_view`).
+    ``available_now=True`` drains what has landed and stops."""
+    odir = Path(out_dir)
+    odir.mkdir(parents=True, exist_ok=True)
+    stores, transforms, unbounded = view_stores([(odir, view), *view.chained])
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        view.fold(spark, odir, batch_df, batch_id, **fold_params)
+        maybe_consolidate_in_stream(
+            spark, stores, batch_id, consolidate_every, unbounded, transforms
+        )
+
+    return run_view(
+        spark, source_dir, schema, checkpoint_dir, process_batch,
+        max_files_per_trigger, available_now,
+    )
+
+
+def compact_view(
+    spark: SparkSession, view: View, out_dir: str | Path
+) -> dict[str, int]:
+    """OFFLINE: fold every store of ``view`` at ``out_dir`` (run while
+    its stream is not), bounded at the view's commit ``frontier`` with
+    its ``unbounded`` stores exempt. Returns {store name: dirs folded or
+    swept}."""
+    odir = Path(out_dir)
+    stores, transforms, unbounded = view_stores([(odir, view)])
+    up_to = None
+    if isinstance(view.frontier, str):
+        up_to = last_batch_id(odir / view.frontier)
+        unbounded.add(odir / view.frontier)
+    elif view.frontier is not None:
+        up_to = view.frontier(odir)
+    return consolidate_stores(spark, stores, up_to, transforms, unbounded)

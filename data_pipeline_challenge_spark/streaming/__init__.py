@@ -26,22 +26,25 @@ order), ``retention_stream`` (day-granular activity set serving
 any cohort granularity), and ``paths_stream`` (per-user-day first-3
 path prefixes — bottom-k merge with payload).
 
-One runner, one fold protocol: every maintained view reads parquet
-files through ``batchstore.run_view`` (file source → ``foreachBatch`` →
-checkpoint → trigger) and supplies only its fold — ``ingest_stream``
-alone keeps its own binaryFile source. Each view module names its batch
-stores once, in ``_store_map(dir)`` (store path → partition columns)
-and ``_transforms(dir)`` (store path → fold-time rewrite). The runner
-takes them with the fold and runs the in-stream hook
+One spec, one runner, one fold protocol: every maintained parquet view
+declares itself once, as a module-level ``VIEW = batchstore.View(...)``
+— its fold (``fold_batch``), its batch stores (name → partition
+columns), fold-time rewrites, stores on their own id space
+(``unbounded``) and its offline commit ``frontier``.
+``batchstore.start_view(spark, X.VIEW, ...)`` streams parquet files
+through the one runner, ``batchstore.run_view`` (file source →
+``foreachBatch`` → checkpoint → trigger), and runs the in-stream hook
 (``batchstore.maybe_consolidate_in_stream``, bounded at the previous
-batch) itself; views that consolidate inside their own fold (the
-composed funnel, packing, group-texts, the ANN index and the
-resequenced wrappers) call the hook directly. The offline ``compact_*``
-(bounded at the view's commit frontier) folds the same map through the
-one store loop, ``batchstore.consolidate_stores``. Each fold opens with
-one admission call, ``batchstore.admit_batch`` (layout pin, commit id
-over the view's commit stores, sequential-numbering guard), and reads
-stores through one reader, ``batchstore.read_store`` (the live view,
-one batch's increment for a replay's read-back, or None before any
-data).
+batch) after each fold; ``batchstore.compact_view(spark, X.VIEW, dir)``
+folds the same stores offline, bounded at the frontier, through the one
+store loop, ``batchstore.consolidate_stores``. ``decontam_stream`` and
+``near_dedup_stream`` keep a thin ``start_*`` for their pre-stream setup;
+views that consolidate inside their own fold (the composed funnel,
+packing, group-texts, the ANN index and the resequenced wrappers) call
+``run_view`` and the hook directly, and ``ingest_stream`` alone keeps
+its own binaryFile source. Each fold opens with one admission call,
+``batchstore.admit_batch`` (layout pin, commit id over the view's commit
+stores, sequential-numbering guard), and reads stores through one
+reader, ``batchstore.read_store`` (the live view, one batch's increment
+for a replay's read-back, or None before any data).
 """

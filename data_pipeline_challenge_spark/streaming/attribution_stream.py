@@ -44,8 +44,8 @@ timestamps together by construction):
 :func:`start_resequenced_attribution_stream` buffers arrivals and
 releases event-time-contiguous slabs into the fold, making the
 contract hold BY CONSTRUCTION for any disorder up to ``delay_us``
-(later events drop + count — watermark semantics). The plain
-:func:`start_attribution_stream` stays available for in-order feeds;
+(later events drop + count — watermark semantics). The plain stream,
+``batchstore.start_view(spark, VIEW, ...)``, stays available for in-order feeds;
 ``test_attribution_stream_out_of_order_fails_then_resequencer_fixes``
 pins the failure schedule first, the repo's discipline for documented
 contracts.
@@ -69,9 +69,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    View,
     admit_batch,
     append_batch_increment,
-    consolidate_stores,
     last_batch_id,
     read_store,
     run_view,
@@ -82,14 +82,9 @@ from ..operators.attribution import (
     touch_rollup,
 )
 
-_STORES: tuple[tuple[str, list | None], ...] = (("attrib", None), ("frontier", None))
 
 _CONV_TYPE = "purchase"
 _TOUCH_TYPES = ("click", "view")
-
-
-def _store_map(odir: Path) -> dict:
-    return {odir / name: part for name, part in _STORES}
 
 
 def _latest_per_user(df: DataFrame) -> DataFrame:
@@ -125,10 +120,11 @@ def fold_batch(
 ) -> None:
     """Fold ONE micro-batch of events into the maintained attribution
     counts. ``batch_df`` needs (event_id, user_id, event_type, value)
-    plus ``t_us`` (timezone-agnostic epoch micros — the stream wrappers
-    derive it via ``catalog.ts_epoch_us``). Requires the per-user
-    event-time ordering contract (module docstring); idempotent via the
-    min-across-stores replay guard, attrib before frontier.
+    plus ``t_us`` (timezone-agnostic epoch micros), derived from ``ts``
+    via ``catalog.ts_epoch_us`` when absent (a raw event file). Requires
+    the per-user event-time ordering contract (module docstring);
+    idempotent via the min-across-stores replay guard, attrib before
+    frontier.
 
     The guard is strict (``batchstore.sequential_fold_guard``, r18): a
     gapped batch id on a store with history — a stale pre-rebuild or
@@ -154,6 +150,10 @@ def fold_batch(
     ):
         return
 
+    if "t_us" not in batch_df.columns:
+        from ..catalog import ts_epoch_us
+
+        batch_df = batch_df.withColumn("t_us", ts_epoch_us(batch_df, "ts"))
     ev = batch_df.select(
         "event_id", "user_id", "event_type", "value", "t_us"
     ).cache()
@@ -232,21 +232,6 @@ def _attrib_collapse(df: DataFrame) -> DataFrame:
     )
 
 
-def _transforms(odir: Path) -> dict:
-    return {
-        odir / "attrib": _attrib_collapse,
-        odir / "frontier": _frontier_collapse,
-    }
-
-
-def compact_attribution_store(
-    spark: SparkSession, out_dir: str | Path
-) -> dict[str, int]:
-    """OFFLINE consolidation (run while the stream is not)."""
-    odir = Path(out_dir)
-    return consolidate_stores(spark, _store_map(odir), transforms=_transforms(odir))
-
-
 def rebuild_attribution_store(
     spark: SparkSession,
     out_dir: str | Path,
@@ -320,45 +305,6 @@ def rebuild_attribution_store(
     rebuild_swap(out_dir, _build)
 
 
-def start_attribution_stream(
-    spark: SparkSession,
-    events_dir: str | Path,
-    out_dir: str | Path,
-    checkpoint_dir: str | Path,
-    schema: str,
-    lookback_us: int = LOOKBACK_US,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    consolidate_every: int | None = 64,
-) -> StreamingQuery:
-    """Stream event parquet files into the maintained attribution
-    counts — STRICTLY-ordered feeds only: per-user event time never
-    runs backwards across batches AND same-instant events for a user
-    land in the same batch (the module docstring's tie caveat — a
-    conversion/touch tie split across batches silently counts
-    'direct' here). Tie-capable or out-of-order feeds must use
-    :func:`start_resequenced_attribution_stream` instead."""
-    from ..catalog import ts_epoch_us
-
-    odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        fold_batch(
-            spark,
-            odir,
-            batch_df.withColumn("t_us", ts_epoch_us(batch_df, "ts")),
-            batch_id,
-            lookback_us=lookback_us,
-        )
-
-    return run_view(
-        spark, events_dir, schema, checkpoint_dir, _fold,
-        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
-        transforms=_transforms(odir),
-    )
-
-
 def start_resequenced_attribution_stream(
     spark: SparkSession,
     events_dir: str | Path,
@@ -394,10 +340,7 @@ def start_resequenced_attribution_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         with_t = batch_df.withColumn("t_us", ts_epoch_us(batch_df, "ts"))
         reseq_fold(spark, rdir, with_t, batch_id, _fold, delay_us)
-        consolidate_resequenced(
-            spark, rdir, batch_id, consolidate_every,
-            _store_map(odir), _transforms(odir),
-        )
+        consolidate_resequenced(spark, rdir, batch_id, consolidate_every, odir, VIEW)
 
     return run_view(
         spark, events_dir, schema, checkpoint_dir, process_batch,
@@ -421,3 +364,13 @@ def flush_resequenced(
         )
 
     flush_resequencer(spark, odir / "reseq", _fold)
+
+
+VIEW = View(
+    fold=fold_batch,
+    stores={"attrib": None, "frontier": None},
+    transforms={
+        "attrib": lambda _: _attrib_collapse,
+        "frontier": lambda _: _frontier_collapse,
+    },
+)

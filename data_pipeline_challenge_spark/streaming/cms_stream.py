@@ -35,24 +35,11 @@ from __future__ import annotations
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 import pyspark.sql.functions as F
 
-from ..batchstore import (
-    admit_batch,
-    append_batch_increment,
-    consolidate_stores,
-    read_store,
-    run_view,
-)
+from ..batchstore import View, admit_batch, append_batch_increment, read_store
 from ..operators.sketches import CMS_DEPTH, CMS_WIDTH, cms_cells, cms_estimate
-
-_STORES: tuple[tuple[str, list | None], ...] = (("cells", None),)
-
-
-def _store_map(odir: Path) -> dict:
-    return {odir / name: part for name, part in _STORES}
 
 
 def fold_batch(
@@ -119,36 +106,7 @@ def cms_report(
     )
 
 
-def compact_cms_store(spark: SparkSession, out_dir: str | Path) -> dict[str, int]:
-    """OFFLINE: fold the cells store's per-batch dirs (run while the
-    stream is not). Row count between compactions is
-    O(depth x width x batches); the report's (d, bucket) sum collapses
-    duplicates, so consolidation only bounds directory count."""
-    return consolidate_stores(spark, _store_map(Path(out_dir)))
-
-
-def start_cms_stream(
-    spark: SparkSession,
-    corpus_dir: str | Path,
-    out_dir: str | Path,
-    checkpoint_dir: str | Path,
-    schema: str,
-    item_col: str,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-    group_cols: "list[str] | None" = None,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    consolidate_every: int | None = 64,
-) -> StreamingQuery:
-    """Stream parquet batches into the maintained sketch.
-    ``available_now=True`` drains what's landed and stops."""
-    odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    return run_view(
-        spark, corpus_dir, schema, checkpoint_dir,
-        lambda df, b: fold_batch(
-            spark, odir, df, b, item_col, depth, width, group_cols
-        ),
-        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
-    )
+# Consolidation bounds the cells store's directory count only: rows stay
+# O(depth x width x batches) between compactions, and the report's
+# (d, bucket) sum collapses duplicates.
+VIEW = View(fold=fold_batch, stores={"cells": None})

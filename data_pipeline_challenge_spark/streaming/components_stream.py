@@ -103,20 +103,18 @@ from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
     REBUILT_MARKER as _REBUILT_MARKER,
+    View,
     admit_batch,
     append_batch_increment,
-    consolidate_stores,
     ensure_store_params,
     has_data,
     prefix_bucket,
     read_batch_store,
     read_store,
     rebuild_swap,
-    run_view,
     write_initial_consolidated,
 )
 from ..operators.graph import connected_components
@@ -203,21 +201,6 @@ def _members_collapse(df: DataFrame, n_prefix: int) -> DataFrame:
 
 def _pinned_n_prefix(odir: Path) -> int:
     return json.loads((odir / "_gate_params.json").read_text())["n_prefix"]
-
-
-def _store_map(odir: Path) -> dict[Path, list[str] | None]:
-    return {odir / "labels": ["v_prefix"], odir / "members": ["c_prefix"]}
-
-
-def _transforms(odir: Path) -> dict:
-    """Labels collapse to one resolved row per vertex; members drop
-    absorbed components' rows — both under the store's PINNED layout
-    modulus, read when a fold runs (``fold_batch`` pins it before any
-    store dir exists)."""
-    return {
-        odir / "labels": lambda df: _labels_collapse(df, _pinned_n_prefix(odir)),
-        odir / "members": lambda df: _members_collapse(df, _pinned_n_prefix(odir)),
-    }
 
 
 def fold_batch(
@@ -452,17 +435,6 @@ def component_of(
     )
 
 
-def compact_components_store(
-    spark: SparkSession, out_dir: str | Path
-) -> dict[str, int]:
-    """OFFLINE consolidation: labels collapse to one resolved row per
-    vertex; members drop absorbed components' rows. Run while the
-    stream is NOT running (in-stream consolidation is the
-    ``consolidate_every`` hook)."""
-    odir = Path(out_dir)
-    return consolidate_stores(spark, _store_map(odir), transforms=_transforms(odir))
-
-
 def rebuild_components_store(
     spark: SparkSession,
     out_dir: str | Path,
@@ -583,28 +555,18 @@ def backfill_components_store(
         labels.unpersist()
 
 
-def start_components_stream(
-    spark: SparkSession,
-    edges_dir: str | Path,
-    out_dir: str | Path,
-    checkpoint_dir: str | Path,
-    schema: str,
-    src: str = "src",
-    dst: str = "dst",
-    n_prefix: int = 256,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    consolidate_every: int | None = 64,
-) -> StreamingQuery:
-    """Stream edge parquet files into the maintained component store.
-    ``available_now=True`` drains what's landed and stops."""
-    odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    return run_view(
-        spark, edges_dir, schema, checkpoint_dir,
-        lambda df, b: fold_batch(
-            spark, odir, df, b, src=src, dst=dst, n_prefix=n_prefix
+# Labels collapse to one resolved row per vertex; members drop absorbed
+# components' rows — both under the store's PINNED layout modulus, read
+# when a fold runs (``fold_batch`` pins it before any store dir exists).
+VIEW = View(
+    fold=fold_batch,
+    stores={"labels": ["v_prefix"], "members": ["c_prefix"]},
+    transforms={
+        "labels": lambda odir: (
+            lambda df: _labels_collapse(df, _pinned_n_prefix(odir))
         ),
-        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
-        transforms=_transforms(odir),
-    )
+        "members": lambda odir: (
+            lambda df: _members_collapse(df, _pinned_n_prefix(odir))
+        ),
+    },
+)

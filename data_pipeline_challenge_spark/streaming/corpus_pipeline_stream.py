@@ -60,13 +60,46 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from . import decontam_stream, dedup_stream, filter_gate_stream, near_dedup_stream
+from . import (
+    components_stream,
+    decontam_stream,
+    dedup_stream,
+    filter_gate_stream,
+    near_dedup_stream,
+    novelty_stream,
+    retrieval_stream,
+)
 from ..batchstore import (
     canonical_column_str,
+    compact_view,
     ensure_store_params,
     maybe_consolidate_in_stream,
     read_store,
     run_view,
+    view_stores,
+)
+
+# The funnel's stages in fold order: (subdir, view, the report's counts —
+# metric -> reader of the stage dir). One table drives the in-stream
+# hook's store union, the offline compaction and the report.
+_STAGES = (
+    ("quality", filter_gate_stream.VIEW, {
+        "admitted": filter_gate_stream.current_admitted_docs,
+        "rejected": filter_gate_stream.rejected_log,
+    }),
+    ("decontam", decontam_stream.VIEW, {
+        "clean": decontam_stream.current_clean_docs,
+        "contaminated": decontam_stream.contamination_log,
+    }),
+    ("exact", dedup_stream.VIEW, {"novel": dedup_stream.current_novel_docs}),
+    ("novelty", novelty_stream.VIEW, {
+        "admitted": novelty_stream.current_admitted_docs,
+        "rejected": novelty_stream.rejected_log,
+    }),
+    ("near", near_dedup_stream.VIEW, {"kept": near_dedup_stream.current_kept_docs}),
+    ("clusters", components_stream.VIEW, {
+        "labeled_docs": components_stream.current_components,
+    }),
 )
 
 
@@ -90,8 +123,6 @@ def current_dup_clusters(
     revoked content stay recognized; callers wanting only live docs
     join this view against :func:`current_corpus` (which does apply
     revocations)."""
-    from . import components_stream
-
     return components_stream.current_components(
         spark, Path(out_dir) / "clusters"
     )
@@ -101,30 +132,11 @@ def compact_pipeline_stores(spark: SparkSession, out_dir: str | Path) -> dict:
     """OFFLINE: consolidate every stage's per-batch stores. Run only
     after a clean drain (stream stopped, no crash-replay pending)."""
     odir = Path(out_dir)
-    out: dict = {}
-    if (odir / "quality").exists():
-        out["quality"] = filter_gate_stream.compact_filter_gate_store(
-            spark, odir / "quality"
-        )
-    if (odir / "decontam").exists():
-        out["decontam"] = decontam_stream.compact_decontam_store(
-            spark, odir / "decontam"
-        )
-    out["exact"] = dedup_stream.compact_dedup_store(spark, odir / "exact")
-    if (odir / "novelty").exists():
-        from . import novelty_stream
-
-        out["novelty"] = novelty_stream.compact_novelty_store(
-            spark, odir / "novelty"
-        )
-    out["near"] = near_dedup_stream.compact_near_dedup_store(spark, odir / "near")
-    if (odir / "clusters").exists():
-        from . import components_stream
-
-        out["clusters"] = components_stream.compact_components_store(
-            spark, odir / "clusters"
-        )
-    return out
+    return {
+        stage: compact_view(spark, view, odir / stage)
+        for stage, view, _ in _STAGES
+        if (odir / stage).exists()
+    }
 
 
 def _record_retrieval_pointer(funnel_dir: Path, index_dir: Path) -> None:
@@ -177,8 +189,6 @@ def _sync_index_revocations(
     an unmounted index would silently recreate the revoked-doc-served
     bug — delete the entry from ``_retrieval_index.json`` if the index
     was deliberately abandoned."""
-    from . import retrieval_stream
-
     revoked = read_store(spark, funnel_dir / "near" / "revoked")
     if revoked is None:
         return
@@ -412,7 +422,6 @@ def start_corpus_pipeline_stream(
 
     if retrieval_index_dir is not None:
         from ..batchstore import last_batch_id as _last
-        from . import retrieval_stream as _rs
 
         # Refuse whenever the index is BEHIND the funnel's kept store
         # (ADVICE r11): a never-folded index on a folded warehouse, AND
@@ -423,7 +432,7 @@ def start_corpus_pipeline_stream(
         # committed frontier and only UNcommitted near increments are
         # ahead of it — that is the mid-batch-crash window, and the
         # stream's replay folds it on restart.
-        _, _rtid = _rs._latest_totals(Path(retrieval_index_dir))
+        _, _rtid = retrieval_stream._latest_totals(Path(retrieval_index_dir))
         _near_last = _last(odir / "near" / "docs")
         if _near_last >= 0 and (
             _rtid < 0
@@ -520,8 +529,6 @@ def start_corpus_pipeline_stream(
         )
         cur = out if out is not None else cur.limit(0)
         if novelty_cfg is not None:
-            from . import novelty_stream
-
             out = novelty_stream.fold_batch(
                 spark, odir / "novelty", cur, batch_id,
                 id_col=id_col, text_col=text_col,
@@ -548,8 +555,6 @@ def start_corpus_pipeline_stream(
             # index's totals id stays in lockstep with the kept store —
             # otherwise the behind-the-funnel enable guard would refuse a
             # legitimate restart after such a trailing batch.
-            from . import retrieval_stream
-
             # recorded immediately BEFORE the fold that creates the
             # dir: a crash between the two leaves a recorded-but-
             # missing dir, which the revocation sync refuses LOUDLY
@@ -565,6 +570,19 @@ def start_corpus_pipeline_stream(
                 batch_id, id_col, text_col,
             )
 
+    # The in-stream hook's store union: every enabled stage, plus the
+    # retrieval index (whose ``revoked`` generations fold unbounded).
+    on = {
+        "quality": quality_expr is not None,
+        "decontam": ev is not None,
+        "novelty": novelty_cfg is not None,
+        "clusters": clusters_dir is not None,
+    }
+    placed = [(odir / stage, view) for stage, view, _ in _STAGES if on.get(stage, True)]
+    if retrieval_index_dir is not None:
+        placed.append((Path(retrieval_index_dir), retrieval_stream.VIEW))
+    stores, transforms, unbounded = view_stores(placed)
+
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = _audit_input_parallelism(
             batch_df, odir, batch_id, min_input_partitions
@@ -574,37 +592,8 @@ def start_corpus_pipeline_stream(
         # previous, checkpoint-committed batch) — runs even when a stage
         # filtered the whole batch out, so an all-duplicate stretch of
         # the stream cannot starve maintenance.
-        stores: dict = {}
-        if quality_expr is not None:
-            stores.update(filter_gate_stream._store_map(odir / "quality"))
-        if ev is not None:
-            stores.update(decontam_stream._store_map(odir / "decontam"))
-        stores.update(dedup_stream._store_map(odir / "exact"))
-        if novelty_cfg is not None:
-            from . import novelty_stream
-
-            stores.update(novelty_stream._store_map(odir / "novelty"))
-        stores.update(near_dedup_stream._store_map(odir / "near"))
-        transforms: dict = {}
-        if clusters_dir is not None:
-            from . import components_stream
-
-            stores.update(components_stream._store_map(clusters_dir))
-            transforms.update(components_stream._transforms(clusters_dir))
-        unbounded: set = set()
-        if retrieval_index_dir is not None:
-            from . import retrieval_stream
-
-            stores.update(retrieval_stream._store_map(Path(retrieval_index_dir)))
-            # the revoked store's ids are an independent generation
-            # counter — fold it unbounded, the same discipline as
-            # compact_retrieval_index (ADVICE r12)
-            unbounded |= retrieval_stream._unbounded_stores(
-                Path(retrieval_index_dir)
-            )
         maybe_consolidate_in_stream(
-            spark, stores, batch_id, consolidate_every,
-            unbounded=unbounded, transforms=transforms,
+            spark, stores, batch_id, consolidate_every, unbounded, transforms
         )
 
     return run_view(
@@ -816,7 +805,6 @@ def pipeline_report(spark: SparkSession, out_dir: str | Path) -> DataFrame:
     Returns rows ``(stage, metric, value)`` (value as long; -1 where a
     stage/store is absent)."""
     from ..batchstore import last_batch_id, read_cap_audit
-    from . import decontam_stream, dedup_stream, filter_gate_stream, near_dedup_stream
 
     odir = Path(out_dir)
     rows: list[tuple[str, str, int]] = []
@@ -863,76 +851,28 @@ def pipeline_report(spark: SparkSession, out_dir: str | Path) -> DataFrame:
             (stage, f"{store.name}_last_batch", last_batch_id(store))
         )
 
-    if (odir / "quality").exists():
-        rows.append(
-            ("quality", "admitted",
-             _count(filter_gate_stream.current_admitted_docs(spark, odir / "quality")))
-        )
-        rows.append(
-            ("quality", "rejected",
-             _count(filter_gate_stream.rejected_log(spark, odir / "quality")))
-        )
-        for name, _ in filter_gate_stream._STORES:
-            _store_rows("quality", odir / "quality" / name)
-    if (odir / "decontam").exists():
-        rows.append(
-            ("decontam", "clean",
-             _count(decontam_stream.current_clean_docs(spark, odir / "decontam")))
-        )
-        rows.append(
-            ("decontam", "contaminated",
-             _count(decontam_stream.contamination_log(spark, odir / "decontam")))
-        )
-        for name, _ in decontam_stream._STORES:
-            _store_rows("decontam", odir / "decontam" / name)
-    if (odir / "exact").exists():
-        rows.append(
-            ("exact", "novel",
-             _count(dedup_stream.current_novel_docs(spark, odir / "exact")))
-        )
-        for name, _ in dedup_stream._STORES:
-            _store_rows("exact", odir / "exact" / name)
-    if (odir / "novelty").exists():
-        from . import novelty_stream
-
-        rows.append(
-            ("novelty", "admitted",
-             _count(novelty_stream.current_admitted_docs(spark, odir / "novelty")))
-        )
-        rows.append(
-            ("novelty", "rejected",
-             _count(novelty_stream.rejected_log(spark, odir / "novelty")))
-        )
-        for name, _ in novelty_stream._STORES:
-            _store_rows("novelty", odir / "novelty" / name)
-    if (odir / "near").exists():
-        rows.append(
-            ("near", "kept",
-             _count(near_dedup_stream.current_kept_docs(spark, odir / "near")))
-        )
-        for name, _ in near_dedup_stream._STORES:
-            _store_rows("near", odir / "near" / name)
-        audit = read_cap_audit(odir / "near")
-        rows.append(
-            ("near", "cap_rows_dropped",
-             sum(r.get("rows_dropped", 0) for r in audit))
-        )
-        rows.append(("near", "cap_events", len(audit)))
-    if (odir / "clusters").exists():
-        from . import components_stream as _cs
-
-        rows.append(
-            ("clusters", "labeled_docs",
-             _count(_cs.current_components(spark, odir / "clusters")))
-        )
-        for name in ("labels", "members"):
-            _store_rows("clusters", odir / "clusters" / name)
-        relabel = _cs.read_relabel_audit(odir / "clusters")
-        rows.append(
-            ("clusters", "members_relabeled",
-             sum(r.get("members_relabeled", 0) for r in relabel))
-        )
-        rows.append(("clusters", "relabel_events", len(relabel)))
+    for stage, view, counts in _STAGES:
+        sdir = odir / stage
+        if not sdir.exists():
+            continue
+        for metric, read in counts.items():
+            rows.append((stage, metric, _count(read(spark, sdir))))
+        for name in view.stores:
+            _store_rows(stage, sdir / name)
+        if stage == "near":
+            audit = read_cap_audit(sdir)
+            rows.append(
+                ("near", "cap_rows_dropped",
+                 sum(r.get("rows_dropped", 0) for r in audit))
+            )
+            rows.append(("near", "cap_events", len(audit)))
+        if stage == "clusters":
+            relabel = components_stream.read_relabel_audit(sdir)
+            rows.append(
+                ("clusters", "members_relabeled",
+                 sum(r.get("members_relabeled", 0) for r in relabel))
+            )
+            rows.append(("clusters", "relabel_events", len(relabel)))
 
     # Every recorded maintained retrieval index (the funnel's derived
     # search surface): fold frontier, corpus size, revocation count —
@@ -940,18 +880,16 @@ def pipeline_report(spark: SparkSession, out_dir: str | Path) -> DataFrame:
     # store and that decontamination revocations reached it.
     idx_dirs = _retrieval_pointer_dirs(odir)
     for i, idx_dir in enumerate(idx_dirs):
-        from . import retrieval_stream as _rs
-
         stage = "retrieval" if len(idx_dirs) == 1 else f"retrieval_{i}"
         if not idx_dir.exists():
             rows.append((stage, "missing", 1))
             continue
-        totals, tid = _rs._latest_totals(idx_dir)
+        totals, tid = retrieval_stream._latest_totals(idx_dir)
         rows.append((stage, "totals_batch", tid))
         rows.append((stage, "n_docs", int(totals.get("n_docs", -1))))
-        rev = _rs._revoked_view(spark, idx_dir)
+        rev = retrieval_stream._revoked_view(spark, idx_dir)
         rows.append((stage, "revoked", -1 if rev is None else rev.count()))
-        for name, _ in _rs._STORES:
+        for name in retrieval_stream.VIEW.stores:
             _store_rows(stage, idx_dir / name)
 
     return spark.createDataFrame(rows, "stage string, metric string, value long")

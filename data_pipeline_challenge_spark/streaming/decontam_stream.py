@@ -40,16 +40,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    View,
     account_empty_fold,
     admit_batch,
     append_batch_increment,
-    consolidate_stores,
     ensure_store_params,
     last_batch_id,
     read_anti_join_key,
     read_store,
     record_anti_join_key,
-    run_view,
+    start_view,
 )
 from ..operators.dedup import _shingle_table
 
@@ -66,21 +66,6 @@ def _revocation_key(rev: DataFrame, store: Path, docs_cols: list[str]) -> list[s
         return [recorded]
     evidence = {"n_shared", "n_eval_docs"}
     return [c for c in rev.columns if c in set(docs_cols) and c not in evidence]
-
-# store name -> partition columns; shared by offline compaction and the
-# in-stream consolidation hook so the two can never disagree on layout.
-# ``revoked`` holds retroactive eval-generation revocations (see
-# :func:`add_eval_generation`) — written only while the stream is
-# stopped, read by ``current_clean_docs`` as an anti-join.
-_STORES: tuple[tuple[str, list | None], ...] = (
-    ("docs", None),
-    ("contaminated", None),
-    ("revoked", None),
-)
-
-
-def _store_map(odir: Path) -> dict:
-    return {odir / name: part for name, part in _STORES}
 
 
 def eval_fingerprint(eval_df: DataFrame, id_col: str, text_col: str) -> str:
@@ -294,12 +279,6 @@ def contamination_log(spark: SparkSession, out_dir: str | Path) -> DataFrame | N
     return None if contaminated is None else contaminated.drop("ingest_batch")
 
 
-def compact_decontam_store(spark: SparkSession, out_dir: str | Path) -> dict[str, int]:
-    """OFFLINE: fold per-batch dirs of both stores (crash-safe marker
-    protocol). Run while the gate stream is NOT running."""
-    return consolidate_stores(spark, _store_map(Path(out_dir)))
-
-
 def eval_shingles(eval_df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """The eval set's shingle table, cached — compute ONCE per stream (or
     per composed pipeline) and pass to every ``fold_batch`` call."""
@@ -369,6 +348,15 @@ def fold_batch(
     return read_store(spark, docs_store, batch_id)
 
 
+VIEW = View(
+    fold=fold_batch,
+    # ``revoked`` holds retroactive eval-generation revocations (see
+    # :func:`add_eval_generation`) — written only while the stream is
+    # stopped, read by ``current_clean_docs`` as an anti-join.
+    stores={"docs": None, "contaminated": None, "revoked": None},
+)
+
+
 def start_decontam_stream(
     spark: SparkSession,
     corpus_dir: str | Path,
@@ -396,11 +384,9 @@ def start_decontam_stream(
 
     # Eval shingles once, cached across micro-batches (benchmark-sized).
     ev = eval_shingles(eval_df, id_col, text_col, n)
-    return run_view(
-        spark, corpus_dir, schema, checkpoint_dir,
-        lambda df, b: fold_batch(
-            spark, odir, df, b, ev,
-            id_col=id_col, text_col=text_col, n=n, min_shared=min_shared,
-        ),
-        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
+    return start_view(
+        spark, VIEW, corpus_dir, odir, checkpoint_dir, schema,
+        max_files_per_trigger=max_files_per_trigger, available_now=available_now,
+        consolidate_every=consolidate_every,
+        ev=ev, id_col=id_col, text_col=text_col, n=n, min_shared=min_shared,
     )

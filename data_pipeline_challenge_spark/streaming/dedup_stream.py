@@ -41,9 +41,10 @@ same content. A fresh-checkpoint renumbered replay lands at-or-below
 the guard and is skipped, so nothing duplicates.
 
 Directory growth is bounded the same way as every micro-batch store
-here: ``compact_dedup_store`` folds both stores' live batches into one
-consolidated partition (``batchstore`` crash-safe marker protocol,
-offline — run while the stream is stopped).
+here: ``batchstore.compact_view(spark, VIEW, out_dir)`` folds both
+stores' live batches into one consolidated partition (``batchstore``
+crash-safe marker protocol, offline — run while the stream is
+stopped).
 
 Near-dup (MinHash/SimHash) streaming maintenance composes on top: feed
 ``docs/`` (already exact-deduped) into the batch LSH operators, or the
@@ -56,16 +57,14 @@ from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    View,
     account_empty_fold,
     admit_batch,
     append_batch_increment,
-    consolidate_stores,
     read_batch_store,
     read_store,
-    run_view,
 )
 from ..functions.textfn import normalized_fingerprint
 
@@ -100,29 +99,6 @@ def current_novel_docs(spark: SparkSession, out_dir: str | Path) -> DataFrame | 
     fingerprint, first-arrival winner), or None before the first batch."""
     docs = read_store(spark, Path(out_dir) / "docs")
     return None if docs is None else docs.drop("ingest_batch")
-
-
-# store name -> partition columns; shared by offline compaction and the
-# in-stream consolidation hook so the two can never disagree on layout.
-_STORES: tuple[tuple[str, list[str] | None], ...] = (
-    ("docs", None),
-    ("fp_index", ["fp_prefix"]),
-)
-
-
-def _store_map(odir: Path) -> dict[Path, list[str] | None]:
-    return {odir / name: part for name, part in _STORES}
-
-
-def compact_dedup_store(spark: SparkSession, out_dir: str | Path) -> dict[str, int]:
-    """Maintenance: fold each store's accumulated per-batch dirs into one
-    consolidated partition (crash-safe marker protocol, ``batchstore``)
-    so partition discovery stays O(1) on a long-lived warehouse. Run
-    while the dedup stream is NOT running — OR let the stream do it
-    itself via ``consolidate_every`` (no stop window needed). Returns
-    {store: dirs folded}."""
-    return consolidate_stores(spark, _store_map(Path(out_dir)))
-
 
 
 def fold_batch(
@@ -235,31 +211,4 @@ def _fold_winners(spark, winners, batch_id, n_prefix, fp_store, docs_store):
     return read_store(spark, docs_store, batch_id)
 
 
-def start_dedup_stream(
-    spark: SparkSession,
-    corpus_dir: str | Path,
-    out_dir: str | Path,
-    checkpoint_dir: str | Path,
-    schema: str,
-    id_col: str,
-    text_col: str,
-    n_prefix: int = 256,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    consolidate_every: int | None = 64,
-) -> StreamingQuery:
-    """Stream corpus parquet files through against-history exact dedup.
-    ``available_now=True`` drains what's landed and stops.
-    ``consolidate_every=N`` folds the stores' accumulated batch dirs
-    in-stream every N batches (bounded at the previous batch, inside the
-    same foreachBatch that owns all writes — no stop window);
-    ``None`` reverts to offline-only maintenance."""
-    odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    return run_view(
-        spark, corpus_dir, schema, checkpoint_dir,
-        lambda df, b: fold_batch(
-            spark, odir, df, b, id_col=id_col, text_col=text_col, n_prefix=n_prefix
-        ),
-        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
-    )
+VIEW = View(fold=fold_batch, stores={"docs": None, "fp_index": ["fp_prefix"]})

@@ -51,9 +51,10 @@ increment. A dedicated index dir is required —
 mixing this gate with ``index_stream``-maintained IVF/PQ families in one
 dir would desynchronize their per-family batch numbering.
 
-Offline maintenance: :func:`compact_embedding_dedup_store` on
-``bucketed_inc`` (preserving the bucket partition column), plus the
-usual rebuild-from-snapshot path for parameter changes.
+Offline maintenance: ``batchstore.compact_view(spark, VIEW,
+index_dir)`` on ``bucketed_inc`` (preserving the bucket partition
+column), plus the usual rebuild-from-snapshot path for parameter
+changes.
 """
 
 from __future__ import annotations
@@ -63,24 +64,18 @@ from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    View,
     account_empty_fold,
     admit_batch,
     append_batch_increment,
-    consolidate_stores,
     read_store,
     read_table,
     record_table_schema,
-    run_view,
 )
 from ..functions.vectorfn import as_double, cosine
 from ..operators.similarity import _LSH_SEED, _with_increments, with_lsh_bucket
-
-
-def _store_map(index_dir: Path) -> dict:
-    return {index_dir / "bucketed_inc": ["bucket"]}
 
 
 def _base_batch(index_dir: Path) -> int:
@@ -109,14 +104,6 @@ def current_kept_vectors(
     return _with_increments(
         spark, index_dir / "bucketed", index_dir / "bucketed_inc"
     ).drop("ingest_batch")
-
-
-def compact_embedding_dedup_store(
-    spark: SparkSession, index_dir: str | Path
-) -> int:
-    """OFFLINE: consolidate the increment store (bucket partitioning
-    preserved). Run while the gate stream is NOT running."""
-    return sum(consolidate_stores(spark, _store_map(Path(index_dir))).values())
 
 
 def fold_batch(
@@ -278,35 +265,5 @@ def fold_batch(
         bucketed.unpersist()
 
 
-def start_embedding_dedup_stream(
-    spark: SparkSession,
-    vectors_dir: str | Path,
-    index_dir: str | Path,
-    checkpoint_dir: str | Path,
-    schema: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    n_planes: int = 12,
-    min_cos: float = 0.95,
-    bucket_cap: int = 256,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    consolidate_every: int | None = 64,
-) -> StreamingQuery:
-    """Stream parquet files of vectors through the embedding near-dedup
-    gate into a servable LSH index. ``available_now=True`` drains what's
-    landed and stops. ``consolidate_every=N`` folds the increment store's
-    batch dirs in-stream every N batches (no stop window); ``None`` =
-    offline-only."""
-    idx = Path(index_dir)
-    idx.mkdir(parents=True, exist_ok=True)
-    return run_view(
-        spark, vectors_dir, schema, checkpoint_dir,
-        lambda df, b: fold_batch(
-            spark, idx, df, b,
-            id_col=id_col, vec_col=vec_col, dim=dim, n_planes=n_planes,
-            min_cos=min_cos, bucket_cap=bucket_cap,
-        ),
-        max_files_per_trigger, available_now, _store_map(idx), consolidate_every,
-    )
+# The increment store keeps its bucket partitioning through consolidation.
+VIEW = View(fold=fold_batch, stores={"bucketed_inc": ["bucket"]})

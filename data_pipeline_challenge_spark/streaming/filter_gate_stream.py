@@ -31,26 +31,15 @@ from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    View,
     account_empty_fold,
     admit_batch,
     append_batch_increment,
-    consolidate_stores,
     read_store,
-    run_view,
 )
 from ..functions.textfn import top_token_fraction
-
-# store name -> partition columns; shared by offline compaction and the
-# in-stream consolidation hook so the two can never disagree on layout.
-_STORES: tuple[tuple[str, list | None], ...] = (("docs", None), ("rejected", None))
-
-
-def _store_map(odir: Path) -> dict:
-    return {odir / name: part for name, part in _STORES}
-
 
 def gopher_keep(
     text_col: str,
@@ -88,14 +77,6 @@ def rejected_log(spark: SparkSession, out_dir: str | Path) -> DataFrame | None:
     return None if rejected is None else rejected.drop("ingest_batch")
 
 
-def compact_filter_gate_store(
-    spark: SparkSession, out_dir: str | Path
-) -> dict[str, int]:
-    """OFFLINE: fold per-batch dirs of both stores. Run while the gate
-    stream is NOT running."""
-    return consolidate_stores(spark, _store_map(Path(out_dir)))
-
-
 def fold_batch(
     spark: SparkSession,
     out_dir: str | Path,
@@ -131,25 +112,4 @@ def fold_batch(
     return read_store(spark, docs_store, batch_id)
 
 
-def start_filter_gate_stream(
-    spark: SparkSession,
-    corpus_dir: str | Path,
-    out_dir: str | Path,
-    checkpoint_dir: str | Path,
-    schema: str,
-    keep_expr: Column,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    consolidate_every: int | None = 64,
-) -> StreamingQuery:
-    """Stream corpus parquet files through the predicate gate.
-    ``available_now=True`` drains what's landed and stops.
-    ``consolidate_every=N`` folds the stores' batch dirs in-stream every
-    N batches (no stop-the-stream window); ``None`` = offline-only."""
-    odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    return run_view(
-        spark, corpus_dir, schema, checkpoint_dir,
-        lambda df, b: fold_batch(spark, odir, df, b, keep_expr),
-        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
-    )
+VIEW = View(fold=fold_batch, stores={"docs": None, "rejected": None})

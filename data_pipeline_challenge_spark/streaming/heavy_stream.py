@@ -35,11 +35,10 @@ from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    View,
     append_batch_increment,
-    consolidate_stores,
     ensure_store_params,
     has_rebuilt_marker,
     last_batch_id,
@@ -47,19 +46,12 @@ from ..batchstore import (
     prefix_bucket,
     prefix_bucket_local,
     read_batch_store,
-    run_view,
     sequential_fold_guard,
     write_commit_file,
 )
 from ..operators.sketches import _mg_merge, mg_summary
 
 _N_BUCKETS = 64
-
-_STORES: tuple[tuple[str, list | None], ...] = (("counts", ["item_bucket"]),)
-
-
-def _store_map(odir: Path) -> dict:
-    return {odir / name: part for name, part in _STORES}
 
 
 def _summary_path(odir: Path, batch_id: int) -> Path:
@@ -193,37 +185,16 @@ def heavy_hitters_report(
     )
 
 
-def compact_heavy_store(spark: SparkSession, out_dir: str | Path) -> dict[str, int]:
-    """OFFLINE: fold the counts store's per-batch dirs (run while the
-    stream is not). Bounded at the summary commit frontier: after an
+def _summary_frontier(odir: Path) -> int:
+    """The offline compaction bound: the newest summary's id. After an
     UNCLEAN stop the counts store can be one uncommitted batch ahead of
     the newest summary, and folding that increment into a negative-id
     consolidated dir would smuggle it past the report's
     committed-snapshot filter — it stays in its own positive dir until
     the restarted stream's replay commits it."""
-    odir = Path(out_dir)
-    _, sid = _latest_summary(odir)
-    return consolidate_stores(spark, _store_map(odir), up_to=sid)
+    return _latest_summary(odir)[1]
 
 
-def start_heavy_hitters_stream(
-    spark: SparkSession,
-    corpus_dir: str | Path,
-    out_dir: str | Path,
-    checkpoint_dir: str | Path,
-    schema: str,
-    item_col: str,
-    k: int,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    consolidate_every: int | None = 64,
-) -> StreamingQuery:
-    """Stream parquet batches into the maintained heavy-hitters state.
-    ``available_now=True`` drains what's landed and stops."""
-    odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    return run_view(
-        spark, corpus_dir, schema, checkpoint_dir,
-        lambda df, b: fold_batch(spark, odir, df, b, item_col, k),
-        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
-    )
+VIEW = View(
+    fold=fold_batch, stores={"counts": ["item_bucket"]}, frontier=_summary_frontier
+)

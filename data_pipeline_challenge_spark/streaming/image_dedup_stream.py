@@ -39,29 +39,16 @@ from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    View,
     account_empty_fold,
     admit_batch,
     append_batch_increment,
-    consolidate_stores,
-    last_batch_id,
     read_store,
-    run_view,
 )
 
 _N_BUCKETS = 64  # per-band hash buckets (partition key: band, bucket)
-
-_STORES: tuple[tuple[str, list | None], ...] = (
-    ("kept", None),
-    ("diverted", None),
-    ("hashes", ["band", "bucket"]),
-)
-
-
-def _store_map(odir: Path) -> dict:
-    return {odir / name: part for name, part in _STORES}
 
 
 def _banded(sig: DataFrame, n_bands: int, id_alias: str) -> DataFrame:
@@ -269,39 +256,10 @@ def diverted_log(spark: SparkSession, out_dir: str | Path) -> DataFrame | None:
     return None if diverted is None else diverted.drop("ingest_batch")
 
 
-def compact_image_dedup_store(
-    spark: SparkSession, out_dir: str | Path
-) -> dict[str, int]:
-    """OFFLINE: fold the stores' per-batch dirs (run while the stream is
-    not). Row stores bounded at the hash store's commit frontier (the
-    family discipline)."""
-    odir = Path(out_dir)
-    return consolidate_stores(
-        spark,
-        _store_map(odir),
-        up_to=last_batch_id(odir / "hashes"),
-        unbounded={odir / "hashes"},
-    )
-
-
-def start_image_dedup_stream(
-    spark: SparkSession,
-    media_dir: str | Path,
-    out_dir: str | Path,
-    checkpoint_dir: str | Path,
-    schema: str,
-    max_hamming: int = 3,
-    n_bands: int = 4,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    consolidate_every: int | None = 64,
-) -> StreamingQuery:
-    """Stream media parquet files through the perceptual image-dedup
-    gate. ``available_now=True`` drains what's landed and stops."""
-    odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    return run_view(
-        spark, media_dir, schema, checkpoint_dir,
-        lambda df, b: fold_batch(spark, odir, df, b, max_hamming, n_bands),
-        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
-    )
+# Offline, the row stores are bounded at the hash store's commit frontier
+# (the novelty / overlap discipline).
+VIEW = View(
+    fold=fold_batch,
+    stores={"kept": None, "diverted": None, "hashes": ["band", "bucket"]},
+    frontier="hashes",
+)

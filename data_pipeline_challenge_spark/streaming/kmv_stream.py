@@ -30,15 +30,8 @@ import json
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
-from ..batchstore import (
-    admit_batch,
-    append_batch_increment,
-    consolidate_stores,
-    read_store,
-    run_view,
-)
+from ..batchstore import View, admit_batch, append_batch_increment, read_store
 from ..operators.sketches import (
     KMV_K,
     kmv_bottom_hashes,
@@ -46,8 +39,6 @@ from ..operators.sketches import (
     kmv_merge,
     kmv_pairwise_setops,
 )
-
-_STORES: tuple[tuple[str, list | None], ...] = (("hashes", None),)
 
 
 def _bottom_k(df: DataFrame, k: int, gcs: list) -> DataFrame:
@@ -59,23 +50,6 @@ def _bottom_k(df: DataFrame, k: int, gcs: list) -> DataFrame:
 
 def _params(odir: Path) -> dict:
     return json.loads((odir / "_gate_params.json").read_text())
-
-
-def _store_map(odir: Path) -> dict:
-    return {odir / name: part for name, part in _STORES}
-
-
-def _transforms(odir: Path) -> dict:
-    """Fold-time collapse to the resolved bottom-k per group, under the
-    store's PINNED (k, group_cols) — read when a fold runs, after
-    ``fold_batch`` has pinned them — so the compacted store holds at
-    most k rows per group."""
-
-    def collapse(df: DataFrame) -> DataFrame:
-        params = _params(odir)
-        return _bottom_k(df, int(params["k"]), list(params.get("group_cols") or ()))
-
-    return {odir / "hashes": collapse}
 
 
 def fold_batch(
@@ -156,34 +130,17 @@ def kmv_setops_report(
     return kmv_pairwise_setops(bottom, gcs[0], k=k)
 
 
-def compact_kmv_store(spark: SparkSession, out_dir: str | Path) -> dict[str, int]:
-    """OFFLINE consolidation: collapses the store to the resolved
-    bottom-k per group (fold-time transform), so the compacted store
-    holds at most k rows per group."""
-    odir = Path(out_dir)
-    return consolidate_stores(spark, _store_map(odir), transforms=_transforms(odir))
+def _collapse(odir: Path):
+    """Fold-time collapse to the resolved bottom-k per group, under the
+    store's PINNED (k, group_cols) — read when a fold runs, after
+    ``fold_batch`` has pinned them — so the compacted store holds at
+    most k rows per group."""
+
+    def collapse(df: DataFrame) -> DataFrame:
+        params = _params(odir)
+        return _bottom_k(df, int(params["k"]), list(params.get("group_cols") or ()))
+
+    return collapse
 
 
-def start_kmv_stream(
-    spark: SparkSession,
-    corpus_dir: str | Path,
-    out_dir: str | Path,
-    checkpoint_dir: str | Path,
-    schema: str,
-    item_col: str,
-    k: int = KMV_K,
-    group_cols: "list[str] | None" = None,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    consolidate_every: int | None = 64,
-) -> StreamingQuery:
-    """Stream parquet files into the maintained KMV sketch.
-    ``available_now=True`` drains what's landed and stops."""
-    odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    return run_view(
-        spark, corpus_dir, schema, checkpoint_dir,
-        lambda df, b: fold_batch(spark, odir, df, b, item_col, k, group_cols),
-        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
-        transforms=_transforms(odir),
-    )
+VIEW = View(fold=fold_batch, stores={"hashes": None}, transforms={"hashes": _collapse})

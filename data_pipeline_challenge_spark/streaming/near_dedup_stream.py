@@ -69,7 +69,7 @@ a recomputation would collide the batch against itself and derive
 different pairs — so pairs must be final by then. A crash after all
 three writes but before the chained components fold is covered by the
 component store's own replay guard (the chain re-reads the committed
-pairs increment). Offline consolidation (``compact_near_dedup_store``)
+pairs increment). Offline consolidation (``batchstore.compact_view``)
 reuses the batchstore marker protocol.
 
 Short documents (fewer than ``n`` tokens) have no shingles, hence no
@@ -79,6 +79,7 @@ same blind spot as the batch operator, inherent to shingle sketches.
 
 from __future__ import annotations
 
+from dataclasses import replace
 from pathlib import Path
 
 import pyspark.sql.functions as F
@@ -86,14 +87,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    View,
     admit_batch,
     append_batch_increment,
-    consolidate_stores,
     has_data,
     last_batch_id,
     read_batch_store,
     read_store,
-    run_view,
+    start_view,
 )
 from ..operators.dedup import banded_minhash_tables, verify_candidate_pairs
 from ..operators.graph import connected_components
@@ -150,33 +151,6 @@ def history_buckets(
         .filter(F.col("bh_prefix").isin([int(p) for p in touched_prefixes]))
         .select("band", "bh", "doc")
     )
-
-
-def compact_near_dedup_store(
-    spark: SparkSession, out_dir: str | Path
-) -> dict[str, int]:
-    """OFFLINE: fold each store's per-batch dirs into one consolidated
-    partition (crash-safe marker protocol). Run while the stream is NOT
-    running."""
-    return consolidate_stores(spark, _store_map(Path(out_dir)))
-
-
-# store name -> partition columns; shared by offline compaction and the
-# in-stream consolidation hook so the two can never disagree on layout.
-_STORES: tuple[tuple[str, list[str] | None], ...] = (
-    ("docs", ["doc_prefix"]),
-    ("band_index", ["bh_prefix"]),
-    # Verified near-dup pairs per batch (append-only evidence trail and
-    # the composed component view's edge feed).
-    ("pairs", None),
-    # Retroactive eval-generation revocations (written only while the
-    # stream is stopped; read as an anti-join by current_kept_docs).
-    ("revoked", None),
-)
-
-
-def _store_map(odir: Path) -> dict[Path, list[str] | None]:
-    return {odir / name: part for name, part in _STORES}
 
 
 def fold_batch(
@@ -645,6 +619,21 @@ def backfill_dup_clusters(
     )
 
 
+VIEW = View(
+    fold=fold_batch,
+    stores={
+        "docs": ["doc_prefix"],
+        "band_index": ["bh_prefix"],
+        # Verified near-dup pairs per batch (append-only evidence trail
+        # and the composed component view's edge feed).
+        "pairs": None,
+        # Retroactive eval-generation revocations (written only while the
+        # stream is stopped; read as an anti-join by current_kept_docs).
+        "revoked": None,
+    },
+)
+
+
 def start_near_dedup_stream(
     spark: SparkSession,
     corpus_dir: str | Path,
@@ -677,28 +666,25 @@ def start_near_dedup_stream(
     lateness rule, shared via :func:`ensure_components_coverage`)."""
     odir = Path(out_dir)
     odir.mkdir(parents=True, exist_ok=True)
+    view = VIEW
     if components_out_dir is not None:
+        from . import components_stream
+
         components_n_prefix = ensure_components_coverage(
             odir, components_out_dir, checkpoint_dir,
             default_n_prefix=components_n_prefix,
         )
+        # the in-stream hook maintains the chained component stores too
+        view = replace(
+            VIEW, chained=((Path(components_out_dir), components_stream.VIEW),)
+        )
 
-    stores, transforms = _store_map(odir), {}
-    if components_out_dir is not None:
-        from . import components_stream
-
-        cdir = Path(components_out_dir)
-        stores.update(components_stream._store_map(cdir))
-        transforms = components_stream._transforms(cdir)
-    return run_view(
-        spark, corpus_dir, schema, checkpoint_dir,
-        lambda df, b: fold_batch(
-            spark, odir, df, b,
-            id_col=id_col, text_col=text_col, n=n, num_hashes=num_hashes,
-            bands=bands, min_jaccard=min_jaccard, n_prefix=n_prefix,
-            bucket_cap=bucket_cap, components_out_dir=components_out_dir,
-            components_n_prefix=components_n_prefix,
-        ),
-        max_files_per_trigger, available_now, stores, consolidate_every,
-        transforms=transforms,
+    return start_view(
+        spark, view, corpus_dir, odir, checkpoint_dir, schema,
+        max_files_per_trigger=max_files_per_trigger, available_now=available_now,
+        consolidate_every=consolidate_every,
+        id_col=id_col, text_col=text_col, n=n, num_hashes=num_hashes,
+        bands=bands, min_jaccard=min_jaccard, n_prefix=n_prefix,
+        bucket_cap=bucket_cap, components_out_dir=components_out_dir,
+        components_n_prefix=components_n_prefix,
     )

@@ -39,30 +39,17 @@ from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    View,
     account_empty_fold,
     admit_batch,
     append_batch_increment,
-    consolidate_stores,
-    last_batch_id,
     prefix_bucket,
     read_store,
-    run_view,
 )
 
 _N_BUCKETS = 64
-
-_STORES: tuple[tuple[str, list | None], ...] = (
-    ("docs", None),
-    ("rejected", None),
-    ("shingles", ["bucket"]),
-)
-
-
-def _store_map(odir: Path) -> dict:
-    return {odir / name: part for name, part in _STORES}
 
 
 def fold_batch(
@@ -238,44 +225,11 @@ def rejected_log(spark: SparkSession, out_dir: str | Path) -> DataFrame | None:
     return None if rejected is None else rejected.drop("ingest_batch")
 
 
-def compact_novelty_store(
-    spark: SparkSession, out_dir: str | Path
-) -> dict[str, int]:
-    """OFFLINE: fold the stores' per-batch dirs (run while the stream is
-    not). The doc stores are bounded at the seen-shingle commit frontier
-    so a crash-window orphan increment cannot be folded past the replay
-    guard's reach (the compact_retrieval_index discipline)."""
-    odir = Path(out_dir)
-    return consolidate_stores(
-        spark,
-        _store_map(odir),
-        up_to=last_batch_id(odir / "shingles"),
-        unbounded={odir / "shingles"},
-    )
-
-
-def start_novelty_stream(
-    spark: SparkSession,
-    corpus_dir: str | Path,
-    out_dir: str | Path,
-    checkpoint_dir: str | Path,
-    schema: str,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 8,
-    max_share: float = 0.8,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    consolidate_every: int | None = 64,
-) -> StreamingQuery:
-    """Stream corpus parquet files through the novelty gate.
-    ``available_now=True`` drains what's landed and stops."""
-    odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    return run_view(
-        spark, corpus_dir, schema, checkpoint_dir,
-        lambda df, b: fold_batch(
-            spark, odir, df, b, id_col, text_col, shingle_n, max_share
-        ),
-        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
-    )
+# Offline, the doc stores are bounded at the seen-shingle commit frontier,
+# so a crash-window orphan increment cannot be folded past the replay
+# guard's reach (the retrieval index's discipline).
+VIEW = View(
+    fold=fold_batch,
+    stores={"docs": None, "rejected": None, "shingles": ["bucket"]},
+    frontier="shingles",
+)

@@ -34,7 +34,7 @@ batch at-or-below it skips; a crash between the writes replays against
 UNCHANGED history, recomputing byte-identical increments into the same
 overwritten dirs. ``overlap_report`` bounds its increment scan at the
 commit point (negative consolidated ids admitted — offline compaction
-bounds itself at the frontier, mirroring ``compact_retrieval_index``),
+bounds itself at the frontier, as the retrieval index's does),
 so a mid-crash report never sees an increment whose membership append
 didn't land.
 
@@ -49,30 +49,18 @@ from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    View,
     admit_batch,
     append_batch_increment,
-    consolidate_stores,
     last_batch_id,
     prefix_bucket,
     read_batch_store,
     read_store,
-    run_view,
 )
 
 _N_BUCKETS = 64
-
-_STORES: tuple[tuple[str, list | None], ...] = (
-    ("shingles", ["bucket"]),
-    ("pair_inc", None),
-    ("count_inc", None),
-)
-
-
-def _store_map(odir: Path) -> dict:
-    return {odir / name: part for name, part in _STORES}
 
 
 def fold_batch(
@@ -202,45 +190,13 @@ def overlap_report(spark: SparkSession, out_dir: str | Path) -> DataFrame | None
     return jaccard_matrix(pairs, counts)
 
 
-def compact_overlap_store(
-    spark: SparkSession, out_dir: str | Path
-) -> dict[str, int]:
-    """OFFLINE: fold the stores' per-batch dirs (run while the stream is
-    not). The two increment stores are bounded at the membership store's
-    commit frontier — folding an orphan increment (crash window: written
-    but its membership append never landed) into a negative consolidated
-    dir would smuggle it past the report's committed-snapshot filter
-    (the compact_retrieval_index discipline)."""
-    odir = Path(out_dir)
-    return consolidate_stores(
-        spark,
-        _store_map(odir),
-        up_to=last_batch_id(odir / "shingles"),
-        unbounded={odir / "shingles"},
-    )
-
-
-def start_overlap_stream(
-    spark: SparkSession,
-    corpus_dir: str | Path,
-    out_dir: str | Path,
-    checkpoint_dir: str | Path,
-    schema: str,
-    source_col: str,
-    text_col: str,
-    shingle_n: int = 8,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    consolidate_every: int | None = 64,
-) -> StreamingQuery:
-    """Stream corpus parquet batches into the maintained overlap matrix.
-    ``available_now=True`` drains what's landed and stops."""
-    odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    return run_view(
-        spark, corpus_dir, schema, checkpoint_dir,
-        lambda df, b: fold_batch(
-            spark, odir, df, b, source_col, text_col, shingle_n
-        ),
-        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
-    )
+# Offline, the two increment stores are bounded at the membership store's
+# commit frontier: folding an orphan increment (crash window: written but
+# its membership append never landed) into a negative consolidated dir
+# would smuggle it past the report's committed-snapshot filter (the
+# retrieval index's discipline).
+VIEW = View(
+    fold=fold_batch,
+    stores={"shingles": ["bucket"], "pair_inc": None, "count_inc": None},
+    frontier="shingles",
+)

@@ -28,15 +28,8 @@ from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql.streaming import StreamingQuery
 
-from ..batchstore import (
-    admit_batch,
-    append_batch_increment,
-    consolidate_stores,
-    read_store,
-    run_view,
-)
+from ..batchstore import View, admit_batch, append_batch_increment, read_store
 
 _K = 3
 
@@ -56,14 +49,6 @@ def _top3(df: DataFrame, keep_rank: bool = False) -> DataFrame:
         .filter(F.col("rn") <= _K)
     )
     return out if keep_rank else out.drop("rn")
-
-
-def _store_map(odir: Path) -> dict:
-    return {odir / "prefix": None}
-
-
-def _transforms(odir: Path) -> dict:
-    return {odir / "prefix": _top3}
 
 
 def _prefix_rows(batch_df: DataFrame) -> DataFrame:
@@ -127,30 +112,8 @@ def paths_report(
     )
 
 
-def compact_paths_store(spark: SparkSession, out_dir: str | Path) -> dict[str, int]:
-    """OFFLINE consolidation: collapses to the resolved top-3 per
-    user-day (at most 3 rows per ever-touched user-day)."""
-    odir = Path(out_dir)
-    return consolidate_stores(spark, _store_map(odir), transforms=_transforms(odir))
-
-
-def start_paths_stream(
-    spark: SparkSession,
-    events_dir: str | Path,
-    out_dir: str | Path,
-    checkpoint_dir: str | Path,
-    schema: str,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    consolidate_every: int | None = 64,
-) -> StreamingQuery:
-    """Stream event parquet files into the maintained path-prefix store.
-    ``available_now=True`` drains what's landed and stops."""
-    odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    return run_view(
-        spark, events_dir, schema, checkpoint_dir,
-        lambda df, b: fold_batch(spark, odir, df, b),
-        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
-        transforms=_transforms(odir),
-    )
+# Consolidation collapses to the resolved top-3 per user-day (at most 3
+# rows per ever-touched user-day).
+VIEW = View(
+    fold=fold_batch, stores={"prefix": None}, transforms={"prefix": lambda _: _top3}
+)

@@ -27,21 +27,8 @@ from __future__ import annotations
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
-from ..batchstore import (
-    admit_batch,
-    append_batch_increment,
-    consolidate_stores,
-    read_store,
-    run_view,
-)
-
-_STORES: tuple[tuple[str, list | None], ...] = (("counts", None),)
-
-
-def _store_map(odir: Path) -> dict:
-    return {odir / name: part for name, part in _STORES}
+from ..batchstore import View, admit_batch, append_batch_increment, read_store
 
 
 def fold_batch(
@@ -98,38 +85,8 @@ def quantile_report(
     )
 
 
-def compact_quantile_store(
-    spark: SparkSession, out_dir: str | Path
-) -> dict[str, int]:
-    """OFFLINE: fold the counts store's per-batch dirs (run while the
-    stream is not). Consolidation unions the increments' rows into one
-    directory (duplicate values across increments stay separate rows —
-    the report's groupBy(v) sums them); per-batch DIRECTORY count is
-    what it bounds, the row count is O(distinct values x folded
-    batches) between compactions and the report's first aggregation
-    collapses it."""
-    return consolidate_stores(spark, _store_map(Path(out_dir)))
-
-
-def start_quantile_stream(
-    spark: SparkSession,
-    corpus_dir: str | Path,
-    out_dir: str | Path,
-    checkpoint_dir: str | Path,
-    schema: str,
-    value_col: str,
-    group_cols: list[str] | None = None,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    consolidate_every: int | None = 64,
-) -> StreamingQuery:
-    """Stream parquet batches into the maintained distribution
-    (stratified per ``group_cols`` when given).
-    ``available_now=True`` drains what's landed and stops."""
-    odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    return run_view(
-        spark, corpus_dir, schema, checkpoint_dir,
-        lambda df, b: fold_batch(spark, odir, df, b, value_col, group_cols),
-        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
-    )
+# Consolidation unions the increments' rows into one directory (duplicate
+# values across increments stay separate rows — the report's groupBy(v)
+# sums them): it bounds the per-batch DIRECTORY count, while the row count
+# is O(distinct values x folded batches) between compactions.
+VIEW = View(fold=fold_batch, stores={"counts": None})

@@ -46,6 +46,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..batchstore import (
+    View,
     append_batch_increment,
     has_rebuilt_marker,
     last_batch_id,
@@ -53,6 +54,7 @@ from ..batchstore import (
     read_batch_store,
     read_store,
     sequential_fold_guard,
+    view_stores,
 )
 
 _WM_SCHEMA = "max_t_us long, released_floor_us long, n_late long"
@@ -328,13 +330,14 @@ def consolidate_resequenced(
     out_dir: str | Path,
     batch_id: int,
     every: int | None,
-    stores: dict,
-    transforms: dict,
+    view_dir: str | Path,
+    view: View,
 ) -> None:
     """In-stream consolidation hook of a resequenced view, run after
     :func:`reseq_fold` in the same ``foreachBatch``. TWO id spaces: the
     resequencer's own ``{buffer, wm}`` stores under ``out_dir`` carry
-    arrival batch ids, but the downstream view's ``stores`` carry the
+    arrival batch ids, but the downstream ``view``'s stores (at
+    ``view_dir``) carry the
     DOUBLED fold ids (2B / 2B+1 — see :func:`reseq_fold`), so their fold
     horizon must be ``2 * batch_id - 1`` (protecting the current batch's
     2B increment for crash-replay) or consolidation would forever bound
@@ -351,10 +354,12 @@ def consolidate_resequenced(
             rdir / "wm": wm_collapse,
         },
     )
+    stores, transforms, unbounded = view_stores([(view_dir, view)])
     maybe_consolidate_in_stream(
         spark,
         stores,
         2 * batch_id,
         2 * every if every else None,
-        transforms=transforms,
+        unbounded,
+        transforms,
     )

@@ -30,15 +30,8 @@ from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
-from ..batchstore import (
-    admit_batch,
-    append_batch_increment,
-    consolidate_stores,
-    read_store,
-    run_view,
-)
+from ..batchstore import View, admit_batch, append_batch_increment, read_store
 
 def _act_set(batch_df: DataFrame) -> DataFrame:
     """The batch's own distinct (user_id, day) activity rows — the one
@@ -57,14 +50,6 @@ def _act_set(batch_df: DataFrame) -> DataFrame:
 
 def _distinct_rows(df: DataFrame) -> DataFrame:
     return df.select("user_id", "day").distinct()
-
-
-def _store_map(odir: Path) -> dict:
-    return {odir / "act": None}
-
-
-def _transforms(odir: Path) -> dict:
-    return {odir / "act": _distinct_rows}
 
 
 def fold_batch(
@@ -115,33 +100,8 @@ def retention_report(
     )
 
 
-def compact_retention_store(
-    spark: SparkSession, out_dir: str | Path
-) -> dict[str, int]:
-    """OFFLINE consolidation: duplicate (user, day) rows across
-    increments collapse at fold time, so the compacted store holds the
-    distinct activity set exactly."""
-    odir = Path(out_dir)
-    return consolidate_stores(spark, _store_map(odir), transforms=_transforms(odir))
-
-
-def start_retention_stream(
-    spark: SparkSession,
-    events_dir: str | Path,
-    out_dir: str | Path,
-    checkpoint_dir: str | Path,
-    schema: str,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    consolidate_every: int | None = 64,
-) -> StreamingQuery:
-    """Stream event parquet files into the maintained retention store.
-    ``available_now=True`` drains what's landed and stops."""
-    odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    return run_view(
-        spark, events_dir, schema, checkpoint_dir,
-        lambda df, b: fold_batch(spark, odir, df, b),
-        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
-        transforms=_transforms(odir),
-    )
+# Duplicate (user, day) rows across increments collapse at fold time, so
+# the compacted store holds the distinct activity set exactly.
+VIEW = View(
+    fold=fold_batch, stores={"act": None}, transforms={"act": lambda _: _distinct_rows}
+)

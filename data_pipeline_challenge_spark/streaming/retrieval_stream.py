@@ -50,11 +50,10 @@ from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    View,
     append_batch_increment,
-    consolidate_stores,
     ensure_store_params,
     has_rebuilt_marker,
     last_batch_id,
@@ -63,7 +62,6 @@ from ..batchstore import (
     prefix_bucket_local,
     read_batch_store,
     read_store,
-    run_view,
     sequential_fold_guard,
     write_commit_file,
 )
@@ -72,29 +70,6 @@ from ..session import local_frame
 _N_BUCKETS = 64
 _K1 = 1.2
 _B = 0.75
-
-_STORES: tuple[tuple[str, list | None], ...] = (
-    ("postings", ["term_bucket"]),
-    ("doclen", None),
-    # (doc_id, dl) rows of docs revoked AFTER indexing (funnel
-    # eval-generation upgrades — see ``revoke_docs``); written only
-    # while the stream is stopped, read by ``bm25_search`` as an
-    # anti-join + totals correction.
-    ("revoked", None),
-)
-
-
-def _store_map(odir: Path) -> dict:
-    return {odir / name: part for name, part in _STORES}
-
-
-def _unbounded_stores(odir: Path) -> set[Path]:
-    """Stores OUTSIDE the stream's batch-id discipline: ``revoked`` is
-    written on its own generation counter while the stream is stopped
-    and readers scan it unbounded, so BOTH maintenance paths (offline
-    ``compact_retrieval_index`` and the in-stream hook) must fold it
-    with no ``up_to`` bound — one discipline, not two (ADVICE r12)."""
-    return {odir / "revoked"}
 
 
 def _totals_path(odir: Path, batch_id: int) -> Path:
@@ -349,7 +324,7 @@ def _pruned_postings(
     window they are one batch AHEAD of the totals the caller took
     N/avgdl from. Scan only increments the totals cover; consolidated
     dirs (negative ids) fold batches at-or-below a committed totals
-    file (compact_retrieval_index bounds at the frontier), so they are
+    file (offline compaction bounds at the frontier), so they are
     always covered."""
     n_docs, _, tid, revoked = state
     if n_docs <= 0:
@@ -514,47 +489,6 @@ def backfill_retrieval_index(
     _record_retrieval_pointer(Path(funnel_dir), Path(index_dir))
 
 
-def compact_retrieval_index(
-    spark: SparkSession, out_dir: str | Path
-) -> dict[str, int]:
-    """OFFLINE: fold the stores' per-batch dirs (run while the stream
-    is not). Bounded at the totals commit frontier: after an UNCLEAN
-    stop the data stores can be one uncommitted batch ahead of the
-    newest totals file, and folding that increment into a negative-id
-    consolidated dir would smuggle it past ``bm25_search``'s
-    committed-snapshot filter (negative ids are unconditionally
-    admitted as covered) — it stays in its own positive dir, excluded
-    by the filter, until the restarted stream's replay commits it."""
-    odir = Path(out_dir)
-    _, tid = _latest_totals(odir)
-    return consolidate_stores(
-        spark, _store_map(odir), up_to=tid, unbounded=_unbounded_stores(odir)
-    )
-
-
-def start_retrieval_index_stream(
-    spark: SparkSession,
-    corpus_dir: str | Path,
-    out_dir: str | Path,
-    checkpoint_dir: str | Path,
-    schema: str,
-    id_col: str,
-    text_col: str,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    consolidate_every: int | None = 64,
-) -> StreamingQuery:
-    """Stream corpus parquet batches into the maintained index."""
-    odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    return run_view(
-        spark, corpus_dir, schema, checkpoint_dir,
-        lambda df, b: fold_batch(spark, odir, df, b, id_col, text_col),
-        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
-        unbounded=_unbounded_stores(odir),
-    )
-
-
 def hybrid_search_indexed(
     spark: SparkSession,
     out_dir: str | Path,
@@ -644,3 +578,29 @@ def hybrid_search_indexed(
         .alias("r"),
     )
     return rrf_fuse([bmr, annr], k=rrf_k, topk=k).withColumnRenamed("id", "doc_id")
+
+
+def _totals_frontier(odir: Path) -> int:
+    """The offline compaction bound: the newest totals file's id. After
+    an UNCLEAN stop the data stores can be one uncommitted batch ahead
+    of the newest totals file, and folding that increment into a
+    negative-id consolidated dir would smuggle it past
+    ``bm25_search``'s committed-snapshot filter (negative ids are
+    unconditionally admitted as covered) — it stays in its own positive
+    dir, excluded by the filter, until the restarted stream's replay
+    commits it."""
+    return _latest_totals(odir)[1]
+
+
+VIEW = View(
+    fold=fold_batch,
+    # ``revoked``: (doc_id, dl) rows of docs revoked AFTER indexing
+    # (funnel eval-generation upgrades — see ``revoke_docs``), read by
+    # ``bm25_search`` as an anti-join + totals correction. It is written
+    # on its own generation counter while the stream is stopped and read
+    # unbounded, so both folds (offline and in-stream) leave it unbounded
+    # — one discipline, not two (ADVICE r12).
+    stores={"postings": ["term_bucket"], "doclen": None, "revoked": None},
+    unbounded=frozenset({"revoked"}),
+    frontier=_totals_frontier,
+)

@@ -45,28 +45,13 @@ from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
-from ..batchstore import (
-    admit_batch,
-    append_batch_increment,
-    consolidate_stores,
-    read_store,
-    run_view,
-)
+from ..batchstore import View, admit_batch, append_batch_increment, read_store
 from ..operators.sessions import (
     GAP_US,
     active_hours_from_spans,
     merge_session_intervals as _merge_intervals,
 )
-
-
-def _store_map(odir: Path) -> dict:
-    return {odir / "sessions": None}
-
-
-def _transforms(odir: Path) -> dict:
-    return {odir / "sessions": _merge_intervals}
 
 
 def _batch_intervals(batch_df: DataFrame) -> DataFrame:
@@ -159,32 +144,10 @@ def active_sessions_per_hour_report(
     )
 
 
-def compact_sessions_store(
-    spark: SparkSession, out_dir: str | Path
-) -> dict[str, int]:
-    """OFFLINE consolidation: collapses to the resolved merged
-    intervals (one row per current session per user)."""
-    odir = Path(out_dir)
-    return consolidate_stores(spark, _store_map(odir), transforms=_transforms(odir))
-
-
-def start_sessions_stream(
-    spark: SparkSession,
-    events_dir: str | Path,
-    out_dir: str | Path,
-    checkpoint_dir: str | Path,
-    schema: str,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    consolidate_every: int | None = 64,
-) -> StreamingQuery:
-    """Stream event parquet files into the maintained session store.
-    ``available_now=True`` drains what's landed and stops."""
-    odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    return run_view(
-        spark, events_dir, schema, checkpoint_dir,
-        lambda df, b: fold_batch(spark, odir, df, b),
-        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
-        transforms=_transforms(odir),
-    )
+# Consolidation collapses to the resolved merged intervals (one row per
+# current session per user).
+VIEW = View(
+    fold=fold_batch,
+    stores={"sessions": None},
+    transforms={"sessions": lambda _: _merge_intervals},
+)

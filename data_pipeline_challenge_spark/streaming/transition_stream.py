@@ -46,19 +46,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.streaming import StreamingQuery
 
 from ..batchstore import (
+    View,
     admit_batch,
     append_batch_increment,
-    consolidate_stores,
     last_batch_id,
     read_store,
     run_view,
 )
-
-_STORES: tuple[tuple[str, list | None], ...] = (("pairs", None), ("frontier", None))
-
-
-def _store_map(odir: Path) -> dict:
-    return {odir / name: part for name, part in _STORES}
 
 
 def _current_frontier(spark: SparkSession, odir: Path) -> DataFrame | None:
@@ -195,44 +189,6 @@ def _frontier_collapse(df: DataFrame) -> DataFrame:
     )
 
 
-def _transforms(odir: Path) -> dict:
-    return {odir / "frontier": _frontier_collapse}
-
-
-def compact_transition_store(
-    spark: SparkSession, out_dir: str | Path
-) -> dict[str, int]:
-    """OFFLINE consolidation (run while the stream is not): pairs rows
-    are O(types² x batches) between compactions and collapse on read
-    (sum); frontier rows collapse to the resolved latest-per-user AT
-    FOLD TIME (``_frontier_collapse``), so the compacted frontier holds
-    exactly one row per ever-touched user."""
-    odir = Path(out_dir)
-    return consolidate_stores(spark, _store_map(odir), transforms=_transforms(odir))
-
-
-def start_transition_stream(
-    spark: SparkSession,
-    events_dir: str | Path,
-    out_dir: str | Path,
-    checkpoint_dir: str | Path,
-    schema: str,
-    max_files_per_trigger: int | None = None,
-    available_now: bool = True,
-    consolidate_every: int | None = 64,
-) -> StreamingQuery:
-    """Stream event parquet files into the maintained transition matrix.
-    ``available_now=True`` drains what's landed and stops."""
-    odir = Path(out_dir)
-    odir.mkdir(parents=True, exist_ok=True)
-    return run_view(
-        spark, events_dir, schema, checkpoint_dir,
-        lambda df, b: fold_batch(spark, odir, df, b),
-        max_files_per_trigger, available_now, _store_map(odir), consolidate_every,
-        transforms=_transforms(odir),
-    )
-
-
 def start_resequenced_transition_stream(
     spark: SparkSession,
     events_dir: str | Path,
@@ -266,10 +222,7 @@ def start_resequenced_transition_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         with_t = batch_df.withColumn("t_us", ntz_epoch_us(F.col("ts")))
         reseq_fold(spark, rdir, with_t, batch_id, _fold, delay_us)
-        consolidate_resequenced(
-            spark, rdir, batch_id, consolidate_every,
-            _store_map(odir), _transforms(odir),
-        )
+        consolidate_resequenced(spark, rdir, batch_id, consolidate_every, odir, VIEW)
 
     return run_view(
         spark, events_dir, schema, checkpoint_dir, process_batch,
@@ -289,3 +242,14 @@ def flush_resequenced(spark: SparkSession, out_dir: str | Path) -> None:
         fold_batch(spark, odir, released.drop("t_us"), batch_id, sequential=False)
 
     flush_resequencer(spark, odir / "reseq", _fold)
+
+
+# Pairs rows are O(types² x batches) between compactions and collapse on
+# read (sum); frontier rows collapse to the resolved latest-per-user AT
+# FOLD TIME, so the compacted frontier holds exactly one row per
+# ever-touched user.
+VIEW = View(
+    fold=fold_batch,
+    stores={"pairs": None, "frontier": None},
+    transforms={"frontier": lambda _: _frontier_collapse},
+)

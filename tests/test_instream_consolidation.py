@@ -19,9 +19,12 @@ import pytest
 
 from data_pipeline_challenge_spark.batchstore import (
     append_batch_increment,
+    compact_view,
     consolidate_batch_store,
     read_batch_store,
+    start_view,
 )
+from data_pipeline_challenge_spark.streaming import dedup_stream, filter_gate_stream
 
 
 def _doc_lander(corpus_dir: Path):
@@ -81,10 +84,7 @@ def test_dedup_stream_consolidates_mid_stream(spark, tmp_path):
     set as the non-consolidating twin, consolidation demonstrably fired
     mid-stream (directory count bounded), and a post-drain restart with
     new files keeps gating correctly against the folded history."""
-    from data_pipeline_challenge_spark.streaming.dedup_stream import (
-        current_novel_docs,
-        start_dedup_stream,
-    )
+    from data_pipeline_challenge_spark.streaming.dedup_stream import current_novel_docs
 
     corpus_dir = tmp_path / "corpus_in"
     corpus_dir.mkdir()
@@ -106,10 +106,10 @@ def test_dedup_stream_consolidates_mid_stream(spark, tmp_path):
     land("f4.parquet", [(8, texts[3]), (9, texts[5])])  # 8 dups 5, 9 novel
 
     def run(out, ckpt, every):
-        q = start_dedup_stream(
-            spark, corpus_dir, tmp_path / out, tmp_path / ckpt, SCHEMA,
-            "doc_id", "text", n_prefix=8, max_files_per_trigger=1,
-            consolidate_every=every,
+        q = start_view(
+            spark, dedup_stream.VIEW, corpus_dir, tmp_path / out, tmp_path / ckpt,
+            SCHEMA, id_col="doc_id", text_col="text", n_prefix=8,
+            max_files_per_trigger=1, consolidate_every=every,
         )
         q.awaitTermination(180)
 
@@ -143,7 +143,7 @@ def test_dedup_stream_consolidates_mid_stream(spark, tmp_path):
 
 
 def test_filter_gate_stream_consolidates_mid_stream(spark, tmp_path):
-    """``start_filter_gate_stream`` with ``consolidate_every=2``: three
+    """The filter gate's ``start_view`` with ``consolidate_every=2``: three
     one-file micro-batches (the hook first fires at batch 2, folding
     batches 0-1) admit and reject exactly what ``fold_batch`` does over
     the same batches, the runner's in-stream fold leaves each store at
@@ -154,11 +154,9 @@ def test_filter_gate_stream_consolidates_mid_stream(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from data_pipeline_challenge_spark.streaming.filter_gate_stream import (
-        compact_filter_gate_store,
         current_admitted_docs,
         fold_batch,
         rejected_log,
-        start_filter_gate_stream,
     )
 
     corpus_dir = tmp_path / "corpus_in"
@@ -175,9 +173,9 @@ def test_filter_gate_stream_consolidates_mid_stream(spark, tmp_path):
     keep = F.size(F.split(F.col("text"), " ")) >= 5
 
     out = tmp_path / "gate"
-    q = start_filter_gate_stream(
-        spark, corpus_dir, out, tmp_path / "ck", SCHEMA, keep,
-        max_files_per_trigger=1, consolidate_every=2,
+    q = start_view(
+        spark, filter_gate_stream.VIEW, corpus_dir, out, tmp_path / "ck", SCHEMA,
+        keep_expr=keep, max_files_per_trigger=1, consolidate_every=2,
     )
     q.awaitTermination(180)
 
@@ -206,7 +204,7 @@ def test_filter_gate_stream_consolidates_mid_stream(spark, tmp_path):
     admitted, rejected = rows(current_admitted_docs(spark, out)), rows(
         rejected_log(spark, out)
     )
-    compact_filter_gate_store(spark, out)
+    compact_view(spark, filter_gate_stream.VIEW, out)
     for name in ("docs", "rejected"):
         assert len(live(out / name)) <= 1, name
     assert rows(current_admitted_docs(spark, out)) == admitted
@@ -456,10 +454,7 @@ def test_crash_during_in_stream_fold_heals_on_replay(spark, tmp_path, monkeypatc
     sweeps the crash leftovers. Result and view equal the no-crash run."""
     from data_pipeline_challenge_spark import batchstore
     from data_pipeline_challenge_spark.streaming import dedup_stream
-    from data_pipeline_challenge_spark.streaming.dedup_stream import (
-        current_novel_docs,
-        start_dedup_stream,
-    )
+    from data_pipeline_challenge_spark.streaming.dedup_stream import current_novel_docs
 
     corpus_dir = tmp_path / "corpus_in"
     corpus_dir.mkdir()
@@ -470,10 +465,10 @@ def test_crash_during_in_stream_fold_heals_on_replay(spark, tmp_path, monkeypatc
     land("f2.parquet", [(3, "gamma doc about broadcast joins and salting")])
 
     def run(every):
-        q = start_dedup_stream(
-            spark, corpus_dir, tmp_path / "out", tmp_path / "ckpt", SCHEMA,
-            "doc_id", "text", n_prefix=8, max_files_per_trigger=1,
-            consolidate_every=every,
+        q = start_view(
+            spark, dedup_stream.VIEW, corpus_dir, tmp_path / "out", tmp_path / "ckpt",
+            SCHEMA, id_col="doc_id", text_col="text", n_prefix=8,
+            max_files_per_trigger=1, consolidate_every=every,
         )
         try:
             q.awaitTermination(180)

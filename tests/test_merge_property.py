@@ -17,7 +17,9 @@ import pyspark.sql.functions as F
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from data_pipeline_challenge_spark.batchstore import start_view
 from data_pipeline_challenge_spark.operators.merge import merge_products
+from data_pipeline_challenge_spark.streaming import dedup_stream
 
 CODES = ["A", "B", "C"]
 ATTR_KEYS = ["k1", "k2", "k3"]
@@ -488,10 +490,7 @@ def test_dedup_stream_fp_set_invariant_to_arrival_order(spark, arrival):
     from data_pipeline_challenge_spark.functions.textfn import (
         normalized_fingerprint,
     )
-    from data_pipeline_challenge_spark.streaming.dedup_stream import (
-        current_novel_docs,
-        start_dedup_stream,
-    )
+    from data_pipeline_challenge_spark.streaming.dedup_stream import current_novel_docs
 
     batches, ids = arrival
     SCHEMA = "doc_id long, text string"
@@ -516,9 +515,9 @@ def test_dedup_stream_fp_set_invariant_to_arrival_order(spark, arrival):
             )
             mtime += 10
             _os.utime(p, (mtime, mtime))
-        q = start_dedup_stream(
-            spark, corpus_dir, root / "dedup", root / "ckpt", SCHEMA,
-            "doc_id", "text", n_prefix=4, max_files_per_trigger=1,
+        q = start_view(
+            spark, dedup_stream.VIEW, corpus_dir, root / "dedup", root / "ckpt", SCHEMA,
+            id_col="doc_id", text_col="text", n_prefix=4, max_files_per_trigger=1,
         )
         q.awaitTermination(180)
 

@@ -1,11 +1,12 @@
 """Store maintenance contracts shared by every maintained view.
 
-- Offline compaction: each view's ``compact_*`` leaves its reports
+- Offline compaction: each view's ``compact_view`` leaves its reports
   unchanged and collapses every store to at most one live directory
   (driven through ``fold_batch`` directly — no stream is started).
 - One runner and one store loop: a Spark-free AST guard that keeps the
-  stream plumbing in ``batchstore.run_view`` and the per-store fold in
-  ``batchstore.consolidate_stores``.
+  stream plumbing in ``batchstore.run_view`` (reached through
+  ``start_view``), the per-store fold in ``batchstore.consolidate_stores``
+  and each view's stores in its ``View`` spec.
 - One fold protocol: the same guard pins the admission check, the
   in-stream consolidation hook and the store-data probe to their few
   remaining call sites outside ``batchstore``.
@@ -51,6 +52,7 @@ def _view(spark, tmp_path, view):
     """(fold(b), compact(), report(), stores) for one view: ``fold`` folds
     a tiny non-empty batch under id b, ``report`` is every read the view
     serves, ``stores`` every batch store the compactor maintains."""
+    from data_pipeline_challenge_spark.batchstore import compact_view
     from data_pipeline_challenge_spark.streaming import (
         cms_stream,
         corpus_pipeline_stream,
@@ -73,12 +75,6 @@ def _view(spark, tmp_path, view):
             "cms": cms_stream, "filter_gate": filter_gate_stream,
             "novelty_gate": novelty_stream, "overlap": overlap_stream,
         }[view]
-        compact = {
-            "cms": cms_stream.compact_cms_store,
-            "filter_gate": filter_gate_stream.compact_filter_gate_store,
-            "novelty_gate": novelty_stream.compact_novelty_store,
-            "overlap": overlap_stream.compact_overlap_store,
-        }[view]
         probes = spark.createDataFrame(
             [("item_0_0",), ("item_1_2",), ("absent",)], "item string"
         )
@@ -94,7 +90,12 @@ def _view(spark, tmp_path, view):
             ],
             "overlap": lambda: [_rows(overlap_stream.overlap_report(spark, out))],
         }[view]
-        return fold, lambda: compact(spark, out), report, mod._store_map(out)
+        return (
+            fold,
+            lambda: compact_view(spark, mod.VIEW, out),
+            report,
+            [out / name for name in mod.VIEW.stores],
+        )
 
     if view == "quantile":
         out = tmp_path / "quantile"
@@ -106,11 +107,11 @@ def _view(spark, tmp_path, view):
                 b,
                 "v",
             ),
-            lambda: quantile_stream.compact_quantile_store(spark, out),
+            lambda: compact_view(spark, quantile_stream.VIEW, out),
             lambda: [
                 _rows(quantile_stream.quantile_report(spark, out, [(1, 4), (1, 2), (9, 10)]))
             ],
-            quantile_stream._store_map(out),
+            [out / name for name in quantile_stream.VIEW.stores],
         )
 
     if view == "decontam":
@@ -126,12 +127,12 @@ def _view(spark, tmp_path, view):
             lambda b: decontam_stream.fold_batch(
                 spark, out, _docs(spark, b), b, ev, id_col="doc_id", text_col="text"
             ),
-            lambda: decontam_stream.compact_decontam_store(spark, out),
+            lambda: compact_view(spark, decontam_stream.VIEW, out),
             lambda: [
                 _rows(decontam_stream.current_clean_docs(spark, out)),
                 _rows(decontam_stream.contamination_log(spark, out)),
             ],
-            decontam_stream._store_map(out),
+            [out / name for name in decontam_stream.VIEW.stores],
         )
 
     if view == "embedding_dedup":
@@ -150,9 +151,9 @@ def _view(spark, tmp_path, view):
 
         return (
             lambda b: embedding_dedup_stream.fold_batch(spark, out, vecs(b), b),
-            lambda: embedding_dedup_stream.compact_embedding_dedup_store(spark, out),
+            lambda: compact_view(spark, embedding_dedup_stream.VIEW, out),
             lambda: [_rows(embedding_dedup_stream.current_kept_vectors(spark, out))],
-            embedding_dedup_stream._store_map(out),
+            [out / name for name in embedding_dedup_stream.VIEW.stores],
         )
 
     if view == "image_dedup":
@@ -172,12 +173,12 @@ def _view(spark, tmp_path, view):
 
         return (
             lambda b: image_dedup_stream.fold_batch(spark, out, media(b), b),
-            lambda: image_dedup_stream.compact_image_dedup_store(spark, out),
+            lambda: compact_view(spark, image_dedup_stream.VIEW, out),
             lambda: [
                 _rows(image_dedup_stream.current_kept_media(spark, out).select("media_id")),
                 _rows(image_dedup_stream.diverted_log(spark, out)),
             ],
-            image_dedup_stream._store_map(out),
+            [out / name for name in image_dedup_stream.VIEW.stores],
         )
 
     if view == "pipeline":
@@ -201,11 +202,14 @@ def _view(spark, tmp_path, view):
                 n_prefix=8,
             )
 
-        stores = {
-            **decontam_stream._store_map(out / "decontam"),
-            **dedup_stream._store_map(out / "exact"),
-            **near_dedup_stream._store_map(out / "near"),
-        }
+        stores = [
+            out / stage / name
+            for stage, mod in (
+                ("decontam", decontam_stream), ("exact", dedup_stream),
+                ("near", near_dedup_stream),
+            )
+            for name in mod.VIEW.stores
+        ]
         return (
             fold,
             lambda: corpus_pipeline_stream.compact_pipeline_stores(spark, out),
@@ -282,7 +286,8 @@ def _enclosing_sites(pred) -> list[str]:
 def test_one_stream_runner_and_one_store_loop():
     """Stream plumbing lives in ``batchstore.run_view`` (plus the
     binaryFile ingest source), only ``batchstore.consolidate_stores``
-    calls ``consolidate_batch_store``, and the fold protocol's admission
+    calls ``consolidate_batch_store``, declared views run through
+    ``start_view`` / ``compact_view``, and the fold protocol's admission
     check, in-stream hook and store-data probe keep to their few pinned
     sites — no view grows its own copy."""
     write_stream = _enclosing_sites(
@@ -297,9 +302,55 @@ def test_one_stream_runner_and_one_store_loop():
         "batchstore.py:consolidate_stores"
     ]
 
+    # Declared views run through ``start_view`` and fold offline through
+    # ``compact_view``; only the views with their own runner (the funnel,
+    # packing, group-texts, the ANN index, rollup and the resequenced
+    # wrappers) call ``run_view``, and only the ANN index and the two
+    # rows stores fold outside a view spec.
+    assert _enclosing_sites(_calls("run_view")) == [
+        "batchstore.py:start_view",
+        "streaming/attribution_stream.py:start_resequenced_attribution_stream",
+        "streaming/corpus_pipeline_stream.py:start_corpus_pipeline_stream",
+        "streaming/group_texts_stream.py:start_group_texts_stream",
+        "streaming/index_stream.py:start_index_stream",
+        "streaming/packing_stream.py:start_packing_stream",
+        "streaming/rollup_stream.py:start_rollup_stream",
+        "streaming/transition_stream.py:start_resequenced_transition_stream",
+    ]
+    assert _enclosing_sites(_calls("consolidate_stores")) == [
+        "batchstore.py:maybe_consolidate_in_stream",
+        "batchstore.py:compact_view",
+        "operators/similarity.py:compact_index_increments",
+        "streaming/group_texts_stream.py:compact_rows_store",
+        "streaming/packing_stream.py:compact_rows_store",
+    ]
+
+    # A view's stores are declared once, in its ``View``: no module but
+    # the two rows stores defines or uses a hand-written store map.
+    store_helpers = {"_store_map", "_STORES", "_transforms", "_unbounded_stores"}
+    assert sorted(
+        f"{path.relative_to(_PKG).as_posix()}:{n.name}"
+        for path in _PKG.rglob("*.py")
+        for n in ast.walk(ast.parse(path.read_text()))
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and n.name in store_helpers
+    ) == [
+        "streaming/group_texts_stream.py:_store_map",
+        "streaming/packing_stream.py:_store_map",
+    ]
+    assert sorted(set(_enclosing_sites(
+        lambda n: (isinstance(n, ast.Name) and n.id in store_helpers)
+        or (isinstance(n, ast.Attribute) and n.attr in store_helpers)
+    ))) == [
+        "streaming/group_texts_stream.py:compact_rows_store",
+        "streaming/group_texts_stream.py:start_group_texts_stream",
+        "streaming/packing_stream.py:compact_rows_store",
+        "streaming/packing_stream.py:start_packing_stream",
+    ]
+
     # The per-batch fold protocol: folds admit a batch through
     # ``admit_batch`` (only views whose commit id is not a store's last
-    # batch id call the guard themselves), ``run_view`` runs the
+    # batch id call the guard themselves), ``start_view`` runs the
     # in-stream hook (only views that consolidate inside their own fold
     # call it), and stores are read through ``read_store`` (only loops
     # over the batch dirs themselves glob them).
@@ -311,7 +362,7 @@ def test_one_stream_runner_and_one_store_loop():
         "streaming/rollup_stream.py:start_rollup_stream",
     ]
     assert _enclosing_sites(_calls("maybe_consolidate_in_stream")) == [
-        "batchstore.py:run_view",
+        "batchstore.py:start_view",
         "streaming/corpus_pipeline_stream.py:start_corpus_pipeline_stream",
         "streaming/group_texts_stream.py:start_group_texts_stream",
         "streaming/index_stream.py:start_index_stream",

@@ -9,9 +9,29 @@ import time
 import pyspark.sql.functions as F
 import pytest
 
+from data_pipeline_challenge_spark.batchstore import compact_view, start_view
 from data_pipeline_challenge_spark.catalog import load_events
 from data_pipeline_challenge_spark.pipeline import ProductWarehouse
 from data_pipeline_challenge_spark.sources.landing import upload
+from data_pipeline_challenge_spark.streaming import (
+    attribution_stream,
+    cms_stream,
+    components_stream,
+    dedup_stream,
+    embedding_dedup_stream,
+    heavy_stream,
+    image_dedup_stream,
+    kmv_stream,
+    near_dedup_stream,
+    novelty_stream,
+    overlap_stream,
+    paths_stream,
+    quantile_stream,
+    retention_stream,
+    retrieval_stream,
+    sessions_stream,
+    transition_stream,
+)
 from data_pipeline_challenge_spark.streaming.ingest_stream import drain_ingest_stream
 from data_pipeline_challenge_spark.streaming.windows import (
     dedup_latest_per_key,
@@ -1602,10 +1622,7 @@ def test_dedup_stream_emits_only_novel(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from data_pipeline_challenge_spark.streaming.dedup_stream import (
-        current_novel_docs,
-        start_dedup_stream,
-    )
+    from data_pipeline_challenge_spark.streaming.dedup_stream import current_novel_docs
 
     corpus_dir = tmp_path / "corpus_in"
     corpus_dir.mkdir()
@@ -1635,9 +1652,9 @@ def test_dedup_stream_emits_only_novel(spark, tmp_path):
         _os.utime(p, (_mtime[0], _mtime[0]))
 
     def run():
-        q = start_dedup_stream(
-            spark, corpus_dir, out_dir, ckpt, SCHEMA,
-            "doc_id", "text", n_prefix=8, max_files_per_trigger=1,
+        q = start_view(
+            spark, dedup_stream.VIEW, corpus_dir, out_dir, ckpt, SCHEMA,
+            id_col="doc_id", text_col="text", n_prefix=8, max_files_per_trigger=1,
         )
         q.awaitTermination(180)
 
@@ -1678,10 +1695,8 @@ def test_dedup_stream_probe_pruned_and_never_shuffles_index(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from data_pipeline_challenge_spark.streaming.dedup_stream import (
-        compact_dedup_store,
         current_novel_docs,
         history_fps,
-        start_dedup_stream,
     )
 
     corpus_dir = tmp_path / "corpus_in"
@@ -1698,9 +1713,9 @@ def test_dedup_stream_probe_pruned_and_never_shuffles_index(spark, tmp_path):
         )
 
     land("a.parquet", [(i, f"doc number {i}") for i in range(40)])
-    q = start_dedup_stream(
-        spark, corpus_dir, out_dir, ckpt, SCHEMA,
-        "doc_id", "text", n_prefix=8,
+    q = start_view(
+        spark, dedup_stream.VIEW, corpus_dir, out_dir, ckpt, SCHEMA, id_col="doc_id",
+        text_col="text", n_prefix=8,
     )
     q.awaitTermination(180)
 
@@ -1726,7 +1741,7 @@ def test_dedup_stream_probe_pruned_and_never_shuffles_index(spark, tmp_path):
 
     # Consolidation preserves the reader view (and the pruned scan shape).
     before = {r["fp"] for r in current_novel_docs(spark, out_dir).select("fp").collect()}
-    folded = compact_dedup_store(spark, out_dir)
+    folded = compact_view(spark, dedup_stream.VIEW, out_dir)
     assert folded["fp_index"] >= 0
     after = {r["fp"] for r in current_novel_docs(spark, out_dir).select("fp").collect()}
     assert before == after
@@ -2103,7 +2118,6 @@ def test_near_dedup_stream_probe_shape_and_consolidation(spark, tmp_path):
     index (no SortMergeJoin in the probe plan); store consolidation
     preserves the reader view."""
     from data_pipeline_challenge_spark.streaming.near_dedup_stream import (
-        compact_near_dedup_store,
         current_kept_docs,
         history_buckets,
         start_near_dedup_stream,
@@ -2148,7 +2162,7 @@ def test_near_dedup_stream_probe_shape_and_consolidation(spark, tmp_path):
     assert "BroadcastHashJoin" in plan
 
     before = {r["doc_id"] for r in current_kept_docs(spark, out_dir).collect()}
-    compact_near_dedup_store(spark, out_dir)
+    compact_view(spark, near_dedup_stream.VIEW, out_dir)
     after = {r["doc_id"] for r in current_kept_docs(spark, out_dir).collect()}
     assert before == after
     all_buckets = history_buckets(spark, out_dir, list(range(8))).count()
@@ -2481,7 +2495,6 @@ def test_embedding_dedup_stream_gates_vectors(spark, tmp_path):
     )
     from data_pipeline_challenge_spark.streaming.embedding_dedup_stream import (
         current_kept_vectors,
-        start_embedding_dedup_stream,
     )
 
     rng = np.random.RandomState(7)
@@ -2524,8 +2537,8 @@ def test_embedding_dedup_stream_gates_vectors(spark, tmp_path):
         _os.utime(p, (mt[0], mt[0]))
 
     def run():
-        q = start_embedding_dedup_stream(
-            spark, vec_dir, idx, ckpt, SCHEMA,
+        q = start_view(
+            spark, embedding_dedup_stream.VIEW, vec_dir, idx, ckpt, SCHEMA,
             min_cos=0.98, n_planes=6, max_files_per_trigger=1,
         )
         q.awaitTermination(240)
@@ -2691,7 +2704,6 @@ def test_gates_survive_degenerate_batches(spark, tmp_path):
     )
     from data_pipeline_challenge_spark.streaming.embedding_dedup_stream import (
         current_kept_vectors,
-        start_embedding_dedup_stream,
     )
 
     # (a) exact gate: batch 1 is entirely duplicates of batch 0.
@@ -2748,9 +2760,10 @@ def test_gates_survive_degenerate_batches(spark, tmp_path):
     # one under a new id (plain near-dup). Both must be dropped.
     land("b.parquet", [(1, v1), (7, v2)], 1_700_000_100)
     idx = tmp_path / "emb"
-    q = start_embedding_dedup_stream(
-        spark, vec_dir, idx, tmp_path / "ck", "vec_id long, embedding array<float>",
-        min_cos=0.99, n_planes=4, max_files_per_trigger=1,
+    q = start_view(
+        spark, embedding_dedup_stream.VIEW, vec_dir, idx, tmp_path / "ck",
+        "vec_id long, embedding array<float>", min_cos=0.99, n_planes=4,
+        max_files_per_trigger=1,
     )
     q.awaitTermination(240)
     rows = current_kept_vectors(spark, idx).collect()
@@ -2864,9 +2877,6 @@ def test_embedding_dedup_probe_prunes_bucket_partitions(spark, tmp_path):
     from data_pipeline_challenge_spark.operators.similarity import (
         _with_increments,
     )
-    from data_pipeline_challenge_spark.streaming.embedding_dedup_stream import (
-        start_embedding_dedup_stream,
-    )
 
     rng = np.random.RandomState(11)
     vec_dir = tmp_path / "vecs"
@@ -2893,8 +2903,8 @@ def test_embedding_dedup_probe_prunes_bucket_partitions(spark, tmp_path):
     land("a.parquet", list(range(40)), 1_700_000_000)       # bootstrap base
     land("b.parquet", list(range(100, 120)), 1_700_000_100)  # one increment
     idx = tmp_path / "emb_idx"
-    q = start_embedding_dedup_stream(
-        spark, vec_dir, idx, tmp_path / "ck",
+    q = start_view(
+        spark, embedding_dedup_stream.VIEW, vec_dir, idx, tmp_path / "ck",
         "vec_id long, embedding array<float>", min_cos=0.999, n_planes=4,
         max_files_per_trigger=1,
     )
@@ -3073,7 +3083,6 @@ def test_cap_pressure_audit_catches_missed_dup(spark, tmp_path):
     from data_pipeline_challenge_spark.batchstore import read_cap_audit
     from data_pipeline_challenge_spark.streaming.embedding_dedup_stream import (
         current_kept_vectors,
-        start_embedding_dedup_stream,
     )
 
     DIM = 4
@@ -3117,10 +3126,9 @@ def test_cap_pressure_audit_catches_missed_dup(spark, tmp_path):
         land(vec_dir, mt, "f0.parquet", [(1, a), (2, b)])
         land(vec_dir, mt, "f1.parquet", [(3, c)])
         idx = tmp_path / f"idx_{tag}"
-        q = start_embedding_dedup_stream(
-            spark, vec_dir, idx, tmp_path / f"ck_{tag}", SCHEMA,
-            min_cos=0.95, n_planes=1, bucket_cap=cap,
-            max_files_per_trigger=1,
+        q = start_view(
+            spark, embedding_dedup_stream.VIEW, vec_dir, idx, tmp_path / f"ck_{tag}",
+            SCHEMA, min_cos=0.95, n_planes=1, bucket_cap=cap, max_files_per_trigger=1,
         )
         q.awaitTermination(180)
         kept = sorted(
@@ -3976,9 +3984,7 @@ def test_heavy_stream_equals_batch(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from data_pipeline_challenge_spark.streaming.heavy_stream import (
-        compact_heavy_store,
         heavy_hitters_report,
-        start_heavy_hitters_stream,
     )
 
     corpus = tmp_path / "in"
@@ -4001,9 +4007,9 @@ def test_heavy_stream_equals_batch(spark, tmp_path):
         _os.utime(p, (mtime, mtime))
 
     out = tmp_path / "out"
-    q = start_heavy_hitters_stream(
-        spark, corpus, out, tmp_path / "ck", "term string", "term", k=10,
-        max_files_per_trigger=1,
+    q = start_view(
+        spark, heavy_stream.VIEW, corpus, out, tmp_path / "ck", "term string",
+        item_col="term", k=10, max_files_per_trigger=1,
     )
     q.awaitTermination(240)
 
@@ -4028,7 +4034,7 @@ def test_heavy_stream_equals_batch(spark, tmp_path):
     assert got2 == truth
 
     # offline compaction folds the counts dirs without changing the answer
-    folded = compact_heavy_store(spark, out)
+    folded = compact_view(spark, heavy_stream.VIEW, out)
     assert folded["counts"] >= 2
     got3 = {
         r["item"]: r["n"]
@@ -4084,11 +4090,7 @@ def test_retrieval_stream_matches_batch_bm25(spark, tmp_path):
     import pyarrow.parquet as pq
     import pyspark.sql.functions as F
 
-    from data_pipeline_challenge_spark.streaming.retrieval_stream import (
-        bm25_search,
-        compact_retrieval_index,
-        start_retrieval_index_stream,
-    )
+    from data_pipeline_challenge_spark.streaming.retrieval_stream import bm25_search
 
     corpus = tmp_path / "in"
     corpus.mkdir()
@@ -4116,9 +4118,10 @@ def test_retrieval_stream_matches_batch_bm25(spark, tmp_path):
         _os.utime(p, (mtime, mtime))
 
     out = tmp_path / "idx"
-    q = start_retrieval_index_stream(
-        spark, corpus, out, tmp_path / "ck", "doc_id long, text string",
-        "doc_id", "text", max_files_per_trigger=1,
+    q = start_view(
+        spark, retrieval_stream.VIEW, corpus, out, tmp_path / "ck",
+        "doc_id long, text string", id_col="doc_id", text_col="text",
+        max_files_per_trigger=1,
     )
     q.awaitTermination(240)
 
@@ -4156,7 +4159,7 @@ def test_retrieval_stream_matches_batch_bm25(spark, tmp_path):
     ]
 
     # compaction folds the stores without changing the answer
-    folded = compact_retrieval_index(spark, out)
+    folded = compact_view(spark, retrieval_stream.VIEW, out)
     assert folded["postings"] >= 2
     got2 = bm25_search(spark, out, terms, k=20).collect()
     assert [(r["doc_id"], r["bm25"]) for r in got2] == [
@@ -4649,7 +4652,6 @@ def test_bm25_pruned_read_over_every_store_state(spark, tmp_path):
         _totals_path,
         bm25_search,
         bm25_search_batch,
-        compact_retrieval_index,
         fold_batch,
     )
 
@@ -4668,7 +4670,7 @@ def test_bm25_pruned_read_over_every_store_state(spark, tmp_path):
 
     fold(0)
     fold(1)
-    compact_retrieval_index(spark, idx)  # consolidated -1, through 1
+    compact_view(spark, retrieval_stream.VIEW, idx)  # consolidated -1, through 1
     fold(2)  # live past the marker
     fold(3)
     _totals_path(idx, 3).unlink()  # crash between data and totals writes
@@ -4712,10 +4714,7 @@ def test_quantile_stream_equals_batch(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from data_pipeline_challenge_spark.operators.profiling import exact_quantiles
-    from data_pipeline_challenge_spark.streaming.quantile_stream import (
-        quantile_report,
-        start_quantile_stream,
-    )
+    from data_pipeline_challenge_spark.streaming.quantile_stream import quantile_report
 
     corpus = tmp_path / "in"
     corpus.mkdir()
@@ -4732,9 +4731,9 @@ def test_quantile_stream_equals_batch(spark, tmp_path):
         _os.utime(p, (mtime, mtime))
 
     out = tmp_path / "q"
-    qy = start_quantile_stream(
-        spark, corpus, out, tmp_path / "ck", "tok long", "tok",
-        max_files_per_trigger=1,
+    qy = start_view(
+        spark, quantile_stream.VIEW, corpus, out, tmp_path / "ck", "tok long",
+        value_col="tok", max_files_per_trigger=1,
     )
     qy.awaitTermination(240)
 
@@ -5120,7 +5119,6 @@ def test_revoke_zero_token_doc_corrects_n_docs(spark, tmp_path):
     from data_pipeline_challenge_spark.streaming.retrieval_stream import (
         bm25_search,
         revoke_docs,
-        start_retrieval_index_stream,
     )
 
     corpus = tmp_path / "in"
@@ -5137,9 +5135,9 @@ def test_revoke_zero_token_doc_corrects_n_docs(spark, tmp_path):
         str(corpus / "a.parquet"),
     )
     out = tmp_path / "idx"
-    q = start_retrieval_index_stream(
-        spark, corpus, out, tmp_path / "ck", "doc_id long, text string",
-        "doc_id", "text",
+    q = start_view(
+        spark, retrieval_stream.VIEW, corpus, out, tmp_path / "ck",
+        "doc_id long, text string", id_col="doc_id", text_col="text",
     )
     q.awaitTermination(240)
 
@@ -5231,10 +5229,7 @@ def test_overlap_stream_equals_batch(spark, tmp_path):
 
     from data_pipeline_challenge_spark.batchstore import append_batch_increment
     from data_pipeline_challenge_spark.plans.text import source_overlap_matrix
-    from data_pipeline_challenge_spark.streaming.overlap_stream import (
-        overlap_report,
-        start_overlap_stream,
-    )
+    from data_pipeline_challenge_spark.streaming.overlap_stream import overlap_report
 
     corpus_dir = tmp_path / "in"
     corpus_dir.mkdir()
@@ -5264,9 +5259,9 @@ def test_overlap_stream_equals_batch(spark, tmp_path):
         )
 
     def run(ck):
-        q = start_overlap_stream(
-            spark, corpus_dir, out, ck, SCHEMA, "source", "text",
-            shingle_n=N, max_files_per_trigger=1,
+        q = start_view(
+            spark, overlap_stream.VIEW, corpus_dir, out, ck, SCHEMA,
+            source_col="source", text_col="text", shingle_n=N, max_files_per_trigger=1,
         )
         q.awaitTermination(180)
 
@@ -5315,10 +5310,7 @@ def test_grouped_quantile_stream_equals_batch(spark, tmp_path):
     from data_pipeline_challenge_spark.operators.profiling import (
         grouped_exact_quantiles,
     )
-    from data_pipeline_challenge_spark.streaming.quantile_stream import (
-        quantile_report,
-        start_quantile_stream,
-    )
+    from data_pipeline_challenge_spark.streaming.quantile_stream import quantile_report
 
     src = tmp_path / "in"
     src.mkdir()
@@ -5336,8 +5328,8 @@ def test_grouped_quantile_stream_equals_batch(spark, tmp_path):
     land("b.parquet", [("news", 9), ("blog", 5), ("web", 40), ("news", 11)])
 
     out = tmp_path / "dist"
-    q = start_quantile_stream(
-        spark, src, out, tmp_path / "ck", SCHEMA, "tok",
+    q = start_view(
+        spark, quantile_stream.VIEW, src, out, tmp_path / "ck", SCHEMA, value_col="tok",
         group_cols=["source"], max_files_per_trigger=1,
     )
     q.awaitTermination(120)
@@ -5364,10 +5356,7 @@ def test_overlap_report_single_source_is_empty_matrix(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from data_pipeline_challenge_spark.streaming.overlap_stream import (
-        overlap_report,
-        start_overlap_stream,
-    )
+    from data_pipeline_challenge_spark.streaming.overlap_stream import overlap_report
 
     src = tmp_path / "in"
     src.mkdir()
@@ -5383,9 +5372,9 @@ def test_overlap_report_single_source_is_empty_matrix(spark, tmp_path):
         str(src / "a.parquet"),
     )
     out = tmp_path / "overlap"
-    q = start_overlap_stream(
-        spark, src, out, tmp_path / "ck",
-        "source string, text string", "source", "text", shingle_n=3,
+    q = start_view(
+        spark, overlap_stream.VIEW, src, out, tmp_path / "ck",
+        "source string, text string", source_col="source", text_col="text", shingle_n=3,
     )
     q.awaitTermination(120)
     rep = overlap_report(spark, out)
@@ -5409,7 +5398,6 @@ def test_novelty_gate_stream(spark, tmp_path):
     from data_pipeline_challenge_spark.streaming.novelty_stream import (
         current_admitted_docs,
         rejected_log,
-        start_novelty_stream,
     )
 
     N = 3  # shingle size
@@ -5455,10 +5443,10 @@ def test_novelty_gate_stream(spark, tmp_path):
         _os.utime(corpus / name, (mtimes[name], mtimes[name]))
 
     def run(ck):
-        q = start_novelty_stream(
-            spark, corpus, tmp_path / "gate", ck,
-            "doc_id long, text string", "doc_id", "text",
-            shingle_n=N, max_share=0.5, max_files_per_trigger=1,
+        q = start_view(
+            spark, novelty_stream.VIEW, corpus, tmp_path / "gate", ck,
+            "doc_id long, text string", id_col="doc_id", text_col="text", shingle_n=N,
+            max_share=0.5, max_files_per_trigger=1,
         )
         q.awaitTermination(180)
 
@@ -5664,7 +5652,6 @@ def test_image_dedup_gate_stream(spark, tmp_path):
     from data_pipeline_challenge_spark.streaming.image_dedup_stream import (
         current_kept_media,
         diverted_log,
-        start_image_dedup_stream,
     )
 
     def encode_bmp(gray_rows, w, h, bottom_up=True):
@@ -5730,9 +5717,9 @@ def test_image_dedup_gate_stream(spark, tmp_path):
     out = tmp_path / "gate"
 
     def run(ck):
-        q = start_image_dedup_stream(
-            spark, media_dir, out, ck, SCHEMA,
-            max_hamming=6, n_bands=8, max_files_per_trigger=1,
+        q = start_view(
+            spark, image_dedup_stream.VIEW, media_dir, out, ck, SCHEMA, max_hamming=6,
+            n_bands=8, max_files_per_trigger=1,
         )
         q.awaitTermination(240)
 
@@ -5997,8 +5984,8 @@ def test_transition_stream_out_of_order_fails_then_resequencer_fixes(
     _land_event_file(src_a / "f1.parquet", f1, 1_700_000_000)
     _land_event_file(src_a / "f2.parquet", f2, 1_700_000_010)
     out_a = tmp_path / "trans_plain"
-    q = transition_stream.start_transition_stream(
-        spark, src_a, out_a, tmp_path / "ck_plain",
+    q = start_view(
+        spark, transition_stream.VIEW, src_a, out_a, tmp_path / "ck_plain",
         "event_id long, ts timestamp_ntz, user_id long, event_type string",
         max_files_per_trigger=1,
     )
@@ -6134,9 +6121,9 @@ def test_attribution_stream_out_of_order_fails_then_resequencer_fixes(
     _land_attr_file(src_a / "f1.parquet", f1, 1_700_000_000)
     _land_attr_file(src_a / "f2.parquet", f2, 1_700_000_010)
     out_a = tmp_path / "attr_plain"
-    q = attribution_stream.start_attribution_stream(
-        spark, src_a, out_a, tmp_path / "ck_attr_plain", _ATTR_SCHEMA,
-        max_files_per_trigger=1,
+    q = start_view(
+        spark, attribution_stream.VIEW, src_a, out_a, tmp_path / "ck_attr_plain",
+        _ATTR_SCHEMA, max_files_per_trigger=1,
     )
     q.awaitTermination(240)
     got_plain = report(out_a)
@@ -6187,7 +6174,7 @@ def test_attribution_stream_out_of_order_fails_then_resequencer_fixes(
     # 5) offline compaction: report unchanged, attrib collapses to one
     # row per attributed type, frontier to one row per user
     before = report(out_b)
-    attribution_stream.compact_attribution_store(spark, out_b)
+    compact_view(spark, attribution_stream.VIEW, out_b)
     assert report(out_b) == before
     assert read_batch_store(spark, Path(out_b) / "attrib").count() == len(before)
     fr = read_batch_store(spark, Path(out_b) / "frontier").collect()
@@ -6280,8 +6267,9 @@ def test_retention_stream_equals_batch_and_replay(spark, tmp_path):
         _land_event_file(src / f"{name}.parquet", rows, 1_700_000_000 + mt)
 
     out = tmp_path / "ret"
-    q = retention_stream.start_retention_stream(
-        spark, src, out, tmp_path / "ck_ret", schema, max_files_per_trigger=1
+    q = start_view(
+        spark, retention_stream.VIEW, src, out, tmp_path / "ck_ret", schema,
+        max_files_per_trigger=1,
     )
     q.awaitTermination(240)
 
@@ -6304,7 +6292,7 @@ def test_retention_stream_equals_batch_and_replay(spark, tmp_path):
     assert report() == got
 
     # compaction: exact distinct activity set, report unchanged
-    retention_stream.compact_retention_store(spark, out)
+    compact_view(spark, retention_stream.VIEW, out)
     assert read_batch_store(spark, Path(out) / "act").count() == 5
     assert report() == got
 
@@ -6380,8 +6368,9 @@ def test_paths_stream_equals_batch_and_replay(spark, tmp_path):
         _land_event_file(src / f"{name}.parquet", rows, 1_700_000_000 + mt)
 
     out = tmp_path / "paths"
-    q = paths_stream.start_paths_stream(
-        spark, src, out, tmp_path / "ck_paths", schema, max_files_per_trigger=1
+    q = start_view(
+        spark, paths_stream.VIEW, src, out, tmp_path / "ck_paths", schema,
+        max_files_per_trigger=1,
     )
     q.awaitTermination(240)
 
@@ -6409,7 +6398,7 @@ def test_paths_stream_equals_batch_and_replay(spark, tmp_path):
     assert report() == got
 
     # compaction: <= 3 rows per user-day (u1d0:3, u1d1:3, u2d0:2)
-    paths_stream.compact_paths_store(spark, out)
+    compact_view(spark, paths_stream.VIEW, out)
     assert read_batch_store(spark, Path(out) / "prefix").count() == 8
     assert report() == got
 
@@ -6484,9 +6473,10 @@ def test_kmv_stream_equals_batch_and_replay(spark, tmp_path):
 
     out = tmp_path / "kmv"
     k = 16  # well under the 97-item universe: the estimator path
-    q = kmv_stream.start_kmv_stream(
-        spark, corpus, out, tmp_path / "ck_kmv", "src string, item string",
-        "item", k=k, group_cols=["src"], max_files_per_trigger=1,
+    q = start_view(
+        spark, kmv_stream.VIEW, corpus, out, tmp_path / "ck_kmv",
+        "src string, item string", item_col="item", k=k, group_cols=["src"],
+        max_files_per_trigger=1,
     )
     q.awaitTermination(240)
 
@@ -6517,7 +6507,7 @@ def test_kmv_stream_equals_batch_and_replay(spark, tmp_path):
     # compaction: <= k rows per group, report unchanged
     pre = read_batch_store(spark, Path(out) / "hashes").count()
     assert pre > 2 * k
-    kmv_stream.compact_kmv_store(spark, out)
+    compact_view(spark, kmv_stream.VIEW, out)
     post = read_batch_store(spark, Path(out) / "hashes").count()
     assert post <= 2 * k
     assert report() == got
@@ -6717,7 +6707,7 @@ def test_transition_compaction_collapses_frontier_and_prunes_buffer(
     frontier = Path(out) / "frontier"
     pre_rows = read_batch_store(spark, frontier).count()
     assert pre_rows > 2
-    transition_stream.compact_transition_store(spark, out)
+    compact_view(spark, transition_stream.VIEW, out)
     post = read_batch_store(spark, frontier).drop("ingest_batch").collect()
     assert len(post) == 2
     assert {(r["user_id"], r["event_type"]) for r in post} == {
@@ -7061,9 +7051,9 @@ def test_cms_stream_equals_batch_and_replay(spark, tmp_path):
         _os.utime(p, (mtime, mtime))
 
     out = tmp_path / "cms"
-    q = cms_stream.start_cms_stream(
-        spark, corpus, out, tmp_path / "ck", "term string", "term",
-        max_files_per_trigger=1,
+    q = start_view(
+        spark, cms_stream.VIEW, corpus, out, tmp_path / "ck", "term string",
+        item_col="term", max_files_per_trigger=1,
     )
     q.awaitTermination(240)
 
@@ -7145,9 +7135,9 @@ def test_cms_stream_grouped_equals_batch(spark, tmp_path):
         _os.utime(p, (mtime, mtime))
 
     out = tmp_path / "cms_grouped"
-    q = cms_stream.start_cms_stream(
-        spark, corpus, out, tmp_path / "ck", "src string, term string",
-        "term", group_cols=["src"], max_files_per_trigger=1,
+    q = start_view(
+        spark, cms_stream.VIEW, corpus, out, tmp_path / "ck", "src string, term string",
+        item_col="term", group_cols=["src"], max_files_per_trigger=1,
     )
     q.awaitTermination(240)
 
@@ -7217,8 +7207,8 @@ def test_transition_stream_equals_batch_and_replay(spark, tmp_path):
         _os.utime(p, (mtime, mtime))
 
     out = tmp_path / "trans"
-    q = transition_stream.start_transition_stream(
-        spark, corpus, out, tmp_path / "ck",
+    q = start_view(
+        spark, transition_stream.VIEW, corpus, out, tmp_path / "ck",
         "event_id long, ts timestamp_ntz, user_id long, event_type string",
         max_files_per_trigger=1,
     )
@@ -7352,9 +7342,7 @@ def test_components_stream_restart_replay_and_compaction(spark, tmp_path):
         connected_components,
     )
     from data_pipeline_challenge_spark.streaming.components_stream import (
-        compact_components_store,
         current_components,
-        start_components_stream,
     )
 
     src_dir = tmp_path / "edges"
@@ -7377,8 +7365,8 @@ def test_components_stream_restart_replay_and_compaction(spark, tmp_path):
     ckpt = tmp_path / "comp_ck"
 
     def run(ck=ckpt):
-        q = start_components_stream(
-            spark, src_dir, out, ck, "src long, dst long",
+        q = start_view(
+            spark, components_stream.VIEW, src_dir, out, ck, "src long, dst long",
             n_prefix=8, max_files_per_trigger=1, consolidate_every=2,
         )
         q.awaitTermination(240)
@@ -7406,7 +7394,7 @@ def test_components_stream_restart_replay_and_compaction(spark, tmp_path):
     assert view() == batch_labels()
 
     # offline compaction: view unchanged, stores collapse to resolved
-    compact_components_store(spark, out)
+    compact_view(spark, components_stream.VIEW, out)
     assert view() == batch_labels()
     from data_pipeline_challenge_spark.batchstore import read_batch_store
 
@@ -7731,10 +7719,8 @@ def test_sessions_stream_restart_replay_compaction_and_declared_parity(
 
     from data_pipeline_challenge_spark.batchstore import read_batch_store
     from data_pipeline_challenge_spark.streaming.sessions_stream import (
-        compact_sessions_store,
         fold_batch,
         sessions_report,
-        start_sessions_stream,
     )
 
     src = tmp_path / "sess_src"
@@ -7767,8 +7753,8 @@ def test_sessions_stream_restart_replay_compaction_and_declared_parity(
     ckpt = tmp_path / "sess_ck"
 
     def run(ck=ckpt):
-        q = start_sessions_stream(
-            spark, src, out, ck,
+        q = start_view(
+            spark, sessions_stream.VIEW, src, out, ck,
             "event_id long, ts timestamp_ntz, user_id long,"
             " event_type string, value double, props string",
             max_files_per_trigger=1, consolidate_every=2,
@@ -7796,7 +7782,7 @@ def test_sessions_stream_restart_replay_compaction_and_declared_parity(
     assert view() == before
 
     # offline compaction: view unchanged, one row per resolved session
-    compact_sessions_store(spark, out)
+    compact_view(spark, sessions_stream.VIEW, out)
     assert view() == before
     assert read_batch_store(spark, out / "sessions").count() == len(before)
 
