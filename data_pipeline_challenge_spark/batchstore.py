@@ -53,7 +53,7 @@ from dataclasses import dataclass, field
 from pathlib import Path
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     ArrayType,
@@ -220,9 +220,7 @@ def backfill_empty_sentinels(store: str | Path, next_batch_id: int) -> list[int]
     for n in range(start, next_batch_id):
         if n in present:
             continue
-        tmp = store / f".empty.b{n}.tmp"
-        tmp.write_text("")
-        os.replace(tmp, store / f".empty.b{n}")
+        _write_empty_sentinel(store, n)
         written.append(n)
     return written
 
@@ -688,6 +686,46 @@ def record_store_schema(
         _write_schema_file(store, schema)
 
 
+def _write_empty_sentinel(store: Path, batch_id: int) -> None:
+    """Record batch ``batch_id`` as an empty fold of ``store``: a
+    dot-prefixed FILE (``.empty.b{B}``), invisible to parquet listings
+    and the batch-dir regex, that :func:`last_batch_id` counts, so the
+    id still advances and a fresh-checkpoint renumbered replay cannot
+    pass the guard and OVERWRITE committed increments. No data dir is
+    written: a partitioned empty write leaves a file-less dir that
+    poisons every later read of the store."""
+    store.mkdir(parents=True, exist_ok=True)
+    tmp = store / f".empty.b{batch_id}.tmp"
+    tmp.write_text("")
+    os.replace(tmp, store / f".empty.b{batch_id}")
+
+
+def _write_counted(df: DataFrame, tmp: Path, partition_by) -> int:
+    """Write ``df`` as parquet at ``tmp`` and return its row count, read
+    from an ``Observation`` on that write: one evaluation of ``df``, no
+    emptiness probe. A 0-row write holds no data (partitioned: only
+    ``_SUCCESS``; unpartitioned: one 0-row file), so ``tmp`` is removed.
+
+    With ``partition_by``, rows are hash-clustered onto tasks by the
+    partition columns first; otherwise every task writes a sliver into
+    every partition value's directory (n_values × tasks small files)."""
+    if tmp.exists():
+        shutil.rmtree(tmp)
+    cols = [partition_by] if isinstance(partition_by, str) else list(partition_by or ())
+    if cols:
+        df = df.repartition(*[F.col(c) for c in cols])
+    # Observed right under the write, above the repartition: observed
+    # below its shuffle, AQE's empty-relation propagation drops the
+    # collector from an empty batch's final plan and no count arrives.
+    obs = Observation()
+    writer = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
+    writer.partitionBy(*cols).parquet(str(tmp))
+    n = obs.get["n"]
+    if not n:
+        shutil.rmtree(tmp)
+    return n
+
+
 def append_batch_increment(
     df: DataFrame,
     store: str | Path,
@@ -701,99 +739,43 @@ def append_batch_increment(
     filter gates) — the crash-safety-critical write path must not exist
     in per-module copies that drift.
 
-    Returns False when ``df`` has no rows, writing a SENTINEL file
-    (``.empty.b{B}``) instead of a data dir: a PARTITIONED write of an
-    empty DataFrame produces a directory with no data files, and one
-    such dir poisons every later ``spark.read.parquet`` over the store
-    (``UNABLE_TO_INFER_SCHEMA``) — while writing NOTHING would leave
-    ``last_batch_id`` stale after an all-empty fold, letting a
-    fresh-checkpoint renumbered replay pass the gate's guard and
-    OVERWRITE committed earlier increments with different content. The
-    sentinel is dot-prefixed (invisible to parquet listings and the
-    batch-dir regex), counted by ``last_batch_id``, and swept by
-    consolidation once superseded.
-
-    With ``partition_by``, rows are hash-clustered onto tasks by the
-    partition column first — otherwise every task writes a sliver into
-    every partition value's directory (n_values × tasks small files per
-    batch).
+    Returns False when ``df`` has no rows, leaving the empty-fold
+    sentinel (:func:`_write_empty_sentinel`) instead of a data dir. The
+    write runs once either way (:func:`_write_counted`), so the helper
+    neither probes ``df`` nor caches it.
 
     The increment is written in the store's recorded column order and
     checked against, or recorded as, the store's schema
     (:func:`record_store_schema`) before its rename: a refused batch
     leaves nothing behind."""
     store = Path(store)
-    # Cache across the emptiness probe and the write: both evaluate the
-    # (often join/aggregation-heavy) gate output, and without the cache
-    # every non-empty micro-batch would compute its plan twice. OWNERSHIP
-    # matters: Spark caching is per logical plan with no refcount, so
-    # unpersisting a frame the CALLER already cached would silently drop
-    # their cache and force a full recompute on their next use — only a
-    # cache this helper itself created is released here.
-    own_cache = not df.is_cached
-    if own_cache:
-        df = df.cache()
+    store.mkdir(parents=True, exist_ok=True)
+    tmp = store.parent / f".{store.name}.b{batch_id}.tmp"
+    out = _in_recorded_order(df, recorded_schema(store))
+    if not _write_counted(out, tmp, partition_by):
+        _write_empty_sentinel(store, batch_id)
+        return False
     try:
-        if not df.take(1):
-            # Record the empty fold with a sentinel FILE (`.empty.b{B}`,
-            # dot-prefixed: invisible to parquet listings and the batch-
-            # dir regex) so last_batch_id still advances: without it a
-            # store whose latest folds were all empty reports a stale id,
-            # and a fresh-checkpoint renumbered replay would pass the
-            # gate's guard and OVERWRITE committed earlier increments
-            # with different content. No data dir is written — a
-            # partitioned empty write leaves a file-less dir that poisons
-            # every later read of the store.
-            store.mkdir(parents=True, exist_ok=True)
-            marker = store / f".empty.b{batch_id}"
-            mtmp = store / f".empty.b{batch_id}.tmp"
-            mtmp.write_text("")
-            os.replace(mtmp, marker)
-            return False
-        store.mkdir(parents=True, exist_ok=True)
-        tmp = store.parent / f".{store.name}.b{batch_id}.tmp"
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        out = _in_recorded_order(df, recorded_schema(store))
-        if partition_by:
-            cols = (
-                [partition_by] if isinstance(partition_by, str) else list(partition_by)
-            )
-            clustered = out.repartition(*[F.col(c) for c in cols])
-            clustered.write.mode("overwrite").partitionBy(*cols).parquet(
-                str(tmp)
-            )
-        else:
-            out.write.mode("overwrite").parquet(str(tmp))
-        try:
-            record_store_schema(store, out.schema, batch_id, tmp, partition_by)
-        except ValueError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        final = store / f"ingest_batch={batch_id}"
-        if final.exists():
-            shutil.rmtree(final)
-        tmp.rename(final)
-        return True
-    finally:
-        if own_cache:
-            df.unpersist()
+        record_store_schema(store, out.schema, batch_id, tmp, partition_by)
+    except ValueError:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    final = store / f"ingest_batch={batch_id}"
+    if final.exists():
+        shutil.rmtree(final)
+    tmp.rename(final)
+    return True
 
 
-def account_empty_fold(
-    batch_df: DataFrame, stores, batch_id: int
-) -> None:
+def account_empty_fold(stores, batch_id: int) -> None:
     """Record one EMPTY fold in each store, in the given order — the
-    gates' shared empty/all-dropped-batch accounting (code-review r18:
-    five modules had hand-rolled copies of the two sentinel appends,
-    each re-encoding the write-order invariant in a comment). Pass the
-    stores in the gate's normal write order (commit store LAST): each
-    append leaves only a dot-prefixed sentinel (no data dir), the
-    min-across-stores guard advances, and the sequential-numbering
+    gates' shared empty/all-dropped-batch accounting. Pass the stores in
+    the gate's normal write order (commit store LAST): each gets only
+    its sentinel, written on the driver (no Spark job), so the
+    min-across-stores guard advances and the sequential-numbering
     guard's id sequence stays gap-free."""
-    empty = batch_df.limit(0)
     for s in stores:
-        append_batch_increment(empty, s, batch_id)
+        _write_empty_sentinel(Path(s), batch_id)
 
 
 def write_initial_consolidated(
@@ -812,27 +794,22 @@ def write_initial_consolidated(
     Empty frames write only the marker when ``through >= 0`` (the
     seeded horizon must still advance the replay guard) and nothing at
     ``through=-1`` — a file-less partitioned dir would poison every
-    later read either way."""
+    later read either way. ``df`` is evaluated once, by its write
+    (:func:`_write_counted`)."""
     store = Path(store)
-    has_rows = bool(df.take(1))
-    if not has_rows and through < 0:
-        return
+    created = not store.exists()
     store.mkdir(parents=True, exist_ok=True)
-    if has_rows:
-        tmp = store / ".consolidate.1.tmp"
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        if partition_by:
-            df.repartition(F.col(partition_by)).write.mode("overwrite").partitionBy(
-                partition_by
-            ).parquet(str(tmp))
-        else:
-            df.write.mode("overwrite").parquet(str(tmp))
+    tmp = store / ".consolidate.1.tmp"
+    if _write_counted(df, tmp, partition_by):
         record_store_schema(store, df.schema, -1, tmp, partition_by)
         final = store / "ingest_batch=-1"
         if final.exists():
             shutil.rmtree(final)
         tmp.rename(final)
+    elif through < 0:
+        if created:
+            store.rmdir()
+        return
     marker = {
         # consolidated stays -1 even with no data dir written: the read
         # view's `ingest_batch == -1` arm then simply matches nothing

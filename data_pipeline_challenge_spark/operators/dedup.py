@@ -247,20 +247,16 @@ def banded_minhash_tables(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The three tables every MinHash-LSH consumer needs, from one shingle
     pass: ``(sh, per_doc, banded)`` where ``sh`` = (doc, s) exploded
-    shingles, ``per_doc`` = (doc, mh array, n_sh) — CACHED, one groupBy
+    shingles, ``per_doc`` = (doc, mh array, n_sh) — one groupBy
     computing the signature array + the distinct-shingle COUNT (k+1 longs
     per doc, map-side combinable; the shuffle payload never carries
     shingle SETS, which at corpus scale would dominate it) — and
     ``banded`` = (doc, band, bh) band-hash rows. Shared by the batch
     self-join pair finder (:func:`minhash_lsh_pairs`) and the streaming
     against-history probe (``streaming/near_dedup_stream.py``), so both
-    compute bit-identical signatures.
-
-    Cache lifecycle: ``per_doc`` stays cached until the caller unpersists
-    it (the streaming gates do, per micro-batch); one-shot batch callers
-    deliberately leave it to Spark's LRU eviction — the plan references
-    it from several join arms, and unpersisting before the final action
-    would recompute the signature groupBy per arm."""
+    compute bit-identical signatures. Nothing is cached here: every
+    consumer reads ``per_doc`` from several join arms, so each pins it
+    for as long as it needs it."""
     rows_per_band = num_hashes // bands
     sh = _shingle_table(df, id_col, text_col, n)
     mh_arr = F.array(
@@ -271,11 +267,7 @@ def banded_minhash_tables(
             for j in range(num_hashes)
         ]
     )
-    per_doc = (
-        sh.groupBy("doc")
-        .agg(mh_arr.alias("mh"), F.count(F.lit(1)).alias("n_sh"))
-        .cache()
-    )
+    per_doc = sh.groupBy("doc").agg(mh_arr.alias("mh"), F.count(F.lit(1)).alias("n_sh"))
 
     band_structs = F.array(
         *[
@@ -314,6 +306,10 @@ def minhash_lsh_pairs(
     sh, per_doc, banded = banded_minhash_tables(
         df, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands
     )
+    # Left to Spark's LRU eviction: the returned plan reads the
+    # signatures from several join arms, so releasing them before the
+    # caller's action would recompute the groupBy per arm.
+    per_doc.cache()
     a = banded.alias("a")
     b = banded.alias("b")
     cand = (

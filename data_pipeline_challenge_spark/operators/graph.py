@@ -40,6 +40,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from ..session import release_checkpoint
+
 
 # checkpoint dirs registered by _pin, per application id: Spark's
 # getCheckpointDir returns a scheme-qualified path with a random UUID
@@ -164,7 +166,7 @@ def connected_components(
             checkpoint_dir,
         )
         new_sum = _label_sum(new_labels)
-        labels.unpersist()
+        release_checkpoint(labels)  # unpersist() is a no-op for a checkpoint
         labels = new_labels
         if new_sum == prev_sum:
             converged = True

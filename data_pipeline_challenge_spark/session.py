@@ -9,6 +9,8 @@ strategy + skew splitting), UTC session time, Arrow for any pandas exchange.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, TimestampType
@@ -116,3 +118,60 @@ def local_frame(
     return spark.createDataFrame(
         pa.Table.from_arrays(arrays, names=schema.names), schema
     )
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint`` frame. Its plan is a
+    ``LogicalRDD`` over the checkpointed RDD, which the ``CacheManager``
+    never saw, so ``DataFrame.unpersist()`` is a no-op for it: the
+    blocks stay in ``getPersistentRDDs()`` until JVM GC happens to
+    collect the frame. Unpersisting that RDD frees them now (and is
+    harmless for a reliable ``checkpoint``, whose RDD holds no blocks)."""
+    df._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+class Pins:
+    """The frames one :func:`pinned` scope holds, released in reverse
+    order when it exits."""
+
+    def __init__(self) -> None:
+        self._release: list = []
+
+    def __call__(self, df: DataFrame) -> DataFrame:
+        """Cache ``df`` for the rest of the scope. A frame its caller
+        already cached stays the caller's: Spark caches per plan with
+        no refcount, so releasing it here would drop their cache."""
+        if df.is_cached:
+            return df
+        self._release.append(df.cache().unpersist)
+        return df
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        """``df`` materialized now as an eager local checkpoint: its
+        lineage is cut, so a write and later reads of the result do not
+        re-run the plan that built it."""
+        df = df.localCheckpoint(eager=True)
+        self._release.append(lambda: release_checkpoint(df))
+        return df
+
+
+@contextmanager
+def pinned() -> Iterator[Pins]:
+    """One owner for the pins a fold takes::
+
+        with pinned() as pin:
+            batch = pin(batch_df)
+            kept = pin.checkpoint(kept)
+            ...
+
+    Everything pinned through ``pin`` is released when the block exits,
+    normally or by an exception, in reverse order. A frame returned out
+    of the block may read a released cache (its next action recomputes
+    what the cache held), but never a released checkpoint, whose
+    lineage is gone."""
+    pins = Pins()
+    try:
+        yield pins
+    finally:
+        for release in reversed(pins._release):
+            release()

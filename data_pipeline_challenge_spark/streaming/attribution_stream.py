@@ -76,6 +76,7 @@ from ..batchstore import (
     read_store,
     run_view,
 )
+from ..session import pinned
 from ..operators.attribution import (
     LOOKBACK_US,
     attribute_conversions,
@@ -154,51 +155,44 @@ def fold_batch(
         from ..catalog import ts_epoch_us
 
         batch_df = batch_df.withColumn("t_us", ts_epoch_us(batch_df, "ts"))
-    ev = batch_df.select(
-        "event_id", "user_id", "event_type", "value", "t_us"
-    ).cache()
-    try:
-        from ..operators.rollup import money_cents
+    from ..operators.rollup import money_cents
 
+    with pinned() as pin:
+        ev = pin(batch_df.select("event_id", "user_id", "event_type", "value", "t_us"))
         conv = ev.filter(F.col("event_type") == _CONV_TYPE).select(
             "user_id",
             F.col("t_us").alias("c_us"),
             money_cents(F.col("value")).alias("cents"),
         )
-        batch_touches = touch_rollup(
+        batch_touches = pin(touch_rollup(
             ev.filter(F.col("event_type").isin(*_TOUCH_TYPES)).select(
                 "user_id", "t_us", "event_id", "event_type"
             )
-        ).cache()
-        try:
-            frontier = _current_frontier(spark, odir)
-            touches = (
-                batch_touches
-                if frontier is None
-                else batch_touches.unionByName(
-                    frontier.select("user_id", "t_us", "t_event_id", "t_type")
-                )
+        ))
+        frontier = _current_frontier(spark, odir)
+        touches = (
+            batch_touches
+            if frontier is None
+            else batch_touches.unionByName(
+                frontier.select("user_id", "t_us", "t_event_id", "t_type")
             )
-            counts = (
-                attribute_conversions(
-                    conv, touches, lookback_us=lookback_us,
-                )
-                .groupBy("attributed")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum("cents").alias("value_cents"),
-                )
+        )
+        counts = (
+            attribute_conversions(
+                conv, touches, lookback_us=lookback_us,
             )
-            if batch_id > last_batch_id(attrib_store):
-                append_batch_increment(counts, attrib_store, batch_id)
-            # frontier delta: the batch's latest touch per touched user
-            append_batch_increment(
-                _latest_per_user(batch_touches), frontier_store, batch_id
+            .groupBy("attributed")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("cents").alias("value_cents"),
             )
-        finally:
-            batch_touches.unpersist()
-    finally:
-        ev.unpersist()
+        )
+        if batch_id > last_batch_id(attrib_store):
+            append_batch_increment(counts, attrib_store, batch_id)
+        # frontier delta: the batch's latest touch per touched user
+        append_batch_increment(
+            _latest_per_user(batch_touches), frontier_store, batch_id
+        )
 
 
 def attribution_report(
@@ -281,12 +275,12 @@ def rebuild_attribution_store(
             F.col("t_us").alias("c_us"),
             money_cents(F.col("value")).alias("cents"),
         )
-        touches = touch_rollup(
-            ev.filter(F.col("event_type").isin(*_TOUCH_TYPES)).select(
-                "user_id", "t_us", "event_id", "event_type"
-            )
-        ).cache()
-        try:
+        with pinned() as pin:
+            touches = pin(touch_rollup(
+                ev.filter(F.col("event_type").isin(*_TOUCH_TYPES)).select(
+                    "user_id", "t_us", "event_id", "event_type"
+                )
+            ))
             counts = (
                 attribute_conversions(conv, touches, lookback_us=lookback_us)
                 .groupBy("attributed")
@@ -299,8 +293,6 @@ def rebuild_attribution_store(
             write_initial_consolidated(
                 _latest_per_user(touches), tmp / "frontier", None
             )
-        finally:
-            touches.unpersist()
 
     rebuild_swap(out_dir, _build)
 

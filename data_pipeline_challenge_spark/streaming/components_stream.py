@@ -118,6 +118,7 @@ from ..batchstore import (
     write_initial_consolidated,
 )
 from ..operators.graph import connected_components
+from ..session import local_frame, pinned
 
 _LABELS_SCHEMA = "vertex long, component long, v_prefix int, ingest_batch int"
 _MEMBERS_SCHEMA = "component long, vertex long, c_prefix int, ingest_batch int"
@@ -239,22 +240,17 @@ def fold_batch(
     ):
         return
 
-    e = (
-        edges_df.select(
-            F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d")
+    with pinned() as pin:
+        e = pin(
+            edges_df.select(
+                F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d")
+            ).distinct()
         )
-        .distinct()
-        .cache()
-    )
-    cached = [e]
-    try:
-        verts = (
+        verts = pin(
             e.select(F.col("s").alias("vertex"))
             .union(e.select(F.col("d").alias("vertex")))
             .distinct()
-            .cache()
         )
-        cached.append(verts)
 
         # 1. current labels of the batch's endpoints: prefix-pruned +
         #    broadcast-semi keyed read, resolved by the min rule. The
@@ -271,13 +267,12 @@ def fold_batch(
                 .collect()
             )
             if touched_v:
-                lookup = _resolve_labels(
+                lookup = pin(_resolve_labels(
                     read_batch_store(spark, labels_store)
                     .filter(F.col("ingest_batch") != batch_id)
                     .filter(F.col("v_prefix").isin(touched_v))
                     .join(F.broadcast(verts), "vertex", "left_semi")
-                ).cache()
-                cached.append(lookup)
+                ))
 
         # 2. quotient graph: endpoints mapped through their labels
         #    (fresh vertices map to themselves), then the shared batch
@@ -301,8 +296,7 @@ def fold_batch(
         else:
             mapped = e.select(F.col("s").alias("src"), F.col("d").alias("dst"))
             old_comps = None
-        cc = connected_components(mapped).cache()
-        cached.append(cc)
+        cc = pin(connected_components(mapped))
 
         # 3. final label per quotient node (old component ids + fresh
         #    vertex ids): cc covers every non-self-loop endpoint; nodes
@@ -315,12 +309,11 @@ def fold_batch(
         base = fresh.select(F.col("vertex").alias("node"))
         if old_comps is not None:
             base = base.union(old_comps.select(F.col("component").alias("node")))
-        final = base.distinct().join(
+        final = pin(base.distinct().join(
             F.broadcast(cc.withColumnRenamed("vertex", "node")), "node", "left"
         ).select(
             "node", F.coalesce("component", F.col("node")).alias("newc")
-        ).cache()
-        cached.append(final)
+        ))
 
         # fresh vertices: first label rows
         new_rows = final.join(
@@ -350,20 +343,19 @@ def fold_batch(
             ).collect()
             if merged_rows:
                 touched_c = sorted({r["p"] for r in merged_rows})
-                remap = spark.createDataFrame(
+                remap = local_frame(
+                    spark,
                     [(r["component"], r["newc"]) for r in merged_rows],
                     "component long, newc long",
                 )
-                members = (
+                members = pin(
                     read_batch_store(spark, members_store)
                     .filter(F.col("ingest_batch") != batch_id)
                     .filter(F.col("c_prefix").isin(touched_c))
                     .join(F.broadcast(remap), "component")
                     .select("vertex", F.col("newc").alias("component"))
                     .distinct()
-                    .cache()
                 )
-                cached.append(members)
                 # relabel-pressure audit (VERDICT r16 #2): the count runs
                 # over the cached relabel set the fold writes anyway —
                 # one extra action, no extra scan shape
@@ -372,7 +364,7 @@ def fold_batch(
                 )
                 new_rows = new_rows.unionByName(members)
 
-        new_rows = new_rows.distinct().localCheckpoint(eager=True)
+        new_rows = pin.checkpoint(new_rows.distinct())
         # labels BEFORE members (crash-replay argument in the module
         # docstring); empty batches leave sentinels so the guard advances
         append_batch_increment(
@@ -393,9 +385,6 @@ def fold_batch(
             batch_id,
             partition_by="c_prefix",
         )
-    finally:
-        for c in cached:
-            c.unpersist()
 
 
 def current_components(
@@ -417,7 +406,7 @@ def component_of(
     odir = Path(out_dir)
     n_prefix = _pinned_n_prefix(odir)
     store = odir / "labels"
-    ids = spark.createDataFrame([(int(v),) for v in vertex_ids], "vertex long")
+    ids = local_frame(spark, [(int(v),) for v in vertex_ids], "vertex long")
     touched = sorted(
         {
             r["p"]
@@ -469,8 +458,8 @@ def rebuild_components_store(
 
     def _build(tmp: Path) -> None:
         ensure_store_params(tmp, {"n_prefix": int(n_prefix)})
-        labels = connected_components(retained_edges, src=src, dst=dst).cache()
-        try:
+        with pinned() as pin:
+            labels = pin(connected_components(retained_edges, src=src, dst=dst))
             write_initial_consolidated(
                 labels.select("vertex", "component").withColumn(
                     "v_prefix", prefix_bucket(F.col("vertex"), n_prefix)
@@ -485,8 +474,6 @@ def rebuild_components_store(
                 tmp / "members",
                 "c_prefix",
             )
-        finally:
-            labels.unpersist()
 
     rebuild_swap(out_dir, _build)
 
@@ -533,8 +520,8 @@ def backfill_components_store(
             "from the full pair history"
         )
     ensure_store_params(odir, {"n_prefix": int(n_prefix)})
-    labels = connected_components(edges, src=src, dst=dst).cache()
-    try:
+    with pinned() as pin:
+        labels = pin(connected_components(edges, src=src, dst=dst))
         write_initial_consolidated(
             labels.select("vertex", "component").withColumn(
                 "v_prefix", prefix_bucket(F.col("vertex"), n_prefix)
@@ -551,8 +538,6 @@ def backfill_components_store(
             "c_prefix",
             through=through_batch,
         )
-    finally:
-        labels.unpersist()
 
 
 # Labels collapse to one resolved row per vertex; members drop absorbed

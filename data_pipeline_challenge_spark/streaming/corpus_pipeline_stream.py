@@ -78,6 +78,7 @@ from ..batchstore import (
     run_view,
     view_stores,
 )
+from ..session import local_frame
 
 # The funnel's stages in fold order: (subdir, view, the report's counts —
 # metric -> reader of the stage dir). One table drives the in-stream
@@ -892,4 +893,4 @@ def pipeline_report(spark: SparkSession, out_dir: str | Path) -> DataFrame:
         for name in retrieval_stream.VIEW.stores:
             _store_rows(stage, idx_dir / name)
 
-    return spark.createDataFrame(rows, "stage string, metric string, value long")
+    return local_frame(spark, rows, "stage string, metric string, value long")

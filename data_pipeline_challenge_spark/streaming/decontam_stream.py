@@ -52,6 +52,7 @@ from ..batchstore import (
     start_view,
 )
 from ..operators.dedup import _shingle_table
+from ..session import local_frame, pinned
 
 
 def _revocation_key(rev: DataFrame, store: Path, docs_cols: list[str]) -> list[str]:
@@ -249,8 +250,8 @@ def add_eval_generation(
     gen = last_batch_id(odir / "revoked") + 1
     kept = current_clean_docs(spark, odir)
     wrote = False
-    revocations = spark.createDataFrame(
-        [], f"{id_col} long, n_shared long, n_eval_docs long"
+    revocations = local_frame(
+        spark, [], f"{id_col} long, n_shared long, n_eval_docs long"
     )
     if kept is not None:
         revocations = contamination_report(
@@ -281,7 +282,9 @@ def contamination_log(spark: SparkSession, out_dir: str | Path) -> DataFrame | N
 
 def eval_shingles(eval_df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """The eval set's shingle table, cached — compute ONCE per stream (or
-    per composed pipeline) and pass to every ``fold_batch`` call."""
+    per composed pipeline) and pass to every ``fold_batch`` call. The
+    one pin in ``streaming/`` that no fold's ``session.pinned``
+    scope owns: it lives as long as the stream."""
     return (
         _shingle_table(eval_df, id_col, text_col, n)
         .select(F.col("doc").alias("eval_doc"), "s")
@@ -312,15 +315,15 @@ def fold_batch(
     cont_store = odir / "contaminated"
     if not admit_batch(odir, batch_id, docs_store, cont_store):
         return read_store(spark, docs_store, batch_id)
-    batch = batch_df.cache()
-    try:
+    with pinned() as pin:
+        batch = pin(batch_df)
         if not batch.take(1):
             # empty micro-batch: sentinel accounting keeps the id
             # sequence gap-free for the sequential guard (r18)
-            account_empty_fold(batch, (docs_store, cont_store), batch_id)
+            account_empty_fold((docs_store, cont_store), batch_id)
             return None
         tr = _shingle_table(batch, id_col, text_col, n)
-        overlap = (
+        overlap = pin(
             tr.join(F.broadcast(ev), "s")
             .groupBy(F.col("doc").alias(id_col))
             .agg(
@@ -328,23 +331,21 @@ def fold_batch(
                 F.count_distinct("eval_doc").alias("n_eval_docs"),
             )
             .filter(F.col("n_shared") >= min_shared)
-            .cache()
         )
-        try:
-            contaminated = batch.join(overlap, id_col, "inner")
-            clean = batch.join(
-                F.broadcast(overlap.select(id_col)), id_col, "left_anti"
-            )
-            # docs BEFORE contaminated (replay-guard ordering). Either
-            # side may be empty on a given batch; empty increments are
-            # skipped (see append_batch_increment) — the replay guard
-            # staying behind is safe, a refold recomputes the same split.
-            append_batch_increment(clean, docs_store, batch_id)
-            append_batch_increment(contaminated, cont_store, batch_id)
-        finally:
-            overlap.unpersist()
-    finally:
-        batch.unpersist()
+        # the evidence replaces a doc column of the same name: a
+        # duplicate column fails the store write, even a 0-row one
+        contaminated = batch.drop("n_shared", "n_eval_docs").join(
+            overlap, id_col, "inner"
+        )
+        clean = batch.join(
+            F.broadcast(overlap.select(id_col)), id_col, "left_anti"
+        )
+        # docs BEFORE contaminated (replay-guard ordering). Either side
+        # may be empty on a given batch; an empty increment leaves only
+        # its sentinel (see append_batch_increment) — a refold
+        # recomputes the same split.
+        append_batch_increment(clean, docs_store, batch_id)
+        append_batch_increment(contaminated, cont_store, batch_id)
     return read_store(spark, docs_store, batch_id)
 
 

@@ -67,6 +67,7 @@ from ..batchstore import (
     read_store,
 )
 from ..functions.textfn import normalized_fingerprint
+from ..session import pinned
 
 
 def _prefix_of(fp_col, n_prefix: int):
@@ -139,54 +140,41 @@ def fold_batch(
     # so a crash-replay recomputes the identical novel set. One
     # batch-sized shuffle.
     w = Window.partitionBy("fp").orderBy(F.col(id_col))
-    winners = (
-        with_fp.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .cache()  # reused by the touched collect, the probe, both appends
-    )
-    try:
-        return _fold_winners(
-            spark, winners, batch_id, n_prefix, fp_store, docs_store
+    with pinned() as pin:
+        # reused by the touched collect, the probe, both appends
+        winners = pin(
+            with_fp.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
         )
-    finally:
-        # covers every exit, including a transient failure in the probe
-        # collects — a caller that retries per tick must not strand one
-        # cached frame per failed round in the long-lived session
-        winners.unpersist()
-
-
-def _fold_winners(spark, winners, batch_id, n_prefix, fp_store, docs_store):
-    # Driver-side touched-prefix literal (bounded by n_prefix): the
-    # membership probe below prunes the index to these partitions at
-    # planning time.
-    touched = sorted(
-        r["p"]
-        for r in winners.select(_prefix_of(F.col("fp"), n_prefix).alias("p"))
-        .distinct()
-        .collect()
-    )
-    if not touched:
-        # Empty micro-batch: nothing novel by construction — sentinel
-        # accounting keeps the id sequence gap-free (r18): an upstream
-        # gate dropping a whole batch must not make this store look
-        # like a foreign checkpoint.
-        account_empty_fold(winners, (docs_store, fp_store), batch_id)
-        return None
-    batch_fps = winners.select("fp")
-    index = read_store(spark, fp_store)
-    if index is not None:
-        # Which batch fps exist in history: prefix-pruned index scan,
-        # semi-joined against the BROADCAST batch set — the index is
-        # streamed map-side, never shuffled, never rewritten.
-        hits = _touched_fps(index, touched).join(
-            F.broadcast(batch_fps), "fp", "left_semi"
+        # Driver-side touched-prefix literal (bounded by n_prefix): the
+        # membership probe below prunes the index to these partitions at
+        # planning time.
+        touched = sorted(
+            r["p"]
+            for r in winners.select(_prefix_of(F.col("fp"), n_prefix).alias("p"))
+            .distinct()
+            .collect()
         )
-        novel = winners.join(F.broadcast(hits), "fp", "left_anti")
-    else:
-        novel = winners
-    novel = novel.cache()
-    try:
+        if not touched:
+            # Empty micro-batch: nothing novel by construction — sentinel
+            # accounting keeps the id sequence gap-free (r18): an upstream
+            # gate dropping a whole batch must not make this store look
+            # like a foreign checkpoint.
+            account_empty_fold((docs_store, fp_store), batch_id)
+            return None
+        batch_fps = winners.select("fp")
+        index = read_store(spark, fp_store)
+        if index is not None:
+            # Which batch fps exist in history: prefix-pruned index scan,
+            # semi-joined against the BROADCAST batch set — the index is
+            # streamed map-side, never shuffled, never rewritten.
+            hits = _touched_fps(index, touched).join(
+                F.broadcast(batch_fps), "fp", "left_semi"
+            )
+            novel = pin(winners.join(F.broadcast(hits), "fp", "left_anti"))
+        else:
+            novel = winners
         # docs BEFORE fp_index (see module docstring's crash argument).
         # BOTH stores are recorded even for an all-duplicate batch (the
         # helper leaves an empty-fold sentinel instead of a data dir), so
@@ -204,10 +192,8 @@ def _fold_winners(spark, winners, batch_id, n_prefix, fp_store, docs_store):
             batch_id,
             partition_by="fp_prefix",
         )
-        if not admitted:
-            return None
-    finally:
-        novel.unpersist()
+    if not admitted:
+        return None
     return read_store(spark, docs_store, batch_id)
 
 

@@ -76,6 +76,7 @@ from ..batchstore import (
 )
 from ..functions.vectorfn import as_double, cosine
 from ..operators.similarity import _LSH_SEED, _with_increments, with_lsh_bucket
+from ..session import pinned
 
 
 def _base_batch(index_dir: Path) -> int:
@@ -142,22 +143,22 @@ def fold_batch(
     else:
         meta = json.loads(meta_p.read_text())
 
-    bucketed = with_lsh_bucket(
-        batch_df,
-        meta["dim"],
-        meta["n_planes"],
-        vec_col,
-        # honor the index's RECORDED seed (an externally-built or older
-        # index may differ from the module constant): bucketing new
-        # vectors with different hyperplanes than the base would probe
-        # the wrong buckets and append inconsistently-bucketed increments
-        seed=meta.get("seed"),
-    ).cache()
-    try:
+    with pinned() as pin:
+        bucketed = pin(with_lsh_bucket(
+            batch_df,
+            meta["dim"],
+            meta["n_planes"],
+            vec_col,
+            # honor the index's RECORDED seed (an externally-built or older
+            # index may differ from the module constant): bucketing new
+            # vectors with different hyperplanes than the base would probe
+            # the wrong buckets and append inconsistently-bucketed increments
+            seed=meta.get("seed"),
+        ))
         if not bucketed.take(1):
             # empty micro-batch: sentinel accounting keeps the id
             # sequence gap-free for the sequential guard (r18)
-            account_empty_fold(bucketed, (inc_store,), batch_id)
+            account_empty_fold((inc_store,), batch_id)
             return None
 
         # Probe neighborhood of each new vector: own bucket + Hamming-1.
@@ -261,8 +262,6 @@ def fold_batch(
         ):
             return None
         return read_store(spark, inc_store, batch_id)
-    finally:
-        bucketed.unpersist()
 
 
 # The increment store keeps its bucket partitioning through consolidation.

@@ -40,6 +40,7 @@ from ..batchstore import (
     read_store,
 )
 from ..functions.textfn import top_token_fraction
+from ..session import pinned
 
 def gopher_keep(
     text_col: str,
@@ -93,22 +94,21 @@ def fold_batch(
     rej_store = odir / "rejected"
     if not admit_batch(odir, batch_id, docs_store, rej_store):
         return read_store(spark, docs_store, batch_id)
-    batch = batch_df.cache()
-    try:
+    with pinned() as pin:
+        batch = pin(batch_df)
         if not batch.take(1):
             # empty micro-batch: sentinel accounting keeps the id
             # sequence gap-free for the sequential guard (r18)
-            account_empty_fold(batch, (docs_store, rej_store), batch_id)
+            account_empty_fold((docs_store, rej_store), batch_id)
             return None
         # docs BEFORE rejected (replay-guard ordering). Either side may
-        # be empty; empty increments are skipped (append_batch_increment)
-        # and a replayed fold recomputes the same split.
+        # be empty; an empty increment leaves only its sentinel
+        # (append_batch_increment) and a replayed fold recomputes the
+        # same split.
         append_batch_increment(batch.filter(keep_expr), docs_store, batch_id)
         append_batch_increment(
             batch.filter(~F.coalesce(keep_expr, F.lit(False))), rej_store, batch_id
         )
-    finally:
-        batch.unpersist()
     return read_store(spark, docs_store, batch_id)
 
 

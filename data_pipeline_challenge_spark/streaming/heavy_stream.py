@@ -50,6 +50,7 @@ from ..batchstore import (
     write_commit_file,
 )
 from ..operators.sketches import _mg_merge, mg_summary
+from ..session import local_frame, pinned
 
 _N_BUCKETS = 64
 
@@ -115,13 +116,12 @@ def fold_batch(
     items = batch_df.select(
         F.col(item_col).cast("string").alias("item")
     ).filter(F.col("item").isNotNull())
-    batch_counts = (
-        items.groupBy("item")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("item_bucket", prefix_bucket(F.col("item"), _N_BUCKETS))
-        .cache()
-    )
-    try:
+    with pinned() as pin:
+        batch_counts = pin(
+            items.groupBy("item")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .withColumn("item_bucket", prefix_bucket(F.col("item"), _N_BUCKETS))
+        )
         batch_mg = mg_summary(items, "item", k)
         batch_total = batch_counts.agg(
             F.coalesce(F.sum("n"), F.lit(0)).alias("t")
@@ -133,16 +133,14 @@ def fold_batch(
             batch_counts, counts_store, batch_id, partition_by="item_bucket"
         )
 
-        prev, _ = _latest_summary(odir, before=batch_id)
-        merged = _mg_merge(iter([prev.get("mg", {}), batch_mg]), int(k))
-        rec = {
-            "batch_id": batch_id,
-            "mg": merged,
-            "n_total": int(prev.get("n_total", 0)) + int(batch_total),
-        }
-        write_commit_file(odir / "mg", batch_id, rec)
-    finally:
-        batch_counts.unpersist()
+    prev, _ = _latest_summary(odir, before=batch_id)
+    merged = _mg_merge(iter([prev.get("mg", {}), batch_mg]), int(k))
+    rec = {
+        "batch_id": batch_id,
+        "mg": merged,
+        "n_total": int(prev.get("n_total", 0)) + int(batch_total),
+    }
+    write_commit_file(odir / "mg", batch_id, rec)
 
 
 def heavy_hitters_report(
@@ -162,7 +160,7 @@ def heavy_hitters_report(
     cands = sorted(summary.get("mg", {}))
     n_total = int(summary.get("n_total", 0))
     if not cands or n_total == 0:
-        return spark.createDataFrame([], "item string, n long")
+        return local_frame(spark, [], "item string, n long")
     # driver-local constant-folded bucket evaluation — no cluster job
     # per report just to hash the <=k candidate strings (batchstore.
     # prefix_bucket_local, r19)

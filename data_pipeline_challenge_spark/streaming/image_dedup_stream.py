@@ -47,6 +47,7 @@ from ..batchstore import (
     append_batch_increment,
     read_store,
 )
+from ..session import pinned
 
 _N_BUCKETS = 64  # per-band hash buckets (partition key: band, bucket)
 
@@ -116,128 +117,100 @@ def fold_batch(
     if not admit_batch(odir, batch_id, hash_store, params=params):
         return read_store(spark, kept_store, batch_id)
 
-    batch = batch_df.cache()
-    try:
+    with pinned() as pin:
+        batch = pin(batch_df)
         if not batch.take(1):
             # empty micro-batch: sentinel accounting keeps the id
             # sequence gap-free for the sequential guard (r18)
-            account_empty_fold(batch, (kept_store, hash_store), batch_id)
+            account_empty_fold((kept_store, hash_store), batch_id)
             return None
-        sig = image_dhash(batch).cache()
-        try:
-            banded = _banded(sig, n_bands, "media_id").cache()
-            try:
-                probes = sorted(
-                    (int(r["band"]), int(r["bucket"]))
-                    for r in banded.select("band", "bucket")
-                    .distinct()
-                    .collect()
-                )
-                hist = read_store(spark, hash_store) if probes else None
-                if hist is not None:
-                    cond = None
-                    for bd, bk in probes:
-                        c = (F.col("band") == bd) & (F.col("bucket") == bk)
-                        cond = c if cond is None else (cond | c)
-                    hist = (
-                        hist.filter(cond)  # partition-pruned literal union
-                        .select(
-                            "band", "bh",
-                            F.col("media_id").alias("_hid"),
-                            F.col("dhash").alias("_hh"),
-                        )
-                    )
-                # candidates vs KEPT history: any shared band
-                dup_vs_hist = None
-                if hist is not None:
-                    dup_vs_hist = (
-                        banded.join(hist, ["band", "bh"])
-                        .filter(
-                            F.bit_count(
-                                F.col("dhash").bitwiseXOR(F.col("_hh"))
-                            )
-                            <= int(max_hamming)
-                        )
-                        .groupBy("media_id")
-                        .agg(F.min("_hid").alias("dup_of"))
-                    )
-                # intra-batch competition runs among HISTORY-CLEAN images
-                # only (a history-dup must not block a clean image — the
-                # kept-set-only rule), and the lowest media_id in a
-                # mutual-near clean group wins
-                banded_clean = banded
-                if dup_vs_hist is not None:
-                    banded_clean = banded.join(
-                        dup_vs_hist.select("media_id"), "media_id", "left_anti"
-                    )
-                other = banded_clean.select(
-                    F.col("media_id").alias("_oid"),
-                    F.col("dhash").alias("_oh"),
+        sig = pin(image_dhash(batch))
+        banded = pin(_banded(sig, n_bands, "media_id"))
+        probes = sorted(
+            (int(r["band"]), int(r["bucket"]))
+            for r in banded.select("band", "bucket").distinct().collect()
+        )
+        hist = read_store(spark, hash_store) if probes else None
+        if hist is not None:
+            cond = None
+            for bd, bk in probes:
+                c = (F.col("band") == bd) & (F.col("bucket") == bk)
+                cond = c if cond is None else (cond | c)
+            hist = (
+                hist.filter(cond)  # partition-pruned literal union
+                .select(
                     "band", "bh",
+                    F.col("media_id").alias("_hid"),
+                    F.col("dhash").alias("_hh"),
                 )
-                intra = (
-                    banded_clean.join(other, ["band", "bh"])
-                    .filter(
-                        (F.col("_oid") < F.col("media_id"))
-                        & (
-                            F.bit_count(
-                                F.col("dhash").bitwiseXOR(F.col("_oh"))
-                            )
-                            <= int(max_hamming)
-                        )
-                    )
-                    .groupBy("media_id")
-                    .agg(F.min("_oid").alias("dup_of_intra"))
+            )
+        # candidates vs KEPT history: any shared band
+        dup_vs_hist = None
+        if hist is not None:
+            dup_vs_hist = (
+                banded.join(hist, ["band", "bh"])
+                .filter(
+                    F.bit_count(F.col("dhash").bitwiseXOR(F.col("_hh")))
+                    <= int(max_hamming)
                 )
-                verdict = sig.join(intra, "media_id", "left")
-                if dup_vs_hist is not None:
-                    verdict = verdict.join(dup_vs_hist, "media_id", "left")
-                else:
-                    verdict = verdict.withColumn(
-                        "dup_of", F.lit(None).cast("long")
-                    )
-                # history outranks intra-batch (the earlier arrival is
-                # the canonical copy)
-                verdict = verdict.select(
-                    "media_id", "dhash",
-                    F.coalesce("dup_of", "dup_of_intra").alias("dup_of"),
-                ).cache()
-                try:
-                    kept_ids = verdict.filter(F.col("dup_of").isNull())
-                    diverted = verdict.filter(F.col("dup_of").isNotNull())
-                    non_image = batch.filter(F.col("kind") != "image")
-                    kept_rows = batch.join(
-                        kept_ids.select("media_id"), "media_id", "left_semi"
-                    ).unionByName(non_image)
-                    div_rows = batch.join(
-                        F.broadcast(diverted.select("media_id", "dup_of")),
-                        "media_id",
-                    )
-                    append_batch_increment(kept_rows, kept_store, batch_id)
-                    append_batch_increment(
-                        div_rows, odir / "diverted", batch_id
-                    )
-                    new_hashes = _banded(
-                        sig.join(
-                            kept_ids.select("media_id"), "media_id", "left_semi"
-                        ),
-                        n_bands,
-                        "media_id",
-                    ).select("band", "bucket", "bh", "media_id", "dhash")
-                    append_batch_increment(
-                        new_hashes,
-                        hash_store,
-                        batch_id,
-                        partition_by=["band", "bucket"],
-                    )
-                finally:
-                    verdict.unpersist()
-            finally:
-                banded.unpersist()
-        finally:
-            sig.unpersist()
-    finally:
-        batch.unpersist()
+                .groupBy("media_id")
+                .agg(F.min("_hid").alias("dup_of"))
+            )
+        # intra-batch competition runs among HISTORY-CLEAN images only
+        # (a history-dup must not block a clean image — the kept-set-only
+        # rule), and the lowest media_id in a mutual-near clean group wins
+        banded_clean = banded
+        if dup_vs_hist is not None:
+            banded_clean = banded.join(
+                dup_vs_hist.select("media_id"), "media_id", "left_anti"
+            )
+        other = banded_clean.select(
+            F.col("media_id").alias("_oid"),
+            F.col("dhash").alias("_oh"),
+            "band", "bh",
+        )
+        intra = (
+            banded_clean.join(other, ["band", "bh"])
+            .filter(
+                (F.col("_oid") < F.col("media_id"))
+                & (
+                    F.bit_count(F.col("dhash").bitwiseXOR(F.col("_oh")))
+                    <= int(max_hamming)
+                )
+            )
+            .groupBy("media_id")
+            .agg(F.min("_oid").alias("dup_of_intra"))
+        )
+        verdict = sig.join(intra, "media_id", "left")
+        if dup_vs_hist is not None:
+            verdict = verdict.join(dup_vs_hist, "media_id", "left")
+        else:
+            verdict = verdict.withColumn("dup_of", F.lit(None).cast("long"))
+        # history outranks intra-batch (the earlier arrival is the
+        # canonical copy)
+        verdict = pin(verdict.select(
+            "media_id", "dhash",
+            F.coalesce("dup_of", "dup_of_intra").alias("dup_of"),
+        ))
+        kept_ids = verdict.filter(F.col("dup_of").isNull())
+        diverted = verdict.filter(F.col("dup_of").isNotNull())
+        non_image = batch.filter(F.col("kind") != "image")
+        kept_rows = batch.join(
+            kept_ids.select("media_id"), "media_id", "left_semi"
+        ).unionByName(non_image)
+        div_rows = batch.join(
+            F.broadcast(diverted.select("media_id", "dup_of")), "media_id"
+        )
+        append_batch_increment(kept_rows, kept_store, batch_id)
+        append_batch_increment(div_rows, odir / "diverted", batch_id)
+        new_hashes = _banded(
+            sig.join(kept_ids.select("media_id"), "media_id", "left_semi"),
+            n_bands,
+            "media_id",
+        ).select("band", "bucket", "bh", "media_id", "dhash")
+        append_batch_increment(
+            new_hashes, hash_store, batch_id, partition_by=["band", "bucket"]
+        )
     return read_store(spark, kept_store, batch_id)
 
 

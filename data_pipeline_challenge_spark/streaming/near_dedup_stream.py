@@ -98,6 +98,7 @@ from ..batchstore import (
 )
 from ..operators.dedup import banded_minhash_tables, verify_candidate_pairs
 from ..operators.graph import connected_components
+from ..session import local_frame, pinned
 
 
 def _prefix(col, n_prefix: int):
@@ -203,7 +204,7 @@ def fold_batch(
 
         edges = read_store(spark, pairs_store, batch_id)
         edges = (
-            spark.createDataFrame([], "doc1 long, doc2 long")
+            local_frame(spark, [], "doc1 long, doc2 long")
             if edges is None
             else edges.select("doc1", "doc2")
         )
@@ -235,14 +236,13 @@ def fold_batch(
     # Full rows ride through to the docs store (the kept corpus must not
     # lose metadata columns); the signature tables work on the (id, text)
     # projection only.
-    batch_full = batch_df.cache()
-    batch = batch_full.select(id_col, text_col)
-    cached = [batch_full]
-    try:
+    with pinned() as pin:
+        batch_full = pin(batch_df)
+        batch = batch_full.select(id_col, text_col)
         sh_new, per_new, banded_new = banded_minhash_tables(
             batch, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands
         )
-        cached.append(per_new)  # banded_minhash_tables caches per_doc
+        per_new = pin(per_new)
         # The exploded shingle table is re-read by BOTH sides of the
         # intra verify and again by the cross verify's new side — five
         # shingle explodes of the same micro-batch without this pin.
@@ -250,8 +250,7 @@ def fold_batch(
         # deliberately uncached), here it is bounded by the MICRO-BATCH,
         # so caching it is O(batch) memory for a ~2x cut in the fold's
         # explode work (guide §5: cache only what is reused and bounded).
-        sh_new = sh_new.cache()
-        cached.append(sh_new)
+        sh_new = pin(sh_new)
 
         # (a) intra-batch near-dedup: self-join candidates → verified
         # pairs → connected components → min-id survivor per cluster.
@@ -266,11 +265,11 @@ def fold_batch(
             .select(F.col("a.doc").alias("doc1"), F.col("b.doc").alias("doc2"))
             .distinct()
         )
-        intra = verify_candidate_pairs(
+        # reused: intra components AND the pairs evidence trail
+        intra = pin(verify_candidate_pairs(
             intra_cand, sh_new, per_new, sh_new, per_new,
             num_hashes=num_hashes, min_jaccard=min_jaccard,
-        ).cache()  # reused: intra components AND the pairs evidence trail
-        cached.append(intra)
+        ))
         comp = connected_components(
             intra.select(F.col("doc1").alias("src"), F.col("doc2").alias("dst"))
         )
@@ -283,10 +282,10 @@ def fold_batch(
             batch_full[id_col] == drop_intra["doc"],
             "left_anti",
         )
-        kept_banded = banded_new.join(
-            F.broadcast(drop_intra), "doc", "left_anti"
-        ).cache()  # reused: touched collect, bucket set, cross-cand, append
-        cached.append(kept_banded)
+        # reused: touched collect, bucket set, cross-cand, append
+        kept_banded = pin(
+            banded_new.join(F.broadcast(drop_intra), "doc", "left_anti")
+        )
 
         # (b) against-history probe, only if an index exists.
         cross_verified = None
@@ -315,7 +314,7 @@ def fold_batch(
                     hits, ["band", "bh"], "doc", bucket_cap,
                     audit=CapAudit(odir, "band_index", batch_id),
                 )
-                cross_cand = (
+                cross_cand = pin(
                     kept_banded.join(
                         F.broadcast(
                             hits.select(
@@ -326,9 +325,7 @@ def fold_batch(
                     )
                     .select("doc1", F.col("doc").alias("doc2"))
                     .distinct()
-                    .cache()
                 )
-                cached.append(cross_cand)
                 old_ids = cross_cand.select(
                     F.col("doc1").alias(id_col)
                 ).distinct()
@@ -350,16 +347,15 @@ def fold_batch(
                     old_docs, id_col, text_col,
                     n=n, num_hashes=num_hashes, bands=bands,
                 )
-                cached.append(per_old)
+                per_old = pin(per_old)
                 # bounded by the candidate slice — same rationale as
                 # the sh_new pin above
-                sh_old = sh_old.cache()
-                cached.append(sh_old)
-                cross_verified = verify_candidate_pairs(
+                sh_old = pin(sh_old)
+                # reused: drop set AND the pairs evidence trail
+                cross_verified = pin(verify_candidate_pairs(
                     cross_cand, sh_old, per_old, sh_new, per_new,
                     num_hashes=num_hashes, min_jaccard=min_jaccard,
-                ).cache()  # reused: drop set AND the pairs evidence trail
-                cached.append(cross_verified)
+                ))
                 matched = cross_verified.select(
                     F.col("doc2").alias("doc")
                 ).distinct()
@@ -408,23 +404,22 @@ def fold_batch(
                     "doc",
                     "left_anti",
                 )
-        kept = kept.cache()
-        cached.append(kept)
+        kept = pin(kept)
         # Materialize the non-docs outputs BEFORE any store write: the
         # banded rows' and the verified pairs' lineage reads docs_store
         # (the old-docs fetch), and an uncheckpointed plan would
         # re-execute that read during its own append — AFTER the docs
         # append just added this batch's own increment to the very store
         # it scans (read-after-write), on top of paying the whole probe
-        # twice. localCheckpoint cuts the lineage and pins the pre-write
+        # twice. The checkpoint cuts the lineage and pins the pre-write
         # view.
-        kept_banded = kept_banded.localCheckpoint(eager=True)
+        kept_banded = pin.checkpoint(kept_banded)
         pairs_df = intra.select("doc1", "doc2", "jaccard")
         if cross_verified is not None:
             pairs_df = pairs_df.unionByName(
                 cross_verified.select("doc1", "doc2", "jaccard")
             )
-        pairs_df = pairs_df.localCheckpoint(eager=True)
+        pairs_df = pin.checkpoint(pairs_df)
         # docs BEFORE band_index (crash-replay argument above). BOTH
         # stores are recorded every batch — an empty side (all-duplicate
         # batch; kept-but-bandless batch of sub-shingle-width docs)
@@ -465,11 +460,8 @@ def fold_batch(
             partition_by="bh_prefix",
         )
         _chain_components()
-        if not admitted:
-            return None
-    finally:
-        for c in cached:
-            c.unpersist()
+    if not admitted:
+        return None
     return read_store(spark, docs_store, batch_id)
 
 
@@ -604,7 +596,7 @@ def backfill_dup_clusters(
         )
     edges = read_store(spark, pairs_store)
     edges = (
-        spark.createDataFrame([], "doc1 long, doc2 long")
+        local_frame(spark, [], "doc1 long, doc2 long")
         if edges is None
         else edges.filter(F.col("ingest_batch") <= committed).select("doc1", "doc2")
     )

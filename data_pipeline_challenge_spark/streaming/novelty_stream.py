@@ -48,6 +48,7 @@ from ..batchstore import (
     prefix_bucket,
     read_store,
 )
+from ..session import pinned
 
 _N_BUCKETS = 64
 
@@ -90,12 +91,12 @@ def fold_batch(
     if not admit_batch(odir, batch_id, sh_store, params=params):
         return read_store(spark, docs_store, batch_id)
 
-    batch = batch_df.cache()
-    try:
+    with pinned() as pin:
+        batch = pin(batch_df)
         if not batch.take(1):
             # empty micro-batch: sentinel accounting keeps the id
             # sequence gap-free for the sequential guard (r18)
-            account_empty_fold(batch, (docs_store, sh_store), batch_id)
+            account_empty_fold((docs_store, sh_store), batch_id)
             return None
         # ids key the score join: a NULL id would never match it (the
         # doc would be admitted at share 0.0 while its shingles still
@@ -108,104 +109,74 @@ def fold_batch(
                 f"novelty gate requires non-null {id_col!r}: a null id "
                 "cannot be scored (it would silently bypass the gate)"
             )
-        sh = doc_shingles(
+        sh = pin(doc_shingles(
             batch.select(
                 F.col(id_col).alias("_nid"), F.col(text_col).alias("text")
             ),
             shingle_n,
             "_nid",
-        ).withColumn("bucket", prefix_bucket(F.col("s"), _N_BUCKETS))
-        sh = sh.cache()
-        hist = None
-        try:
-            buckets = sorted(
-                r["bucket"] for r in sh.select("bucket").distinct().collect()
+        ).withColumn("bucket", prefix_bucket(F.col("s"), _N_BUCKETS)))
+        buckets = sorted(
+            r["bucket"] for r in sh.select("bucket").distinct().collect()
+        )
+        hist = read_store(spark, sh_store) if buckets else None
+        if hist is not None:
+            # pinned: the matched-bucket slice feeds both the score join
+            # and the new-shingle anti-join below — one history scan per
+            # batch, not two (the dedup_stream discipline)
+            hist = pin(
+                hist.filter(F.col("bucket").isin(buckets))  # pruned
+                .select("bucket", "s")
             )
-            hist = read_store(spark, sh_store) if buckets else None
-            if hist is not None:
-                # cached: the matched-bucket slice feeds both the score
-                # join and the new-shingle anti-join below — one history
-                # scan per batch, not two (the dedup_stream discipline)
-                hist = (
-                    hist.filter(F.col("bucket").isin(buckets))  # pruned
-                    .select("bucket", "s")
-                    .cache()
-                )
-            flagged = (
-                sh
-                if hist is None
-                else sh.join(
-                    hist.withColumn("_seen", F.lit(1)).distinct(),
-                    ["bucket", "s"],
-                    "left",
-                )
+        flagged = (
+            sh
+            if hist is None
+            else sh.join(
+                hist.withColumn("_seen", F.lit(1)).distinct(),
+                ["bucket", "s"],
+                "left",
             )
-            if hist is None:
-                flagged = flagged.withColumn("_seen", F.lit(None).cast("int"))
-            scores = flagged.groupBy("_nid").agg(
-                F.count(F.lit(1)).alias("n_shingles"),
-                F.coalesce(F.sum("_seen"), F.lit(0))
-                .cast("long")
-                .alias("n_seen"),
+        )
+        if hist is None:
+            flagged = flagged.withColumn("_seen", F.lit(None).cast("int"))
+        scores = flagged.groupBy("_nid").agg(
+            F.count(F.lit(1)).alias("n_shingles"),
+            F.coalesce(F.sum("_seen"), F.lit(0)).cast("long").alias("n_seen"),
+        )
+        raw_share = F.coalesce(
+            F.col("n_seen").cast("double") / F.col("n_shingles").cast("double"),
+            F.lit(0.0),  # zero-shingle docs are novel
+        )
+        # the verdict compares the RAW ratio — rounding first would
+        # misclassify shares within half an ulp-of-round(6) of the
+        # threshold; the stored evidence column is rounded for the
+        # usual cross-engine display stability
+        scored = pin(  # feeds BOTH appends: score once, not twice
+            batch.join(scores.withColumnRenamed("_nid", id_col), id_col, "left")
+            .select(
+                "*",
+                (raw_share < float(max_share)).alias("_keep"),
+                F.round(raw_share, 6).alias("novelty_share"),
             )
-            raw_share = F.coalesce(
-                F.col("n_seen").cast("double")
-                / F.col("n_shingles").cast("double"),
-                F.lit(0.0),  # zero-shingle docs are novel
-            )
-            # the verdict compares the RAW ratio — rounding first would
-            # misclassify shares within half an ulp-of-round(6) of the
-            # threshold; the stored evidence column is rounded for the
-            # usual cross-engine display stability
-            scored = (
-                batch.join(
-                    scores.withColumnRenamed("_nid", id_col), id_col, "left"
-                )
-                .select(
-                    "*",
-                    (raw_share < float(max_share)).alias("_keep"),
-                    F.round(raw_share, 6).alias("novelty_share"),
-                )
-                .withColumn(
-                    "n_shingles",
-                    F.coalesce("n_shingles", F.lit(0).cast("long")),
-                )
-                .withColumn(
-                    "n_seen", F.coalesce("n_seen", F.lit(0).cast("long"))
-                )
-                .cache()  # feeds BOTH appends: score once, not twice
-            )
-            try:
-                # docs and rejected first; the seen-shingle append below
-                # is the commit point the replay guard keys on
-                append_batch_increment(
-                    scored.filter(F.col("_keep")).drop("_keep"),
-                    docs_store,
-                    batch_id,
-                )
-                append_batch_increment(
-                    scored.filter(~F.col("_keep")).drop("_keep"),
-                    odir / "rejected",
-                    batch_id,
-                )
-                new_sh = (
-                    sh.select("bucket", "s").distinct()
-                    if hist is None
-                    else sh.select("bucket", "s")
-                    .distinct()
-                    .join(hist, ["bucket", "s"], "left_anti")
-                )
-                append_batch_increment(
-                    new_sh, sh_store, batch_id, partition_by="bucket"
-                )
-            finally:
-                scored.unpersist()
-        finally:
-            sh.unpersist()
-            if hist is not None:
-                hist.unpersist()
-    finally:
-        batch.unpersist()
+            .withColumn("n_shingles", F.coalesce("n_shingles", F.lit(0).cast("long")))
+            .withColumn("n_seen", F.coalesce("n_seen", F.lit(0).cast("long")))
+        )
+        # docs and rejected first; the seen-shingle append below is the
+        # commit point the replay guard keys on
+        append_batch_increment(
+            scored.filter(F.col("_keep")).drop("_keep"), docs_store, batch_id
+        )
+        append_batch_increment(
+            scored.filter(~F.col("_keep")).drop("_keep"), odir / "rejected", batch_id
+        )
+        new_sh = (
+            sh.select("bucket", "s").distinct()
+            if hist is None
+            else sh.select("bucket", "s")
+            .distinct()
+            .join(hist, ["bucket", "s"], "left_anti")
+        )
+        append_batch_increment(new_sh, sh_store, batch_id, partition_by="bucket")
     return read_store(spark, docs_store, batch_id)
 
 

@@ -59,6 +59,7 @@ from ..batchstore import (
     read_batch_store,
     read_store,
 )
+from ..session import local_frame, pinned
 
 _N_BUCKETS = 64
 
@@ -90,16 +91,14 @@ def fold_batch(
     if not admit_batch(odir, batch_id, sh_store, params=params):
         return
 
-    batch_sh = doc_shingles(
-        batch_df.select(
-            F.col(source_col).alias("source"), F.col(text_col).alias("text")
-        ),
-        shingle_n,
-        "source",
-    ).withColumn("bucket", prefix_bucket(F.col("s"), _N_BUCKETS))
-    batch_sh = batch_sh.cache()
-    new = None
-    try:
+    with pinned() as pin:
+        batch_sh = pin(doc_shingles(
+            batch_df.select(
+                F.col(source_col).alias("source"), F.col(text_col).alias("text")
+            ),
+            shingle_n,
+            "source",
+        ).withColumn("bucket", prefix_bucket(F.col("s"), _N_BUCKETS)))
         buckets = sorted(
             r["bucket"] for r in batch_sh.select("bucket").distinct().collect()
         )
@@ -108,11 +107,11 @@ def fold_batch(
         hist = read_store(spark, sh_store)
         if hist is not None:  # partition-pruned to the batch's buckets
             hist = hist.filter(F.col("bucket").isin(buckets)).drop("ingest_batch")
-        new = (
+        new = pin(
             batch_sh
             if hist is None
             else batch_sh.join(hist, ["bucket", "s", "source"], "left_anti")
-        ).cache()
+        )
 
         # new holder × distinct HISTORY holders of the same shingle …
         pairs = None
@@ -151,10 +150,6 @@ def fold_batch(
             batch_id,
             partition_by="bucket",
         )
-    finally:
-        if new is not None:
-            new.unpersist()
-        batch_sh.unpersist()
 
 
 def overlap_report(spark: SparkSession, out_dir: str | Path) -> DataFrame | None:
@@ -174,8 +169,8 @@ def overlap_report(spark: SparkSession, out_dir: str | Path) -> DataFrame | None
         # every committed batch's pair increment was empty (single-source
         # corpus, or no cross-source shared shingle yet): the matrix is
         # legitimately empty — the store holds only empty-batch sentinels
-        return spark.createDataFrame(
-            [], "s1 string, s2 string, n_shared bigint, jaccard double"
+        return local_frame(
+            spark, [], "s1 string, s2 string, n_shared bigint, jaccard double"
         )
     committed = (F.col("ingest_batch") <= tid) | (F.col("ingest_batch") < 0)
     pairs = pairs.filter(committed).groupBy("s1", "s2").agg(

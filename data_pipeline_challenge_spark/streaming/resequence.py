@@ -56,6 +56,7 @@ from ..batchstore import (
     sequential_fold_guard,
     view_stores,
 )
+from ..session import local_frame, pinned
 
 _WM_SCHEMA = "max_t_us long, released_floor_us long, n_late long"
 _FLOOR_FILE = "_flush_floor.json"
@@ -159,8 +160,8 @@ def reseq_fold(
     ):
         return
 
-    batch_df = batch_df.cache()
-    try:
+    with pinned() as pin:
+        batch_df = pin(batch_df)
         agg = batch_df.agg(F.max(t_col).alias("m")).collect()[0]
         prev_max, prev_floor = _wm_state(spark, wm_store)
         new_max = max(x for x in (agg["m"], prev_max) if x is not None) if (
@@ -189,12 +190,10 @@ def reseq_fold(
             new_floor = prev_floor if prev_floor is not None else -(1 << 62)
             new_max = prev_max if prev_max is not None else -(1 << 62)
 
-        wm_row = spark.createDataFrame(
-            [(int(new_max), int(new_floor), int(n_late))], _WM_SCHEMA
+        wm_row = local_frame(
+            spark, [(int(new_max), int(new_floor), int(n_late))], _WM_SCHEMA
         )
         append_batch_increment(wm_row, wm_store, batch_id)
-    finally:
-        batch_df.unpersist()
 
 
 def flush_resequencer(

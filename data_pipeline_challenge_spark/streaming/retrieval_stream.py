@@ -65,7 +65,7 @@ from ..batchstore import (
     sequential_fold_guard,
     write_commit_file,
 )
-from ..session import local_frame
+from ..session import local_frame, pinned
 
 _N_BUCKETS = 64
 _K1 = 1.2
@@ -144,23 +144,22 @@ def fold_batch(
     dl_of_row = F.when(F.col(text_col).isNull(), F.lit(0)).otherwise(
         F.size(F.filter(F.split(F.col(text_col), " "), lambda x: x != ""))
     )
-    doclen = (
-        batch_df.select(
-            F.col(id_col).alias("doc_id"), dl_of_row.cast("long").alias("dl")
+    with pinned() as pin:
+        doclen = pin(
+            batch_df.select(
+                F.col(id_col).alias("doc_id"), dl_of_row.cast("long").alias("dl")
+            )
+            .groupBy("doc_id")
+            .agg(F.sum("dl").alias("dl"))
         )
-        .groupBy("doc_id")
-        .agg(F.sum("dl").alias("dl"))
-        .cache()
-    )
-    # dl denormalized into every posting (batch-sized join, paid once at
-    # fold time) so bm25_search never joins the corpus-sized doclen.
-    postings = (
-        toks.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .join(doclen, "doc_id")
-        .withColumn("term_bucket", prefix_bucket(F.col("term"), _N_BUCKETS))
-    )
-    try:
+        # dl denormalized into every posting (batch-sized join, paid once
+        # at fold time) so bm25_search never joins the corpus-sized doclen.
+        postings = (
+            toks.groupBy("doc_id", "term")
+            .agg(F.count(F.lit(1)).alias("tf"))
+            .join(doclen, "doc_id")
+            .withColumn("term_bucket", prefix_bucket(F.col("term"), _N_BUCKETS))
+        )
         n_rows = batch_df.count()
         batch_stats = doclen.agg(
             # avgdl's denominator counts only length-bearing docs — dl=0
@@ -178,16 +177,14 @@ def fold_batch(
         )
         append_batch_increment(doclen, doclen_store, batch_id)
 
-        prev, _ = _latest_totals(odir, before=batch_id)
-        rec = {
-            "batch_id": batch_id,
-            "n_docs": int(prev.get("n_docs", 0)) + int(n_rows),
-            "n_len_docs": int(prev.get("n_len_docs", 0)) + int(batch_stats["nd"]),
-            "sum_dl": int(prev.get("sum_dl", 0)) + int(batch_stats["sdl"]),
-        }
-        write_commit_file(odir / "totals", batch_id, rec)
-    finally:
-        doclen.unpersist()
+    prev, _ = _latest_totals(odir, before=batch_id)
+    rec = {
+        "batch_id": batch_id,
+        "n_docs": int(prev.get("n_docs", 0)) + int(n_rows),
+        "n_len_docs": int(prev.get("n_len_docs", 0)) + int(batch_stats["nd"]),
+        "sum_dl": int(prev.get("sum_dl", 0)) + int(batch_stats["sdl"]),
+    }
+    write_commit_file(odir / "totals", batch_id, rec)
 
 
 def revoke_docs(spark: SparkSession, out_dir: str | Path, doc_ids: DataFrame) -> int:

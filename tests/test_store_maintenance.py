@@ -413,3 +413,15 @@ def test_one_stream_runner_and_one_store_loop():
         )
 
     assert _enclosing_sites(imports_rollup_privates) == []
+
+    # A fold's pins have one owner, ``session.pinned``: no module under
+    # ``streaming/`` caches, checkpoints or releases a frame itself, nor
+    # builds a driver-row frame except through ``session.local_frame``.
+    # The one pin that lives as long as the stream is the decontam eval
+    # shingle table.
+    pin_calls = ("cache", "persist", "localCheckpoint", "unpersist", "createDataFrame")
+    assert [
+        site
+        for site in _enclosing_sites(lambda n: any(_calls(c)(n) for c in pin_calls))
+        if site.startswith("streaming/")
+    ] == ["streaming/decontam_stream.py:eval_shingles"]

@@ -3659,6 +3659,37 @@ def test_eval_generation_edge_hardening(spark, tmp_path):
     ] == [1]
 
 
+def test_decontam_evidence_replaces_doc_column_of_same_name(spark, tmp_path):
+    """A contaminated doc whose schema has its own ``n_shared`` column is
+    diverted with the overlap evidence in that column: joining the
+    evidence onto the doc must not leave two ``n_shared`` columns, which
+    fail the ``contaminated`` store's write."""
+    from data_pipeline_challenge_spark.streaming.decontam_stream import (
+        contamination_log,
+        eval_shingles,
+        fold_batch,
+    )
+
+    text = "the held out benchmark asks about the tallest mountain"
+    ev = eval_shingles(
+        spark.createDataFrame([(900, text)], "doc_id long, text string"),
+        "doc_id", "text",
+    )
+    batch = spark.createDataFrame(
+        [(1, text, 777), (2, "spark shuffles hash partitioned data", 888)],
+        "doc_id long, text string, n_shared long",
+    )
+    out = tmp_path / "gate"
+    kept = fold_batch(
+        spark, out, batch, 0, ev=ev, id_col="doc_id", text_col="text", min_shared=2
+    )
+    assert [(r["doc_id"], r["n_shared"]) for r in kept.collect()] == [(2, 888)]
+    assert [
+        (r["doc_id"], r["n_shared"], r["n_eval_docs"])
+        for r in contamination_log(spark, out).collect()
+    ] == [(1, 7, 1)]
+
+
 def test_funnel_eval_generation_revokes_corpus(spark, tmp_path):
     """Funnel-level eval growth: revoke_corpus_eval_generation screens
     the FINAL corpus against the delta (current_corpus excludes the
